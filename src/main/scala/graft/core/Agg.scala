@@ -30,19 +30,54 @@ object Agg {
     * copies of it). */
   private def unified(df: DataFrame, dim: Column, windowExpr: Column,
                       aggValue: Column, typeTag: String): DataFrame =
-    df.groupBy(dim.as("id"), windowExpr.as("w"))
-      .agg(aggValue.as("value"))
-      .select(
-        col("w.start").as("timestamp"),
-        col("id"),
-        col("value"),
-        lit(typeTag).as("type"))
+    toUnified(df.groupBy(dim.as("id"), windowExpr.as("w"))
+      .agg(aggValue.as("value")), typeTag)
+
+  /** The unified projection itself, over any aggregate with columns `id`,
+    * `w` (a window struct) and `value` — shared with the consumers of
+    * [[windowedSumSets]], so the output contract has one definition. */
+  private[graft] def toUnified(agg: DataFrame, typeTag: String): DataFrame =
+    agg.select(
+      col("w.start").as("timestamp"),
+      col("id"),
+      col("value"),
+      lit(typeTag).as("type"))
 
   /** Tumbling-window sum. The sum is exact-decimal (see [[Num.dsum]]) so
     * results are order-independent and reproducible. */
   def windowedSum(df: DataFrame, dim: Column, ts: Column, dur: String,
                   value: Column, typeTag: String): DataFrame =
     unified(df, dim, window(ts, dur), Num.dsum(value), typeTag)
+
+  /** Tumbling-window sums over SEVERAL groupings in one pass: Catalyst's
+    * GROUPING SETS plan one scan, one `Expand` and one shuffle, where a
+    * [[windowedSum]] per grouping scans and shuffles its input once each.
+    * `keys` names every grouping column; each of `sets` lists the key names
+    * it groups by, and the window `w` joins every set. The result has one
+    * column per key (null where the row's set does not group by it), `w`,
+    * `value` — the same exact-decimal sum as [[windowedSum]], so each set's
+    * sums are bit-identical to its standalone call — and `set`, the index of
+    * the row's grouping in `sets`. `set` is read off `grouping_id()`, not
+    * off which keys are null, so a null key value stays a group of its own,
+    * and two keys may bind the same column. */
+  def windowedSumSets(df: DataFrame, keys: Seq[(String, Column)],
+                      sets: Seq[Seq[String]], ts: Column, dur: String,
+                      value: Column): DataFrame = {
+    // a repeated set would share its grouping id with the first one
+    require(sets.distinct.size == sets.size, s"repeated grouping set in $sets")
+    val names = keys.map(_._1) :+ "w"
+    // grouping_id() sets bit (n-1-i) when the i-th grouping column is not
+    // in the row's set
+    def gid(set: Seq[String]): Long = names.indices
+      .collect { case i if !set.contains(names(i)) => 1L << (names.size - 1 - i) }.sum
+    val setOfGid = sets.zipWithIndex.map { case (s, i) => gid(s :+ "w") -> i }.toMap
+    df.select(keys.map { case (n, c) => c.as(n) } :+ window(ts, dur).as("w") :+
+        value.as("value"): _*)
+      .groupingSets(sets.map(s => (s :+ "w").map(col)), names.map(col): _*)
+      .agg(Num.dsum(col("value")).as("value"), grouping_id().as("gid"))
+      .select(names.map(col) :+ col("value") :+
+        element_at(typedLit(setOfGid), col("gid")).as("set"): _*)
+  }
 
   /** Sliding-window variant (duration > slide ⇒ each row lands in
     * duration/slide windows). The reference only uses tumbling windows;

@@ -37,8 +37,9 @@ object Par {
     * Caller contract: the actions must be truly independent — disjoint
     * output paths, no read of a path another action writes, and any
     * SHARED cached frame already materialized (a cache race is safe —
-    * block-level locking — but re-computes defeat the point). The first
-    * failure rethrows its cause after all actions settle. */
+    * block-level locking — but re-computes defeat the point). Every action
+    * runs to completion; then the first failure, in submission order,
+    * rethrows its cause. */
   def concurrently(actions: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       actions.size)
@@ -48,10 +49,12 @@ object Par {
           override def call(): Unit = a()
         })
       }
-      try futs.foreach(_.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
+      // await EVERY action before rethrowing: a sibling still committing
+      // while the caller's retry re-enters the same stores is a race
+      val outcomes = futs.map(f => scala.util.Try(f.get()))
+      outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        case e => throw e
       }
     } finally pool.shutdown()
   }

@@ -17,10 +17,16 @@ object QuotaCheck {
 
   def quotaViolations(enriched: DataFrame, email: Column, quota: Column,
                       ts: Column, value: Column, dur: String): DataFrame =
-    enriched
+    report(enriched
       .groupBy(email.as("email"), quota.as("quota"), window(ts, dur).as("w"))
-      .agg(Num.dsum(value).as("usage"))
-      .where(col("usage") > col("quota"))
+      .agg(Num.dsum(value).as("usage")))
+
+  /** The HAVING and the contract projection, over any aggregate with
+    * columns `email`, `quota`, `w` (a window struct) and `usage` — shared
+    * with the batch layer's grouping-sets pass, so the report has one
+    * definition. */
+  private[graft] def report(agg: DataFrame): DataFrame =
+    agg.where(col("usage") > col("quota"))
       .select(col("email"), col("usage"), col("quota"),
         col("w.start").as("timestamp"))
 }

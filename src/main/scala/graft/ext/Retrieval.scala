@@ -268,9 +268,9 @@ object Retrieval {
   /** The union of a committed-segment path list under the pinned
     * [[segmentSchema]] (None when no segments committed) — the ONE
     * definition of "postings rows of these segments" shared by the
-    * append merge ([[rebuildHeadSummaries]]) and the as-of totals fast
-    * path ([[bm25TopKFromIndexAsOf]]), so the segment layout can never
-    * drift between the two additivity consumers (round-16 ADVICE). */
+    * read-time head summaries ([[headTermDict]], [[headTotals]]) and the
+    * as-of totals fast path ([[bm25TopKFromIndexAsOf]]), so the segment
+    * layout can never drift between its additivity consumers. */
   private def segmentPostings(spark: org.apache.spark.sql.SparkSession,
                               segPaths: Seq[String]): Option[DataFrame] =
     segPaths.map(sp =>

@@ -2,43 +2,55 @@ package graft
 
 import java.sql.Timestamp
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.batch.BatchPipeline
+import graft.core.{Agg, Enrich, QuotaCheck}
 
-/** Runs the reference's full batch composition (read → enrich → cache →
-  * 3 aggregates + quota report) against in-memory fixtures with collecting
-  * sinks. */
+/** Runs the reference's full batch composition (read → enrich → one
+  * grouping-sets aggregate → 3 hourly sums + quota report) against
+  * in-memory fixtures with collecting sinks. */
 class BatchPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  test("template method fans out all four outputs from one cached join") {
-    val msgs = Seq(
-      (Timestamp.valueOf("2022-02-26 00:10:00"), "u1", "ant1", 100.0, "FB"),
-      (Timestamp.valueOf("2022-02-26 00:20:00"), "u2", "ant1", 50.0, "IG"),
-      (Timestamp.valueOf("2022-02-26 01:10:00"), "u1", "ant2", 7.0, "FB"),
-    ).toDF("timestamp", "user_id", "antenna_id", "value", "app")
-    val dim = Seq(("u1", "alice@x.io", 10.0), ("u2", "bob@x.io", 999.0))
-      .toDF("id", "email", "quota")
-
-    val aggs = mutable.Map[String, Seq[(Timestamp, String, Double, String)]]()
-    var quota: Seq[(String, Double, Double, Timestamp)] = Nil
-
+  /** A pipeline over `msgs` ⋈ `dim` whose sinks hand each output frame to
+    * `onAggregate` / `onQuota`. */
+  private def pipeline(msgs: DataFrame, dim: DataFrame, app: Column = col("app"))(
+      onAggregate: (DataFrame, String) => Unit, onQuota: DataFrame => Unit) =
     new BatchPipeline {
       def readSlice(): DataFrame = msgs
       def readDimension(): DataFrame = dim
       def factKey = "user_id"; def dimKey = "id"
       def antennaCol: Column = col("antenna_id")
-      def appCol: Column = col("app")
+      def appCol: Column = app
       def emailCol: Column = col("email")
       def quotaCol: Column = col("quota")
       def tsCol: Column = col("timestamp")
       def valueCol: Column = col("value")
-      def writeAggregate(df: DataFrame, tag: String): Unit =
-        aggs(tag) = df.as[(Timestamp, String, Double, String)].collect().toSeq
-      def writeQuotaReport(df: DataFrame): Unit =
-        quota = df.as[(String, Double, Double, Timestamp)].collect().toSeq
-    }.run()
+      def writeAggregate(df: DataFrame, tag: String): Unit = onAggregate(df, tag)
+      def writeQuotaReport(df: DataFrame): Unit = onQuota(df)
+    }
+
+  private lazy val fixedMsgs = Seq(
+    (Timestamp.valueOf("2022-02-26 00:10:00"), "u1", "ant1", 100.0, "FB"),
+    (Timestamp.valueOf("2022-02-26 00:20:00"), "u2", "ant1", 50.0, "IG"),
+    (Timestamp.valueOf("2022-02-26 01:10:00"), "u1", "ant2", 7.0, "FB"),
+  ).toDF("timestamp", "user_id", "antenna_id", "value", "app")
+  private lazy val fixedDim = Seq(("u1", "alice@x.io", 10.0), ("u2", "bob@x.io", 999.0))
+    .toDF("id", "email", "quota")
+
+  test("template method computes all four outputs from one grouping-sets pass") {
+    val aggs = mutable.Map[String, Seq[(Timestamp, String, Double, String)]]()
+    var quota: Seq[(String, Double, Double, Timestamp)] = Nil
+    pipeline(fixedMsgs, fixedDim)(
+      (df, tag) => aggs(tag) = df.as[(Timestamp, String, Double, String)].collect().toSeq,
+      df => quota = df.as[(String, Double, Double, Timestamp)].collect().toSeq).run()
 
     assert(aggs("antenna_bytes_total").map(r => (r._2, r._3)).toSet ==
       Set(("ant1", 150.0), ("ant2", 7.0)))
@@ -48,5 +60,102 @@ class BatchPipelineSpec extends SparkSpec {
       Set(("FB", 100.0), ("IG", 50.0), ("FB", 7.0)))
     // alice: hour-0 usage 100 > quota 10 → violation; hour-1 usage 7 < 10 no
     assert(quota.map(q => (q._1, q._2)) == Seq(("alice@x.io", 100.0)))
+  }
+
+  /** Deterministic stand-in for the scalatestplus bridge (not in the
+    * offline dependency cache): sample the generator from fixed seeds. */
+  private def forAll[A](gen: Gen[A], n: Int)(prop: A => Unit): Unit =
+    (1 to n).foreach(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(prop))
+
+  private val t0 = Timestamp.valueOf("2022-02-26 00:00:00").getTime
+  // values are multiples of 1/4, so the Scala-side quota sum below is exact
+  private val msgGen = for {
+    user <- Gen.oneOf("u0", "u1", "u2", "u3")
+    minute <- Gen.choose(0, 4 * 60 - 1)
+    antenna <- Gen.oneOf(Some("ant1"), Some("ant2"), None)
+    app <- Gen.oneOf(Some("FB"), Some("IG"), None)
+    v <- Gen.choose(0, 4000).map(_ / 4.0)
+  } yield (new Timestamp(t0 + minute * 60000L), user, antenna, v, app)
+  private val fixtureGen = for {
+    msgs <- Gen.listOfN(60, msgGen)
+    // "uq" sends only within one hour; its quota is set to exactly that usage
+    uqHour <- Gen.choose(0, 3)
+    uqMsgs <- Gen.listOfN(3, msgGen.map(m => m.copy(
+      _1 = new Timestamp(t0 + uqHour * 3600000L + (m._1.getTime - t0) % 3600000L),
+      _2 = "uq")))
+    quotas <- Gen.listOfN(4, Gen.oneOf(0.0, 500.0, 2000.0, 1e9))
+  } yield (msgs ++ uqMsgs, quotas :+ uqMsgs.map(_._4).sum)
+
+  private def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+  private def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+
+  test("property: run() equals three windowedSum calls plus quotaViolations") {
+    forAll(fixtureGen, n = 4) { case (msgRows, quotas) =>
+      val msgs = msgRows.toDF("timestamp", "user_id", "antenna_id", "value", "app")
+      val users = Seq("u0", "u1", "u2", "u3", "uq")
+      val dim = users.zip(quotas).map { case (u, q) => (u, s"$u@x.io", q) }
+        .toDF("id", "email", "quota")
+      // the second binding makes the antenna and app groupings the same column
+      for (app <- Seq(col("app"), col("antenna_id"))) {
+        val got = mutable.Map[String, (Seq[(String, DataType)], Seq[Row])]()
+        def keep(out: String, df: DataFrame): Unit = got(out) = (shape(df), sorted(df))
+        pipeline(msgs, dim, app)((df, tag) => keep(tag, df), keep("quota", _)).run()
+
+        val enriched = Enrich.enrich(msgs, dim, "user_id", "id")
+        val want = Seq("antenna_bytes_total" -> col("antenna_id"),
+          "email_bytes_total" -> col("email"), "app_bytes_total" -> app).map { case (tag, dim) =>
+          tag -> Agg.windowedSum(enriched, dim, col("timestamp"), "1 hour", col("value"), tag)
+        }.toMap + ("quota" -> QuotaCheck.quotaViolations(enriched, col("email"),
+          col("quota"), col("timestamp"), col("value"), "1 hour"))
+        for ((out, w) <- want) assert(got(out) == ((shape(w), sorted(w))), out)
+        assert(!got("quota")._2.exists(_.getString(0) == "uq@x.io"),
+          "a user exactly at quota was reported")
+        assert(got("antenna_bytes_total")._2.exists(_.isNullAt(1)),
+          "the fixture has no null antenna")
+      }
+    }
+  }
+
+  /** The physical nodes of a finalized plan, AQE wrappers unwrapped; an
+    * InMemoryTableScan stays a leaf (its relation's plan is not walked). */
+  private def flatten(n: SparkPlan): Seq[SparkPlan] = n match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case q: QueryStageExec => q +: flatten(q.plan)
+    case o => o +: o.children.flatMap(flatten)
+  }
+
+  test("one scan of the slice, only the aggregate cached, cache released") {
+    val slice = tmpDir("bp-slice")
+    fixedMsgs.write.mode("overwrite").parquet(slice)
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    val plans = mutable.Buffer[SparkPlan]()
+    def keep(df: DataFrame): Unit = { df.collect(); plans += df.queryExecution.executedPlan }
+    pipeline(spark.read.parquet(slice), fixedDim)((df, _) => keep(df), keep).run()
+    assert(persisted == before)
+
+    val nodes = plans.toSeq.flatMap(flatten)
+    val isSliceScan: SparkPlan => Boolean = {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(slice))
+      case _ => false
+    }
+    assert(!nodes.exists(isSliceScan), "a sink re-scanned the slice")
+    val cached = nodes.collect { case s: InMemoryTableScanExec => s.relation }
+      .map(r => r.cacheBuilder -> r).toMap.values.toSeq
+    assert(plans.size == 4 && cached.size == 1, "every sink reads one shared cache")
+    assert(cached.head.output.map(_.name) ==
+      Seq("antenna", "email", "app", "quota", "w", "value", "set"),
+      "a cache holds something other than the grouping-sets aggregate")
+    val build = flatten(cached.head.cachedPlan)
+    assert(build.count(isSliceScan) == 1)
+    assert(build.count(_.isInstanceOf[ExpandExec]) == 1)
+
+    // a throwing sink still releases the cache
+    intercept[IllegalStateException] {
+      pipeline(spark.read.parquet(slice), fixedDim)((df, tag) =>
+        if (tag == "email_bytes_total") throw new IllegalStateException("sink down")
+        else df.collect(), _.collect()).run()
+    }
+    assert(persisted == before)
   }
 }

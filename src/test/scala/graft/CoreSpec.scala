@@ -158,4 +158,15 @@ class CoreSpec extends SparkSpec {
     assert(out.count() == 4)
     assert(df.where(col("hour") === 5).count() == 0)
   }
+
+  test("Par.concurrently waits for every action before it rethrows") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Par.concurrently(
+        () => throw new IllegalStateException("fast failure"),
+        () => { Thread.sleep(400); slowDone.set(true) })
+    }
+    assert(e.getMessage == "fast failure", "the action's own exception, not a wrapper")
+    assert(slowDone.get, "rethrew while a sibling action was still running")
+  }
 }
