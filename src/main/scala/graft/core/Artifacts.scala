@@ -1,14 +1,58 @@
 package graft.core
 
-/** The shared SIDE-WRITE + CHECKED-SWAP + READ-SIDE-HEALING commit
-  * protocol for derived artifact directories (bloom filters, Misra–Gries
-  * summaries, postings dictionaries/meta): the new copy lands at
-  * `<target>__tmp`, the live copy moves aside to `<target>__old`, the new
-  * copy renames in, the aside deletes — every rename checked (Hadoop
-  * reports failure by returning false), so NO crash window ever holds the
-  * only copy, and [[heal]] on every read/write entry restores a mid-swap
-  * aside. One definition (round-9 review: the protocol had grown three
-  * byte-identical copies — a fix to the swap semantics now lands once).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The shared commit protocol for stored artifact directories, and the
+  * ONE description of the base+segments layout every segmented store
+  * (postings, IVF, PQ, dedup fps, contamination, windowed CMS, windowed
+  * MG) is built on. Tiers call the entries below and never name the
+  * layout themselves (a CoreSpec source scan keeps it that way).
+  *
+  * SWAP. A replaced artifact commits side-write + checked swap
+  * ([[swapInto]]): the new copy lands at `<target>__tmp`, the live copy
+  * moves aside to `<target>__old`, the new copy renames in, the aside
+  * deletes — every rename checked (Hadoop reports failure by returning
+  * false), so NO crash window ever holds the only copy. A NEW artifact
+  * commits through [[stageCommit]]: stage at `__tmp`, one checked rename.
+  *
+  * HEAL ON EVERY ENTRY. A crash between the swap's two renames leaves the
+  * root at `<target>__old`; [[heal]] restores it (or clears a stale
+  * aside). Every segmented entry — [[segments]], [[readSegmented]],
+  * [[appendSegment]], [[appendBatchSegment]], [[foldSegments]] — heals
+  * the root first, so "retry is harmless" holds on the read path too.
+  * Sub-artifacts a tier swaps on their own (a bloom filter, an MG
+  * summary) are that tier's to heal, after the root.
+  *
+  * LAYOUT. A segmented store at `dir` is a BASE relation (`dir/<base>`,
+  * written by the build or the last fold; absent for stores that start
+  * empty) plus `dir/segments/`, one immutable committed directory per
+  * append. In-flight `__tmp` stages are invisible ([[committedChildren]])
+  * and the next appender sweeps them. Each root is read on its own and
+  * the reads are unioned (one multi-path read trips Spark's uniform
+  * directory-depth check and loses per-root partition pruning); segments
+  * read under the FIRST root's schema, so an empty retry segment reads
+  * as zero rows instead of failing schema inference. Segment names:
+  *  - count-indexed `seg_<index>_<uuid>` ([[appendSegment]]): the index is
+  *    the committed count, so appends are SINGLE-WRITER per root (one
+  *    streaming query per artifact). [[commitIndexedSegment]] verifies
+  *    that after each commit and [[segmentsAsOf]] before each pinned read,
+  *    failing loudly on a same-index twin instead of ordering versions by
+  *    random UUID bytes;
+  *  - batch-id-named `seg_<batchId>` ([[appendBatchSegment]]): the name IS
+  *    the idempotence key, so a redelivered batch finds its segment and
+  *    writes nothing; the caller fences fresh ids to be monotone.
+  *
+  * VERSIONS AND THE FLOOR. Version v of a store is its base plus the first
+  * v − floor committed segments: the build is version `floor` and each
+  * append adds one. A HEAD read sees every committed segment; an AS-OF
+  * read sees the pinned prefix, immutable once committed, so it is
+  * reproducible until a fold absorbs it. A fold ([[foldSegments]])
+  * rewrites the store into a new base in one whole-root swap and advances
+  * the floor ([[asOfFloor]]) by the segments it absorbed, written into the
+  * staged root so it publishes atomically with the fold. Pins of folded
+  * versions, and of versions not yet written, fail loudly (the retention
+  * contract). A rebuild that keeps the root clears segments and floor
+  * together ([[dropSegments]]), restarting history at version 0.
   *
   * Object-store caveat: HDFS/local renames are atomic; S3-style stores
   * rename by copy+delete — deployments there back artifact dirs with a
@@ -52,8 +96,7 @@ object Artifacts {
     * after it leaves the complete segment. This is what makes doc-id /
     * content anti-join idempotence sound for multi-file appends: the
     * anti-join only ever sees COMPLETE segments, so a failed attempt
-    * re-runs instead of being half-visible and skipped forever (round-9
-    * ADVICE on the postings append). */
+    * re-runs instead of being half-visible and skipped forever. */
   def stageCommit(spark: org.apache.spark.sql.SparkSession,
                   target: String)(write: String => Unit): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -70,21 +113,12 @@ object Artifacts {
           s"left at ${target}__tmp; retry re-stages")
   }
 
-  /** Commit one COUNT-INDEXED append segment (`seg_<index>_<uuid>`) via
-    * [[stageCommit]], then VERIFY the single-writer assumption the index
-    * derivation rests on: segment ids derive from the committed-segment
-    * count, so two concurrent appenders both derive `seg_N` — the UUID
-    * suffix keeps their directories from colliding, but
-    * [[segmentsAsOf]]'s lexicographic prefix would then order version N
-    * vs N+1 by random UUID bytes, silently corrupting every pinned read.
-    * Detection is cheap and loud (round-12 ADVICE, round-13 verdict #6):
-    * after the commit, list committed siblings sharing the index and
-    * throw on a duplicate — the artifact is then known-torn and the
-    * operator removes one twin before further as-of reads, instead of
-    * pins answering with writer-race-ordered data forever. Batch-id-named
-    * segments (the windowed sketch stores) need no such check: their name
-    * IS the idempotence key and [[stageCommit]] already refuses a
-    * duplicate by name. */
+  /** Commit one COUNT-INDEXED segment (`seg_<index>_<uuid>`) under
+    * `segmentsParent` via [[stageCommit]], then list committed siblings
+    * sharing the index and throw on a twin — the single-writer check of
+    * the layout above. The artifact is then known-torn and the operator
+    * removes one twin before further as-of reads, instead of pins
+    * answering with writer-race-ordered data forever. */
   def commitIndexedSegment(spark: org.apache.spark.sql.SparkSession,
                            segmentsParent: String, index: Int)
                           (write: String => Unit): Unit = {
@@ -105,13 +139,13 @@ object Artifacts {
   }
 
   /** Byte-identical driver-side copy of a committed artifact subdir into
-    * a staged sibling/root (r17, the kNN meta-copy device shared):
-    * PASS-THROUGH state a compact republishes UNCHANGED — trained
-    * quantizers, codebooks, 1-row metas, bloom filters — must not pay a
-    * Spark read→coalesce→write job per fold; the copy is the same bytes
-    * and publishes atomically with the surrounding stage/swap. Only for
-    * bounded, immutable-between-folds state (never data relations, whose
-    * compaction exists to REWRITE them). */
+    * a staged sibling or root: PASS-THROUGH state a fold republishes
+    * UNCHANGED — trained quantizers, codebooks, 1-row metas, bloom
+    * filters — must not pay a Spark read→coalesce→write job per fold;
+    * the copy is the same bytes and publishes atomically with the
+    * surrounding stage/swap. Only for bounded, immutable-between-folds
+    * state (never data relations, whose compaction exists to REWRITE
+    * them). */
   def copyDir(spark: org.apache.spark.sql.SparkSession,
               from: String, to: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -123,9 +157,9 @@ object Artifacts {
         s"Artifacts.copyDir: could not copy $from to $to")
   }
 
-  /** The COMMITTED children of a segment parent dir: every subdirectory
-    * except in-flight `__tmp` stages (a crashed [[stageCommit]]'s leftover
-    * is invisible here — that is the read-side half of the contract).
+  /** The COMMITTED children of a parent dir: every subdirectory except
+    * in-flight `__tmp` stages (a crashed [[stageCommit]]'s leftover is
+    * invisible here — that is the read-side half of the contract).
     * Missing parent → empty. Also sweeps stale `__tmp` dirs when asked. */
   def committedChildren(spark: org.apache.spark.sql.SparkSession,
                         parent: String,
@@ -142,11 +176,9 @@ object Artifacts {
     }.sorted
   }
 
-  /** AS-OF version floor of a base+segments artifact: the number of
-    * historical versions compaction has FOLDED into the base (version v
-    * of such an artifact = base + the first v − floor committed
-    * segments; the build is version `floor`, each append adds one).
-    * Missing marker = 0, a never-compacted artifact. */
+  /** The as-of floor of a segmented store: the number of versions folds
+    * have absorbed into the base. Missing marker = 0, a never-folded
+    * store. */
   def asOfFloor(spark: org.apache.spark.sql.SparkSession,
                 dir: String): Long = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -160,12 +192,11 @@ object Artifacts {
     }
   }
 
-  /** Record the as-of floor inside an artifact root — called by compact
-    * jobs on their STAGED root (the marker then publishes atomically with
-    * the fold itself, so no crash point shows folded data under an
-    * unfolded floor or vice versa). */
-  def setAsOfFloor(spark: org.apache.spark.sql.SparkSession,
-                   dir: String, floor: Long): Unit = {
+  /** Record the as-of floor inside an artifact root — [[foldSegments]]
+    * calls it on its STAGED root, so the marker publishes atomically with
+    * the fold itself. */
+  private def setAsOfFloor(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, floor: Long): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val out = fs.create(
@@ -174,28 +205,19 @@ object Artifacts {
     finally out.close()
   }
 
-  /** TIME-TRAVEL segment selection — [[graft.streaming.Ingest.asOfSnapshot]]'s
-    * newest-committed-≤-pin rule lifted to the shared layer for
-    * SEGMENTED artifacts (postings, PQ codes): version `asOf` of
-    * `artifactDir` is its base plus the first `asOf − floor` committed
-    * segments, returned here as the segment-path prefix. Versions are
-    * immutable once committed (segments never rewrite), so a pinned read
-    * is reproducible forever — until compaction folds history, after
-    * which reads of folded versions fail LOUDLY below instead of
-    * silently answering with newer data (mv3's retention contract), and
-    * reads of not-yet-written versions fail loudly too. */
+  /** The committed-segment prefix of version `asOf` (the first
+    * `asOf − floor` segments — [[graft.streaming.Ingest.asOfSnapshot]]'s
+    * newest-committed-≤-pin rule for segmented stores). Fails loudly on
+    * a folded version, a version not yet written, and a torn store. */
   def segmentsAsOf(spark: org.apache.spark.sql.SparkSession,
                    artifactDir: String, asOf: Long): Seq[String] = {
     val floor = asOfFloor(spark, artifactDir)
-    val segs = committedChildren(spark, s"$artifactDir/segments")
-    // Read-side half of the single-writer guard (round-14 ADVICE):
-    // commitIndexedSegment's twin check throws only in the SECOND
-    // committer's JVM — which may be a dead streaming query whose error
-    // nobody reads — so a pinned read of a torn artifact must also fail
-    // loudly here rather than order version N vs N+1 by random UUID
-    // bytes. Applies only to count-indexed `seg_NNNNNN_<uuid>` names;
-    // batch-id-named segments (windowed sketch stores) are unique by
-    // name, stageCommit already refuses their duplicates.
+    val segs = committedChildren(spark, segmentsDir(artifactDir))
+    // Read-side half of the single-writer guard: commitIndexedSegment's
+    // twin check throws only in the SECOND committer's JVM — which may be
+    // a dead streaming query whose error nobody reads — so a pinned read
+    // of a torn store must also fail loudly here. Applies only to
+    // count-indexed `seg_NNNNNN_<uuid>` names.
     val dupIdx = segs
       .map(p => new org.apache.hadoop.fs.Path(p).getName)
       .flatMap { n =>
@@ -217,6 +239,85 @@ object Artifacts {
       s"Artifacts.segmentsAsOf: version $asOf of $artifactDir does not " +
         s"exist yet (head = ${floor + segs.size})")
     segs.take((asOf - floor).toInt)
+  }
+
+  /** The committed segment paths of the store at `dir`, root healed:
+    * every one at head (`asOf` = None), the [[segmentsAsOf]] prefix for a
+    * pinned version. */
+  def segments(spark: SparkSession, dir: String,
+               asOf: Option[Long] = None): Seq[String] = {
+    heal(spark, dir)
+    asOf.fold(committedChildren(spark, segmentsDir(dir)))(
+      segmentsAsOf(spark, dir, _))
+  }
+
+  /** Read a segmented store, root healed: the base (`dir/<base>`, when
+    * present) plus every committed segment at head, or the pinned prefix
+    * of version `asOf`, unioned under the first root's schema. */
+  def readSegmented(spark: SparkSession, dir: String, base: String,
+                    asOf: Option[Long] = None): DataFrame = {
+    val segs = segments(spark, dir, asOf)
+    val parts = Seq(s"$dir/$base").filter(exists(spark, _)) ++ segs
+    require(parts.nonEmpty,
+      s"Artifacts.readSegmented: $dir holds neither a $base base nor a " +
+        "committed segment — write or ingest a batch first")
+    val first = spark.read.parquet(parts.head)
+    parts.tail.foldLeft(first)((acc, s) =>
+      acc.unionByName(spark.read.schema(first.schema).parquet(s)))
+  }
+
+  /** Append one count-indexed segment to the store at `dir`: heal the
+    * root, sweep crashed stages while counting committed segments, then
+    * [[commitIndexedSegment]] under the next index. */
+  def appendSegment(spark: SparkSession, dir: String)
+                   (write: String => Unit): Unit = {
+    heal(spark, dir)
+    val n = committedChildren(spark, segmentsDir(dir), sweepStale = true).size
+    commitIndexedSegment(spark, segmentsDir(dir), n)(write)
+  }
+
+  /** Append segment `seg_<batchId>` to the store at `dir`, root healed;
+    * a batch whose segment is already committed writes nothing. */
+  def appendBatchSegment(spark: SparkSession, dir: String, batchId: Long)
+                        (write: String => Unit): Unit = {
+    heal(spark, dir)
+    val seg = f"${segmentsDir(dir)}/seg_$batchId%012d"
+    if (!exists(spark, seg)) stageCommit(spark, seg)(write)
+  }
+
+  /** The batch ids of a batch-id-named store's committed segments. */
+  def segmentBatchIds(spark: SparkSession, dir: String): Seq[Long] =
+    segments(spark, dir).map(s =>
+      new org.apache.hadoop.fs.Path(s).getName.stripPrefix("seg_").toLong)
+
+  /** Fold the store at `dir` into a new base: heal the root, compute the
+    * new floor (current floor + committed segments), and swap in the root
+    * `write` stages — with no segments, and the floor set on it. */
+  def foldSegments(spark: SparkSession, dir: String)
+                  (write: String => Unit): Unit = {
+    heal(spark, dir)
+    val floor = asOfFloor(spark, dir) +
+      committedChildren(spark, segmentsDir(dir)).size
+    swapInto(spark, dir) { tmp =>
+      write(tmp)
+      setAsOfFloor(spark, tmp, floor)
+    }
+  }
+
+  /** Clear every segment and the floor of the store at `dir` — a rebuild
+    * that overwrites the base in place restarts history at version 0. */
+  def dropSegments(spark: SparkSession, dir: String): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(segmentsDir(dir)), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/asof_floor"), false)
+  }
+
+  private def segmentsDir(dir: String): String = s"$dir/segments"
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Restore `target` from `<target>__old` if a crashed swap left it

@@ -268,14 +268,12 @@ object Dedup {
     val spark = archive.sparkSession
     import spark.implicits._
     // a full (re)build supersedes previously appended fp segments and
-    // resets version history to 0 (the writeIvfIndex contract). The
-    // ENTIRE rebuilt root — fps + bloom, no segments, no floor marker —
-    // stages aside and publishes in ONE checked whole-root swap (the
-    // compactBloomIndex discipline): the former delete-then-overwrite-
-    // then-swap sequence left two torn states reachable mid-crash (old
-    // base fps with its segments already deleted → archived texts
-    // re-admitted; new fps under the old bloom → false negatives until
-    // the filter swap landed) — round-13 ADVICE.
+    // resets version history to 0. The ENTIRE rebuilt root — fps + bloom,
+    // no segments, no floor marker — publishes in ONE checked whole-root
+    // swap: a delete-then-overwrite-then-swap sequence leaves two torn
+    // states reachable mid-crash (old base fps with its segments already
+    // deleted → archived texts re-admitted; new fps under the old bloom →
+    // false negatives until the filter swap landed).
     graft.core.Artifacts.swapInto(spark, dir) { tmp =>
       graft.core.Par.fanOut(archive.select(col(textCol).as("text")))
         .select(TextAnalysis.fingerprint(col("text")).as("content_fp"))
@@ -288,30 +286,19 @@ object Dedup {
     }
   }
 
-  /** The full stored FINGERPRINT relation: the build-time base plus every
-    * COMMITTED append segment — the postings/PQ/IVF read shape lifted
-    * over the dedup tier (round-12 verdict #5: the curation-
-    * reproducibility story needs yesterday's archive state re-derivable,
-    * which segment-versioned fps enable — [[fpsRelationAsOf]]). */
+  /** The full stored FINGERPRINT relation at head (segmented store,
+    * base `fps`). Segment-versioned fps are what make yesterday's
+    * archive state re-derivable for curation reproducibility
+    * ([[fpsRelationAsOf]]). */
   def fpsRelation(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): DataFrame = {
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    val base = spark.read.parquet(s"$dir/fps")
-    segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-  }
+                  dir: String): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "fps")
 
   /** The fingerprint relation AS OF version `asOf` (build = 0, each
-    * committed append segment adds one): base + the committed-segment
-    * prefix [[graft.core.Artifacts.segmentsAsOf]] selects — folded pins
-    * fail loudly (the shared retention contract). */
+    * committed append segment adds one). */
   def fpsRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, asOf: Long): DataFrame = {
-    val segs = graft.core.Artifacts.segmentsAsOf(spark, dir, asOf)
-    val base = spark.read.parquet(s"$dir/fps")
-    segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-  }
+                      dir: String, asOf: Long): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "fps", Some(asOf))
 
   /** MAINTAIN the stored index per ingest batch — the mergeable-sketch
     * contract the build scaladoc promises (same family as apx2's MinHash
@@ -329,15 +316,10 @@ object Dedup {
     * [[writeBloomArtifact]]'s self-healing contract). A retry is
     * harmless on both artifacts: OR is idempotent and duplicate stored
     * fingerprints only multiply anti-join matches, which the fp-group
-    * aggregate absorbs. Since round 13 the fingerprints land as a
-    * COMMITTED SEGMENT (stage + one checked rename) rather than a bare
-    * multi-file append: each segment is one immutable index VERSION
-    * ([[fpsRelationAsOf]] — yesterday's dedup run re-derivable), and a
-    * crashed append is invisible and swept instead of half-visible.
-    * Single writer per artifact root (the appendToIvfIndex note: the
-    * segment id derives from the committed count, so concurrent
-    * appenders would scramble the as-of version order). The bloom is
-    * NOT versioned — deliberately: a later filter is a bitwise SUPERSET
+    * aggregate absorbs. The fingerprints land as one segment, one
+    * immutable index VERSION ([[fpsRelationAsOf]] — yesterday's dedup
+    * run re-derivable). The bloom is NOT versioned — deliberately: a
+    * later filter is a bitwise SUPERSET
     * of every earlier one (OR-merge only sets bits), so probing the
     * CURRENT filter for a PINNED read can only add false positives,
     * which the exact anti-join against the pinned fps removes. */
@@ -345,23 +327,13 @@ object Dedup {
                          dir: String): Unit = {
     val spark = batch.sparkSession
     val (numBits, numHashes, stored) = readBloomArtifact(spark, dir)
-    val nSegs = graft.core.Artifacts
-      .committedChildren(spark, s"$dir/segments", sweepStale = true).size
     val bfp = graft.core.Par.fanOut(batch.select(col(textCol).as("text")))
       .select(TextAnalysis.fingerprint(col("text")).as("content_fp"))
       .where(col("content_fp").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val add = bloomOfFps(bfp, numBits, numHashes)
-      val merged = stored.clone()
-      var i = 0
-      while (i < merged.length) { merged(i) = (merged(i) | add(i)).toByte; i += 1 }
-      writeBloomArtifact(spark, merged, numBits, numHashes, dir)
-      graft.core.Artifacts.commitIndexedSegment(spark,
-          s"$dir/segments", nSegs) { tmp =>
-        bfp.write.parquet(tmp)
-      }
-    } finally bfp.unpersist()
+    try commitBloomBatch(spark, dir, numBits, numHashes, stored,
+      bloomOfFps(bfp, numBits, numHashes), bfp)
+    finally bfp.unpersist()
   }
 
   /** One streaming micro-batch into the stored bloom+fps index — the K2
@@ -388,8 +360,6 @@ object Dedup {
     import graft.functions.Bloom
     val spark = batch.sparkSession
     val (numBits, numHashes, stored) = readBloomArtifact(spark, dir)
-    val nSegs = graft.core.Artifacts
-      .committedChildren(spark, s"$dir/segments", sweepStale = true).size
     val bfp = graft.core.Par.fanOut(batch.select(col(textCol).as("text")))
       .select(TextAnalysis.fingerprint(col("text")).as("content_fp"))
       .where(col("content_fp").isNotNull)
@@ -401,37 +371,38 @@ object Dedup {
           xxhash64(col("content_fp"))).as("bf")).head()
       if (r.getAs[Long]("n") == 0L)
         return // fully-redelivered batch: artifact untouched
-      val add = r.getAs[Array[Byte]]("bf")
-      val merged = stored.clone()
-      var i = 0
-      while (i < merged.length) { merged(i) = (merged(i) | add(i)).toByte; i += 1 }
-      writeBloomArtifact(spark, merged, numBits, numHashes, dir)
-      graft.core.Artifacts.commitIndexedSegment(spark,
-          s"$dir/segments", nSegs) { tmp =>
-        bfp.write.parquet(tmp)
-      }
+      commitBloomBatch(spark, dir, numBits, numHashes, stored,
+        r.getAs[Array[Byte]]("bf"), bfp)
     } finally bfp.unpersist()
   }
 
-  /** Amortized fold of the fp segment history into the base — ONE
-    * whole-root atomic swap (the compactIvfIndex discipline: segments do
-    * not exist in the new root, the as-of floor advances atomically with
-    * the fold, the bloom copies through unchanged — compaction folds
-    * DATA, never the filter). As-of reads of folded versions then fail
-    * loudly. */
+  /** Commit one batch: the stored filter OR `add` FIRST, then the batch
+    * fingerprints `bfp` as a segment — the crash order
+    * [[appendToBloomIndex]] explains. */
+  private def commitBloomBatch(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, numBits: Int, numHashes: Int,
+                               stored: Array[Byte], add: Array[Byte],
+                               bfp: DataFrame): Unit = {
+    val merged = stored.clone()
+    var i = 0
+    while (i < merged.length) { merged(i) = (merged(i) | add(i)).toByte; i += 1 }
+    writeBloomArtifact(spark, merged, numBits, numHashes, dir)
+    graft.core.Artifacts.appendSegment(spark, dir)(bfp.write.parquet(_))
+  }
+
+  /** Amortized fold of the fp segment history into the base
+    * ([[graft.core.Artifacts.foldSegments]]). The bloom copies through
+    * unchanged — compaction folds DATA, never the filter. */
   def compactBloomIndex(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit = {
-    graft.core.Artifacts.heal(spark, s"$dir/bloom")
-    if (graft.core.Artifacts.committedChildren(spark, s"$dir/segments").isEmpty)
+    healBloomArtifact(spark, dir)
+    if (graft.core.Artifacts.segments(spark, dir).isEmpty)
       return // nothing to fold
-    val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) +
-      graft.core.Artifacts.committedChildren(spark, s"$dir/segments").size
-    graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
       // the filter passes through unchanged — driver byte copy, not a
       // Spark job (r17, Artifacts.copyDir; compaction folds DATA only)
       graft.core.Artifacts.copyDir(spark, s"$dir/bloom", s"$tmp/bloom")
       fpsRelation(spark, dir).write.parquet(s"$tmp/fps")
-      graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
     }
   }
 
@@ -499,13 +470,14 @@ object Dedup {
     }
   }
 
-  /** [[graft.core.Artifacts.heal]] on the filter target — read- and
-    * write-path healing, the shared artifact-commit protocol (the swap
-    * itself lives in [[graft.core.Artifacts.swapInto]]; one definition
-    * for bloom/MG/postings alike since the round-9 consolidation). */
+  /** [[graft.core.Artifacts.heal]] on the root (a fold or rebuild swaps
+    * the whole root), then on the filter, which appends swap on its own —
+    * read- and write-path healing. */
   private def healBloomArtifact(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): Unit =
+                                dir: String): Unit = {
+    graft.core.Artifacts.heal(spark, dir)
     graft.core.Artifacts.heal(spark, s"$dir/bloom")
+  }
 
   private def readBloomArtifact(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): (Int, Int, Array[Byte]) = {
@@ -1377,12 +1349,10 @@ object Dedup {
   /** STORED eval-suite decontamination index — cc1's production shape:
     * the eval SUITE is fixed while ingest batches stream past it, so its
     * tokenize+shingle pass belongs in a built-once artifact, not in every
-    * probe. Layout: `dir/postings` (the build's (eval_id, sz_e, s)
-    * posting rows) + `dir/segments/seg_N` (appended eval WAVES — new
-    * benchmark tasks arriving later — via the count-indexed
-    * [[graft.core.Artifacts.commitIndexedSegment]], single-writer
-    * verified); appends anti-join stored eval_ids so a redelivered wave
-    * is a no-op and writes no segment. Probes broadcast the full stored
+    * probe. A segmented store: base `postings` (the build's (eval_id,
+    * sz_e, s) posting rows), one segment per appended eval WAVE (new
+    * benchmark tasks arriving later); appends anti-join stored eval_ids
+    * so a redelivered wave is a no-op and writes no segment. Probes broadcast the full stored
     * relation — eval suites are benchmarks, bounded by definition, the
     * cc1 broadcast contract unchanged. */
   def writeContaminationIndex(evalSet: DataFrame, idCol: String,
@@ -1394,13 +1364,8 @@ object Dedup {
 
   /** Base + committed eval-wave segments. */
   def contaminationIndexRelation(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    val base = spark.read.parquet(s"$dir/postings")
-    segs.foldLeft(base)((acc, sgt) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(sgt)))
-  }
+                                 dir: String): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "postings")
 
   /** Append a new eval WAVE (anti-joined on eval_id — retries and
     * overlapping waves no-op and write no segment). */
@@ -1408,9 +1373,6 @@ object Dedup {
                                  textCol: String, dir: String,
                                  n: Int = 3): Unit = {
     val spark = newEval.sparkSession
-    graft.core.Artifacts.heal(spark, dir)
-    val nSegs = graft.core.Artifacts
-      .committedChildren(spark, s"$dir/segments", sweepStale = true).size
     val fresh = newEval.join(
       contaminationIndexRelation(spark, dir)
         .select(col("eval_id").as(idCol)).distinct(),
@@ -1419,10 +1381,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (posts.isEmpty) return
-      graft.core.Artifacts.commitIndexedSegment(spark,
-          s"$dir/segments", nSegs) { tmp =>
-        posts.write.parquet(tmp)
-      }
+      graft.core.Artifacts.appendSegment(spark, dir)(posts.write.parquet(_))
     } finally posts.unpersist(blocking = false)
   }
 
@@ -1461,46 +1420,33 @@ object Dedup {
                                    dir: String): Unit =
     Forget.forget(ids, idCol, s"$dir/tombstones")
 
-  /** Amortized physical rewrite of a tombstoned/segmented eval suite:
-    * ONE whole-root atomic swap publishing postings = the LIVING
-    * relation — segments and tombstones do not exist in the new root.
-    * The as-of floor advances by the segments folded, atomically with
-    * the fold (the expireWindowedCms discipline), so pinned reads of
-    * folded versions fail loudly instead of answering post-compact. */
+  /** Amortized physical rewrite of a tombstoned/segmented eval suite
+    * ([[graft.core.Artifacts.foldSegments]]): postings = the LIVING
+    * relation; tombstones do not exist in the new root. */
   def compactContaminationIndex(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): Unit = {
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
     val living = contaminationIndexLiving(spark, dir)
-    val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) + segs.size
-    graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
       // eval suites are benchmark-sized: one file, the windowed-store
       // convention — a 32-task spray of tiny files costs every future
       // probe a 32-file listing for kilobytes of postings
       living.coalesce(1).write.parquet(s"$tmp/postings")
-      graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
     }
   }
 
   /** The eval suite AS OF version `asOf` (build = 0, each appended wave
     * adds one) — reproducibility for the decon tier: "which docs did
     * yesterday's decontamination flag" must be re-derivable after
-    * today's eval wave lands (the inc7/ret8 contract). Base + the
-    * pinned committed-segment prefix via
-    * [[graft.core.Artifacts.segmentsAsOf]] (folded pins fail loudly);
-    * CURRENT tombstones still apply — a retired eval task stops
+    * today's eval wave lands (the inc7/ret8 contract). CURRENT
+    * tombstones still apply — a retired eval task stops
     * flagging even under a pin, the knn4 rule: takedown outranks
     * reproducibility. */
   def contaminationPairsFromIndexAsOf(corpus: DataFrame, idCol: String,
                                       textCol: String, dir: String,
                                       asOf: Long, n: Int = 3,
                                       minJaccard: Double = 0.7): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.segmentsAsOf(spark, dir, asOf)
-    val base = spark.read.parquet(s"$dir/postings")
-    val pinned = segs.foldLeft(base)((acc, sgt) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(sgt)))
+    val pinned = graft.core.Artifacts.readSegmented(corpus.sparkSession,
+      dir, "postings", Some(asOf))
     contaminationAgainstPostings(corpus,
       Forget.applyTombstones(pinned, "eval_id", s"$dir/tombstones"),
       idCol, textCol, n, minJaccard)

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    forgotten document stops suppressing new near-duplicates of itself
   *    immediately (the semantics del1 grades).
   *  - [[compact]] is the amortized physical rewrite: living rows to a
-  *    fresh directory, atomic local swap, tombstones cleared. O(store)
+  *    fresh directory, checked swap, tombstones cleared. O(store)
   *    once per compaction window instead of per request — run it when
   *    tombstones grow past a fraction of the store (the same trigger
   *    policy as log-structured merge). On an object store the swap is a
@@ -50,20 +50,20 @@ object Forget {
       Seq(idCol), "left_anti")
   }
 
-  /** Physical compaction: rewrite the store minus tombstones, swap, clear
-    * the tombstone store. Readers through [[applyTombstones]] see the
+  /** Physical compaction: rewrite the store minus tombstones, swap it in
+    * ([[graft.core.Artifacts.swapInto]] — no window holds the only copy,
+    * and a crashed swap heals on the next compact), then clear the
+    * tombstone store. Readers through [[applyTombstones]] see the
     * identical living view before and after (CompactSpec pins it). */
   def compact(spark: SparkSession, dataDir: String, idCol: String,
               tombDir: String): Unit = {
     if (!exists(spark, tombDir)) return
-    val tmp = dataDir + "__compact"
-    applyTombstones(spark.read.parquet(dataDir), idCol, tombDir)
-      .write.mode("overwrite").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dataDir).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dataDir), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(dataDir))
-    fs.delete(new org.apache.hadoop.fs.Path(tombDir), true)
+    graft.core.Artifacts.swapInto(spark, dataDir) { tmp =>
+      applyTombstones(spark.read.parquet(dataDir), idCol, tombDir)
+        .write.parquet(tmp)
+    }
+    val tomb = new org.apache.hadoop.fs.Path(tombDir)
+    tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(tomb, true)
   }
 }

@@ -222,12 +222,12 @@ object Profile {
     * deletion still requires a rebuild from the primary store — the
     * honest limit, documented rather than silently violated.
     *
-    * Layout: `meta/` (d, w, folded_hw); `base/` (epoch, r, b, c) — the
-    * folded history, absent until the first expire; `segments/seg_<id>/`
-    * — one per ingest batch. Idempotence under at-least-once retry: the
-    * segment NAME is the batch id, so a redelivered batch sees its
-    * committed segment and no-ops (stronger than the high-water fence —
-    * out-of-order ids are fine); after an expire folds segments away,
+    * Layout: `meta/` (d, w, folded_hw) next to a segmented store whose
+    * base `base` (epoch, r, b, c) holds the folded history — absent until
+    * the first expire — and whose segments are named by batch id, one
+    * per ingest batch. Idempotence under at-least-once retry: a
+    * redelivered batch finds its committed segment and no-ops (stronger
+    * than the high-water fence); after an expire folds segments away,
     * ids ≤ the folded high-water no-op off the meta. Single writer per
     * root, like every segmented tier. */
   def writeWindowedCms(spark: org.apache.spark.sql.SparkSession,
@@ -255,9 +255,9 @@ object Profile {
   }
 
   /** One ingest batch into the windowed store: per-epoch counters commit
-    * as segment `seg_<batchId>` (stage + one checked rename). A batch id
-    * whose segment already exists — or that an expire already folded —
-    * is a NO-OP, which is the whole redelivery contract. A NEW id BELOW
+    * as the batch's segment ([[graft.core.Artifacts.appendBatchSegment]]).
+    * A batch id whose segment already exists — or that an expire already
+    * folded — is a NO-OP, which is the whole redelivery contract. A NEW id BELOW
     * the newest committed segment is REJECTED loudly (round-14 ADVICE):
     * this store answers as-of, and versions are the batch-id-sorted
     * segment prefix — a late-arriving lower id would insert itself
@@ -267,21 +267,15 @@ object Profile {
   def ingestWindowedCmsBatch(batch: DataFrame, key: Column, epoch: Column,
                              dir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    graft.core.Artifacts.heal(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = windowedMeta(spark, dir)
     val (d, w, hw) = (meta.getAs[Int]("d"), meta.getAs[Int]("w"),
       meta.getAs[Long]("folded_hw"))
     if (batchId <= hw) return
-    val seg = f"$dir/segments/seg_$batchId%012d"
-    val p = new org.apache.hadoop.fs.Path(seg)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-      advanceSegHw(spark, dir, batchId) // heal a crashed advance
-      return
-    }
-    requireMonotoneBatchId(spark, dir, batchId)
-    graft.core.Artifacts.stageCommit(spark, seg) { tmp =>
+    graft.core.Artifacts.appendBatchSegment(spark, dir, batchId) { tmp =>
+      requireMonotoneBatchId(spark, dir, batchId)
       epochCms(batch, key, epoch, d, w).coalesce(1).write.parquet(tmp)
     }
+    // records the new id, or heals a crashed advance on redelivery
     advanceSegHw(spark, dir, batchId)
   }
 
@@ -323,9 +317,7 @@ object Profile {
                           dir: String): Long = {
     val markers = segHwMarkers(spark, dir)
     if (markers.nonEmpty) markers.max
-    else graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-      .map(s => new org.apache.hadoop.fs.Path(s).getName
-        .stripPrefix("seg_").toLong)
+    else graft.core.Artifacts.segmentBatchIds(spark, dir)
       .foldLeft(-1L)(math.max)
   }
 
@@ -357,23 +349,19 @@ object Profile {
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/seg_hw_$m"), false))
   }
 
-  /** base (if the artifact was ever folded) + the given segment list,
-    * unioned under the first part's schema — the shared read shape of
-    * both windowed sketch stores (head reads pass every committed
-    * segment; as-of reads pass [[graft.core.Artifacts.segmentsAsOf]]'s
-    * committed prefix). */
-  private def windowedUnion(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, segs: Seq[String],
-                            what: String): DataFrame = {
+  /** A windowed store's 1-row meta, root healed first (expire swaps the
+    * whole root). */
+  private def windowedMeta(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): org.apache.spark.sql.Row = {
+    graft.core.Artifacts.heal(spark, dir)
+    spark.read.parquet(s"$dir/meta").head()
+  }
+
+  private def hasBase(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): Boolean = {
     val basePath = new org.apache.hadoop.fs.Path(s"$dir/base")
-    val hasBase = basePath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(basePath)
-    val parts = (if (hasBase) Seq(s"$dir/base") else Nil) ++ segs
-    require(parts.nonEmpty,
-      s"$what: $dir holds no summaries — ingest a batch first")
-    val first = spark.read.parquet(parts.head)
-    parts.tail.foldLeft(first)((acc, s) =>
-      acc.unionByName(spark.read.schema(first.schema).parquet(s)))
+    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(basePath)
   }
 
   /** The living per-epoch counter relation: base + committed segments,
@@ -381,41 +369,29 @@ object Profile {
     * — [[expireWindowedCms]]; the filter makes the answer independent of
     * whether the expire ran, which is what the spec pins). */
   def windowedCmsCounters(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, minEpoch: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    windowedUnion(spark, dir,
-        graft.core.Artifacts.committedChildren(spark, s"$dir/segments"),
-        "windowedCmsCounters")
+                          dir: String, minEpoch: Long): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "base")
       .where(col("epoch") >= minEpoch)
       .groupBy("r", "b").agg(sum(col("c")).as("c"))
-  }
 
   /** The counter relation AS OF version `asOf` (build = 0, each
     * effective ingest adds one) — time travel for the windowed sketch
-    * tier (round-13 verdict #3: the segments were already batch-id-named
-    * committed prefixes; this lifts the shared
-    * [[graft.core.Artifacts.segmentsAsOf]] rule over them so yesterday's
-    * drift report is re-derivable after today's ingest). Pins of
-    * versions an expire folded fail LOUDLY (the floor advances with the
-    * fold); a pin taken after an expire sees the folded base, whose
+    * tier: yesterday's drift report is re-derivable after today's
+    * ingest. A pin taken after an expire sees the folded base, whose
     * sub-`minEpoch` mass is physically gone — right-to-be-forgotten at
     * epoch granularity outranks reproducibility, the knn4 rule. */
   def windowedCmsCountersAsOf(spark: org.apache.spark.sql.SparkSession,
                               dir: String, minEpoch: Long,
-                              asOf: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    windowedUnion(spark, dir,
-        graft.core.Artifacts.segmentsAsOf(spark, dir, asOf),
-        "windowedCmsCountersAsOf")
+                              asOf: Long): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "base", Some(asOf))
       .where(col("epoch") >= minEpoch)
       .groupBy("r", "b").agg(sum(col("c")).as("c"))
-  }
 
   /** [[cmsEstimate]] over the living window. */
   def cmsEstimateWindowed(spark: org.apache.spark.sql.SparkSession,
                           dir: String, probes: DataFrame, keyCol: String,
                           minEpoch: Long): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = windowedMeta(spark, dir)
     cmsEstimate(windowedCmsCounters(spark, dir, minEpoch), probes, keyCol,
       d = meta.getAs[Int]("d"), w = meta.getAs[Int]("w"))
   }
@@ -427,49 +403,35 @@ object Profile {
   def cmsEstimateWindowedAsOf(spark: org.apache.spark.sql.SparkSession,
                               dir: String, probes: DataFrame, keyCol: String,
                               minEpoch: Long, asOf: Long): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = windowedMeta(spark, dir)
     cmsEstimate(windowedCmsCountersAsOf(spark, dir, minEpoch, asOf),
       probes, keyCol, d = meta.getAs[Int]("d"), w = meta.getAs[Int]("w"))
   }
 
   /** RETIRE epochs below `minEpoch` — the sketch tier's forget verb:
-    * one whole-root atomic swap publishes meta + a folded `base/`
-    * holding ONLY the surviving epochs' counters; expired epochs'
-    * segments simply do not exist in the new root, so their counted
-    * mass is physically GONE (not merely filtered). The folded
-    * high-water advances to the largest batch id absorbed, so a
+    * one fold ([[graft.core.Artifacts.foldSegments]]) publishes meta +
+    * a folded `base/` holding ONLY the surviving epochs' counters;
+    * expired epochs' segments simply do not exist in the new root, so
+    * their counted mass is physically GONE (not merely filtered). The
+    * folded high-water advances to the largest batch id absorbed, so a
     * redelivered pre-expire batch stays a no-op. */
   def expireWindowedCms(spark: org.apache.spark.sql.SparkSession,
                         dir: String, minEpoch: Long): Unit = {
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val ids = graft.core.Artifacts.segmentBatchIds(spark, dir)
+    val meta = windowedMeta(spark, dir)
     val (d, w, hw) = (meta.getAs[Int]("d"), meta.getAs[Int]("w"),
       meta.getAs[Long]("folded_hw"))
-    val newHw = (hw +: segs.map(s =>
-      new org.apache.hadoop.fs.Path(s).getName.stripPrefix("seg_").toLong)).max
-    val basePath = new org.apache.hadoop.fs.Path(s"$dir/base")
-    val hasBase = basePath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(basePath)
-    val parts = (if (hasBase) Seq(s"$dir/base") else Nil) ++ segs
-    if (parts.isEmpty) return
+    val newHw = (hw +: ids).max
+    if (ids.isEmpty && !hasBase(spark, dir)) return
     import spark.implicits._
-    val first = spark.read.parquet(parts.head)
-    val folded = parts.tail.foldLeft(first)((acc, s) =>
-        acc.unionByName(spark.read.schema(first.schema).parquet(s)))
+    val folded = graft.core.Artifacts.readSegmented(spark, dir, "base")
       .where(col("epoch") >= minEpoch)
       .groupBy("epoch", "r", "b").agg(sum(col("c")).as("c"))
-    // the as-of floor advances by the number of segments folded, inside
-    // the same swap (the compactBloomIndex discipline): pinned reads of
-    // folded versions then fail loudly instead of answering with
-    // post-expire data (round-13 verdict #3)
-    val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) + segs.size
     val segHw = math.max(newHw, storedSegHw(spark, dir))
-    graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
       Seq((d, w, newHw)).toDF("d", "w", "folded_hw")
         .coalesce(1).write.parquet(s"$tmp/meta")
       folded.coalesce(1).write.parquet(s"$tmp/base")
-      graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
       advanceSegHw(spark, tmp, segHw) // the swap publishes it atomically
     }
   }
@@ -500,8 +462,8 @@ object Profile {
     }
   }
 
-  /** One ingest batch: per-epoch MG cells commit as segment
-    * `seg_<batchId>`; redelivered or already-folded ids no-op; a FRESH
+  /** One ingest batch: per-epoch MG cells commit as the batch's
+    * segment; redelivered or already-folded ids no-op; a FRESH
     * id below the newest committed segment throws (the
     * [[ingestWindowedCmsBatch]] monotone fence — this store answers
     * as-of too, hh3). The per-epoch summaries run as a bounded driver
@@ -511,56 +473,37 @@ object Profile {
                             dir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    graft.core.Artifacts.heal(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = windowedMeta(spark, dir)
     val (k, hw) = (meta.getAs[Int]("k"), meta.getAs[Long]("folded_hw"))
     if (batchId <= hw) return
-    val seg = f"$dir/segments/seg_$batchId%012d"
-    val p = new org.apache.hadoop.fs.Path(seg)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-      advanceSegHw(spark, dir, batchId) // heal a crashed advance
-      return
-    }
-    requireMonotoneBatchId(spark, dir, batchId)
-    val keyed = batch.select(epoch.cast("long").as("epoch"),
-        key.cast("string").as("key"))
-      .where(col("key").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val epochs = keyed.select("epoch").distinct()
-        .collect().map(_.getLong(0)).sorted
-      val cells = epochs.flatMap { e =>
-        val keys = keyed.where(col("epoch") === e).select("key")
-        val n = keys.count()
-        mgMergeShrink(mgPartitionCounters(keys, k), k).collect()
-          .map(r => (e, batchId, n, r.getString(0), r.getLong(1)))
-      }
-      graft.core.Artifacts.stageCommit(spark, seg) { tmp =>
+    graft.core.Artifacts.appendBatchSegment(spark, dir, batchId) { tmp =>
+      requireMonotoneBatchId(spark, dir, batchId)
+      val keyed = batch.select(epoch.cast("long").as("epoch"),
+          key.cast("string").as("key"))
+        .where(col("key").isNotNull)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val epochs = keyed.select("epoch").distinct()
+          .collect().map(_.getLong(0)).sorted
+        val cells = epochs.flatMap { e =>
+          val keys = keyed.where(col("epoch") === e).select("key")
+          val n = keys.count()
+          mgMergeShrink(mgPartitionCounters(keys, k), k).collect()
+            .map(r => (e, batchId, n, r.getString(0), r.getLong(1)))
+        }
         cells.toSeq.toDF("epoch", "bid", "n", "key", "cnt")
           .coalesce(1).write.parquet(tmp)
-      }
-      advanceSegHw(spark, dir, batchId)
-    } finally keyed.unpersist()
+      } finally keyed.unpersist()
+    }
+    // records the new id, or heals a crashed advance on redelivery
+    advanceSegHw(spark, dir, batchId)
   }
 
   private def windowedHhCells(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, minEpoch: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    windowedUnion(spark, dir,
-        graft.core.Artifacts.committedChildren(spark, s"$dir/segments"),
-        "windowedHhCells")
+                              dir: String, minEpoch: Long,
+                              asOf: Option[Long] = None): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "base", asOf)
       .where(col("epoch") >= minEpoch)
-  }
-
-  private def windowedHhCellsAsOf(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, minEpoch: Long,
-                                  asOf: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    windowedUnion(spark, dir,
-        graft.core.Artifacts.segmentsAsOf(spark, dir, asOf),
-        "windowedHhCellsAsOf")
-      .where(col("epoch") >= minEpoch)
-  }
 
   /** Heavy hitters of the LIVING WINDOW: candidates = the union of
     * living cells' counter keys (recall-exact per the class scaladoc),
@@ -569,7 +512,7 @@ object Profile {
   def heavyHittersWindowed(data: DataFrame, key: Column, dir: String,
                            minEpoch: Long): DataFrame =
     hhOverCells(data, key,
-      data.sparkSession.read.parquet(s"$dir/meta").head().getAs[Int]("k"),
+      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
       windowedHhCells(data.sparkSession, dir, minEpoch))
 
   /** [[heavyHittersWindowed]] AS OF a pinned version — yesterday's
@@ -580,8 +523,8 @@ object Profile {
   def heavyHittersWindowedAsOf(data: DataFrame, key: Column, dir: String,
                                minEpoch: Long, asOf: Long): DataFrame =
     hhOverCells(data, key,
-      data.sparkSession.read.parquet(s"$dir/meta").head().getAs[Int]("k"),
-      windowedHhCellsAsOf(data.sparkSession, dir, minEpoch, asOf))
+      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
+      windowedHhCells(data.sparkSession, dir, minEpoch, Some(asOf)))
 
   private def hhOverCells(data: DataFrame, key: Column, k: Int,
                           cellsIn: DataFrame): DataFrame = {
@@ -626,7 +569,7 @@ object Profile {
   def heavyMoversWindowed(data: DataFrame, key: Column, epoch: Column,
                           dir: String, e0: Long, e1: Long): DataFrame =
     moversOverCells(data, key, epoch,
-      data.sparkSession.read.parquet(s"$dir/meta").head().getAs[Int]("k"),
+      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
       windowedHhCells(data.sparkSession, dir, minEpoch = math.min(e0, e1)),
       e0, e1, dir)
 
@@ -639,16 +582,16 @@ object Profile {
     * pinned corpus slice (the hh3 contract). Recall argument unchanged —
     * it quantifies over the LIVING CELLS OF THE PINNED PREFIX, which is
     * exactly what a pre-ingest run saw. Folded pins fail loudly
-    * (segmentsAsOf's floor contract); an epoch with no cells in the
+    * (the as-of floor contract); an epoch with no cells in the
     * pinned prefix fails loudly like the head path (a mover against a
     * missing epoch is unanswerable). */
   def heavyMoversWindowedAsOf(data: DataFrame, key: Column, epoch: Column,
                               dir: String, e0: Long, e1: Long,
                               asOf: Long): DataFrame =
     moversOverCells(data, key, epoch,
-      data.sparkSession.read.parquet(s"$dir/meta").head().getAs[Int]("k"),
-      windowedHhCellsAsOf(data.sparkSession, dir,
-        minEpoch = math.min(e0, e1), asOf), e0, e1, dir)
+      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
+      windowedHhCells(data.sparkSession, dir,
+        minEpoch = math.min(e0, e1), Some(asOf)), e0, e1, dir)
 
   private def moversOverCells(data: DataFrame, key: Column, epoch: Column,
                               k: Int, cellsIn: DataFrame, e0: Long,
@@ -694,29 +637,21 @@ object Profile {
     * — (epoch, bid, n) — must survive the fold so N_w stays derivable),
     * expired cells simply do not exist in the new root, and the folded
     * high-water advances so redelivered pre-expire batches no-op. One
-    * whole-root atomic swap, the windowed-CMS discipline verbatim. */
+    * fold ([[graft.core.Artifacts.foldSegments]]). */
   def expireWindowedHh(spark: org.apache.spark.sql.SparkSession,
                        dir: String, minEpoch: Long): Unit = {
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val ids = graft.core.Artifacts.segmentBatchIds(spark, dir)
+    val meta = windowedMeta(spark, dir)
     val (k, hw) = (meta.getAs[Int]("k"), meta.getAs[Long]("folded_hw"))
-    val basePath = new org.apache.hadoop.fs.Path(s"$dir/base")
-    val hasBase = basePath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(basePath)
-    if (segs.isEmpty && !hasBase) return
-    val newHw = (hw +: segs.map(s =>
-      new org.apache.hadoop.fs.Path(s).getName.stripPrefix("seg_").toLong)).max
+    if (ids.isEmpty && !hasBase(spark, dir)) return
+    val newHw = (hw +: ids).max
     import spark.implicits._
     val living = windowedHhCells(spark, dir, minEpoch)
-    // floor advances with the fold, atomically — the windowed-CMS rule
-    val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) + segs.size
     val segHw = math.max(newHw, storedSegHw(spark, dir))
-    graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
       Seq((k, newHw)).toDF("k", "folded_hw")
         .coalesce(1).write.parquet(s"$tmp/meta")
       living.coalesce(1).write.parquet(s"$tmp/base")
-      graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
       advanceSegHw(spark, tmp, segHw) // the swap publishes it atomically
     }
   }

@@ -104,12 +104,8 @@ object Retrieval {
     require(buckets >= 1)
     val spark = docs.sparkSession
     // a full (re)build supersedes any previously appended segments — clear
-    // them or the read-side union would double-count their documents; the
-    // as-of floor resets with them (a rebuild starts history at version 0)
-    val rootFs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    rootFs.delete(new org.apache.hadoop.fs.Path(s"$dir/segments"), true)
-    rootFs.delete(new org.apache.hadoop.fs.Path(s"$dir/asof_floor"), false)
+    // them or the read-side union would double-count their documents
+    graft.core.Artifacts.dropSegments(spark, dir)
     val toks = graft.core.Par.fanOut(docs.select(
       col(idCol).cast("long").as("doc_id"),
       TextAnalysis.tokens(col(textCol)).as("toks")))
@@ -148,8 +144,7 @@ object Retrieval {
                                   dir: String): DataFrame = {
     val base = spark.read.parquet(s"$dir/terms")
       .select(col("pb"), col("term"), col("dft"))
-    segmentPostings(spark,
-        graft.core.Artifacts.committedChildren(spark, s"$dir/segments")) match {
+    segmentPostings(spark, graft.core.Artifacts.segments(spark, dir)) match {
       case None => base
       case Some(sp) => base.unionByName(
           sp.groupBy("pb", "term").agg(count(lit(1)).cast("long").as("dft")))
@@ -165,8 +160,7 @@ object Retrieval {
   private[graft] def headTotals(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): (Long, Long, Int) = {
     val meta = spark.read.parquet(s"$dir/meta")
-    segmentPostings(spark,
-        graft.core.Artifacts.committedChildren(spark, s"$dir/segments")) match {
+    segmentPostings(spark, graft.core.Artifacts.segments(spark, dir)) match {
       case None =>
         val m = meta.head(); (m.getLong(0), m.getLong(1), m.getInt(2))
       case Some(sp) =>
@@ -178,27 +172,12 @@ object Retrieval {
     }
   }
 
-  /** The full stored postings relation: the build-time base plus every
-    * COMMITTED append segment ([[appendToPostingsIndex]]) — in-flight
-    * `__tmp` stages are invisible by construction
-    * ([[graft.core.Artifacts.committedChildren]]). Every path is a
-    * pb-partitioned parquet root, so a `pb IN (…)` filter partition-prunes
-    * each root identically to the single-dir layout. */
+  /** The full stored postings relation at head (segmented store, base
+    * `postings`). Every root is pb-partitioned, so a `pb IN (…)` filter
+    * partition-prunes each root identically to the single-dir layout. */
   private def postingsRelation(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): DataFrame = {
-    // whole-dir heal first: compactPostingsIndex swaps the ENTIRE root
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    // one read PER root, unioned: a single multi-path read trips Spark's
-    // uniform-directory-depth check (base and segments sit at different
-    // depths), and per-root reads keep per-branch pb partition pruning.
-    // Segments borrow the base's inferred schema so an EMPTY segment (a
-    // fully-landed batch's retry commits one) still reads as zero rows
-    // instead of failing schema inference.
-    val base = spark.read.parquet(s"$dir/postings")
-    segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-  }
+                               dir: String): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "postings")
 
   /** MAINTAIN the stored postings index per ingest batch — the sim7
     * counterpart for the lexical index: new documents tokenize ONCE and
@@ -223,23 +202,14 @@ object Retrieval {
     *
     * Idempotence under at-least-once retry: the batch anti-joins the
     * stored postings' doc ids first (an id-column-only columnar probe —
-    * the inc2s discipline), and the segment publishes via stage +
-    * ONE checked rename ([[graft.core.Artifacts.stageCommit]]) so it is
-    * all-or-nothing: the anti-join only ever sees COMPLETE segments. The
-    * old in-place multi-file append had a real corruption window —
-    * a crash during the job commit could leave a document's postings
-    * PARTIALLY visible, and the retry's doc-id anti-join would then skip
-    * it forever (round-9 ADVICE); the staged segment closes it. The
-    * r16-era crash window between segment commit and the dictionary
-    * swap is GONE — there is no dictionary swap. */
+    * the inc2s discipline) and commits through
+    * [[graft.core.Artifacts.appendSegment]], whose staged segment is
+    * all-or-nothing — a half-visible document would be skipped forever
+    * by the retry's anti-join. There is no dictionary swap, so no crash
+    * window between segment and dictionary exists. */
   def appendToPostingsIndex(batch: DataFrame, idCol: String, textCol: String,
                             dir: String): Unit = {
     val spark = batch.sparkSession
-    graft.core.Artifacts.heal(spark, dir)
-    // sweep any crashed stage while counting committed segments for the
-    // next segment id (names only order listings; results never see them)
-    val nSegs = graft.core.Artifacts
-      .committedChildren(spark, s"$dir/segments", sweepStale = true).size
     val fresh = batch.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("__text"))
       .join(postingsRelation(spark, dir).select("doc_id").distinct(),
@@ -259,10 +229,8 @@ object Retrieval {
       .crossJoin(bucketsCol)
       .withColumn("pb", pmod(xxhash64(col("term")), col("buckets").cast("long")))
       .drop("buckets")
-    graft.core.Artifacts.commitIndexedSegment(spark,
-        s"$dir/segments", nSegs) { tmp =>
-      posted.write.partitionBy("pb").parquet(tmp)
-    }
+    graft.core.Artifacts.appendSegment(spark, dir)(
+      posted.write.partitionBy("pb").parquet(_))
   }
 
   /** The union of a committed-segment path list under the pinned
@@ -334,15 +302,11 @@ object Retrieval {
     Forget.applyTombstones(postingsRelation(spark, dir), "doc_id",
       s"$dir/tombstones")
 
-  /** Amortized physical rewrite of a tombstoned postings index: ONE
-    * whole-directory atomic swap ([[graft.core.Artifacts.swapInto]])
-    * publishing postings/terms/meta derived from the LIVING relation —
-    * segments and tombstones simply do not exist in the new root, so no
-    * crash point can double-count a folded segment or lose one (the
-    * staged root reads the old root, which stays intact until the
-    * checked rename; a mid-swap crash heals on the next read). After
-    * the compact, df and corpus totals reflect the survivors — scores
-    * equal a from-scratch build. */
+  /** Amortized physical rewrite of a tombstoned postings index
+    * ([[graft.core.Artifacts.foldSegments]]): postings/terms/meta derived
+    * from the LIVING relation; tombstones do not exist in the new root.
+    * After the compact, df and corpus totals reflect the survivors —
+    * scores equal a from-scratch build. */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Unit = {
     val living = postingsLiving(spark, dir)
@@ -365,12 +329,7 @@ object Retrieval {
           "forgotten — an empty postings store has no compacted form; " +
           "drop the index directory instead")
       val buckets = pr.getAs[Int]("buckets")
-      // the fold advances the as-of floor past every version the new base
-      // absorbs; written into the STAGED root so the floor publishes
-      // atomically with the fold (Artifacts.segmentsAsOf retention rule)
-      val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) +
-        graft.core.Artifacts.committedChildren(spark, s"$dir/segments").size
-      graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+      graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
         living.write.partitionBy("pb").parquet(s"$tmp/postings")
         living.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
           .write.partitionBy("pb").parquet(s"$tmp/terms")
@@ -381,7 +340,6 @@ object Retrieval {
         // the staged terms/meta ARE the new base summaries (r17 — the
         // read-side fold derives head state from them + any future
         // segments; no separate snapshot exists)
-        graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
       }
     } finally living.unpersist()
   }
@@ -451,23 +409,16 @@ object Retrieval {
   }
 
   /** The postings relation AS OF version `asOf` (the build is version
-    * `floor` — 0 until a compact — and each committed append adds one):
-    * base + the committed-segment prefix [[graft.core.Artifacts.segmentsAsOf]]
-    * selects, with current tombstones STILL applied — right-to-be-
-    * forgotten outranks reproducibility, so a forgotten document never
-    * resurfaces through time travel (and pre-/post-compact reads of the
-    * same pin therefore agree). Segments are immutable once committed,
-    * so a pinned read is reproducible until compaction folds it away
-    * (which then fails loudly — the mv3 retention contract). */
+    * `floor` — 0 until a compact — and each committed append adds one),
+    * with current tombstones STILL applied — right-to-be-forgotten
+    * outranks reproducibility, so a forgotten document never resurfaces
+    * through time travel (and pre-/post-compact reads of the same pin
+    * therefore agree). */
   def postingsRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, asOf: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.segmentsAsOf(spark, dir, asOf)
-    val base = spark.read.parquet(s"$dir/postings")
-    val pinned = segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-    Forget.applyTombstones(pinned, "doc_id", s"$dir/tombstones")
-  }
+                           dir: String, asOf: Long): DataFrame =
+    Forget.applyTombstones(
+      graft.core.Artifacts.readSegmented(spark, dir, "postings", Some(asOf)),
+      "doc_id", s"$dir/tombstones")
 
   /** [[bm25TopKFromIndex]] AS OF a pinned index version — the
     * reproducibility verb a training pipeline needs ("re-run yesterday's
@@ -503,8 +454,8 @@ object Retrieval {
     val meta = spark.read.parquet(s"$dir/meta")
     val (nDocs, nToks, buckets) =
       if (!fs.exists(hp(s"$dir/tombstones"))) {
-        val segs = graft.core.Artifacts.segmentsAsOf(spark, dir, asOf)
-        segmentPostings(spark, segs) match {
+        segmentPostings(spark,
+            graft.core.Artifacts.segments(spark, dir, Some(asOf))) match {
           case None =>
             val m = meta.head(); (m.getLong(0), m.getLong(1), m.getInt(2))
           case Some(sp) =>

@@ -1006,14 +1006,9 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     listCol: String, dir: String): Unit = {
     // a full (re)build supersedes any previously appended segments — clear
-    // them or the read-side union would double-count; the as-of floor
-    // resets with them (a rebuild starts version history at 0). Tombstones
-    // stay (the shared caveat: re-adding a forgotten id needs a compact).
-    val spark = corpus.sparkSession
-    val rootFs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    rootFs.delete(new org.apache.hadoop.fs.Path(s"$dir/segments"), true)
-    rootFs.delete(new org.apache.hadoop.fs.Path(s"$dir/asof_floor"), false)
+    // them or the read-side union would double-count. Tombstones stay (the
+    // shared caveat: re-adding a forgotten id needs a compact).
+    graft.core.Artifacts.dropSegments(corpus.sparkSession, dir)
     listCentroids(corpus, listCol, vecCol)
       .write.mode("overwrite").parquet(s"$dir/centroids")
     quantizeInt8(corpus, idCol, vecCol, carry = Seq(listCol))
@@ -1021,23 +1016,18 @@ object Similarity {
       .write.mode("overwrite").partitionBy("list").parquet(s"$dir/qindex")
   }
 
-  /** The full stored IVF index relation: the build-time base plus every
-    * COMMITTED append segment ([[appendToIvfIndex]]) — in-flight `__tmp`
-    * stages are invisible ([[graft.core.Artifacts.committedChildren]]).
-    * Every root is a list-partitioned parquet dir, so a `list IN (…)`
-    * probe filter partition-prunes each root identically to the
-    * single-dir layout (the postingsRelation read shape: one read per
-    * root, segments borrow the base schema so an empty retry segment
-    * still reads as zero rows). */
+  /** The full stored IVF index relation at head (segmented store, base
+    * `qindex`). Every root is a list-partitioned parquet dir, so a
+    * `list IN (…)` probe filter partition-prunes each root identically
+    * to the single-dir layout. */
   def ivfIndexRelation(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): DataFrame = {
-    // whole-root heal first: compactIvfIndex swaps the ENTIRE root
+                       dir: String): DataFrame = ivfRoots(spark, dir, None)
+
+  private def ivfRoots(spark: org.apache.spark.sql.SparkSession,
+                       dir: String, asOf: Option[Long]): DataFrame = {
     graft.core.Artifacts.heal(spark, dir)
     graft.core.Artifacts.heal(spark, s"$dir/qindex")
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    val base = spark.read.parquet(s"$dir/qindex")
-    segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
+    graft.core.Artifacts.readSegmented(spark, dir, "qindex", asOf)
   }
 
   /** APPEND new vectors to a STORED IVF index ([[writeIvfIndex]]) without
@@ -1060,38 +1050,19 @@ object Similarity {
     * guard below fails loudly on them (the Dedup packer's raise_error
     * discipline) instead of producing a nondeterministic index.
     *
-    * Idempotence under at-least-once retry (the postings/PQ discipline,
-    * extended to this tier for streaming maintenance — sim11s): the
-    * batch anti-joins the stored index's vec_ids first (an
-    * id-column-only columnar probe of the FULL stored relation, not the
-    * living view — a stale tombstone must keep hiding a re-appended id
-    * until compact, the shared caveat), and the segment publishes via
-    * stage + ONE checked rename ([[graft.core.Artifacts.stageCommit]])
-    * so the anti-join only ever sees COMPLETE segments: a retried
-    * append re-codes nothing and a crashed one is invisible and swept.
-    * Segments are list-partitioned like the base, so probe-time
+    * Idempotence under at-least-once retry (sim11s): the batch
+    * anti-joins the stored index's vec_ids first (an id-column-only
+    * columnar probe of the FULL stored relation, not the living view — a
+    * stale tombstone must keep hiding a re-appended id until compact,
+    * the shared caveat) and commits through
+    * [[graft.core.Artifacts.appendSegment]]. Segments are list-partitioned like the base, so probe-time
     * partition pruning applies to every root, and each committed
     * segment is one immutable index VERSION
-    * ([[ivfIndexRelationAsOf]]).
-    *
-    * SINGLE WRITER REQUIRED (load-bearing for as-of, not just a
-    * convention): the segment id derives from the committed-segment
-    * COUNT, so two concurrent appenders would both commit a seg_N —
-    * distinct dirs (the UUID suffix keeps them from colliding), but
-    * then [[graft.core.Artifacts.segmentsAsOf]]'s lexicographic prefix
-    * would order version N vs N+1 by random UUID bytes. Serialize
-    * appends per index root (exactly what the foreachBatch maintenance
-    * path — one streaming query per artifact — already guarantees); the
-    * same assumption holds for the postings and PQ segment tiers, and
-    * since round 14 every count-indexed commit VERIFIES it after the
-    * fact ([[graft.core.Artifacts.commitIndexedSegment]] — a detected
-    * same-index twin fails loudly instead of corrupting pins). */
+    * ([[ivfIndexRelationAsOf]]). Single writer per index root. */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                        dir: String): Unit = {
     val spark = newVecs.sparkSession
     graft.core.Artifacts.heal(spark, dir)
-    val nSegs = graft.core.Artifacts
-      .committedChildren(spark, s"$dir/segments", sweepStale = true).size
     val cent = spark.read.parquet(s"$dir/centroids")
     val fresh = newVecs
       .join(ivfIndexRelation(spark, dir).select(col("vec_id").as(idCol)),
@@ -1112,8 +1083,7 @@ object Similarity {
       .withColumn("pr", row_number().over(w))
       .where(col("pr") === 1)
       .select(col("vec_id"), col("v0"), col("list"))
-    graft.core.Artifacts.commitIndexedSegment(spark,
-        s"$dir/segments", nSegs) { tmp =>
+    graft.core.Artifacts.appendSegment(spark, dir) { tmp =>
       quantizeInt8(assigned, "vec_id", "v0", carry = Seq("list"))
         .write.partitionBy("list").parquet(tmp)
     }
@@ -1172,46 +1142,29 @@ object Similarity {
   }
 
   /** The index relation AS OF version `asOf` (the build is version
-    * `floor`, each committed append segment adds one): base + the
-    * committed-segment prefix [[graft.core.Artifacts.segmentsAsOf]]
-    * selects, with CURRENT tombstones still applied — the
-    * postings/PQ as-of contract verbatim (right-to-be-forgotten
-    * outranks reproducibility; folded pins fail loudly). Centroids need
+    * `floor`, each committed append segment adds one), with CURRENT
+    * tombstones still applied (right-to-be-forgotten outranks
+    * reproducibility). Centroids need
     * no pinning: they are FROZEN from build to rebuild (appends never
     * touch them — the FAISS contract sim7 grades) and a rebuild swaps
     * them together with a reset version history. */
   def ivfIndexRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, asOf: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    graft.core.Artifacts.heal(spark, s"$dir/qindex")
-    val segs = graft.core.Artifacts.segmentsAsOf(spark, dir, asOf)
-    val base = spark.read.parquet(s"$dir/qindex")
-    val pinned = segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-    minusIvfTombstones(pinned, spark, dir)
-  }
+                           dir: String, asOf: Long): DataFrame =
+    minusIvfTombstones(ivfRoots(spark, dir, Some(asOf)), spark, dir)
 
-  /** Amortized physical rewrite of a tombstoned/segmented IVF index: ONE
-    * whole-root atomic swap ([[graft.core.Artifacts.swapInto]])
-    * publishing centroids + qindex with qindex = the LIVING relation —
-    * segments and tombstones simply do not exist in the new root, so no
-    * crash point can double-count a folded segment or lose one (the
-    * compactPqIndex discipline verbatim: the staged root reads the old
-    * root, which stays intact until the checked rename; a mid-swap crash
-    * heals on the next read; stale tombstones re-planted over removed
-    * rows are a no-op view — Round11Spec pins both). The fold advances
-    * the as-of floor past every version the new base absorbs, written
-    * into the staged root so it publishes atomically with the fold
-    * ([[graft.core.Artifacts.segmentsAsOf]] retention rule). Centroids
-    * copy through unchanged — compaction folds DATA, never trained
-    * state. Offline maintenance, like [[retrainIvfIndex]]. */
+  /** Amortized physical rewrite of a tombstoned/segmented IVF index
+    * ([[graft.core.Artifacts.foldSegments]]): centroids + qindex with
+    * qindex = the LIVING relation; tombstones do not exist in the new
+    * root (stale tombstones re-planted over removed rows are a no-op
+    * view — Round11Spec pins it). Centroids copy through unchanged —
+    * compaction folds DATA, never trained state. Offline maintenance,
+    * like [[retrainIvfIndex]]. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Unit = {
     graft.core.Artifacts.heal(spark, dir)
     val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
     val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb) &&
-      graft.core.Artifacts.committedChildren(spark, s"$dir/segments").isEmpty)
+    if (!fs.exists(tomb) && graft.core.Artifacts.segments(spark, dir).isEmpty)
       return // nothing to fold
     val living = ivfLivingIndex(spark, dir)
     // Same edge as compactPostingsIndex: compacting a FULLY-forgotten
@@ -1226,15 +1179,12 @@ object Similarity {
       s"compactIvfIndex: every vector in $dir has been forgotten — an " +
         "empty index has no compacted form; drop the index directory " +
         "instead")
-    val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) +
-      graft.core.Artifacts.committedChildren(spark, s"$dir/segments").size
-    graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
       // centroids are FROZEN trained state — pass through as a driver
       // byte copy, not a Spark job (r17, Artifacts.copyDir)
       graft.core.Artifacts.copyDir(spark, s"$dir/centroids",
         s"$tmp/centroids")
       living.write.partitionBy("list").parquet(s"$tmp/qindex")
-      graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
     }
   }
 
@@ -1259,6 +1209,7 @@ object Similarity {
     * (list, n, ccos), |lists| rows. */
   def indexCentroidDrift(spark: org.apache.spark.sql.SparkSession,
                          dir: String): DataFrame = {
+    graft.core.Artifacts.heal(spark, dir)
     val cent = spark.read.parquet(s"$dir/centroids")
     // the LIVING relation: drift measures the CURRENT population — appends
     // (committed segments) count, forgotten vectors do not
@@ -1616,18 +1567,11 @@ object Similarity {
     }
   }
 
-  /** The full stored CODES relation: the build-time base plus every
-    * COMMITTED append segment — in-flight `__tmp` stages are invisible
-    * ([[graft.core.Artifacts.committedChildren]]); the postings-tier
-    * read shape (one read per root, segments borrow the base schema so
-    * an empty retry segment still reads as zero rows). */
+  /** The full stored CODES relation at head (segmented store, base
+    * `codes`). */
   def pqCodesRelation(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): DataFrame = {
-    val segs = graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
-    val base = spark.read.parquet(s"$dir/codes")
-    segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-  }
+                      dir: String): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "codes")
 
   /** Read the stored quantizer back as driver state: (books, sub, scale)
     * — m·ksub·(dim/m) longs, the km1 bounded-collect budget. */
@@ -1653,28 +1597,19 @@ object Similarity {
     * quantizer); the batch codes under the stored books (one bounded
     * driver read + one pure projection) and lands as a COMMITTED SEGMENT.
     *
-    * Idempotence under at-least-once retry (round-10 ADVICE, the
-    * postings-tier discipline): the batch anti-joins the stored codes'
-    * vec_ids first (an id-column-only columnar probe), and the segment
-    * publishes via stage + ONE checked rename
-    * ([[graft.core.Artifacts.stageCommit]]) so the anti-join only ever
-    * sees COMPLETE segments — a retried append re-codes nothing and a
-    * crashed one is invisible and swept, never a half-visible duplicate
-    * poisoning the ADC shortlist. */
+    * Idempotence under at-least-once retry: the batch anti-joins the
+    * stored codes' vec_ids first (an id-column-only columnar probe) and
+    * commits through [[graft.core.Artifacts.appendSegment]] — never a
+    * half-visible duplicate poisoning the ADC shortlist. */
   def appendToPqIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                       dir: String): Unit = {
     val spark = newVecs.sparkSession
     val (books, sub, scale) = readPqBooks(spark, dir)
-    val nSegs = graft.core.Artifacts
-      .committedChildren(spark, s"$dir/segments", sweepStale = true).size
     val fresh = newVecs
       .join(pqCodesRelation(spark, dir).select(col("vec_id").as(idCol)),
         Seq(idCol), "left_anti")
     val coded = encodePq(fresh, idCol, vecCol, books, sub, scale)
-    graft.core.Artifacts.commitIndexedSegment(spark,
-        s"$dir/segments", nSegs) { tmp =>
-      coded.write.parquet(tmp)
-    }
+    graft.core.Artifacts.appendSegment(spark, dir)(coded.write.parquet(_))
   }
 
   /** FORGET vectors from a STORED PQ index — right-to-be-forgotten for
@@ -1709,15 +1644,11 @@ object Similarity {
     Forget.applyTombstones(pqCodesRelation(spark, dir), "vec_id",
       s"$dir/tombstones")
 
-  /** Amortized physical rewrite of a tombstoned/segmented PQ index: ONE
-    * whole-directory atomic swap ([[graft.core.Artifacts.swapInto]])
-    * publishing codebooks/meta/codes with codes = the LIVING relation —
-    * segments and tombstones simply do not exist in the new root, so no
-    * crash point can double-count a folded segment or lose one (the
-    * compactPostingsIndex discipline verbatim: the staged root reads the
-    * old root, which stays intact until the checked rename; a mid-swap
-    * crash heals on the next read). Codebooks and meta copy through
-    * unchanged — compaction folds DATA, never trained state. */
+  /** Amortized physical rewrite of a tombstoned/segmented PQ index
+    * ([[graft.core.Artifacts.foldSegments]]): codebooks/meta/codes with
+    * codes = the LIVING relation; tombstones do not exist in the new
+    * root. Codebooks and meta copy through unchanged — compaction folds
+    * DATA, never trained state. */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
                      dir: String): Unit = {
     graft.core.Artifacts.heal(spark, dir)
@@ -1725,8 +1656,7 @@ object Similarity {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val fs = p(dir).getFileSystem(conf)
     val hasTombs = fs.exists(p(s"$dir/tombstones"))
-    if (!hasTombs &&
-      graft.core.Artifacts.committedChildren(spark, s"$dir/segments").isEmpty)
+    if (!hasTombs && graft.core.Artifacts.segments(spark, dir).isEmpty)
       return // nothing to fold
     val living = pqCodesLiving(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1738,19 +1668,13 @@ object Similarity {
         s"compactPqIndex: every vector in $dir has been forgotten — an " +
           "empty index has no compacted form; drop the index directory " +
           "instead")
-      // the fold advances the as-of floor past every version the new
-      // base absorbs — written into the staged root so it publishes
-      // atomically with the fold (Artifacts.segmentsAsOf retention rule)
-      val newFloor = graft.core.Artifacts.asOfFloor(spark, dir) +
-        graft.core.Artifacts.committedChildren(spark, s"$dir/segments").size
-      graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+      graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
         // codebooks/meta are FROZEN trained state — pass through as
         // driver byte copies, not Spark jobs (r17, Artifacts.copyDir)
         graft.core.Artifacts.copyDir(spark, s"$dir/codebooks",
           s"$tmp/codebooks")
         graft.core.Artifacts.copyDir(spark, s"$dir/meta", s"$tmp/meta")
         living.write.parquet(s"$tmp/codes")
-        graft.core.Artifacts.setAsOfFloor(spark, tmp, newFloor)
       }
     } finally living.unpersist()
   }
@@ -1773,20 +1697,14 @@ object Similarity {
   }
 
   /** The codes relation AS OF version `asOf` (the build is version
-    * `floor`, each committed append segment adds one): base + the
-    * committed-segment prefix [[graft.core.Artifacts.segmentsAsOf]]
-    * selects, with current tombstones STILL applied — the
-    * postingsRelationAsOf contract verbatim (right-to-be-forgotten
-    * outranks reproducibility; folded pins fail loudly). */
+    * `floor`, each committed append segment adds one), with current
+    * tombstones STILL applied (right-to-be-forgotten outranks
+    * reproducibility). */
   def pqCodesRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, asOf: Long): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    val segs = graft.core.Artifacts.segmentsAsOf(spark, dir, asOf)
-    val base = spark.read.parquet(s"$dir/codes")
-    val pinned = segs.foldLeft(base)((acc, s) =>
-      acc.unionByName(spark.read.schema(base.schema).parquet(s)))
-    Forget.applyTombstones(pinned, "vec_id", s"$dir/tombstones")
-  }
+                          dir: String, asOf: Long): DataFrame =
+    Forget.applyTombstones(
+      graft.core.Artifacts.readSegmented(spark, dir, "codes", Some(asOf)),
+      "vec_id", s"$dir/tombstones")
 
   /** [[pqTopKFromIndex]] AS OF a pinned index version — time travel for
     * the codebook tier (ret8's reproducibility verb on the PQ artifact):

@@ -169,4 +169,34 @@ class CoreSpec extends SparkSpec {
     assert(e.getMessage == "fast failure", "the action's own exception, not a wrapper")
     assert(slowDone.get, "rethrew while a sibling action was still running")
   }
+
+  test("segmented-store layout is named only in core.Artifacts (source scan)") {
+    val src = Iterator.iterate(new java.io.File(".").getCanonicalFile)(_.getParentFile)
+      .takeWhile(_ != null).map(new java.io.File(_, "src/main/scala"))
+      .find(_.isDirectory)
+      .getOrElse(fail("no src/main/scala above the working directory"))
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val layout = Seq(
+      "/segments\\b", // the segments subdirectory
+      "committedChildren\\([^)]*segments",
+      "\\bsegmentsAsOf\\b", "\\basOfFloor\\b", "\\bsetAsOfFloor\\b",
+      "\\bcommitIndexedSegment\\b").map(_.r)
+    val files = scalaFiles(src)
+    assert(files.exists(_.getPath.endsWith("ext/Retrieval.scala")),
+      s"scan root $src holds no tier sources")
+    val hits = for {
+      f <- files if !f.getPath.endsWith("core/Artifacts.scala")
+      (line, n) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n", -1).toSeq.zipWithIndex
+      code = line.replaceAll("(^|\\s)//.*$", "")
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if layout.exists(_.findFirstIn(code).isDefined)
+    } yield s"${src.toPath.relativize(f.toPath)}:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      "segmented-store layout named outside core.Artifacts — use its " +
+        "segments/readSegmented/appendSegment/foldSegments entries:\n" +
+        hits.mkString("\n"))
+  }
 }

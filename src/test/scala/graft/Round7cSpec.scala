@@ -113,6 +113,27 @@ class Round7cSpec extends SparkSpec {
       "physical rewrite kept dead rows")
   }
 
+  test("Forget: a compact crashed mid-swap heals on the next compact") {
+    import spark.implicits._
+    val dir = core.Scratch.dir("forget-crash-spec-")
+    (0L until 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/arch")
+    ext.Forget.forget(Seq(3L, 5L, 11L).toDF("doc_id"), "doc_id", s"$dir/tomb")
+    def living() = ext.Forget.applyTombstones(
+      spark.read.parquet(s"$dir/arch"), "doc_id", s"$dir/tomb")
+      .select("doc_id").as[Long].collect().toSet
+    val before = living()
+    // a crash between the swap's two renames: the only copy sits aside
+    assert(new java.io.File(s"$dir/arch")
+      .renameTo(new java.io.File(s"$dir/arch__old")))
+    ext.Forget.compact(spark, s"$dir/arch", "doc_id", s"$dir/tomb")
+    assert(!new java.io.File(s"$dir/arch__old").exists(), "aside not cleared")
+    assert(!new java.io.File(s"$dir/tomb").exists(), "tombstones not cleared")
+    assert(living() == before, "the healed compact changed the living view")
+    assert(spark.read.parquet(s"$dir/arch").count() == before.size,
+      "physical rewrite kept dead rows")
+  }
+
   test("kCorePeel: pendant peels off, core survives at adaptive k") {
     import spark.implicits._
     // triangle {1,2,3} plus pendant 4-1: avg deg = 2 → k = 2·3/4+1 = 2;
