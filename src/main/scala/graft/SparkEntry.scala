@@ -1662,9 +1662,7 @@ object SparkEntry {
       }
       // fixture-drift guard: the compact must actually fold a
       // delete-carrying HISTORY, not a single version
-      val nVersions = Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty)
-        .count(f => f.isDirectory && f.getName.startsWith("v="))
+      val nVersions = graft.streaming.Ingest.snapshotVersions(s, root).size
       require(nVersions >= 3,
         s"mv5: expected >= 3 committed versions pre-compact, got $nVersions")
       graft.streaming.Ingest.compactMatview(s, root)

@@ -76,42 +76,21 @@ object Sinks {
     * the directory into ~`targetFileBytes` files (count from actual input
     * size), sorted by `sortCol` within files so min/max row-group stats
     * stay selective for range predicates. Run per closed partition (e.g.
-    * the previous hour) — never on the partition being written. */
+    * the previous hour) — never on the partition being written. The
+    * rewrite commits through [[Artifacts.swapInto]], so the next call
+    * heals a crash between its renames. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              sortCol: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val df = spark.read.parquet(dir)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = math.max(1, (bytes / BigInt(targetFileBytes)).toInt +
-      (if (bytes % BigInt(targetFileBytes) > 0) 1 else 0))
-    val tmp = dir.stripSuffix("/") + "__compact_tmp"
-    df.repartitionByRange(files, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    // atomic-ish swap: rename old out, tmp in, drop old (same filesystem).
-    // Hadoop FileSystem.rename reports failure by RETURNING FALSE, not
-    // throwing — every step is checked, and a failed swap-in restores the
-    // original before raising, so no path through here deletes the only
-    // copy of the data.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    val oldP = new org.apache.hadoop.fs.Path(dir.stripSuffix("/") + "__compact_old")
-    if (!fs.rename(dirP, oldP))
-      throw new java.io.IOException(
-        s"compact: could not move $dir aside to $oldP — original data untouched")
-    if (!fs.rename(tmpP, dirP)) {
-      val restored = fs.rename(oldP, dirP)
-      throw new java.io.IOException(
-        s"compact: could not swap compacted files into $dir" +
-          (if (restored) " — original data restored"
-           else s" — ORIGINAL DATA LEFT AT $oldP, restore manually"))
+              sortCol: String, targetFileBytes: Long = 128L << 20): Unit =
+    // read and size inside the write: after the heal, never off an aside
+    Artifacts.swapInto(spark, dir.stripSuffix("/")) { tmp =>
+      val df = spark.read.parquet(dir)
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val files = math.max(1, (bytes / BigInt(targetFileBytes)).toInt +
+        (if (bytes % BigInt(targetFileBytes) > 0) 1 else 0))
+      df.repartitionByRange(files, col(sortCol))
+        .sortWithinPartitions(sortCol)
+        .write.parquet(tmp)
     }
-    if (!fs.delete(oldP, true))
-      throw new java.io.IOException(
-        s"compact: swap succeeded but could not remove the pre-compaction " +
-          s"copy at $oldP — delete it manually")
-  }
 
   /** TTL RETENTION sweep over a K3 y/m/d/h-partitioned archive — the
     * maintenance job every production archive schedules next to

@@ -452,8 +452,8 @@ object Dedup {
       bloomBytes, numHashes)
   }
 
-  /** Commit the filter via a side-write + checked two-rename swap (the
-    * compactMatview device) — a plain mode("overwrite") deletes the ONLY
+  /** Commit the filter via a side-write + checked two-rename swap
+    * ([[graft.core.Artifacts.swapInto]]) — a plain mode("overwrite") deletes the ONLY
     * copy of the stored filter before the replacement commits, so a
     * crash in that window would force the full archive re-read the
     * artifact exists to avoid. Here no window deletes the only copy: a

@@ -128,7 +128,7 @@ object Replay {
                          schemaDDL: String, tag: String)
                         (run: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
     val dir = scratch(tag)
-    stageSliceFiles(s"$dir/in", s"$dir/stage", slices)
+    stageSliceFiles(spark, s"$dir/in", slices)
     val src = spark.readStream.schema(schemaDDL)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
     scopedPartitions(spark) {
@@ -142,24 +142,27 @@ object Replay {
   /** Stage each slice as ONE parquet file under `inDir` with strictly
     * increasing modification times, so a `maxFilesPerTrigger = 1` file
     * source replays slice i as micro-batch i (the source orders files by
-    * mod time). The `coalesce(1)` is harness staging only — it pins the
-    * file-per-batch layout for a fixture-sized replay; the operator body
-    * under test stays fully distributed. */
-  private def stageSliceFiles(inDir: String, stagePrefix: String,
+    * mod time). Slices append straight into `inDir`: no stream reads it
+    * until every slice is staged. The `coalesce(1)` is harness staging
+    * only — it pins the file-per-batch layout for a fixture-sized replay;
+    * the operator body under test stays fully distributed. */
+  private def stageSliceFiles(spark: SparkSession, inDir: String,
                               slices: Seq[DataFrame]): Unit = {
-    val in = new java.io.File(inDir)
-    in.mkdirs()
+    val in = new org.apache.hadoop.fs.Path(inDir)
+    val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parts(): Set[org.apache.hadoop.fs.Path] =
+      if (!fs.exists(in)) Set.empty
+      else fs.listStatus(in).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).toSet
     slices.zipWithIndex.foreach { case (df, i) =>
-      val tmp = s"$stagePrefix$i"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged under $tmp"))
-      val dst = new java.io.File(in, f"batch$i%05d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
+      val before = parts()
+      df.coalesce(1).write.mode("append").parquet(inDir)
+      val staged = parts() -- before
+      require(staged.size == 1,
+        s"slice $i staged ${staged.size} part files under $inDir, not one")
       // distinct mod-times a minute apart: file-source ordering is by
       // timestamp, and all files sit far inside the 7-day maxFileAge window
-      dst.setLastModified(1600000000000L + i * 60000L)
+      fs.setTimes(staged.head, 1600000000000L + i * 60000L, -1L)
     }
   }
 
@@ -397,7 +400,7 @@ object Replay {
     }
     val dir = scratch("mjoin-")
     def stage(df: DataFrame, sub: String): DataFrame = {
-      stageSliceFiles(s"$dir/$sub", s"$dir/stage-$sub", sliceOf(df))
+      stageSliceFiles(spark, s"$dir/$sub", sliceOf(df))
       spark.readStream
         .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
         .option("maxFilesPerTrigger", 1).parquet(s"$dir/$sub")

@@ -151,6 +151,28 @@ class CoreSpec extends SparkSpec {
       == (0L until 1000L))
   }
 
+  test("compact heals a crash between its renames and clears a stale aside") {
+    val path = tmpDir("sink_compact_crash") + "/part"
+    spark.range(0, 1000).toDF("v").repartition(8).write.parquet(path)
+    def check(): Unit = {
+      val files = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"tiny input must compact to one file, got ${files.length}")
+      assert(spark.read.parquet(path).select("v").as[Long].collect().sorted.toSeq
+        == (0L until 1000L))
+      assert(!new java.io.File(path + "__old").exists())
+    }
+    // the crash window: the live copy moved aside, the compacted copy never
+    // swapped in — the aside holds the only copy
+    assert(new java.io.File(path).renameTo(new java.io.File(path + "__old")))
+    Sinks.compact(spark, path, "v")
+    check()
+    // a crash after the swap, before the cleanup: a stale aside beside the
+    // live dir is garbage
+    assert(new java.io.File(path + "__old").mkdirs())
+    Sinks.compact(spark, path, "v")
+    check()
+  }
+
   test("S2-style filter on date parts prunes to the expected hour") {
     val df = Sinks.withDateParts(msgs, "timestamp")
     val out = df.where(col("year") === 2022 && col("month") === 2 &&
@@ -170,7 +192,11 @@ class CoreSpec extends SparkSpec {
     assert(slowDone.get, "rethrew while a sibling action was still running")
   }
 
-  test("segmented-store layout is named only in core.Artifacts (source scan)") {
+  /** `file:line: code` for every code line (comments skipped) of a
+    * `src/main` Scala file, other than those ending in `exempt`, that
+    * matches one of `patterns`. */
+  private def sourceHits(patterns: Seq[scala.util.matching.Regex],
+                         exempt: Seq[String]): Seq[String] = {
     val src = Iterator.iterate(new java.io.File(".").getCanonicalFile)(_.getParentFile)
       .takeWhile(_ != null).map(new java.io.File(_, "src/main/scala"))
       .find(_.isDirectory)
@@ -178,25 +204,41 @@ class CoreSpec extends SparkSpec {
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = scalaFiles(src)
+    assert(files.exists(_.getPath.endsWith("ext/Retrieval.scala")),
+      s"scan root $src holds no tier sources")
+    for {
+      f <- files if !exempt.exists(f.getPath.endsWith)
+      (line, n) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n", -1).toSeq.zipWithIndex
+      code = line.replaceAll("(^|\\s)//.*$", "")
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if patterns.exists(_.findFirstIn(code).isDefined)
+    } yield s"${src.toPath.relativize(f.toPath)}:${n + 1}: ${line.trim}"
+  }
+
+  test("segmented-store layout is named only in core.Artifacts (source scan)") {
     val layout = Seq(
       "/segments\\b", // the segments subdirectory
       "committedChildren\\([^)]*segments",
       "\\bsegmentsAsOf\\b", "\\basOfFloor\\b", "\\bsetAsOfFloor\\b",
       "\\bcommitIndexedSegment\\b").map(_.r)
-    val files = scalaFiles(src)
-    assert(files.exists(_.getPath.endsWith("ext/Retrieval.scala")),
-      s"scan root $src holds no tier sources")
-    val hits = for {
-      f <- files if !f.getPath.endsWith("core/Artifacts.scala")
-      (line, n) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n", -1).toSeq.zipWithIndex
-      code = line.replaceAll("(^|\\s)//.*$", "")
-      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
-      if layout.exists(_.findFirstIn(code).isDefined)
-    } yield s"${src.toPath.relativize(f.toPath)}:${n + 1}: ${line.trim}"
+    val hits = sourceHits(layout, exempt = Seq("core/Artifacts.scala"))
     assert(hits.isEmpty,
       "segmented-store layout named outside core.Artifacts — use its " +
         "segments/readSegmented/appendSegment/foldSegments entries:\n" +
         hits.mkString("\n"))
+  }
+
+  test("artifact files are moved only by core.Artifacts on Hadoop FileSystem (source scan)") {
+    val fileApi = Seq("java.io.File", ".rename(", "renameTo(", "Files.move")
+      .map(s => java.util.regex.Pattern.quote(s).r)
+    // Verify's mkdirs makes its local report directory, not an artifact
+    val hits = sourceHits(fileApi,
+      exempt = Seq("core/Artifacts.scala", "graft/Verify.scala"))
+    assert(hits.isEmpty,
+      "java.io file access or a rename outside core.Artifacts — list " +
+        "and move artifact files through Hadoop FileSystem and commit " +
+        "through Artifacts.swapInto/stageCommit:\n" + hits.mkString("\n"))
   }
 }

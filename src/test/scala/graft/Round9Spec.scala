@@ -71,20 +71,43 @@ class Round9Spec extends SparkSpec {
     streaming.Ingest.upsertMatviewBatch(
       Seq(("a", 10L)).toDF("k", "cnt"), Seq("k"), root, 1L, buckets = 4)
     val before = snapshotRows(root)
-    // simulate the crash window: v=1 moved aside, compacted dir never
-    // swapped in — the marker holds the only copy of v=1
-    assert(new java.io.File(s"$root/v=1")
-      .renameTo(new java.io.File(s"$root/compact_old_v=1")))
+    // simulate the crash window of the whole-root swap: the root moved
+    // aside, the compacted root never swapped in — the aside holds the
+    // only copy of the snapshot
+    assert(new java.io.File(root).renameTo(new java.io.File(s"${root}__old")))
     streaming.Ingest.compactMatview(spark, root)
     assert(versionDirs(root) == Seq("v=1"), "recovery + compaction completed")
     assert(snapshotRows(root) == before,
-      "self-heal must restore the asided newest version before folding")
-    // committed-then-cleanup-crash variant: stale marker next to a live
-    // v=N is garbage and a re-run removes it silently
-    assert(new java.io.File(s"$root/compact_old_v=1").mkdirs())
+      "self-heal must restore the asided root before folding")
+    // committed-then-cleanup-crash variant: a stale aside next to a live
+    // root is garbage and a re-run removes it silently
+    assert(new java.io.File(s"${root}__old").mkdirs())
     streaming.Ingest.compactMatview(spark, root)
-    assert(!new java.io.File(s"$root/compact_old_v=1").exists())
+    assert(!new java.io.File(s"${root}__old").exists())
     assert(snapshotRows(root) == before)
+  }
+
+  test("matview version swap: a crash mid-commit reads the prior version, redelivery restores") {
+    val root = tmpDir("mv-vswap") + "/snap"
+    streaming.Ingest.upsertMatviewBatch(
+      Seq(("a", 1L), ("b", 2L)).toDF("k", "cnt"), Seq("k"), root, 0L, buckets = 4)
+    val v0 = snapshotRows(root)
+    streaming.Ingest.upsertMatviewBatch(
+      Seq(("a", 10L)).toDF("k", "cnt"), Seq("k"), root, 1L, buckets = 4)
+    val v1 = snapshotRows(root)
+    // simulate the crash window of a redelivered batch 1's version swap:
+    // v=1 moved aside, the rewritten v=1 never swapped in
+    assert(new java.io.File(s"$root/v=1")
+      .renameTo(new java.io.File(s"$root/v=1__old")))
+    def pin(v: Long) = streaming.Ingest.asOfSnapshot(spark, root, v)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(snapshotRows(root) == v0, "the head read answers with the v=0 state")
+    assert(pin(1L) == v0 && pin(0L) == v0, "as-of reads answer with the v=0 state")
+    // the redelivered batch commits v=1 again and clears the aside
+    streaming.Ingest.upsertMatviewBatch(
+      Seq(("a", 10L)).toDF("k", "cnt"), Seq("k"), root, 1L, buckets = 4)
+    assert(snapshotRows(root) == v1)
+    assert(versionDirs(root) == Seq("v=0", "v=1"), "no aside left behind")
   }
 
   test("stored bloom artifact self-heals a simulated mid-swap crash on read and write") {
