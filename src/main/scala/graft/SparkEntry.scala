@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.queries.{Analytics, AsOf, Basket, Behavior, Cdc, Sessionize}
 import graft.ext.{Dedup, Graph, Multimodal, Similarity, TextAnalysis}
+import graft.streaming.Pipeline.Tier
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -143,6 +144,103 @@ object SparkEntry {
       Tables.table(s, d, "part").agg(max(col("p_partkey").cast("long")))
         .head.getLong(0) / 2 * 2 + 2)
   // DuckDB form (er1's pu CTE): SELECT MAX(p_partkey)//2*2+2 FROM part
+
+  /** The composed pipes' curation screen (pipe1s/pipe2s/pipe3s). */
+  private val pipeCuratedP: Column =
+    col("lang") =!= "zh" && col("n_chars") >= 100
+
+  /** pipe1s/pipe2s's build and stream over one `p`. The stores build
+    * over the documents with `doc_id % 4 != 1` — the bloom archive over
+    * all of them, the index tiers over the curated (and, with a gate,
+    * decontaminated) ones; the `% 4 = 1` quarter streams in three
+    * batches: batch 1 re-delivers batch 0 in full PLUS planted content
+    * duplicates under fresh ids (+1e6), and the takedown (indexed build
+    * docs with `doc_id % 7 = 3`) fires inside batch 1, while batch 2 is
+    * still to come. */
+  private def replayComposedPipe(s: SparkSession, d: String, tag: String,
+                                 p: graft.streaming.Pipeline): Unit = {
+    val docs = Tables.documents(s, d)
+    val emb = Tables.embeddings(s, d)
+    val rec = docs.join(emb, docs("doc_id") === emb("vec_id"))
+      .select(docs("doc_id"), col("text"), col("lang"), col("n_chars"),
+        col("label"), col("embedding"))
+    val build = rec.where(col("doc_id") % 4 =!= 1)
+    p.build(build)
+    val takedown = p.indexed(build).where(col("doc_id") % 7 === 3)
+      .select("doc_id")
+    val q = rec.where(col("doc_id") % 4 === 1)
+      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
+        col("embedding"))
+    // corpus-contract guard (round-14 ADVICE): the oracle's population
+    // is purely id/lang/length-predicated, while the engine's content
+    // screen drops any streamed doc whose text exactly matches an
+    // archived doc — the two agree ONLY while the genuine streamed
+    // texts are content-disjoint from the build's (the planted +1e6
+    // dups are the deliberate exception: screened by the engine AND
+    // excluded from the oracle by id predicate). A regenerated corpus
+    // with cross-population exact-content duplicates must fail HERE
+    // with a message, not as a hash diff (the boruvkaForestBudgeted
+    // convention). No stream has run yet, so the stored fps relation IS
+    // the build's fingerprint set.
+    val crossDups = q
+      .select(TextAnalysis.fingerprint(col("text")).as("content_fp"))
+      .join(Dedup.fpsRelation(s, p.screen.get), Seq("content_fp"),
+        "left_semi").count()
+    require(crossDups == 0L,
+      s"$tag: $crossDups streamed doc(s) share exact content with the " +
+        "build population — the content screen would drop them but the " +
+        "id-predicated oracle would keep them; regenerate the fixture " +
+        "predicates so the stream and build texts are content-disjoint")
+    val s0 = q.where(pmod(col("doc_id"), lit(8)) === 1)
+    val s1 = s0.unionByName(s0.select(
+      (col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"),
+      col("n_chars"), col("embedding"))) // full redelivery + content dups
+    val s2 = q.where(pmod(col("doc_id"), lit(8)) === 5)
+    graft.streaming.Replay.slicedSourceReplay(s, Seq(s0, s1, s2),
+        "doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT, " +
+          "embedding ARRAY<FLOAT>", s"$tag-") { (src, dir) =>
+      graft.core.Sinks.foreachBatchSink(src, s"$dir/ckpt") { (b, bid) =>
+        p.ingest(b)
+        if (bid == 1L) p.forget(takedown) // mid-stream: batch 2 to come
+      }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
+  }
+
+  /** pipe1s/pipe2s's graded answer: one leg per index tier under `dir0`
+    * (bm25, ivf, pq when `withPq`, knn), unioned as
+    * (tier, qid, rank, item, score). Postings compact first for
+    * survivor-exact df (the ret7 rule: pre-compact keeps Lucene's
+    * docFreq-includes-deletions semantics). */
+  private def pipeAnswer(s: SparkSession, d: String, dir0: String,
+                         withPq: Boolean): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    val fetch = emb.select(col("vec_id"), col("embedding").as("v"))
+    val queries = emb.where(col("vec_id") < 5)
+    def leg(tier: String, df: DataFrame, qid: String, rank: String,
+            item: String, score: String) =
+      df.select(lit(tier).as("tier"), col(qid).cast("long").as("qid"),
+        col(rank).cast("long").as("rank"), col(item).as("item"),
+        col(score).as("score"))
+    ext.Retrieval.compactPostingsIndex(s, s"$dir0/postings")
+    val bm = leg("bm25", ext.Retrieval.bm25TopKFromIndex(s,
+        Seq(0 -> Seq("spark", "join", "table"),
+          1 -> Seq("hash", "merge", "sort"),
+          2 -> Seq("stream", "window", "batch")), s"$dir0/postings", k = 5),
+      "query_id", "rk", "doc_id", "score")
+    val ivf = leg("ivf", Similarity.ivfQuantizedTopKFromIndex(
+        s.read.parquet(s"$dir0/ivf/centroids"),
+        Similarity.ivfLivingIndex(s, s"$dir0/ivf"), fetch, queries,
+        "vec_id", "embedding", k = 10, nprobe = 3, shortlist = 30),
+      "query_id", "rank", "neighbor_id", "cos")
+    val pq = if (!withPq) Nil else Seq(leg("pq", Similarity.pqTopKFromIndex(
+        s, s"$dir0/pq", fetch, queries, "vec_id", "embedding", k = 10,
+        shortlist = 30), "query_id", "rank", "neighbor_id", "cos"))
+    val knn = leg("knn", Similarity.knnGraphFromIndex(s, s"$dir0/knn"),
+      "query_id", "rank", "neighbor_id", "cos")
+    ((bm +: ivf +: pq) :+ knn).reduce(_ unionByName _)
+      .orderBy("tier", "qid", "rank")
+  }
 
   // ---- queries -----------------------------------------------------------
 
@@ -3424,181 +3522,32 @@ object SparkEntry {
 
     // pipe1s: ONE COMPOSED ARTIFACT PIPELINE end-to-end (round-13
     // verdict #7) — the per-tier verb matrices are complete; this row
-    // grades their COMPOSITION, the 100 TB production shape: one
-    // foreachBatch per micro-batch runs ingest → content dedup against
-    // the stored bloom+fps archive → curation screen → postings + IVF +
-    // kNN maintenance, with a takedown firing MID-STREAM (inside batch
-    // 1, while batch 2 is still to come), and the graded answer reads
-    // from all three index artifacts at once. The redelivery worst case
-    // rides along: batch 1 re-delivers every batch-0 document in full
-    // PLUS planted content-duplicates under fresh ids (+1e6) — the one
-    // class only the CONTENT screen can stop (every tier's internal id
-    // anti-join would admit them), so a green row proves the dedup
-    // stage actually gates the index tiers; batch 1 must leave every
-    // artifact's version history untouched (Round14Spec pins the
-    // segment counts). Curation = lang/length screen applied uniformly
-    // at build and stream time; the takedown set lives entirely in the
-    // build population, so no later batch can resurrect it; the batch-2
-    // appends after the takedown exercise every tier's append-after-
-    // forget seam (kNN's loud-guard path included). Oracle: three-leg
-    // UNION — ret1's BM25, sim7's IVF pipeline and knn1's graph, each
-    // derived by guarded substitution over the curated post-takedown
-    // population.
+    // grades their COMPOSITION, the 100 TB production shape: a
+    // graft.streaming.Pipeline (bloom+fps content screen → curation →
+    // postings + IVF + kNN) over replayComposedPipe's stream, and the
+    // graded answer reads from all three index artifacts at once. The
+    // planted +1e6 content dups are the one class only the CONTENT
+    // screen can stop (every tier's internal id anti-join would admit
+    // them), so a green row proves the screen gates the index tiers; the
+    // redelivered batch must leave every artifact's version history
+    // untouched (Round14Spec pins the segment counts). The takedown set
+    // lives entirely in the build population, so no later batch can
+    // resurrect it; the batch-2 appends after the takedown exercise
+    // every tier's append-after-forget seam (kNN's loud-guard path
+    // included). Oracle: three-leg UNION — ret1's BM25, sim7's IVF
+    // pipeline and knn1's graph, each derived by guarded substitution
+    // over the curated post-takedown population.
     "pipe1s_composed_pipeline" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val emb = Tables.embeddings(s, d)
-      val rec = docs.join(emb, docs("doc_id") === emb("vec_id"))
-        .select(docs("doc_id"), col("text"), col("lang"), col("n_chars"),
-          col("label"), col("embedding"))
-      val curatedP = col("lang") =!= "zh" && col("n_chars") >= 100
       val dir0 = graft.core.Scratch.dir("pipe1s-")
-      val bloomDir = s"$dir0/dedup"; val postDir = s"$dir0/postings"
-      val ivfDir = s"$dir0/ivf"; val knnDir = s"$dir0/knn"
-      // build tier: the dedup archive seeds with EVERYTHING previously
-      // ingested (pre-curation — re-arrivals must dedup away even if
-      // they failed the screen); the index tiers hold only curated docs
-      val build = rec.where(col("doc_id") % 4 =!= 1)
-      val curBuild = build.where(curatedP)
-      // the four builds write disjoint artifact roots from the same
-      // immutable source — overlap them (r17, guide §2.6); the bloom
-      // build completes before the cross-dups guard below reads the
-      // fps relation because concurrently() joins all four
-      graft.core.Par.concurrently(
-        () => Dedup.writeBloomIndex(build, "text", bloomDir),
-        () => ext.Retrieval.writePostingsIndex(curBuild, "doc_id", "text",
-          postDir),
-        () => Similarity.writeIvfIndex(curBuild, "doc_id", "embedding",
-          "label", ivfDir),
-        () => Similarity.writeKnnGraph(curBuild, "doc_id", "embedding",
-          knnDir, k = 3))
-      val takedown = curBuild.where(col("doc_id") % 7 === 3)
-        .select("doc_id")
-      val q = rec.where(col("doc_id") % 4 === 1)
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
-          col("embedding"))
-      // corpus-contract guard (round-14 ADVICE): the oracle's population
-      // is purely id/lang/length-predicated, while the engine's content
-      // screen drops any streamed doc whose text exactly matches an
-      // archived doc — the two agree ONLY while the genuine streamed
-      // texts are content-disjoint from the build's (the planted +1e6
-      // dups are the deliberate exception: screened by the engine AND
-      // excluded from the oracle by id predicate). A regenerated corpus
-      // with cross-population exact-content duplicates must fail HERE
-      // with a message, not as a hash diff (the boruvkaForestBudgeted
-      // convention). The build side is NOT re-fingerprinted — the bloom
-      // archive just stored exactly those fps, and no stream has run
-      // yet, so the stored relation IS the build's fingerprint set.
-      val crossDups = q
-        .select(TextAnalysis.fingerprint(col("text")).as("content_fp"))
-        .join(Dedup.fpsRelation(s, bloomDir), Seq("content_fp"),
-          "left_semi").count()
-      require(crossDups == 0L,
-        s"pipe1s: $crossDups streamed doc(s) share exact content with the " +
-          "build population — the content screen would drop them but the " +
-          "id-predicated oracle would keep them; regenerate the fixture " +
-          "predicates so the stream and build texts are content-disjoint")
-      val s0 = q.where(pmod(col("doc_id"), lit(8)) === 1)
-      val s1 = s0.unionByName(s0.select(
-        (col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"),
-        col("n_chars"), col("embedding"))) // full redelivery + content dups
-      val s2 = q.where(pmod(col("doc_id"), lit(8)) === 5)
-      graft.streaming.Replay.slicedSourceReplay(s, Seq(s0, s1, s2),
-          "doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT, " +
-            "embedding ARRAY<FLOAT>", "pipe1s-") { (src, dir) =>
-        graft.core.Sinks.foreachBatchSink(src, s"$dir/ckpt") { (b, bid) =>
-          // content screen FIRST, and materialized BEFORE the store
-          // ingests this batch's fingerprints — the admitted set is
-          // lazy over fpsRelation, so evaluating it after the ingest
-          // would see the batch's own fps and admit nothing
-          val fresh = Dedup.dedupIncrementalBloomFromIndex(
-            b, "doc_id", "text", bloomDir).select("doc_id")
-          val adm = b.join(fresh, Seq("doc_id"), "left_semi")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // ONE action freezes the cache against the PRE-INGEST store
-            // state AND answers the curated-emptiness gate (r17 — was a
-            // bare count() plus a separate cur.isEmpty, two fixed-
-            // overhead jobs per micro-batch; the pipe2s one-count shape)
-            val nCur = adm.agg(count(when(curatedP, lit(1))))
-              .head().getLong(0)
-            val cur = adm.where(curatedP)
-            // an emptied batch (full redelivery) must write NO segment
-            // and NO version anywhere — the guards keep the postings/
-            // IVF histories clean; ingestKnnBatch no-ops internally.
-            // The three tier appends are INDEPENDENT (disjoint stores,
-            // each reading only its own artifact + the frozen `cur`
-            // cache) and any landed subset heals on redelivery via each
-            // tier's own id anti-join (Round14Spec pins it), so they run
-            // CONCURRENTLY (r17, guide §2.6 — per-batch wall ≈ max of
-            // the tiers instead of their sum)
-            if (nCur > 0) {
-              graft.core.Par.concurrently(
-                () => ext.Retrieval.appendToPostingsIndex(cur, "doc_id",
-                  "text", postDir),
-                () => Similarity.appendToIvfIndex(cur, "doc_id",
-                  "embedding", ivfDir),
-                () => Similarity.ingestKnnBatch(cur, "doc_id",
-                  "embedding", knnDir))
-            }
-            // the fps/bloom ingest commits LAST — the cross-tier crash-
-            // ordering constraint this composition surfaces (exactly
-            // what the per-tier specs cannot): committed fps are the
-            // dedup screen's memory, so if they landed BEFORE the index
-            // appends, a crash in between would make the redelivered
-            // batch anti-join to empty and the batch would be LOST from
-            // the index tiers forever. Ingested last, every crash point
-            // heals: redelivery re-admits the batch (fps absent) and
-            // each index tier's own id anti-join no-ops whatever
-            // already landed (Round14Spec pins the heal).
-            Dedup.ingestBloomBatch(b, "text", bloomDir)
-          } finally adm.unpersist(blocking = false)
-          if (bid == 1L) { // takedown MID-STREAM: batch 2 still to come
-            // per-tier forgets are independent (own tombstone store +
-            // own repair inputs) — overlap like the appends
-            graft.core.Par.concurrently(
-              () => ext.Retrieval.forgetFromPostingsIndex(takedown,
-                "doc_id", postDir),
-              () => Similarity.forgetFromIvfIndex(takedown, "doc_id",
-                ivfDir),
-              () => Similarity.forgetFromKnnGraph(takedown, "doc_id",
-                knnDir))
-          }
-        }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      // survivor-exact df for BM25 (the ret7 rule: pre-compact keeps
-      // Lucene's docFreq-includes-deletions semantics)
-      ext.Retrieval.compactPostingsIndex(s, postDir)
-      val bm = ext.Retrieval.bm25TopKFromIndex(s,
-          Seq(0 -> Seq("spark", "join", "table"),
-            1 -> Seq("hash", "merge", "sort"),
-            2 -> Seq("stream", "window", "batch")), postDir, k = 5)
-        .select(lit("bm25").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rk").cast("long").as("rank"), col("doc_id").as("item"),
-          col("score"))
-      val ivfAns = Similarity.ivfQuantizedTopKFromIndex(
-          s.read.parquet(s"$ivfDir/centroids"),
-          Similarity.ivfLivingIndex(s, ivfDir),
-          emb.select(col("vec_id"), col("embedding").as("v")),
-          emb.where(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, nprobe = 3, shortlist = 30)
-        .select(lit("ivf").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id").as("item"), col("cos").as("score"))
-      val knnAns = Similarity.knnGraphFromIndex(s, knnDir)
-        .select(lit("knn").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id").as("item"), col("cos").as("score"))
-      bm.unionByName(ivfAns).unionByName(knnAns)
-        .orderBy("tier", "qid", "rank")
+      val p = graft.streaming.Pipeline(Some(s"$dir0/dedup"), pipeCuratedP,
+        None, Seq(Tier.postings(s"$dir0/postings"), Tier.ivf(s"$dir0/ivf"),
+          Tier.knn(s"$dir0/knn", k = 3)))
+      replayComposedPipe(s, d, "pipe1s", p)
+      pipeAnswer(s, d, dir0, withPq = false)
     }),
 
     // pipe2s: pipe1s + the STREAMING DECONTAMINATION GATE + the PQ tier
-    // (round-14 verdict #1 and #2) — the full production ingest order:
-    // content screen → decontaminate → curate → index, per micro-batch.
+    // (round-14 verdict #1 and #2) — the full production ingest order.
     // The eval suite is a STORED artifact (cc3's contamination postings,
     // built once — eval suites are fixed while batches stream past);
     // every admitted batch probes it and QUARANTINES colliding docs
@@ -3610,171 +3559,27 @@ object SparkEntry {
     // codebooks train over the clean curated build and FREEZE, batches
     // append codes under the stored books (vec-id anti-join idempotence),
     // the mid-stream takedown forgets from all FOUR tiers, and the
-    // answer adds a pq leg. Redelivery worst case unchanged from pipe1s
-    // (slice 1 = full slice-0 redelivery + planted +1e6 content dups);
-    // fps/bloom still commit LAST (the crash-ordering invariant).
+    // answer adds a pq leg. Stream and takedown are pipe1s's.
     // Oracle: four-leg UNION, each leg derived by guarded substitution
     // with the cc1 containment predicate folded into the population.
     "pipe2s_decontaminated_pipeline" -> ((s, d) => {
       val pu = plantUnit(s, d)
-      val docs = Tables.documents(s, d)
-      val emb = Tables.embeddings(s, d)
-      val rec = docs.join(emb, docs("doc_id") === emb("vec_id"))
-        .select(docs("doc_id"), col("text"), col("lang"), col("n_chars"),
-          col("label"), col("embedding"))
-      val curatedP = col("lang") =!= "zh" && col("n_chars") >= 100
       val dir0 = graft.core.Scratch.dir("pipe2s-")
-      val evalDir = s"$dir0/evalidx"; val bloomDir = s"$dir0/dedup"
-      val postDir = s"$dir0/postings"; val ivfDir = s"$dir0/ivf"
-      val pqDir = s"$dir0/pq"; val knnDir = s"$dir0/knn"
-      // the eval suite: cc1's planted fixture, stored once
-      val dt = docs.select("doc_id", "text")
+      // the eval suite: cc1's planted fixture, stored once, before the
+      // build's decontamination probe reads it
+      val dt = Tables.documents(s, d).select("doc_id", "text")
       val ev = dt.where(col("doc_id") % 20 === 3)
         .select((col("doc_id") + 5 * pu).as("doc_id"),
           concat(col("text"), lit(" evaltok")).as("text"))
         .union(dt.where(col("doc_id") % 50 === 7)
           .select((col("doc_id") + 6 * pu).as("doc_id"), col("text")))
-      Dedup.writeContaminationIndex(ev, "doc_id", "text", evalDir)
-      // dedup archive seeds with EVERYTHING previously ingested
-      // (pre-screen, the pipe1s rule); index tiers hold only clean
-      // curated docs
-      val build = rec.where(col("doc_id") % 4 =!= 1)
-      // probe order: curate FIRST, decontaminate the survivors — the
-      // two screens commute (both row filters), so the population is
-      // identical and the shingle probe pays only for curated docs.
-      // The eval index is already committed above, so the five builds
-      // below are independent (disjoint roots; curBuild's decon probe
-      // reads the committed evalDir) and overlap (r17, guide §2.6)
-      val curB = build.where(curatedP)
-      val curBuild = curB.join(
-        Dedup.contaminationPairsFromIndex(curB, "doc_id", "text", evalDir)
-          .select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      graft.core.Par.concurrently(
-        () => Dedup.writeBloomIndex(build, "text", bloomDir),
-        () => ext.Retrieval.writePostingsIndex(curBuild, "doc_id", "text",
-          postDir),
-        () => Similarity.writeIvfIndex(curBuild, "doc_id", "embedding",
-          "label", ivfDir),
-        () => Similarity.writePqIndex(curBuild, "doc_id", "embedding",
-          pqDir, dims = 64, m = 4, ksub = 4, iters = 2),
-        () => Similarity.writeKnnGraph(curBuild, "doc_id", "embedding",
-          knnDir, k = 3))
-      val takedown = curBuild.where(col("doc_id") % 7 === 3)
-        .select("doc_id")
-      val q = rec.where(col("doc_id") % 4 === 1)
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
-          col("embedding"))
-      // the pipe1s corpus-contract guard: genuine streamed texts must be
-      // content-disjoint from the build's or the id-predicated oracle
-      // diverges from the content screen — fail with a message, not a
-      // hash diff; the stored fps relation IS the build's fingerprint
-      // set (pre-stream), so the build is not re-fingerprinted
-      val crossDups = q
-        .select(TextAnalysis.fingerprint(col("text")).as("content_fp"))
-        .join(Dedup.fpsRelation(s, bloomDir), Seq("content_fp"),
-          "left_semi").count()
-      require(crossDups == 0L,
-        s"pipe2s: $crossDups streamed doc(s) share exact content with the " +
-          "build population — regenerate the fixture predicates")
-      val s0 = q.where(pmod(col("doc_id"), lit(8)) === 1)
-      val s1 = s0.unionByName(s0.select(
-        (col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"),
-        col("n_chars"), col("embedding"))) // full redelivery + content dups
-      val s2 = q.where(pmod(col("doc_id"), lit(8)) === 5)
-      graft.streaming.Replay.slicedSourceReplay(s, Seq(s0, s1, s2),
-          "doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT, " +
-            "embedding ARRAY<FLOAT>", "pipe2s-") { (src, dir) =>
-        graft.core.Sinks.foreachBatchSink(src, s"$dir/ckpt") { (b, bid) =>
-          // content screen FIRST (materialized before the fps ingest —
-          // the pipe1s pre-ingest rule), then the decontamination gate:
-          // admitted docs probe the STORED eval index and colliding ones
-          // quarantine before any index tier sees the batch
-          val fresh = Dedup.dedupIncrementalBloomFromIndex(
-            b, "doc_id", "text", bloomDir).select("doc_id")
-          val adm0 = b.join(fresh, Seq("doc_id"), "left_semi")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // curate first, probe the survivors (commuting filters —
-            // the build-side rule)
-            val admCur = adm0.where(curatedP)
-            val contaminated = Dedup.contaminationPairsFromIndex(
-              admCur, "doc_id", "text", evalDir).select("doc_id").distinct()
-            val cur = admCur.join(contaminated, Seq("doc_id"), "left_anti")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              // ONE action freezes both caches: the content fate against
-              // the PRE-INGEST store and the quarantine fate (the eval
-              // index is immutable mid-stream, but the four index
-              // consumers below must not re-run the probe)
-              val nCur = cur.count()
-              // the four tier appends are independent (disjoint stores,
-              // each reading only its own artifact + the frozen caches)
-              // and any landed subset heals on redelivery — run them
-              // CONCURRENTLY (r17, the pipe1s note; guide §2.6)
-              if (nCur > 0) {
-                graft.core.Par.concurrently(
-                  () => ext.Retrieval.appendToPostingsIndex(cur, "doc_id",
-                    "text", postDir),
-                  () => Similarity.appendToIvfIndex(cur, "doc_id",
-                    "embedding", ivfDir),
-                  () => Similarity.appendToPqIndex(cur, "doc_id",
-                    "embedding", pqDir),
-                  () => Similarity.ingestKnnBatch(cur, "doc_id",
-                    "embedding", knnDir))
-              }
-              // fps/bloom commit LAST — the pipe1s crash-ordering rule
-              Dedup.ingestBloomBatch(b, "text", bloomDir)
-            } finally cur.unpersist(blocking = false)
-          } finally adm0.unpersist(blocking = false)
-          if (bid == 1L) { // takedown MID-STREAM, all four tiers
-            // independent per-tier forgets — overlap like the appends
-            graft.core.Par.concurrently(
-              () => ext.Retrieval.forgetFromPostingsIndex(takedown,
-                "doc_id", postDir),
-              () => Similarity.forgetFromIvfIndex(takedown, "doc_id",
-                ivfDir),
-              () => Similarity.forgetFromPqIndex(takedown, "doc_id",
-                pqDir),
-              () => Similarity.forgetFromKnnGraph(takedown, "doc_id",
-                knnDir))
-          }
-        }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      ext.Retrieval.compactPostingsIndex(s, postDir)
-      val bm = ext.Retrieval.bm25TopKFromIndex(s,
-          Seq(0 -> Seq("spark", "join", "table"),
-            1 -> Seq("hash", "merge", "sort"),
-            2 -> Seq("stream", "window", "batch")), postDir, k = 5)
-        .select(lit("bm25").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rk").cast("long").as("rank"), col("doc_id").as("item"),
-          col("score"))
-      val ivfAns = Similarity.ivfQuantizedTopKFromIndex(
-          s.read.parquet(s"$ivfDir/centroids"),
-          Similarity.ivfLivingIndex(s, ivfDir),
-          emb.select(col("vec_id"), col("embedding").as("v")),
-          emb.where(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, nprobe = 3, shortlist = 30)
-        .select(lit("ivf").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id").as("item"), col("cos").as("score"))
-      val pqAns = Similarity.pqTopKFromIndex(s, pqDir,
-          emb.select(col("vec_id"), col("embedding").as("v")),
-          emb.where(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, shortlist = 30)
-        .select(lit("pq").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id").as("item"), col("cos").as("score"))
-      val knnAns = Similarity.knnGraphFromIndex(s, knnDir)
-        .select(lit("knn").as("tier"),
-          col("query_id").cast("long").as("qid"),
-          col("rank").cast("long").as("rank"),
-          col("neighbor_id").as("item"), col("cos").as("score"))
-      bm.unionByName(ivfAns).unionByName(pqAns).unionByName(knnAns)
-        .orderBy("tier", "qid", "rank")
+      Dedup.writeContaminationIndex(ev, "doc_id", "text", s"$dir0/evalidx")
+      val p = graft.streaming.Pipeline(Some(s"$dir0/dedup"), pipeCuratedP,
+        Some(s"$dir0/evalidx"), Seq(Tier.postings(s"$dir0/postings"),
+          Tier.ivf(s"$dir0/ivf"), Tier.pq(s"$dir0/pq", dims = 64, m = 4,
+            ksub = 4, iters = 2), Tier.knn(s"$dir0/knn", k = 3)))
+      replayComposedPipe(s, d, "pipe2s", p)
+      pipeAnswer(s, d, dir0, withPq = true)
     }),
 
     // pipe3s: the decontamination gate against a ROTATING eval suite —
@@ -3788,7 +3593,7 @@ object SparkEntry {
     // append-only and nothing re-probes them), batch 1 quarantines
     // against the extended suite, batch 2 re-admits the retired wave's
     // colliders. The suite mutations run INSIDE foreachBatch after the
-    // batch's own appends (the pipe2s takedown placement), so each
+    // batch's own ingest (the pipe2s takedown placement), so each
     // batch provably probes the suite-as-of-batch: the living view at
     // its own ingest time. Graded output = the final postings
     // population (doc_id, stored doc length) — every admit/quarantine/
@@ -3797,12 +3602,11 @@ object SparkEntry {
     // ccPairsSql seam (suite-v0 = wave-2 branch emptied, cc4's device;
     // extended = cc1's pair set) keyed on the batch-residue classes.
     // Content screen and multi-tier breadth stay pipe2s's axes — this
-    // row isolates the gate-vs-mutation ordering.
+    // row isolates the gate-vs-mutation ordering (no screen, one tier).
     "pipe3s_rotating_eval_pipeline" -> ((s, d) => {
       val pu = plantUnit(s, d)
       val docs = Tables.documents(s, d)
       val dt = docs.select("doc_id", "text")
-      val curatedP = col("lang") =!= "zh" && col("n_chars") >= 100
       val dir0 = graft.core.Scratch.dir("pipe3s-")
       val evalDir = s"$dir0/evalidx"; val postDir = s"$dir0/postings"
       val ev0 = dt.where(col("doc_id") % 20 === 3)
@@ -3811,14 +3615,11 @@ object SparkEntry {
       val ev1 = dt.where(col("doc_id") % 50 === 7)
         .select((col("doc_id") + 6 * pu).as("doc_id"), col("text"))
       Dedup.writeContaminationIndex(ev0, "doc_id", "text", evalDir)
-      // build population: the %4=3 quarter, curated, gated against the
-      // suite live at build time (v0) — the pipe2s build discipline
-      val curB = docs.where(col("doc_id") % 4 === 3 && curatedP)
-        .select("doc_id", "text")
-      val curBuild = curB.join(
-        Dedup.contaminationPairsFromIndex(curB, "doc_id", "text", evalDir)
-          .select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      ext.Retrieval.writePostingsIndex(curBuild, "doc_id", "text", postDir)
+      val p = graft.streaming.Pipeline(None, pipeCuratedP, Some(evalDir),
+        Seq(Tier.postings(postDir)))
+      // build population: the %4=3 quarter, gated against the suite live
+      // at build time (v0)
+      p.build(docs.where(col("doc_id") % 4 === 3))
       val retired = ev1.select(col("doc_id").as("eval_id"))
       // streamed quarter %4=1 split by mod-12 residue into three batches
       val q = docs.where(col("doc_id") % 4 === 1)
@@ -3829,18 +3630,9 @@ object SparkEntry {
           "doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT",
           "pipe3s-") { (src, dir) =>
         graft.core.Sinks.foreachBatchSink(src, s"$dir/ckpt") { (b, bid) =>
-          val admCur = b.where(curatedP)
-          val contaminated = Dedup.contaminationPairsFromIndex(
-            admCur, "doc_id", "text", evalDir).select("doc_id").distinct()
-          val cur = admCur.join(contaminated, Seq("doc_id"), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (cur.count() > 0)
-              ext.Retrieval.appendToPostingsIndex(cur, "doc_id", "text",
-                postDir)
-          } finally cur.unpersist(blocking = false)
+          p.ingest(b)
           // suite rotation BETWEEN batches: the wave lands after batch
-          // 0's appends, the retire after batch 1's — so batch N+1 is
+          // 0's ingest, the retire after batch 1's — so batch N+1 is
           // the first to probe the mutated suite
           if (bid == 0L)
             Dedup.appendToContaminationIndex(ev1, "doc_id", "text", evalDir)

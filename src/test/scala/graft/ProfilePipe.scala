@@ -1,143 +1,125 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Stage-level timing of pipe1s_composed_pipeline at sf0.1 — the bench
-  * records ~43 s for the graded unit; this main splits one run into
-  * build / per-batch / takedown / compact / answer-leg costs (two rounds
-  * in one JVM — round 1 is the warm attribution). Measured round-15
-  * (warm, after the knnBatchStats consolidation): builds 6.3 s (bloom
-  * 1.0, postings 2.2, ivf 1.2, knn 2.0); effective batches b0/b2
-  * ≈ 14/18 s each dominated by kNN ingest (6.2/6.7, down from round-14's
-  * 7.0/10.2 — the guard probes, emptiness check, duplicate count and
-  * meta read now ride ONE stats job, measured 4 actions/batch where
-  * round 14 paid ~7; the remainder is the tile join + two windows +
-  * three version writes, real work) and postings append (3.6/4.3 —
-  * whole-store dictionary rebuild, the ret4 contract); redelivered b1
-  * ≈ 3.8 s (probe + stats no-op); takedown 4.0 (knn repair 3.2);
-  * compact 2.1; legs 2.5. VERDICT: the total is the SUM of the five per-tier graded
-  * cost classes × 3 batches (knn5s ≈ 5 s covers build + 2 kNN ingests
-  * alone; ret9s 6.7 the postings side; sim11s 4.5 the IVF side; bf3s
-  * 4.7 the bloom side; knn3/del3s 4–7 the takedown) — fixed per-job
-  * engine overhead, no quadratic or re-evaluation pathology; at real
-  * data volumes the same job count amortizes over real work.
-  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.ProfilePipe [sfDir]"
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.core.{Scratch, Tables}
+import graft.ext.{Dedup, Retrieval, Similarity}
+import graft.streaming.Pipeline
+import graft.streaming.Pipeline.Tier
+
+/** Step timing of pipe1s_composed_pipeline or
+  * pipe2s_decontaminated_pipeline: the row's own `Pipeline` declaration,
+  * timed verb by verb — build, the three batch ingests (b1 = b0
+  * redelivered plus planted content dups), the mid-stream takedown —
+  * then the postings compact and the answer legs, each with the SQL
+  * executions it ran (a QueryExecutionListener, drained until quiet).
+  * Two rounds in one JVM; round 1 is the warm attribution. The batches
+  * are driven directly, not through the file-source stream, so the
+  * stream's own per-batch overhead is not in these numbers. Tiers build,
+  * append and forget concurrently inside each verb, so a verb's time is
+  * about that of its slowest tier.
+  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.ProfilePipe <pipe1s|pipe2s> <sfDir>"
   */
 object ProfilePipe {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    require(args.length == 2 && Set("pipe1s", "pipe2s")(args(0)),
+      "usage: ProfilePipe <pipe1s|pipe2s> <sfDir>")
+    val decon = args(0) == "pipe2s"
+    val sfDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    s.sparkContext.setLogLevel("WARN")
+    val actions = new AtomicInteger(0)
+    s.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        actions.incrementAndGet()
+    })
+    // listener delivery is async: wait until the count is quiet
+    def drained(): Int = {
+      var last = actions.get(); var quietSince = System.currentTimeMillis
+      while (System.currentTimeMillis - quietSince < 800) {
+        Thread.sleep(100)
+        val cur = actions.get()
+        if (cur != last) { last = cur; quietSince = System.currentTimeMillis }
+      }
+      last
+    }
     def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
+      val a0 = drained(); val t0 = System.nanoTime()
       val r = f
-      println(f"[pipe-prof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"[pipe-prof] $label%-22s $secs%7.2f s ${drained() - a0}%4d actions")
       r
     }
-    import graft.core.{Tables, Par, Scratch}
-    import graft.ext.{Dedup, Similarity, Retrieval}
-    val s = spark
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     for (round <- 0 until 2) {
-    println(s"[pipe-prof] ===== round $round =====")
-    val docs = Tables.documents(s, sfDir)
-    val emb = Tables.embeddings(s, sfDir)
-    val rec = docs.join(emb, docs("doc_id") === emb("vec_id"))
-      .select(docs("doc_id"), col("text"), col("lang"), col("n_chars"),
-        col("label"), col("embedding"))
-    val curatedP = col("lang") =!= "zh" && col("n_chars") >= 100
-    val dir0 = Scratch.dir("pipeprof-")
-    val bloomDir = s"$dir0/dedup"; val postDir = s"$dir0/postings"
-    val ivfDir = s"$dir0/ivf"; val knnDir = s"$dir0/knn"
-    val build = rec.where(col("doc_id") % 4 =!= 1)
-    t("build: bloom")(Dedup.writeBloomIndex(build, "text", bloomDir))
-    val curBuild = build.where(curatedP)
-    t("build: postings")(
-      Retrieval.writePostingsIndex(curBuild, "doc_id", "text", postDir))
-    t("build: ivf")(
-      Similarity.writeIvfIndex(curBuild, "doc_id", "embedding", "label", ivfDir))
-    t("build: knn graph")(
-      Similarity.writeKnnGraph(curBuild, "doc_id", "embedding", knnDir, k = 3))
-    val takedown = curBuild.where(col("doc_id") % 7 === 3).select("doc_id")
-    val q = rec.where(col("doc_id") % 4 === 1)
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
-        col("embedding"))
-    val s0 = q.where(pmod(col("doc_id"), lit(8)) === 1)
-    val s1 = s0.unionByName(s0.select(
-      (col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"),
-      col("n_chars"), col("embedding")))
-    val s2 = q.where(pmod(col("doc_id"), lit(8)) === 5)
-    def batch(tag: String, b: org.apache.spark.sql.DataFrame): Unit = {
-      val fresh = t(s"$tag: dedup probe plan")(
-        Dedup.dedupIncrementalBloomFromIndex(b, "doc_id", "text", bloomDir)
-          .select("doc_id"))
-      val adm = b.join(fresh, Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // production shape (r17): ONE aggregate freezes the cache AND
-        // answers the curated-emptiness gate; bloom ingest commits LAST
-        val nCur = t(s"$tag: adm+gate agg")(
-          adm.agg(count(when(curatedP, lit(1)))).head().getLong(0))
-        val cur = adm.where(curatedP)
-        if (nCur > 0) {
-          t(s"$tag: postings append")(
-            Retrieval.appendToPostingsIndex(cur, "doc_id", "text", postDir))
-          t(s"$tag: ivf append")(
-            Similarity.appendToIvfIndex(cur, "doc_id", "embedding", ivfDir))
-          val acts = new java.util.concurrent.atomic.AtomicInteger(0)
-          val al = new org.apache.spark.sql.util.QueryExecutionListener {
-            override def onSuccess(f: String,
-                qe: org.apache.spark.sql.execution.QueryExecution,
-                ns: Long): Unit = acts.incrementAndGet()
-            override def onFailure(f: String,
-                qe: org.apache.spark.sql.execution.QueryExecution,
-                e: Exception): Unit = ()
-          }
-          spark.listenerManager.register(al)
-          try t(s"$tag: knn ingest")(
-            Similarity.ingestKnnBatch(cur, "doc_id", "embedding", knnDir))
-          finally {
-            Thread.sleep(500) // listener delivery is async
-            spark.listenerManager.unregister(al)
-            println(s"[pipe-prof] $tag: knn ingest actions = ${acts.get()}" +
-              " (budget: stats probe + 1 combined version write = 2)")
-          }
-        }
-        t(s"$tag: bloom ingest")(Dedup.ingestBloomBatch(b, "text", bloomDir))
-      } finally adm.unpersist(blocking = false)
-    }
-    batch("b0", s0)
-    batch("b1", s1)
-    t("takedown: postings")(
-      Retrieval.forgetFromPostingsIndex(takedown, "doc_id", postDir))
-    t("takedown: ivf")(
-      Similarity.forgetFromIvfIndex(takedown, "doc_id", ivfDir))
-    t("takedown: knn repair")(
-      Similarity.forgetFromKnnGraph(takedown, "doc_id", knnDir))
-    batch("b2", s2)
-    t("compact postings")(Retrieval.compactPostingsIndex(s, postDir))
-    t("leg: bm25")(Retrieval.bm25TopKFromIndex(s,
+      println(s"[pipe-prof] ===== ${args(0)} round $round =====")
+      val docs = Tables.documents(s, sfDir)
+      val emb = Tables.embeddings(s, sfDir)
+      val rec = docs.join(emb, docs("doc_id") === emb("vec_id"))
+        .select(docs("doc_id"), col("text"), col("lang"), col("n_chars"),
+          col("label"), col("embedding"))
+      val dir0 = Scratch.dir("pipeprof-")
+      if (decon) t("build: eval index") {
+        val pu = docs.agg(max(col("doc_id"))).head().getLong(0) / 3 * 3 + 4
+        val dt = docs.select("doc_id", "text")
+        Dedup.writeContaminationIndex(dt.where(col("doc_id") % 20 === 3)
+            .select((col("doc_id") + 5 * pu).as("doc_id"),
+              concat(col("text"), lit(" evaltok")).as("text"))
+            .union(dt.where(col("doc_id") % 50 === 7)
+              .select((col("doc_id") + 6 * pu).as("doc_id"), col("text"))),
+          "doc_id", "text", s"$dir0/evalidx")
+      }
+      val p = Pipeline(Some(s"$dir0/dedup"),
+        col("lang") =!= "zh" && col("n_chars") >= 100,
+        if (decon) Some(s"$dir0/evalidx") else None,
+        Seq(Tier.postings(s"$dir0/postings"), Tier.ivf(s"$dir0/ivf")) ++
+          (if (decon) Seq(Tier.pq(s"$dir0/pq", dims = 64, m = 4, ksub = 4,
+            iters = 2)) else Nil) :+ Tier.knn(s"$dir0/knn", k = 3))
+      val build = rec.where(col("doc_id") % 4 =!= 1)
+      t("build")(p.build(build))
+      val q = rec.where(col("doc_id") % 4 === 1)
+        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
+          col("embedding"))
+      val s0 = q.where(pmod(col("doc_id"), lit(8)) === 1)
+      val s1 = s0.unionByName(s0.select(
+        (col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"),
+        col("n_chars"), col("embedding")))
+      val s2 = q.where(pmod(col("doc_id"), lit(8)) === 5)
+      println(s"[pipe-prof] b0 admitted ${t("ingest b0")(p.ingest(s0))}")
+      println(s"[pipe-prof] b1 admitted ${t("ingest b1 (redelivery)")(p.ingest(s1))}")
+      t("takedown")(p.forget(p.indexed(build)
+        .where(col("doc_id") % 7 === 3).select("doc_id")))
+      println(s"[pipe-prof] b2 admitted ${t("ingest b2")(p.ingest(s2))}")
+      t("compact postings")(Retrieval.compactPostingsIndex(s, s"$dir0/postings"))
+      val fetch = emb.select(col("vec_id"), col("embedding").as("v"))
+      val queries = emb.where(col("vec_id") < 5)
+      t("leg: bm25")(noop(Retrieval.bm25TopKFromIndex(s,
         Seq(0 -> Seq("spark", "join", "table"),
           1 -> Seq("hash", "merge", "sort"),
-          2 -> Seq("stream", "window", "batch")), postDir, k = 5)
-      .write.format("noop").mode("overwrite").save())
-    t("leg: ivf")(Similarity.ivfQuantizedTopKFromIndex(
-        s.read.parquet(s"$ivfDir/centroids"),
-        Similarity.ivfLivingIndex(s, ivfDir),
-        emb.select(col("vec_id"), col("embedding").as("v")),
-        emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, nprobe = 3, shortlist = 30)
-      .write.format("noop").mode("overwrite").save())
-    t("leg: knn")(Similarity.knnGraphFromIndex(s, knnDir)
-      .write.format("noop").mode("overwrite").save())
-    spark.catalog.clearCache()
+          2 -> Seq("stream", "window", "batch")), s"$dir0/postings", k = 5)))
+      t("leg: ivf")(noop(Similarity.ivfQuantizedTopKFromIndex(
+        s.read.parquet(s"$dir0/ivf/centroids"),
+        Similarity.ivfLivingIndex(s, s"$dir0/ivf"), fetch, queries,
+        "vec_id", "embedding", k = 10, nprobe = 3, shortlist = 30)))
+      if (decon) t("leg: pq")(noop(Similarity.pqTopKFromIndex(s,
+        s"$dir0/pq", fetch, queries, "vec_id", "embedding", k = 10,
+        shortlist = 30)))
+      t("leg: knn")(noop(Similarity.knnGraphFromIndex(s, s"$dir0/knn")))
+      s.catalog.clearCache()
     }
-    spark.stop()
+    s.stop()
   }
 }

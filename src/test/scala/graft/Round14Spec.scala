@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.streaming.Pipeline.Tier
 
 /** Round-14 pins — the round-13 directive set:
   *  - commitIndexedSegment (verdict #6): the single-writer assumption of
@@ -268,6 +269,12 @@ class Round14Spec extends SparkSpec {
 
   // ------------------------------------ pipe1s composition seams
 
+  /** pipe1s's Pipeline over the given stores; the fixtures carry no
+    * lang/n_chars, so curation admits every row. */
+  private def pipe1(bl: String, po: String, iv: String, kn: String) =
+    graft.streaming.Pipeline(Some(bl), lit(true), None,
+      Seq(Tier.postings(po), Tier.ivf(iv), Tier.knn(kn, k = 3)))
+
   test("composed pipeline: redelivered batch with planted dups touches no artifact; append-after-forget stays exact") {
     val rnd = new scala.util.Random(23)
     val rec = (0L until 20L).map(i =>
@@ -283,23 +290,9 @@ class Round14Spec extends SparkSpec {
     ext.Retrieval.writePostingsIndex(build, "doc_id", "text", po)
     ext.Similarity.writeIvfIndex(build, "doc_id", "embedding", "label", iv)
     ext.Similarity.writeKnnGraph(build, "doc_id", "embedding", kn, k = 3)
-    def ingest(b: org.apache.spark.sql.DataFrame): Unit = {
-      val fresh = ext.Dedup
-        .dedupIncrementalBloomFromIndex(b, "doc_id", "text", bl)
-        .select("doc_id")
-      val adm = b.join(fresh, Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        adm.count() // the pipe1s rule: see the PRE-ingest store state
-        if (!adm.isEmpty) {
-          ext.Retrieval.appendToPostingsIndex(adm, "doc_id", "text", po)
-          ext.Similarity.appendToIvfIndex(adm, "doc_id", "embedding", iv)
-          ext.Similarity.ingestKnnBatch(adm, "doc_id", "embedding", kn)
-        }
-        // fps commit LAST — the pipe1s crash-ordering rule
-        ext.Dedup.ingestBloomBatch(b, "text", bl)
-      } finally adm.unpersist(blocking = false)
-    }
+    // the production per-batch body
+    def ingest(b: org.apache.spark.sql.DataFrame): Unit =
+      pipe1(bl, po, iv, kn).ingest(b)
     def counts() = (
       graft.core.Artifacts.committedChildren(spark, s"$bl/segments").size,
       graft.core.Artifacts.committedChildren(spark, s"$po/segments").size,
@@ -360,21 +353,8 @@ class Round14Spec extends SparkSpec {
       dirs
     }
     def ingest(b: org.apache.spark.sql.DataFrame,
-               dirs: (String, String, String, String)): Unit = {
-      val adm = b.join(
-        ext.Dedup.dedupIncrementalBloomFromIndex(b, "doc_id", "text",
-          dirs._1).select("doc_id"), Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        adm.count()
-        if (!adm.isEmpty) {
-          ext.Retrieval.appendToPostingsIndex(adm, "doc_id", "text", dirs._2)
-          ext.Similarity.appendToIvfIndex(adm, "doc_id", "embedding", dirs._3)
-          ext.Similarity.ingestKnnBatch(adm, "doc_id", "embedding", dirs._4)
-        }
-        ext.Dedup.ingestBloomBatch(b, "text", dirs._1) // fps LAST
-      } finally adm.unpersist(blocking = false)
-    }
+               dirs: (String, String, String, String)): Unit =
+      pipe1(dirs._1, dirs._2, dirs._3, dirs._4).ingest(b)
     val b0 = rec.where($"doc_id" >= 8)
     // CRASHED attempt: postings landed, then the executor died — no IVF,
     // no kNN, and crucially no fps commit
@@ -427,27 +407,11 @@ class Round14Spec extends SparkSpec {
       dirs
     }
     def ingest(b: org.apache.spark.sql.DataFrame,
-               dirs: (String, String, String, String)): Unit = {
-      val adm = b.join(
-        ext.Dedup.dedupIncrementalBloomFromIndex(b, "doc_id", "text",
-          dirs._1).select("doc_id"), Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        adm.count()
-        if (!adm.isEmpty) {
-          ext.Retrieval.appendToPostingsIndex(adm, "doc_id", "text", dirs._2)
-          ext.Similarity.appendToIvfIndex(adm, "doc_id", "embedding", dirs._3)
-          ext.Similarity.ingestKnnBatch(adm, "doc_id", "embedding", dirs._4)
-        }
-        ext.Dedup.ingestBloomBatch(b, "text", dirs._1) // fps LAST
-      } finally adm.unpersist(blocking = false)
-    }
-    def takedown(dirs: (String, String, String, String)): Unit = {
-      val doomed = rec.where($"doc_id" === 3).select("doc_id")
-      ext.Retrieval.forgetFromPostingsIndex(doomed, "doc_id", dirs._2)
-      ext.Similarity.forgetFromIvfIndex(doomed, "doc_id", dirs._3)
-      ext.Similarity.forgetFromKnnGraph(doomed, "doc_id", dirs._4)
-    }
+               dirs: (String, String, String, String)): Unit =
+      pipe1(dirs._1, dirs._2, dirs._3, dirs._4).ingest(b)
+    def takedown(dirs: (String, String, String, String)): Unit =
+      pipe1(dirs._1, dirs._2, dirs._3, dirs._4)
+        .forget(rec.where($"doc_id" === 3).select("doc_id"))
     val b0 = rec.where($"doc_id" >= 10 && $"doc_id" < 15)
     val b2 = rec.where($"doc_id" >= 15)
     val main = mk(tmpDir("pipe-pin") + "/main")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.streaming.Pipeline.Tier
 
 /** Round-15 pins — the round-14 directive + ADVICE set:
   *  - segmentsAsOf twin guard (ADVICE): a torn count-indexed artifact
@@ -199,32 +200,16 @@ class Round15Spec extends SparkSpec {
       .withColumn("label", (col("doc_id") % 2).cast("int"))
   }
 
-  /** The pipe2s foreachBatch body: content screen → decontamination
-    * gate → four index appends → fps LAST. Shared by both pins. */
+  /** The pipe2s foreachBatch body — graft.streaming.Pipeline.ingest with
+    * pipe2s's screen, gate and four tiers (the fixtures carry no
+    * lang/n_chars, so curation admits every row). Shared by both pins. */
   private def deconIngest(b: org.apache.spark.sql.DataFrame,
                           ed: String, bl: String, po: String, iv: String,
-                          pq: String, kn: String): Unit = {
-    val adm0 = b.join(
-      ext.Dedup.dedupIncrementalBloomFromIndex(b, "doc_id", "text", bl)
-        .select("doc_id"), Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cont = ext.Dedup.contaminationPairsFromIndex(adm0, "doc_id",
-        "text", ed).select("doc_id").distinct()
-      val adm = adm0.join(cont, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        adm.count()
-        if (!adm.isEmpty) {
-          ext.Retrieval.appendToPostingsIndex(adm, "doc_id", "text", po)
-          ext.Similarity.appendToIvfIndex(adm, "doc_id", "embedding", iv)
-          ext.Similarity.appendToPqIndex(adm, "doc_id", "embedding", pq)
-          ext.Similarity.ingestKnnBatch(adm, "doc_id", "embedding", kn)
-        }
-        ext.Dedup.ingestBloomBatch(b, "text", bl) // fps LAST
-      } finally adm.unpersist(blocking = false)
-    } finally adm0.unpersist(blocking = false)
-  }
+                          pq: String, kn: String): Unit =
+    graft.streaming.Pipeline(Some(bl), lit(true), Some(ed),
+      Seq(Tier.postings(po), Tier.ivf(iv),
+        Tier.pq(pq, dims = 4, m = 2, ksub = 2, iters = 2),
+        Tier.knn(kn, k = 3))).ingest(b)
 
   private def mkPipe(root: String, rec: org.apache.spark.sql.DataFrame,
                      evalDocs: org.apache.spark.sql.DataFrame)
