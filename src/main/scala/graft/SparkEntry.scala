@@ -2119,8 +2119,8 @@ object SparkEntry {
       val dir = graft.core.Scratch.dir("cc4-") + "/evalidx"
       Dedup.writeContaminationIndex(ev0, "doc_id", "text", dir)
       Dedup.appendToContaminationIndex(ev1, "doc_id", "text", dir)
-      Dedup.contaminationPairsFromIndexAsOf(docs, "doc_id", "text", dir,
-          asOf = 0L)
+      Dedup.contaminationPairsFromIndex(docs, "doc_id", "text", dir,
+          asOf = Some(0L))
         .orderBy("doc_id", "eval_id")
     }),
 
@@ -2489,8 +2489,8 @@ object SparkEntry {
       val dir = graft.core.Scratch.dir("bpe6-") + "/vocab_art"
       TextAnalysis.writeBpeVocab(docs, "text", dir, rounds = 2)
       TextAnalysis.extendBpeVocab(s, dir, extraRounds = 1)
-      TextAnalysis.bpeSegmentCountsFromVocabAsOf(s, dir, docs, "doc_id",
-          "text", asOf = 2)
+      TextAnalysis.bpeSegmentCountsFromVocab(s, dir, docs, "doc_id",
+          "text", asOf = Some(2))
         .orderBy("doc_id")
     }),
 
@@ -2624,7 +2624,7 @@ object SparkEntry {
     // today's append landed (version 1 = the odd half), because versions
     // are immutable committed segment sets and the pinned read derives
     // df/corpus totals from the pinned relation, never the HEAD
-    // dictionary (Retrieval.bm25TopKFromIndexAsOf scaladoc; folded-
+    // dictionary (Retrieval.bm25TopKFromIndex `asOf` scaladoc; folded-
     // history loud failure is Artifacts.segmentsAsOf's contract,
     // Round12Spec pins it with the mv3 retention semantics). Oracle:
     // ret1's from-scratch BM25 over the even half alone — exactly what
@@ -2636,10 +2636,11 @@ object SparkEntry {
         "doc_id", "text", dir)
       ext.Retrieval.appendToPostingsIndex(docs.where(col("doc_id") % 2 === 1),
         "doc_id", "text", dir)
-      ext.Retrieval.bm25TopKFromIndexAsOf(s,
+      ext.Retrieval.bm25TopKFromIndex(s,
           Seq(0 -> Seq("spark", "join", "table"),
             1 -> Seq("hash", "merge", "sort"),
-            2 -> Seq("stream", "window", "batch")), dir, asOf = 0L, k = 5)
+            2 -> Seq("stream", "window", "batch")), dir, k = 5,
+          asOf = Some(0L))
         .orderBy("query_id", "rk")
     }),
 
@@ -3135,8 +3136,8 @@ object SparkEntry {
       val pinnedPop = toks(docs.where(col("doc_id") % 3 < 2))
       val tf = pinnedPop.groupBy("tok").agg(count(lit(1)).as("true_cnt"))
       val probes = tf.orderBy(col("true_cnt").desc, col("tok").asc).limit(20)
-      ext.Profile.cmsEstimateWindowedAsOf(s, dir, probes, "tok",
-          minEpoch = 0L, asOf = 2L)
+      ext.Profile.cmsEstimateWindowed(s, dir, probes, "tok",
+          minEpoch = 0L, asOf = Some(2L))
         .join(probes, col("k") === col("tok"))
         .select(col("tok"), col("true_cnt"), col("est"),
           (col("est") - col("true_cnt")).as("overcount"))
@@ -3194,9 +3195,9 @@ object SparkEntry {
         ext.Profile.ingestWindowedHhBatch(
           toks0.where(col("doc_id") % 3 === e), col("token"),
           col("doc_id") % 3, dir, batchId = e.toLong)
-      ext.Profile.heavyHittersWindowedAsOf(
+      ext.Profile.heavyHittersWindowed(
           toks0.where(col("doc_id") % 3 < 2), col("token"), dir,
-          minEpoch = 0L, asOf = 2L)
+          minEpoch = 0L, asOf = Some(2L))
         .select(col("key").as("token"), col("n"))
         .orderBy("token")
     }),
@@ -3247,9 +3248,9 @@ object SparkEntry {
         ext.Profile.ingestWindowedHhBatch(
           toks0.where(col("doc_id") % 4 === b), col("token"),
           col("doc_id") % 2, dir, batchId = b.toLong)
-      ext.Profile.heavyMoversWindowedAsOf(
+      ext.Profile.heavyMoversWindowed(
           toks0.where(col("doc_id") % 4 < 2), col("token"),
-          col("doc_id") % 2, dir, 0L, 1L, asOf = 2L)
+          col("doc_id") % 2, dir, 0L, 1L, asOf = Some(2L))
         .select(col("key").as("token"), col("c0"), col("c1"), col("delta"))
         .orderBy("token")
     }),
@@ -3736,8 +3737,8 @@ object SparkEntry {
       Dedup.appendToBloomIndex(docs.where(col("doc_id") % 4 === 2), "text", dir)
       val batch = docs.union(
         docs.select((col("doc_id") + plantUnit(s, d)).as("doc_id"), col("text")))
-      Dedup.dedupIncrementalBloomFromIndexAsOf(batch, "doc_id", "text", dir,
-          asOf = 0L)
+      Dedup.dedupIncrementalBloomFromIndex(batch, "doc_id", "text", dir,
+          asOf = Some(0L))
         .orderBy("doc_id")
     }),
 
@@ -4703,7 +4704,7 @@ object SparkEntry {
         "vec_id", "embedding", dir, k = 3)
       Similarity.appendToKnnGraph(emb.where(col("vec_id") % 4 === 3),
         "vec_id", "embedding", dir)
-      Similarity.knnGraphFromIndexAsOf(s, dir, asOf = 0L)
+      Similarity.knnGraphFromIndex(s, dir, asOf = Some(0L))
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), col("cos"))
         .orderBy("query_id", "rank")
@@ -5066,7 +5067,7 @@ object SparkEntry {
         "vec_id", "embedding", dir)
       Similarity.ivfQuantizedTopKFromIndex(
           s.read.parquet(s"$dir/centroids"),
-          Similarity.ivfIndexRelationAsOf(s, dir, asOf = 0L),
+          Similarity.ivfLivingIndex(s, dir, asOf = Some(0L)),
           emb.select(col("vec_id"), col("embedding").as("v")),
           emb.where(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 3, shortlist = 30)
@@ -5209,10 +5210,10 @@ object SparkEntry {
         "vec_id", "embedding", dir, dims = 64, m = 4, ksub = 4, iters = 2)
       Similarity.appendToPqIndex(emb.where(col("vec_id") % 4 === 1),
         "vec_id", "embedding", dir)
-      Similarity.pqTopKFromIndexAsOf(s, dir,
+      Similarity.pqTopKFromIndex(s, dir,
           emb.select(col("vec_id"), col("embedding").as("v")),
           emb.where(col("vec_id") < 5), "vec_id", "embedding",
-          asOf = 0L, k = 10, shortlist = 30)
+          k = 10, shortlist = 30, asOf = Some(0L))
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), col("cos"))
         .orderBy("query_id", "rank")
@@ -5339,7 +5340,7 @@ object SparkEntry {
       ext.Fit.writeProbeModel(f, fx, col("y"), iters = 2, dir)
       ext.Fit.extendProbeModel(s, dir, f, fx, col("y"), extraIters = 2)
       ext.Fit.scoreFromProbeModel(f, col("doc_id"), fx, dir,
-          tauScaled = 80L * 65536L, asOf = 2L)
+          tauScaled = 80L * 65536L, asOf = Some(2L))
         .orderBy("doc_id")
     }),
 

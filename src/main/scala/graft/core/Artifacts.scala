@@ -35,9 +35,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - count-indexed `seg_<index>_<uuid>` ([[appendSegment]]): the index is
   *    the committed count, so appends are SINGLE-WRITER per root (one
   *    streaming query per artifact). [[commitIndexedSegment]] verifies
-  *    that after each commit and [[segmentsAsOf]] before each pinned read,
-  *    failing loudly on a same-index twin instead of ordering versions by
-  *    random UUID bytes;
+  *    that after each commit and [[segments]] before every read, head or
+  *    pinned, failing loudly on a same-index twin instead of unioning
+  *    both twins or ordering versions by random UUID bytes;
   *  - batch-id-named `seg_<batchId>` ([[appendBatchSegment]]): the name IS
   *    the idempotence key, so a redelivered batch finds its segment and
   *    writes nothing; the caller fences fresh ids to be monotone.
@@ -205,19 +205,16 @@ object Artifacts {
     finally out.close()
   }
 
-  /** The committed-segment prefix of version `asOf` (the first
-    * `asOf − floor` segments — [[graft.streaming.Ingest.asOfSnapshot]]'s
-    * newest-committed-≤-pin rule for segmented stores). Fails loudly on
-    * a folded version, a version not yet written, and a torn store. */
-  def segmentsAsOf(spark: org.apache.spark.sql.SparkSession,
-                   artifactDir: String, asOf: Long): Seq[String] = {
-    val floor = asOfFloor(spark, artifactDir)
-    val segs = committedChildren(spark, segmentsDir(artifactDir))
-    // Read-side half of the single-writer guard: commitIndexedSegment's
-    // twin check throws only in the SECOND committer's JVM — which may be
-    // a dead streaming query whose error nobody reads — so a pinned read
-    // of a torn store must also fail loudly here. Applies only to
-    // count-indexed `seg_NNNNNN_<uuid>` names.
+  /** The committed segments of the store at `dir`, the listing every read
+    * (head and pinned) goes through. Read-side half of the single-writer
+    * guard: commitIndexedSegment's twin check throws only in the SECOND
+    * committer's JVM — which may be a dead streaming query whose error
+    * nobody reads — so a read of a torn store must also fail loudly here,
+    * or a head read would union both twins. Applies only to count-indexed
+    * `seg_NNNNNN_<uuid>` names; a driver-side name grouping, no job. */
+  private def committedSegments(spark: SparkSession,
+                                dir: String): Seq[String] = {
+    val segs = committedChildren(spark, segmentsDir(dir))
     val dupIdx = segs
       .map(p => new org.apache.hadoop.fs.Path(p).getName)
       .flatMap { n =>
@@ -225,11 +222,21 @@ object Artifacts {
       }
       .groupBy(identity).collect { case (idx, twins) if twins.size > 1 => idx }
     require(dupIdx.isEmpty,
-      s"Artifacts.segmentsAsOf: $artifactDir has multiple committed " +
-        s"segments sharing index ${dupIdx.toSeq.sorted.mkString(", ")} — " +
-        "the artifact was torn by concurrent appenders and version " +
-        "ordering past that index is ambiguous; remove the duplicate " +
-        "segment(s) before pinned reads")
+      s"Artifacts.segments: $dir has multiple committed segments sharing " +
+        s"index ${dupIdx.toSeq.sorted.mkString(", ")} — the artifact was " +
+        "torn by concurrent appenders and version ordering past that " +
+        "index is ambiguous; remove the duplicate segment(s) before reading")
+    segs
+  }
+
+  /** The committed-segment prefix of version `asOf` (the first
+    * `asOf − floor` segments — [[graft.streaming.Ingest.asOfSnapshot]]'s
+    * newest-committed-≤-pin rule for segmented stores). Fails loudly on
+    * a folded version, a version not yet written, and a torn store. */
+  def segmentsAsOf(spark: org.apache.spark.sql.SparkSession,
+                   artifactDir: String, asOf: Long): Seq[String] = {
+    val floor = asOfFloor(spark, artifactDir)
+    val segs = committedSegments(spark, artifactDir)
     require(asOf >= floor,
       s"Artifacts.segmentsAsOf: version $asOf of $artifactDir was folded " +
         s"away by compaction (floor = $floor) — as-of reads of folded " +
@@ -243,12 +250,12 @@ object Artifacts {
 
   /** The committed segment paths of the store at `dir`, root healed:
     * every one at head (`asOf` = None), the [[segmentsAsOf]] prefix for a
-    * pinned version. */
+    * pinned version. Both fail loudly on a torn store
+    * ([[committedSegments]]). */
   def segments(spark: SparkSession, dir: String,
                asOf: Option[Long] = None): Seq[String] = {
     heal(spark, dir)
-    asOf.fold(committedChildren(spark, segmentsDir(dir)))(
-      segmentsAsOf(spark, dir, _))
+    asOf.fold(committedSegments(spark, dir))(segmentsAsOf(spark, dir, _))
   }
 
   /** Read a segmented store, root healed: the base (`dir/<base>`, when

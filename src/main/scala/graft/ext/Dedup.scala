@@ -290,19 +290,14 @@ object Dedup {
     }
   }
 
-  /** The full stored FINGERPRINT relation at head (segmented store,
-    * base `fps`). Segment-versioned fps are what make yesterday's
-    * archive state re-derivable for curation reproducibility
-    * ([[fpsRelationAsOf]]). */
+  /** The full stored FINGERPRINT relation (segmented store, base
+    * `fps`): at head, or AS OF version `asOf` (build = 0, each committed
+    * append segment adds one; folded or unwritten pins fail loudly).
+    * Segment-versioned fps are what make yesterday's archive state
+    * re-derivable for curation reproducibility. */
   def fpsRelation(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): DataFrame =
-    graft.core.Artifacts.readSegmented(spark, dir, "fps")
-
-  /** The fingerprint relation AS OF version `asOf` (build = 0, each
-    * committed append segment adds one). */
-  def fpsRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, asOf: Long): DataFrame =
-    graft.core.Artifacts.readSegmented(spark, dir, "fps", Some(asOf))
+                  dir: String, asOf: Option[Long] = None): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "fps", asOf)
 
   /** MAINTAIN the stored index per ingest batch — the mergeable-sketch
     * contract the build scaladoc promises (same family as apx2's MinHash
@@ -321,7 +316,7 @@ object Dedup {
     * harmless on both artifacts: OR is idempotent and duplicate stored
     * fingerprints only multiply anti-join matches, which the fp-group
     * aggregate absorbs. The fingerprints land as one segment, one
-    * immutable index VERSION ([[fpsRelationAsOf]] — yesterday's dedup
+    * immutable index VERSION ([[fpsRelation]] `asOf` — yesterday's dedup
     * run re-derivable). The bloom is NOT versioned — deliberately: a
     * later filter is a bitwise SUPERSET
     * of every earlier one (OR-merge only sets bits), so probing the
@@ -416,32 +411,24 @@ object Dedup {
     * check joins the stored fingerprint relation, and the batch is the
     * only text fingerprinted. Identical results to the inline path for
     * any parameters, for the same reason (no false negatives; false
-    * positives re-checked exactly). */
-  def dedupIncrementalBloomFromIndex(batch: DataFrame, idCol: String,
-                                     textCol: String, dir: String): DataFrame = {
-    val spark = batch.sparkSession
-    val (_, numHashes, bloomBytes) = readBloomArtifact(spark, dir)
-    bloomRoutedDedup(batch, idCol, textCol, fpsRelation(spark, dir),
-      bloomBytes, numHashes)
-  }
-
-  /** [[dedupIncrementalBloomFromIndex]] AS OF a pinned archive version —
-    * time travel for the dedup tier (ret8's reproducibility verb on the
-    * bf2 artifact): the exact check anti-joins the PINNED fingerprint
-    * relation ([[fpsRelationAsOf]] — build = 0, each append adds one),
-    * so the batch dedups against exactly yesterday's archive state. The
+    * positives re-checked exactly).
+    *
+    * `asOf = Some(v)` is time travel for the dedup tier (ret8's
+    * reproducibility verb on the bf2 artifact): the exact check
+    * anti-joins the PINNED fingerprint relation ([[fpsRelation]]), so
+    * the batch dedups against exactly yesterday's archive state. The
     * probe still uses the CURRENT bloom: later OR-merges only SET bits,
     * so the current filter is a superset of the pinned one — no false
     * negative against any pinned version is possible, and the extra
     * false positives re-check exactly against the pinned fps and
     * survive. Folded pins fail loudly ([[compactBloomIndex]]). */
-  def dedupIncrementalBloomFromIndexAsOf(batch: DataFrame, idCol: String,
-                                         textCol: String, dir: String,
-                                         asOf: Long): DataFrame = {
+  def dedupIncrementalBloomFromIndex(batch: DataFrame, idCol: String,
+                                     textCol: String, dir: String,
+                                     asOf: Option[Long] = None): DataFrame = {
     val spark = batch.sparkSession
     val (_, numHashes, bloomBytes) = readBloomArtifact(spark, dir)
-    bloomRoutedDedup(batch, idCol, textCol,
-      fpsRelationAsOf(spark, dir, asOf), bloomBytes, numHashes)
+    bloomRoutedDedup(batch, idCol, textCol, fpsRelation(spark, dir, asOf),
+      bloomBytes, numHashes)
   }
 
   /** Commit the filter via a side-write + checked two-rename swap
@@ -1381,21 +1368,31 @@ object Dedup {
     * suite is never re-tokenized; identical results to the inline path
     * over the same eval population by construction (same postings, same
     * scoring core). Probes read the LIVING suite: retired eval waves
-    * ([[forgetFromContaminationIndex]]) no longer flag documents. */
+    * ([[forgetFromContaminationIndex]]) no longer flag documents.
+    * `asOf = Some(v)` probes the suite AS OF version `v`
+    * ([[contaminationIndexLiving]]) — "which docs did yesterday's
+    * decontamination flag" stays re-derivable after today's eval wave
+    * lands (the inc7/ret8 contract). */
   def contaminationPairsFromIndex(corpus: DataFrame, idCol: String,
                                   textCol: String, dir: String,
-                                  n: Int = 3,
-                                  minJaccard: Double = 0.7): DataFrame =
+                                  n: Int = 3, minJaccard: Double = 0.7,
+                                  asOf: Option[Long] = None): DataFrame =
     contaminationAgainstPostings(corpus,
-      contaminationIndexLiving(corpus.sparkSession, dir), idCol, textCol,
-      n, minJaccard)
+      contaminationIndexLiving(corpus.sparkSession, dir, asOf), idCol,
+      textCol, n, minJaccard)
 
   /** The living eval postings: base + committed segments minus retired
     * eval_ids — a missing tombstone store adds zero cost (the
-    * pqCodesLiving shape on the decon tier). */
+    * pqCodesLiving shape on the decon tier). `asOf = Some(v)` reads
+    * version `v` (build = 0, each appended wave adds one; folded or
+    * unwritten pins fail loudly) with CURRENT tombstones still applied —
+    * a retired eval task stops flagging even under a pin, the knn4 rule:
+    * takedown outranks reproducibility. */
   def contaminationIndexLiving(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): DataFrame =
-    Forget.applyTombstones(contaminationIndexRelation(spark, dir),
+                               dir: String,
+                               asOf: Option[Long] = None): DataFrame =
+    Forget.applyTombstones(
+      graft.core.Artifacts.readSegmented(spark, dir, "postings", asOf),
       "eval_id", s"$dir/tombstones")
 
   /** RETIRE eval documents from the stored suite — benchmarks rotate
@@ -1424,24 +1421,6 @@ object Dedup {
       // probe a 32-file listing for kilobytes of postings
       living.coalesce(1).write.parquet(s"$tmp/postings")
     }
-  }
-
-  /** The eval suite AS OF version `asOf` (build = 0, each appended wave
-    * adds one) — reproducibility for the decon tier: "which docs did
-    * yesterday's decontamination flag" must be re-derivable after
-    * today's eval wave lands (the inc7/ret8 contract). CURRENT
-    * tombstones still apply — a retired eval task stops
-    * flagging even under a pin, the knn4 rule: takedown outranks
-    * reproducibility. */
-  def contaminationPairsFromIndexAsOf(corpus: DataFrame, idCol: String,
-                                      textCol: String, dir: String,
-                                      asOf: Long, n: Int = 3,
-                                      minJaccard: Double = 0.7): DataFrame = {
-    val pinned = graft.core.Artifacts.readSegmented(corpus.sparkSession,
-      dir, "postings", Some(asOf))
-    contaminationAgainstPostings(corpus,
-      Forget.applyTombstones(pinned, "eval_id", s"$dir/tombstones"),
-      idCol, textCol, n, minJaccard)
   }
 
   /** Per-document N-GRAM CONTAINMENT against an eval set — the GPT-3-

@@ -147,23 +147,23 @@ object Fit {
     }
   }
 
-  /** The stored weight vector AS OF iteration `asOf` (−1 = head) — a
-    * bounded driver read (iters × k longs). Pins beyond the trained
-    * head, or at/below 0, fail loudly. */
-  def probeWeightsAsOf(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, asOf: Long = -1L): Seq[Long] = {
+  /** The stored weight vector at the trained head, or AS OF iteration
+    * `asOf` — a bounded driver read (iters × k longs). Pins beyond the
+    * trained head, or at/below 0, fail loudly. */
+  def probeWeights(spark: org.apache.spark.sql.SparkSession,
+                   dir: String, asOf: Option[Long] = None): Seq[Long] = {
     graft.core.Artifacts.heal(spark, dir)
     val k = spark.read.parquet(s"$dir/meta").head().getInt(0)
     val rows = spark.read.parquet(s"$dir/weights").orderBy("iter").collect()
-    require(rows.nonEmpty, s"probeWeightsAsOf: $dir holds no trajectory")
+    require(rows.nonEmpty, s"probeWeights: $dir holds no trajectory")
     val head = rows.last.getAs[Long]("iter")
-    val pin = if (asOf < 0) head else asOf
+    val pin = asOf.getOrElse(head)
     require(pin >= 1 && pin <= head,
-      s"probeWeightsAsOf: iteration $pin of $dir does not exist " +
+      s"probeWeights: iteration $pin of $dir does not exist " +
         s"(trained head = $head)")
     val r = rows.find(_.getAs[Long]("iter") == pin).getOrElse(
       throw new IllegalArgumentException(
-        s"probeWeightsAsOf: trajectory of $dir is missing iteration $pin"))
+        s"probeWeights: trajectory of $dir is missing iteration $pin"))
     (0 until k).map(j => r.getAs[Long](s"w$j"))
   }
 
@@ -172,8 +172,8 @@ object Fit {
     * literals — pure codegen'd fixed point, zero training work. */
   def scoreFromProbeModel(df: DataFrame, id: Column, features: Seq[Column],
                           dir: String, tauScaled: Long,
-                          asOf: Long = -1L): DataFrame = {
-    val w = probeWeightsAsOf(df.sparkSession, dir, asOf)
+                          asOf: Option[Long] = None): DataFrame = {
+    val w = probeWeights(df.sparkSession, dir, asOf)
     val score = features.zipWithIndex
       .map { case (c, j) => c.cast("long") * lit(w(j)) }.reduce(_ + _)
     df.select(id.as("doc_id"), score.as("score"),

@@ -367,45 +367,34 @@ object Profile {
   /** The living per-epoch counter relation: base + committed segments,
     * epochs below `minEpoch` excluded (they may also be physically gone
     * — [[expireWindowedCms]]; the filter makes the answer independent of
-    * whether the expire ran, which is what the spec pins). */
+    * whether the expire ran, which is what the spec pins).
+    *
+    * `asOf = Some(v)` reads version `v` (build = 0, each effective ingest
+    * adds one; folded or unwritten pins fail loudly) — time travel for
+    * the windowed sketch tier: yesterday's drift report is re-derivable
+    * after today's ingest. A pin taken after an expire sees the folded
+    * base, whose sub-`minEpoch` mass is physically gone —
+    * right-to-be-forgotten at epoch granularity outranks
+    * reproducibility, the knn4 rule. */
   def windowedCmsCounters(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, minEpoch: Long): DataFrame =
-    graft.core.Artifacts.readSegmented(spark, dir, "base")
+                          dir: String, minEpoch: Long,
+                          asOf: Option[Long] = None): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "base", asOf)
       .where(col("epoch") >= minEpoch)
       .groupBy("r", "b").agg(sum(col("c")).as("c"))
 
-  /** The counter relation AS OF version `asOf` (build = 0, each
-    * effective ingest adds one) — time travel for the windowed sketch
-    * tier: yesterday's drift report is re-derivable after today's
-    * ingest. A pin taken after an expire sees the folded base, whose
-    * sub-`minEpoch` mass is physically gone — right-to-be-forgotten at
-    * epoch granularity outranks reproducibility, the knn4 rule. */
-  def windowedCmsCountersAsOf(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, minEpoch: Long,
-                              asOf: Long): DataFrame =
-    graft.core.Artifacts.readSegmented(spark, dir, "base", Some(asOf))
-      .where(col("epoch") >= minEpoch)
-      .groupBy("r", "b").agg(sum(col("c")).as("c"))
-
-  /** [[cmsEstimate]] over the living window. */
+  /** [[cmsEstimate]] over the living window, at head or AS OF version
+    * `asOf` ([[windowedCmsCounters]]) — d and w derive from meta, which
+    * is immutable for the store's lifetime (built once; expire rewrites
+    * only the high-water), so a pinned read needs no per-version meta
+    * copy. */
   def cmsEstimateWindowed(spark: org.apache.spark.sql.SparkSession,
                           dir: String, probes: DataFrame, keyCol: String,
-                          minEpoch: Long): DataFrame = {
+                          minEpoch: Long,
+                          asOf: Option[Long] = None): DataFrame = {
     val meta = windowedMeta(spark, dir)
-    cmsEstimate(windowedCmsCounters(spark, dir, minEpoch), probes, keyCol,
-      d = meta.getAs[Int]("d"), w = meta.getAs[Int]("w"))
-  }
-
-  /** [[cmsEstimate]] over a PINNED version's window — d and w derive
-    * from meta, which is immutable for the store's lifetime (built
-    * once; expire rewrites only the high-water), so the pinned read
-    * needs no per-version meta copy. */
-  def cmsEstimateWindowedAsOf(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, probes: DataFrame, keyCol: String,
-                              minEpoch: Long, asOf: Long): DataFrame = {
-    val meta = windowedMeta(spark, dir)
-    cmsEstimate(windowedCmsCountersAsOf(spark, dir, minEpoch, asOf),
-      probes, keyCol, d = meta.getAs[Int]("d"), w = meta.getAs[Int]("w"))
+    cmsEstimate(windowedCmsCounters(spark, dir, minEpoch, asOf), probes,
+      keyCol, d = meta.getAs[Int]("d"), w = meta.getAs[Int]("w"))
   }
 
   /** RETIRE epochs below `minEpoch` — the sketch tier's forget verb:
@@ -508,28 +497,20 @@ object Profile {
   /** Heavy hitters of the LIVING WINDOW: candidates = the union of
     * living cells' counter keys (recall-exact per the class scaladoc),
     * N_w = the cells' exact per-(epoch, bid) token counts summed, exact
-    * phase = one candidate semi-join over the retained corpus `data`. */
-  def heavyHittersWindowed(data: DataFrame, key: Column, dir: String,
-                           minEpoch: Long): DataFrame =
-    hhOverCells(data, key,
-      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
-      windowedHhCells(data.sparkSession, dir, minEpoch))
-
-  /** [[heavyHittersWindowed]] AS OF a pinned version — yesterday's
+    * phase = one candidate semi-join over the retained corpus `data`.
+    *
+    * `asOf = Some(v)` reports AS OF version `v` — yesterday's
     * heavy-hitter report re-derivable after today's ingest (the
-    * windowed-CMS as-of contract; `data` must be the corresponding
-    * pinned corpus slice for the exact phase to match). Folded pins
-    * fail loudly; a post-expire pin sees the folded base. */
-  def heavyHittersWindowedAsOf(data: DataFrame, key: Column, dir: String,
-                               minEpoch: Long, asOf: Long): DataFrame =
-    hhOverCells(data, key,
-      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
-      windowedHhCells(data.sparkSession, dir, minEpoch, Some(asOf)))
-
-  private def hhOverCells(data: DataFrame, key: Column, k: Int,
-                          cellsIn: DataFrame): DataFrame = {
+    * [[windowedCmsCounters]] as-of contract; `data` must be the
+    * corresponding pinned corpus slice for the exact phase to match).
+    * Folded or unwritten pins fail loudly; a post-expire pin sees the
+    * folded base. */
+  def heavyHittersWindowed(data: DataFrame, key: Column, dir: String,
+                           minEpoch: Long,
+                           asOf: Option[Long] = None): DataFrame = {
     val spark = data.sparkSession
-    val cells = cellsIn
+    val k = windowedMeta(spark, dir).getAs[Int]("k")
+    val cells = windowedHhCells(spark, dir, minEpoch, asOf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nW = cells.select("epoch", "bid", "n").distinct()
@@ -565,15 +546,9 @@ object Profile {
     * candidate semi-join over `data` restricted to the two epochs (the
     * hh1 cost class); per-epoch totals come from the cells' exact
     * (epoch, bid, n) rows, so the threshold needs no corpus scan; the
-    * comparison is all-integer (|delta|·k ≥ max — no division). */
-  def heavyMoversWindowed(data: DataFrame, key: Column, epoch: Column,
-                          dir: String, e0: Long, e1: Long): DataFrame =
-    moversOverCells(data, key, epoch,
-      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
-      windowedHhCells(data.sparkSession, dir, minEpoch = math.min(e0, e1)),
-      e0, e1, dir)
-
-  /** [[heavyMoversWindowed]] AS OF a pinned version — yesterday's drift
+    * comparison is all-integer (|delta|·k ≥ max — no division).
+    *
+    * `asOf = Some(v)` reports AS OF version `v` — yesterday's drift
     * report re-derivable after today's ingest (round-14 verdict #5: the
     * movers/as-of interaction row). Meaningful exactly when later
     * batches add mass to the SAME epochs (batches and epochs are
@@ -581,23 +556,16 @@ object Profile {
     * the head's for e0/e1 themselves, and `data` must be the matching
     * pinned corpus slice (the hh3 contract). Recall argument unchanged —
     * it quantifies over the LIVING CELLS OF THE PINNED PREFIX, which is
-    * exactly what a pre-ingest run saw. Folded pins fail loudly
-    * (the as-of floor contract); an epoch with no cells in the
+    * exactly what a pre-ingest run saw. Folded or unwritten pins fail
+    * loudly (the as-of floor contract); an epoch with no cells in the
     * pinned prefix fails loudly like the head path (a mover against a
     * missing epoch is unanswerable). */
-  def heavyMoversWindowedAsOf(data: DataFrame, key: Column, epoch: Column,
-                              dir: String, e0: Long, e1: Long,
-                              asOf: Long): DataFrame =
-    moversOverCells(data, key, epoch,
-      windowedMeta(data.sparkSession, dir).getAs[Int]("k"),
-      windowedHhCells(data.sparkSession, dir,
-        minEpoch = math.min(e0, e1), Some(asOf)), e0, e1, dir)
-
-  private def moversOverCells(data: DataFrame, key: Column, epoch: Column,
-                              k: Int, cellsIn: DataFrame, e0: Long,
-                              e1: Long, dir: String): DataFrame = {
+  def heavyMoversWindowed(data: DataFrame, key: Column, epoch: Column,
+                          dir: String, e0: Long, e1: Long,
+                          asOf: Option[Long] = None): DataFrame = {
     val spark = data.sparkSession
-    val cells = cellsIn
+    val k = windowedMeta(spark, dir).getAs[Int]("k")
+    val cells = windowedHhCells(spark, dir, math.min(e0, e1), asOf)
       .where(col("epoch").isin(e0, e1))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -237,8 +237,8 @@ object Retrieval {
     * [[segmentSchema]] (None when no segments committed) — the ONE
     * definition of "postings rows of these segments" shared by the
     * read-time head summaries ([[headTermDict]], [[headTotals]]) and the
-    * as-of totals fast path ([[bm25TopKFromIndexAsOf]]), so the segment
-    * layout can never drift between its additivity consumers. */
+    * as-of totals fast path (the pinned [[bm25TopKFromIndex]]), so the
+    * segment layout can never drift between its additivity consumers. */
   private def segmentPostings(spark: org.apache.spark.sql.SparkSession,
                               segPaths: Seq[String]): Option[DataFrame] =
     segPaths.map(sp =>
@@ -296,11 +296,20 @@ object Retrieval {
     Forget.forget(ids, idCol, s"$dir/tombstones")
 
   /** The LIVING postings view: base + committed segments minus
-    * tombstones — what every query path scans once deletes exist. */
+    * tombstones — what every query path scans once deletes exist.
+    * `asOf = Some(v)` reads version `v` instead (the build is version
+    * `floor` — 0 until a compact — and each committed append adds one),
+    * with current tombstones STILL applied — right-to-be-forgotten
+    * outranks reproducibility, so a forgotten document never resurfaces
+    * through time travel (and pre-/post-compact reads of the same pin
+    * therefore agree). Folded or unwritten pins fail loudly
+    * ([[graft.core.Artifacts.segments]]). */
   def postingsLiving(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): DataFrame =
-    Forget.applyTombstones(postingsRelation(spark, dir), "doc_id",
-      s"$dir/tombstones")
+                     dir: String,
+                     asOf: Option[Long] = None): DataFrame =
+    Forget.applyTombstones(
+      graft.core.Artifacts.readSegmented(spark, dir, "postings", asOf),
+      "doc_id", s"$dir/tombstones")
 
   /** Amortized physical rewrite of a tombstoned postings index
     * ([[graft.core.Artifacts.foldSegments]]): postings/terms/meta derived
@@ -355,11 +364,32 @@ object Retrieval {
     * slice) and corpus totals ride as literals from ONE bounded
     * [[headTotals]] action. Identical results to the inline [[bm25TopK]]
     * for any corpus and query set: same postings, same df values, same
-    * pinned-order scoring arithmetic. */
+    * pinned-order scoring arithmetic.
+    *
+    * `asOf = Some(v)` answers AS OF pinned index version `v` — the
+    * reproducibility verb a training pipeline needs ("re-run yesterday's
+    * retrieval after today's append landed"): answers from the pinned
+    * segment prefix, with document frequencies and corpus totals derived
+    * from THAT relation (the stored dictionary/meta are HEAD state — a
+    * pinned read that used them would mix today's df into yesterday's
+    * candidates and drift every score; deriving from the pinned postings
+    * is Lucene's "open a reader over a named segment set"). The df
+    * derivation adds no extra scan: every posting of a query term lives
+    * in that term's hash bucket, so the pb-pruned candidate slice already
+    * holds the term's FULL posting list and dft is one count over it;
+    * only the 2-value corpus-totals aggregate reads the unpruned pinned
+    * relation (one columnar pass, collected as 1 driver row). Current
+    * tombstones apply to pins ([[postingsLiving]]). */
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
                         queries: Seq[(Int, Seq[String])], dir: String,
-                        k: Int = 5, k1: Double = 1.2,
-                        b: Double = 0.75): DataFrame = {
+                        k: Int = 5, k1: Double = 1.2, b: Double = 0.75,
+                        asOf: Option[Long] = None): DataFrame =
+    asOf.fold(bm25Head(spark, queries, dir, k, k1, b))(
+      bm25Pinned(spark, queries, dir, _, k, k1, b))
+
+  private def bm25Head(spark: org.apache.spark.sql.SparkSession,
+                       queries: Seq[(Int, Seq[String])], dir: String,
+                       k: Int, k1: Double, b: Double): DataFrame = {
     import spark.implicits._
     graft.core.Artifacts.heal(spark, dir)
     val (nDocs, nToks, buckets) = headTotals(spark, dir)
@@ -385,8 +415,8 @@ object Retrieval {
   }
 
   /** The pinned-order BM25 scoring + rank block shared by every
-    * stored-index query path ([[bm25TopKFromIndex]] and the time-travel
-    * [[bm25TopKFromIndexAsOf]] answer through this ONE definition, so
+    * stored-index query path (the head and the pinned
+    * [[bm25TopKFromIndex]] answer through this ONE definition, so
     * their arithmetic cannot drift — the pqAnswer device). */
   private def bm25RankStored(post: DataFrame, dict: DataFrame,
                              qmap: DataFrame, nDocs: Long, nToks: Long,
@@ -408,37 +438,12 @@ object Retrieval {
         col("rk").cast("long").as("rk"))
   }
 
-  /** The postings relation AS OF version `asOf` (the build is version
-    * `floor` — 0 until a compact — and each committed append adds one),
-    * with current tombstones STILL applied — right-to-be-forgotten
-    * outranks reproducibility, so a forgotten document never resurfaces
-    * through time travel (and pre-/post-compact reads of the same pin
-    * therefore agree). */
-  def postingsRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, asOf: Long): DataFrame =
-    Forget.applyTombstones(
-      graft.core.Artifacts.readSegmented(spark, dir, "postings", Some(asOf)),
-      "doc_id", s"$dir/tombstones")
-
-  /** [[bm25TopKFromIndex]] AS OF a pinned index version — the
-    * reproducibility verb a training pipeline needs ("re-run yesterday's
-    * retrieval after today's append landed"): answers from the pinned
-    * segment prefix, with document frequencies and corpus totals derived
-    * from THAT relation (the stored dictionary/meta are HEAD state — a
-    * pinned read that used them would mix today's df into yesterday's
-    * candidates and drift every score; deriving from the pinned postings
-    * is Lucene's "open a reader over a named segment set"). The df
-    * derivation adds no extra scan: every posting of a query term lives
-    * in that term's hash bucket, so the pb-pruned candidate slice already
-    * holds the term's FULL posting list and dft is one count over it;
-    * only the 2-value corpus-totals aggregate reads the unpruned pinned
-    * relation (one columnar pass, collected as 1 driver row). */
-  def bm25TopKFromIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-                            queries: Seq[(Int, Seq[String])], dir: String,
-                            asOf: Long, k: Int = 5, k1: Double = 1.2,
-                            b: Double = 0.75): DataFrame = {
+  private def bm25Pinned(spark: org.apache.spark.sql.SparkSession,
+                         queries: Seq[(Int, Seq[String])], dir: String,
+                         asOf: Long, k: Int, k1: Double,
+                         b: Double): DataFrame = {
     import spark.implicits._
-    val pinned = postingsRelationAsOf(spark, dir, asOf)
+    val pinned = postingsLiving(spark, dir, Some(asOf))
     // Pinned corpus totals. Fast path (r16): when nothing was ever
     // forgotten, totals are additive across the doc-disjoint base +
     // pinned-segment-prefix partition — the 1-row base meta + an

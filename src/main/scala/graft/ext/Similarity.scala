@@ -236,11 +236,7 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    knnTopK(scored, k)
   }
 
   /** BUILD the stored kNN GRAPH — the graph tier's sim6/pq2: semantic
@@ -390,11 +386,14 @@ object Similarity {
         (dot(col("qv"), col("nv")) / (col("qnrm") * col("nnrm"))).as("cos"))
   }
 
+  /** The kNN tier's one neighbour ranking: per query, `row_number` over
+    * (cos DESC, neighbor_id ASC), kept to rank ≤ k (a WindowGroupLimit).
+    * Out: (query_id, rank, neighbor_id, cos). */
   private def knnTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
   }
 
   /** FORGET nodes from the stored kNN graph — right-to-be-forgotten for
@@ -474,6 +473,7 @@ object Similarity {
       val av = survivors.join(
         affected.select(col("query_id").as("id")), Seq("id"), "left_semi")
       val recomputed = knnTopK(tiledPairScores(av, survivors, blocks), k)
+        .select(col("query_id"), col("neighbor_id"), col("cos"))
       try {
         graft.core.Artifacts.stageCommit(spark,
             f"$dir/versions/v_${knnVersionNum(head) + 1}%06d") { tmp =>
@@ -658,10 +658,7 @@ object Similarity {
         .persist(StorageLevel.MEMORY_AND_DISK) // two consumers below
     }
     try {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      def topK(df: DataFrame) = df
-        .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      def topK(df: DataFrame) = knnTopK(df, k)
         .select(col("query_id"), col("neighbor_id"), col("cos"))
       val newRows = topK(pairs.select("query_id", "neighbor_id", "cos"))
       // Measured non-win (round 16), re-measure before revisiting:
@@ -739,12 +736,9 @@ object Similarity {
     * the head is already repaired and the anti-joins are view no-ops;
     * in the crash window between tombstone append and repair commit
     * they guarantee a forgotten id is never shown (lists may run short
-    * until the forget retries). Graph-sized work. */
-  def knnGraphFromIndex(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): DataFrame =
-    knnReadVersion(spark, knnHeadDir(spark, dir), dir)
-
-  /** The stored graph AS OF version `asOf` (build = 0, each append or
+    * until the forget retries). Graph-sized work.
+    *
+    * `asOf = Some(v)` reads version `v` (build = 0, each append or
     * forget-repair adds one) — time travel for the kNN tier: versions
     * are immutable snapshots, so a pinned read is reproducible forever,
     * until [[compactKnnGraph]] folds history (reads of folded versions
@@ -757,15 +751,20 @@ object Similarity {
     * view gets the exact repair ([[forgetFromKnnGraph]]), pins get the
     * anti-join. k and blocks derive from the PINNED version's meta,
     * never head state. */
-  def knnGraphFromIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, asOf: Long): DataFrame = {
-    val vd = f"$dir/versions/v_$asOf%06d"
-    val p = new org.apache.hadoop.fs.Path(vd)
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"knnGraphFromIndexAsOf: version $asOf of $dir does not exist — " +
-        "either it was never committed or compaction folded it away; " +
-        "lengthen the compaction window if the pipeline needs deeper " +
-        "reproducibility")
+  def knnGraphFromIndex(spark: org.apache.spark.sql.SparkSession,
+                        dir: String,
+                        asOf: Option[Long] = None): DataFrame = {
+    val vd = asOf.fold(knnHeadDir(spark, dir)) { v =>
+      val vd = f"$dir/versions/v_$v%06d"
+      val p = new org.apache.hadoop.fs.Path(vd)
+      require(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(p),
+        s"knnGraphFromIndex: version $v of $dir does not exist — " +
+          "either it was never committed or compaction folded it away; " +
+          "lengthen the compaction window if the pipeline needs deeper " +
+          "reproducibility")
+      vd
+    }
     knnReadVersion(spark, vd, dir)
   }
 
@@ -778,11 +777,8 @@ object Similarity {
         .join(t.select(col("id").as("neighbor_id")),
           Seq("neighbor_id"), "left_anti")
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    g.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    knnTopK(g, k).select(col("query_id"), col("rank"), col("neighbor_id"),
+      round(col("cos"), 4).as("cos"))
   }
 
   /** `bits`-bit random-hyperplane signature of a vector: bit i is the sign
@@ -1058,7 +1054,7 @@ object Similarity {
     * [[graft.core.Artifacts.appendSegment]]. Segments are list-partitioned like the base, so probe-time
     * partition pruning applies to every root, and each committed
     * segment is one immutable index VERSION
-    * ([[ivfIndexRelationAsOf]]). Single writer per index root. */
+    * ([[ivfLivingIndex]] `asOf`). Single writer per index root. */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                        dir: String): Unit = {
     val spark = newVecs.sparkSession
@@ -1122,10 +1118,17 @@ object Similarity {
     * what every query job should scan after deletes exist. Joining on
     * (vec_id, list) keeps the probed-list partition filter meaningful on
     * both relations; a missing tombstone store means nothing was
-    * forgotten. */
+    * forgotten. `asOf = Some(v)` reads version `v` (the build is version
+    * `floor`, each committed append segment adds one; folded or unwritten
+    * pins fail loudly), with CURRENT tombstones still applied
+    * (right-to-be-forgotten outranks reproducibility). Centroids need no
+    * pinning: they are FROZEN from build to rebuild (appends never touch
+    * them — the FAISS contract sim7 grades) and a rebuild swaps them
+    * together with a reset version history. */
   def ivfLivingIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): DataFrame =
-    minusIvfTombstones(ivfIndexRelation(spark, dir), spark, dir)
+                     dir: String,
+                     asOf: Option[Long] = None): DataFrame =
+    minusIvfTombstones(ivfRoots(spark, dir, asOf), spark, dir)
 
   private def minusIvfTombstones(q: DataFrame,
                                  spark: org.apache.spark.sql.SparkSession,
@@ -1140,17 +1143,6 @@ object Similarity {
       // order so the view is stable whether or not tombstones exist
       .select(q.columns.map(col).toIndexedSeq: _*)
   }
-
-  /** The index relation AS OF version `asOf` (the build is version
-    * `floor`, each committed append segment adds one), with CURRENT
-    * tombstones still applied (right-to-be-forgotten outranks
-    * reproducibility). Centroids need
-    * no pinning: they are FROZEN from build to rebuild (appends never
-    * touch them — the FAISS contract sim7 grades) and a rebuild swaps
-    * them together with a reset version history. */
-  def ivfIndexRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, asOf: Long): DataFrame =
-    minusIvfTombstones(ivfRoots(spark, dir, Some(asOf)), spark, dir)
 
   /** Amortized physical rewrite of a tombstoned/segmented IVF index
     * ([[graft.core.Artifacts.foldSegments]]): centroids + qindex with
@@ -1638,11 +1630,16 @@ object Similarity {
 
   /** The LIVING codes view: base + committed segments minus tombstones —
     * what every query path scans once deletes exist (a missing tombstone
-    * store means nothing was forgotten — zero added cost). */
+    * store means nothing was forgotten — zero added cost). `asOf =
+    * Some(v)` reads version `v` (the build is version `floor`, each
+    * committed append segment adds one; folded or unwritten pins fail
+    * loudly), with current tombstones STILL applied
+    * (right-to-be-forgotten outranks reproducibility). */
   def pqCodesLiving(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): DataFrame =
-    Forget.applyTombstones(pqCodesRelation(spark, dir), "vec_id",
-      s"$dir/tombstones")
+                    dir: String, asOf: Option[Long] = None): DataFrame =
+    Forget.applyTombstones(
+      graft.core.Artifacts.readSegmented(spark, dir, "codes", asOf),
+      "vec_id", s"$dir/tombstones")
 
   /** Amortized physical rewrite of a tombstoned/segmented PQ index
     * ([[graft.core.Artifacts.foldSegments]]): codebooks/meta/codes with
@@ -1686,41 +1683,22 @@ object Similarity {
     * leave the shortlist immediately ([[forgetFromPqIndex]]) — and the
     * exact re-rank fetches full-precision vectors from the primary store
     * (`fetch` = (vec_id, v)) for the bounded |queries|·shortlist rows
-    * alone — the corpus is never scanned. */
+    * alone — the corpus is never scanned.
+    *
+    * `asOf = Some(v)` is time travel for the codebook tier (ret8's
+    * reproducibility verb on the PQ artifact): the candidate population
+    * is the pinned codes relation ([[pqCodesLiving]]); the quantizer
+    * needs no pinning because codebooks are FROZEN from build to rebuild
+    * (appends never touch them — the FAISS contract pq3 grades) and a
+    * rebuild swaps the whole root, resetting version history to 0 with
+    * it. */
   def pqTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       fetch: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
-                      shortlist: Int = 30): DataFrame = {
+                      shortlist: Int = 30,
+                      asOf: Option[Long] = None): DataFrame = {
     val (books, sub, scale) = readPqBooks(spark, dir)
-    pqAnswer(books, pqCodesLiving(spark, dir), queries, fetch,
-      idCol, vecCol, k, sub, shortlist, scale)
-  }
-
-  /** The codes relation AS OF version `asOf` (the build is version
-    * `floor`, each committed append segment adds one), with current
-    * tombstones STILL applied (right-to-be-forgotten outranks
-    * reproducibility). */
-  def pqCodesRelationAsOf(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, asOf: Long): DataFrame =
-    Forget.applyTombstones(
-      graft.core.Artifacts.readSegmented(spark, dir, "codes", Some(asOf)),
-      "vec_id", s"$dir/tombstones")
-
-  /** [[pqTopKFromIndex]] AS OF a pinned index version — time travel for
-    * the codebook tier (ret8's reproducibility verb on the PQ artifact):
-    * the candidate population is the pinned codes relation; the
-    * quantizer needs no pinning because codebooks are FROZEN from build
-    * to rebuild (appends never touch them — the FAISS contract pq3
-    * grades) and a rebuild swaps the whole root, resetting version
-    * history to 0 with it. The IVF tier carries the same verb through
-    * [[ivfIndexRelationAsOf]] — every segmented artifact (matview,
-    * postings, PQ, IVF) is time-travelable. */
-  def pqTopKFromIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, fetch: DataFrame, queries: DataFrame,
-                          idCol: String, vecCol: String, asOf: Long, k: Int,
-                          shortlist: Int = 30): DataFrame = {
-    val (books, sub, scale) = readPqBooks(spark, dir)
-    pqAnswer(books, pqCodesRelationAsOf(spark, dir, asOf), queries, fetch,
+    pqAnswer(books, pqCodesLiving(spark, dir, asOf), queries, fetch,
       idCol, vecCol, k, sub, shortlist, scale)
   }
 

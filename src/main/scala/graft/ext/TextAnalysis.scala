@@ -411,41 +411,35 @@ object TextAnalysis {
     * steady-state tokenize job: the ordered merge list loads as bounded
     * driver state (`rounds` rows), the corpus segments under it with the
     * training segmenter verbatim. Heals a mid-swap crash on entry (the
-    * shared read-side contract). */
+    * shared read-side contract).
+    *
+    * `asOf = Some(v)` tokenizes AS OF merge round `v` — TIME TRAVEL for
+    * the tokenizer tier, structurally free: the merge list is
+    * ROUND-ORDERED and append-only under [[extendBpeVocab]] (each
+    * extension adds rounds after the stored ones; a merge round depends
+    * on nothing but the prior state, so the prefix IS the historical
+    * tokenizer bit-for-bit), hence version v = the first v merge rows and
+    * "tokenize exactly as last week's tokenizer did" needs no
+    * per-version storage at all — the retrain-reproducibility verb every
+    * tokenizer-versioned training pipeline needs (token budgets and
+    * packing lengths are priced in tokenizer units; an audit of last
+    * week's run must replay last week's vocabulary). A pin beyond the
+    * stored rounds fails loudly (the bound check is the one meta read,
+    * paid by pins only); a full [[writeBpeVocab]] rebuild swaps the root
+    * and resets history (the shared rebuild-resets rule). */
   def bpeSegmentCountsFromVocab(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, df: DataFrame,
-                                idCol: String, textCol: String): DataFrame = {
+                                idCol: String, textCol: String,
+                                asOf: Option[Int] = None): DataFrame = {
     graft.core.Artifacts.heal(spark, dir)
-    val merges = spark.read.parquet(s"$dir/merges").orderBy("round")
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    bpeSegmentCounts(df, idCol, textCol, merges)
-  }
-
-  /** [[bpeSegmentCountsFromVocab]] AS OF merge round `asOf` — TIME
-    * TRAVEL for the tokenizer tier, structurally free: the merge list
-    * is ROUND-ORDERED and append-only under [[extendBpeVocab]] (each
-    * extension adds rounds after the stored ones; a merge round
-    * depends on nothing but the prior state, so the prefix IS the
-    * historical tokenizer bit-for-bit), hence version v = the first v
-    * merge rows and "tokenize exactly as last week's tokenizer did"
-    * needs no per-version storage at all — the retrain-reproducibility
-    * verb every tokenizer-versioned training pipeline needs (token
-    * budgets and packing lengths are priced in tokenizer units; an
-    * audit of last week's run must replay last week's vocabulary). A
-    * pin beyond the stored rounds fails loudly; a full
-    * [[writeBpeVocab]] rebuild swaps the root and resets history (the
-    * shared rebuild-resets rule). */
-  def bpeSegmentCountsFromVocabAsOf(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String, df: DataFrame,
-                                    idCol: String, textCol: String,
-                                    asOf: Int): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    val stored = spark.read.parquet(s"$dir/meta").head().getInt(0)
-    require(asOf >= 0 && asOf <= stored,
-      s"bpeSegmentCountsFromVocabAsOf: version $asOf of $dir does not " +
-        s"exist (stored rounds = $stored)")
-    val merges = spark.read.parquet(s"$dir/merges")
-      .where(col("round") <= asOf).orderBy("round")
+    val all = spark.read.parquet(s"$dir/merges")
+    val merges = asOf.fold(all) { v =>
+      val stored = spark.read.parquet(s"$dir/meta").head().getInt(0)
+      require(v >= 0 && v <= stored,
+        s"bpeSegmentCountsFromVocab: version $v of $dir does not " +
+          s"exist (stored rounds = $stored)")
+      all.where(col("round") <= v)
+    }.orderBy("round")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     bpeSegmentCounts(df, idCol, textCol, merges)
   }

@@ -241,4 +241,12 @@ class CoreSpec extends SparkSpec {
         "and move artifact files through Hadoop FileSystem and commit " +
         "through Artifacts.swapInto/stageCommit:\n" + hits.mkString("\n"))
   }
+
+  test("stored-tier reads have one verb each, no *AsOf twin in ext (source scan)") {
+    val hits = sourceHits(Seq("\\bdef \\w+AsOf\\b".r), exempt = Nil)
+      .filter(_.startsWith("graft/ext/"))
+    assert(hits.isEmpty,
+      "a pinned read is the head verb's `asOf: Option[Long] = None`, not " +
+        "a second verb:\n" + hits.mkString("\n"))
+  }
 }

@@ -65,8 +65,8 @@ object ProfileRet {
         graft.ext.Retrieval.bm25TopKFromIndex(spark, qs, dir, k = 5)
           .write.format("noop").mode("overwrite").save()
       }
-      t("query asOf=0 (bm25TopKFromIndexAsOf)") {
-        graft.ext.Retrieval.bm25TopKFromIndexAsOf(spark, qs, dir, asOf = 0L,
+      t("query asOf=0 (bm25TopKFromIndex asOf)") {
+        graft.ext.Retrieval.bm25TopKFromIndex(spark, qs, dir, asOf = Some(0L),
           k = 5).write.format("noop").mode("overwrite").save()
       }
       t("forget quarter + compact") {

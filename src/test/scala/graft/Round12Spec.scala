@@ -160,27 +160,27 @@ class Round12Spec extends SparkSpec {
     val dir = tmpDir("asof-spec") + "/idx"
     ext.Retrieval.writePostingsIndex(
       docs.where($"doc_id" % 2 === 0), "doc_id", "text", dir)
-    val v0 = ext.Retrieval.postingsRelationAsOf(spark, dir, 0L)
+    val v0 = ext.Retrieval.postingsLiving(spark, dir, Some(0L))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(v0 == Set(0L, 2L, 4L))
     ext.Retrieval.appendToPostingsIndex(
       docs.where($"doc_id" % 2 === 1), "doc_id", "text", dir)
     // version 0 answers UNCHANGED after the append — immutability
-    val v0after = ext.Retrieval.postingsRelationAsOf(spark, dir, 0L)
+    val v0after = ext.Retrieval.postingsLiving(spark, dir, Some(0L))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(v0after == v0, "a pinned version must not see later appends")
-    val v1 = ext.Retrieval.postingsRelationAsOf(spark, dir, 1L)
+    val v1 = ext.Retrieval.postingsLiving(spark, dir, Some(1L))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(v1 == Set(0L, 1L, 2L, 3L, 4L))
     // a version that does not exist yet fails loudly
     val e = intercept[IllegalArgumentException] {
-      ext.Retrieval.postingsRelationAsOf(spark, dir, 2L)
+      ext.Retrieval.postingsLiving(spark, dir, Some(2L))
     }
     assert(e.getMessage.contains("does not exist"))
     // df derives from the PINNED relation, not the HEAD dictionary:
     // "spark" has df=1 at version 0 (doc 0) but df=2 at head (docs 0,1)
-    val s0 = ext.Retrieval.bm25TopKFromIndexAsOf(spark,
-      Seq(0 -> Seq("spark")), dir, asOf = 0L, k = 5).collect()
+    val s0 = ext.Retrieval.bm25TopKFromIndex(spark,
+      Seq(0 -> Seq("spark")), dir, asOf = Some(0L), k = 5).collect()
     assert(s0.map(_.getLong(1)).toSet == Set(0L),
       "version-0 read must rank only version-0 documents")
   }
@@ -198,7 +198,7 @@ class Round12Spec extends SparkSpec {
     // forgotten documents never resurface through time travel
     ext.Retrieval.forgetFromPostingsIndex(
       docs.where($"doc_id" === 0L).select("doc_id"), "doc_id", dir)
-    assert(!ext.Retrieval.postingsRelationAsOf(spark, dir, 0L)
+    assert(!ext.Retrieval.postingsLiving(spark, dir, Some(0L))
       .select("doc_id").distinct().collect().map(_.getLong(0))
       .contains(0L),
       "right-to-be-forgotten outranks reproducibility on pinned reads")
@@ -206,19 +206,19 @@ class Round12Spec extends SparkSpec {
     // the fold advanced the floor past versions 0 and 1
     assert(graft.core.Artifacts.asOfFloor(spark, dir) == 1L)
     val e = intercept[IllegalArgumentException] {
-      ext.Retrieval.postingsRelationAsOf(spark, dir, 0L)
+      ext.Retrieval.postingsLiving(spark, dir, Some(0L))
     }
     assert(e.getMessage.contains("folded"),
       s"folded pin must fail loudly, got: ${e.getMessage}")
     // the floor version itself reads the compacted survivors
-    val atFloor = ext.Retrieval.postingsRelationAsOf(spark, dir, 1L)
+    val atFloor = ext.Retrieval.postingsLiving(spark, dir, Some(1L))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(atFloor == Set(1L, 2L, 3L))
     // post-compact appends keep versioning: floor + new segment
     ext.Retrieval.appendToPostingsIndex(
       Seq((6L, "sort table window")).toDF("doc_id", "text"),
       "doc_id", "text", dir)
-    val v2 = ext.Retrieval.postingsRelationAsOf(spark, dir, 2L)
+    val v2 = ext.Retrieval.postingsLiving(spark, dir, Some(2L))
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(v2 == Set(1L, 2L, 3L, 6L))
   }
@@ -230,35 +230,35 @@ class Round12Spec extends SparkSpec {
       "embedding", dir, dims = 8, m = 2, ksub = 3, iters = 2)
     ext.Similarity.appendToPqIndex(df.where($"vec_id" >= 18), "vec_id",
       "embedding", dir)
-    val v0 = ext.Similarity.pqCodesRelationAsOf(spark, dir, 0L)
+    val v0 = ext.Similarity.pqCodesLiving(spark, dir, Some(0L))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(v0 == (0L until 18L).toSet,
       "version 0 must not see the later append")
-    val v1 = ext.Similarity.pqCodesRelationAsOf(spark, dir, 1L)
+    val v1 = ext.Similarity.pqCodesLiving(spark, dir, Some(1L))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(v1 == (0L until 24L).toSet)
     intercept[IllegalArgumentException] {
-      ext.Similarity.pqCodesRelationAsOf(spark, dir, 2L)
+      ext.Similarity.pqCodesLiving(spark, dir, Some(2L))
     }
     // a forget applies to pinned reads too, then compact folds history
     ext.Similarity.forgetFromPqIndex(
       df.where($"vec_id" === 3L).select("vec_id"), "vec_id", dir)
-    assert(!ext.Similarity.pqCodesRelationAsOf(spark, dir, 0L)
+    assert(!ext.Similarity.pqCodesLiving(spark, dir, Some(0L))
       .select("vec_id").collect().map(_.getLong(0)).contains(3L))
     ext.Similarity.compactPqIndex(spark, dir)
     assert(graft.core.Artifacts.asOfFloor(spark, dir) == 1L)
     val e = intercept[IllegalArgumentException] {
-      ext.Similarity.pqCodesRelationAsOf(spark, dir, 0L)
+      ext.Similarity.pqCodesLiving(spark, dir, Some(0L))
     }
     assert(e.getMessage.contains("folded"))
-    assert(ext.Similarity.pqCodesRelationAsOf(spark, dir, 1L)
+    assert(ext.Similarity.pqCodesLiving(spark, dir, Some(1L))
       .select("vec_id").collect().map(_.getLong(0)).toSet ==
       (0L until 24L).toSet - 3L)
     // a REBUILD swaps the whole root: version history resets to 0
     ext.Similarity.writePqIndex(df, "vec_id", "embedding", dir,
       dims = 8, m = 2, ksub = 3, iters = 2)
     assert(graft.core.Artifacts.asOfFloor(spark, dir) == 0L)
-    assert(ext.Similarity.pqCodesRelationAsOf(spark, dir, 0L)
+    assert(ext.Similarity.pqCodesLiving(spark, dir, Some(0L))
       .count() == 24L)
   }
 

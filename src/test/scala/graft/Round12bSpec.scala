@@ -65,7 +65,7 @@ class Round12bSpec extends SparkSpec {
     ext.Similarity.appendToIvfIndex(
       df.where($"vec_id" >= 25).select("vec_id", "embedding"),
       "vec_id", "embedding", dir)
-    def ids(v: Long) = ext.Similarity.ivfIndexRelationAsOf(spark, dir, v)
+    def ids(v: Long) = ext.Similarity.ivfLivingIndex(spark, dir, Some(v))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(ids(0L) == (0L until 20L).toSet, "version 0 = the build")
     assert(ids(1L) == (0L until 25L).toSet, "version 1 = build + first segment")

@@ -117,7 +117,7 @@ class Round13Spec extends SparkSpec {
       .count(f => !f.getName.endsWith("__tmp")) == 1,
       "compact keeps only the head version")
     assert(intercept[IllegalArgumentException] {
-      ext.Similarity.knnGraphFromIndexAsOf(spark, dir, asOf = 0L)
+      ext.Similarity.knnGraphFromIndex(spark, dir, asOf = Some(0L))
     }.getMessage.contains("folded"),
       "as-of reads of folded versions fail loudly")
     // the compact cleared tombstones: the re-append now lands and answers
@@ -161,20 +161,20 @@ class Round13Spec extends SparkSpec {
     val want = ext.Similarity.knnGraphExact(vecs.where($"vec_id" % 3 =!= 1),
         "vec_id", "embedding", k = 3)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    val pinned = ext.Similarity.knnGraphFromIndexAsOf(spark, dir, asOf = 0L)
+    val pinned = ext.Similarity.knnGraphFromIndex(spark, dir, asOf = Some(0L))
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(pinned == want, "pinned v0 must answer as the build did")
     // a later forget reaches the pin (two-sided), shrunk-list contract
     ext.Similarity.forgetFromKnnGraph(
       vecs.where($"vec_id" === 0L).select("vec_id"), "vec_id", dir)
     val pinnedAfter = ext.Similarity
-      .knnGraphFromIndexAsOf(spark, dir, asOf = 0L).collect()
+      .knnGraphFromIndex(spark, dir, asOf = Some(0L)).collect()
     assert(pinnedAfter.forall(r =>
       r.getLong(0) != 0L && r.getLong(2) != 0L),
       "right-to-be-forgotten outranks reproducibility on pinned reads")
     // never-written pins fail loudly
     assert(intercept[IllegalArgumentException] {
-      ext.Similarity.knnGraphFromIndexAsOf(spark, dir, asOf = 99L)
+      ext.Similarity.knnGraphFromIndex(spark, dir, asOf = Some(99L))
     }.getMessage.contains("does not exist"))
   }
 
@@ -222,8 +222,8 @@ class Round13Spec extends SparkSpec {
       docs, "doc_id", "text", dir))
     assert(headKept.isEmpty, s"head archive covers all texts: $headKept")
     // pinned v0: the appended batch's NEW texts (10, 11) must survive
-    val v0Kept = kept(ext.Dedup.dedupIncrementalBloomFromIndexAsOf(
-      docs, "doc_id", "text", dir, asOf = 0L))
+    val v0Kept = kept(ext.Dedup.dedupIncrementalBloomFromIndex(
+      docs, "doc_id", "text", dir, asOf = Some(0L)))
     assert(v0Kept == Set(10L, 11L),
       s"v0 pin dedups against the day-one archive only: $v0Kept")
     ext.Dedup.compactBloomIndex(spark, dir)
@@ -232,10 +232,10 @@ class Round13Spec extends SparkSpec {
       docs, "doc_id", "text", dir)) == headKept)
     // the folded pin fails loudly; the floor version still answers
     assert(intercept[IllegalArgumentException] {
-      ext.Dedup.fpsRelationAsOf(spark, dir, 0L).collect()
+      ext.Dedup.fpsRelation(spark, dir, Some(0L)).collect()
     }.getMessage.contains("folded"))
-    assert(kept(ext.Dedup.dedupIncrementalBloomFromIndexAsOf(
-      docs, "doc_id", "text", dir, asOf = 1L)) == headKept,
+    assert(kept(ext.Dedup.dedupIncrementalBloomFromIndex(
+      docs, "doc_id", "text", dir, asOf = Some(1L))) == headKept,
       "the floor version reads the folded base")
   }
 

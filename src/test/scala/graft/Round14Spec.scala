@@ -98,7 +98,7 @@ class Round14Spec extends SparkSpec {
       batch(1, Seq("b", "c")), $"k0", $"epoch", dir, 1L)
     val probes = Seq("a", "b", "c", "d").toDF("k0")
     def pinned() = ext.Profile
-      .cmsEstimateWindowedAsOf(spark, dir, probes, "k0", 0L, 2L)
+      .cmsEstimateWindowed(spark, dir, probes, "k0", 0L, Some(2L))
       .orderBy("k").collect().map(_.toSeq).toSeq
     val before = pinned()
     ext.Profile.ingestWindowedCmsBatch(
@@ -110,11 +110,11 @@ class Round14Spec extends SparkSpec {
     assert(graft.core.Artifacts.asOfFloor(spark, dir) == 3L,
       "expire must advance the as-of floor by the segments folded")
     intercept[IllegalArgumentException] {
-      ext.Profile.windowedCmsCountersAsOf(spark, dir, 0L, 2L).collect()
+      ext.Profile.windowedCmsCounters(spark, dir, 0L, Some(2L)).collect()
     }
     // the head pin (version 3 = the folded base) still answers
     val v3 = ext.Profile
-      .cmsEstimateWindowedAsOf(spark, dir, probes, "k0", 2L, 3L)
+      .cmsEstimateWindowed(spark, dir, probes, "k0", 2L, Some(3L))
       .orderBy("k").collect()
     assert(v3.nonEmpty)
   }
@@ -134,14 +134,14 @@ class Round14Spec extends SparkSpec {
     ext.Profile.ingestWindowedHhBatch(
       batch(2, Seq.fill(6)("w")), $"key0", $"epoch", dir, 2L)
     val pinned = ext.Profile
-      .heavyHittersWindowedAsOf(data01, $"key0", dir, 0L, 2L)
+      .heavyHittersWindowed(data01, $"key0", dir, 0L, Some(2L))
       .orderBy("key").collect().map(_.toSeq).toSeq
     assert(pinned == before,
       "the pinned report must equal what the head said before the ingest")
     ext.Profile.expireWindowedHh(spark, dir, minEpoch = 1L)
     assert(graft.core.Artifacts.asOfFloor(spark, dir) == 3L)
     intercept[IllegalArgumentException] {
-      ext.Profile.heavyHittersWindowedAsOf(data01, $"key0", dir, 0L, 1L)
+      ext.Profile.heavyHittersWindowed(data01, $"key0", dir, 0L, Some(1L))
         .collect()
     }
   }
@@ -421,19 +421,19 @@ class Round14Spec extends SparkSpec {
     ingest(b0, twin); takedown(twin)
     val queries = Seq(0 -> Seq("document", "text"), 1 -> Seq("aligned", "tail"))
     def bm(d: (String, String, String, String)) =
-      ext.Retrieval.bm25TopKFromIndexAsOf(spark, queries, d._2,
-          asOf = 1L, k = 5)
+      ext.Retrieval.bm25TopKFromIndex(spark, queries, d._2,
+          asOf = Some(1L), k = 5)
         .orderBy("query_id", "rk").collect().map(_.toSeq).toSeq
     def ivf(d: (String, String, String, String)) =
       ext.Similarity.ivfQuantizedTopKFromIndex(
           spark.read.parquet(s"${d._3}/centroids"),
-          ext.Similarity.ivfIndexRelationAsOf(spark, d._3, 1L),
+          ext.Similarity.ivfLivingIndex(spark, d._3, Some(1L)),
           rec.select($"doc_id".as("vec_id"), $"embedding".as("v")),
           rec.where($"doc_id" < 2), "doc_id", "embedding",
           k = 3, nprobe = 2, shortlist = 10)
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     def knn(d: (String, String, String, String)) =
-      ext.Similarity.knnGraphFromIndexAsOf(spark, d._4, 1L)
+      ext.Similarity.knnGraphFromIndex(spark, d._4, Some(1L))
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(bm(main) == bm(twin),
       "postings pin leaked post-pin state or skewed versions")

@@ -110,8 +110,8 @@ class Round15Spec extends SparkSpec {
     ext.Profile.ingestWindowedHhBatch(
       batch(Seq.fill(4)((0L, "z")) ++ Seq.fill(4)((1L, "x"))),
       $"key0", $"epoch", dir, 2L)
-    val pinned = ext.Profile.heavyMoversWindowedAsOf(data01, $"key0",
-        $"epoch", dir, 0L, 1L, asOf = 2L)
+    val pinned = ext.Profile.heavyMoversWindowed(data01, $"key0",
+        $"epoch", dir, 0L, 1L, asOf = Some(2L))
       .orderBy("key").collect().map(_.toSeq).toSeq
     assert(pinned == before,
       "pinned movers must equal what the store said before the ingest")
@@ -124,8 +124,8 @@ class Round15Spec extends SparkSpec {
     assert(gone.getMessage.contains("no living cells"))
     // and the pre-expire pin was folded away — loud, not silently head
     val folded = intercept[IllegalArgumentException] {
-      ext.Profile.heavyMoversWindowedAsOf(data01, $"key0", $"epoch", dir,
-        0L, 1L, asOf = 2L).collect()
+      ext.Profile.heavyMoversWindowed(data01, $"key0", $"epoch", dir,
+        0L, 1L, asOf = Some(2L)).collect()
     }
     assert(folded.getMessage.contains("folded"))
   }
@@ -324,13 +324,13 @@ class Round15Spec extends SparkSpec {
     val main = run(tmpDir("pipe2-pin") + "/main", full = true)
     val twin = run(tmpDir("pipe2-pin") + "/twin", full = false)
     def pqPin(d: (String, String, String, String, String, String)) =
-      ext.Similarity.pqTopKFromIndexAsOf(spark, d._5,
+      ext.Similarity.pqTopKFromIndex(spark, d._5,
           rec.select($"doc_id".as("vec_id"), $"embedding".as("v")),
           rec.where($"doc_id" < 2), "doc_id", "embedding",
-          asOf = 1L, k = 3, shortlist = 10)
+          asOf = Some(1L), k = 3, shortlist = 10)
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     def knnPin(d: (String, String, String, String, String, String)) =
-      ext.Similarity.knnGraphFromIndexAsOf(spark, d._6, 1L)
+      ext.Similarity.knnGraphFromIndex(spark, d._6, Some(1L))
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(pqPin(main) == pqPin(twin),
       "PQ pin leaked post-pin state or skewed versions")
@@ -368,8 +368,8 @@ class Round15Spec extends SparkSpec {
     assert(graft.core.Artifacts.asOfFloor(spark, dir) == 1L,
       "compact must advance the floor by the segments folded")
     intercept[IllegalArgumentException] {
-      ext.Dedup.contaminationPairsFromIndexAsOf(docs, "doc_id", "text",
-        dir, asOf = 0L).collect()
+      ext.Dedup.contaminationPairsFromIndex(docs, "doc_id", "text",
+        dir, asOf = Some(0L)).collect()
     }
     // the compact cleared the tombstone: re-appending the retired task
     // lands (the shared re-add-needs-compact caveat, positive side)
@@ -392,8 +392,8 @@ class Round15Spec extends SparkSpec {
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     ext.TextAnalysis.extendBpeVocab(spark, dir, extraRounds = 1)
     val pinned = ext.TextAnalysis
-      .bpeSegmentCountsFromVocabAsOf(spark, dir, docs, "doc_id", "text",
-        asOf = 2)
+      .bpeSegmentCountsFromVocab(spark, dir, docs, "doc_id", "text",
+        asOf = Some(2))
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(pinned == want2,
       "the pinned version-2 tokenizer must segment as the 2-round build did")
@@ -403,8 +403,8 @@ class Round15Spec extends SparkSpec {
     assert(head != pinned,
       "fixture must make the extension round visible at head")
     intercept[IllegalArgumentException] {
-      ext.TextAnalysis.bpeSegmentCountsFromVocabAsOf(spark, dir, docs,
-        "doc_id", "text", asOf = 4)
+      ext.TextAnalysis.bpeSegmentCountsFromVocab(spark, dir, docs,
+        "doc_id", "text", asOf = Some(4))
     }
   }
 
@@ -428,14 +428,14 @@ class Round15Spec extends SparkSpec {
     assert(stored == continuous,
       "extend-from-stored-state must replay the continuous trajectory " +
         "bit for bit (GD is Markovian in the weights)")
-    assert(ext.Fit.probeWeightsAsOf(spark, dir) ==
-      ext.Fit.probeWeightsAsOf(spark, dir, asOf = 4L),
+    assert(ext.Fit.probeWeights(spark, dir) ==
+      ext.Fit.probeWeights(spark, dir, asOf = Some(4L)),
       "head read must equal the explicit head pin")
     intercept[IllegalArgumentException] {
-      ext.Fit.probeWeightsAsOf(spark, dir, asOf = 9L)
+      ext.Fit.probeWeights(spark, dir, asOf = Some(9L))
     }
     intercept[IllegalArgumentException] {
-      ext.Fit.probeWeightsAsOf(spark, dir, asOf = 0L)
+      ext.Fit.probeWeights(spark, dir, asOf = Some(0L))
     }
   }
 

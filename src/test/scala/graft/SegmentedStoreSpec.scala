@@ -21,7 +21,7 @@ class SegmentedStoreSpec extends SparkSpec {
                            build: String => Unit,
                            append: (String, Int) => Unit,
                            head: String => Seq[String],
-                           asOf: (String, Long) => Seq[String])
+                           asOf: (String, Option[Long]) => Seq[String])
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
@@ -54,7 +54,7 @@ class SegmentedStoreSpec extends SparkSpec {
         wave(docs, "doc_id", 12, i), "doc_id", "text", d),
       d => rows(ext.Retrieval.postingsLiving(spark, d)
         .select("doc_id", "term", "tf")),
-      (d, v) => rows(ext.Retrieval.postingsRelationAsOf(spark, d, v)
+      (d, v) => rows(ext.Retrieval.postingsLiving(spark, d, v)
         .select("doc_id", "term", "tf"))),
     Store("ivf",
       d => ext.Similarity.writeIvfIndex(emb.where($"vec_id" < 12),
@@ -68,7 +68,7 @@ class SegmentedStoreSpec extends SparkSpec {
           .select($"list", $"n", round($"ccos", 9))) ++
         rows(ext.Similarity.ivfIndexRelation(spark, d)
           .select("vec_id", "list", "scale")),
-      (d, v) => rows(ext.Similarity.ivfIndexRelationAsOf(spark, d, v)
+      (d, v) => rows(ext.Similarity.ivfLivingIndex(spark, d, v)
         .select("vec_id", "list", "scale"))),
     Store("pq",
       d => ext.Similarity.writePqIndex(emb.where($"vec_id" < 12),
@@ -76,13 +76,13 @@ class SegmentedStoreSpec extends SparkSpec {
       (d, i) => ext.Similarity.appendToPqIndex(
         wave(emb, "vec_id", 12, i), "vec_id", "embedding", d),
       d => rows(ext.Similarity.pqCodesRelation(spark, d)),
-      (d, v) => rows(ext.Similarity.pqCodesRelationAsOf(spark, d, v))),
+      (d, v) => rows(ext.Similarity.pqCodesLiving(spark, d, v))),
     Store("dedup fps",
       d => ext.Dedup.writeBloomIndex(docs.where($"doc_id" < 12), "text", d),
       (d, i) => ext.Dedup.ingestBloomBatch(
         wave(docs, "doc_id", 12, i), "text", d),
       d => rows(ext.Dedup.fpsRelation(spark, d)),
-      (d, v) => rows(ext.Dedup.fpsRelationAsOf(spark, d, v))),
+      (d, v) => rows(ext.Dedup.fpsRelation(spark, d, v))),
     Store("contamination",
       d => ext.Dedup.writeContaminationIndex(
         docs.where($"doc_id" < 12).select(($"doc_id" + 100L).as("doc_id"),
@@ -91,20 +91,20 @@ class SegmentedStoreSpec extends SparkSpec {
         wave(docs, "doc_id", 12, i).select(($"doc_id" + 100L).as("doc_id"),
           $"text"), "doc_id", "text", d),
       d => rows(ext.Dedup.contaminationIndexRelation(spark, d)),
-      (d, v) => rows(ext.Dedup.contaminationPairsFromIndexAsOf(
-        docs, "doc_id", "text", d, v).select("doc_id", "eval_id"))),
+      (d, v) => rows(ext.Dedup.contaminationPairsFromIndex(
+        docs, "doc_id", "text", d, asOf = v).select("doc_id", "eval_id"))),
     Store("windowed CMS",
       root => ext.Profile.writeWindowedCms(spark, root, d = 2, w = 16),
       (d, i) => ext.Profile.ingestWindowedCmsBatch(sketchBatch(i), $"key0",
         $"epoch", d, i.toLong),
       d => rows(ext.Profile.windowedCmsCounters(spark, d, 0L)),
-      (d, v) => rows(ext.Profile.windowedCmsCountersAsOf(spark, d, 0L, v))),
+      (d, v) => rows(ext.Profile.windowedCmsCounters(spark, d, 0L, v))),
     Store("windowed MG",
       d => ext.Profile.writeWindowedHh(spark, d, k = 4),
       (d, i) => ext.Profile.ingestWindowedHhBatch(sketchBatch(i), $"key0",
         $"epoch", d, i.toLong),
       d => rows(ext.Profile.heavyHittersWindowed(sketchData, $"key0", d, 0L)),
-      (d, v) => rows(ext.Profile.heavyHittersWindowedAsOf(sketchData,
+      (d, v) => rows(ext.Profile.heavyHittersWindowed(sketchData,
         $"key0", d, 0L, v))))
 
   /** The root as a crash between swapInto's two renames leaves it. */
@@ -123,19 +123,45 @@ class SegmentedStoreSpec extends SparkSpec {
       for (d <- Seq(ctl, dir); step <- Seq(() => st.build(d),
           () => st.append(d, 1), () => st.append(d, 2))) step()
       val head = st.head(dir)
-      val pinned = st.asOf(dir, 1L)
+      val pinned = st.asOf(dir, Some(1L))
       assert(head.nonEmpty && pinned.nonEmpty && pinned != head,
         "the fixture must tell version 1 from the head")
 
       crash(dir)
       assert(st.head(dir) == head, "head read after the crash")
       crash(dir)
-      assert(st.asOf(dir, 1L) == pinned, "as-of read after the crash")
+      assert(st.asOf(dir, Some(1L)) == pinned, "as-of read after the crash")
       crash(dir)
       st.append(dir, 3)
       st.append(ctl, 3)
       assert(st.head(dir) == st.head(ctl), "append after the crash")
       assert(st.head(dir) != head, "wave 3 must change the head")
-      assert(st.asOf(dir, 1L) == pinned, "pinned version after the append")
+      assert(st.asOf(dir, Some(1L)) == pinned, "pinned version after the append")
     }
+
+  test("every store: a head read equals a pin of the head version; a pin past it fails") {
+    for (st <- stores) {
+      val dir = tmpDir(s"seg-pin-${st.name.replace(' ', '-')}") + "/store"
+      st.build(dir); st.append(dir, 1); st.append(dir, 2)
+      assert(st.asOf(dir, None) == st.asOf(dir, Some(2L)),
+        s"${st.name}: head read differs from the pin of version 2")
+      val e = intercept[IllegalArgumentException](st.asOf(dir, Some(3L)))
+      assert(e.getMessage.contains("does not exist"),
+        s"${st.name}: ${e.getMessage}")
+    }
+  }
+
+  test("a torn store fails loudly on a head read, not with duplicated rows") {
+    val dir = tmpDir("seg-torn-head") + "/store"
+    val postings = stores.head
+    postings.build(dir); postings.append(dir, 1)
+    val Seq(seg) =
+      graft.core.Artifacts.committedChildren(spark, s"$dir/segments")
+    // a second committer of the same index: a twin under a fresh uuid
+    graft.core.Artifacts.copyDir(spark, seg, seg.replaceAll(
+      "_[^_/]+$", "_" + java.util.UUID.randomUUID()))
+    val e = intercept[IllegalArgumentException](
+      ext.Retrieval.postingsLiving(spark, dir))
+    assert(e.getMessage.contains("torn by concurrent appenders"))
+  }
 }
