@@ -4947,8 +4947,7 @@ object SparkEntry {
     // verb (round-10 verdict #5): del1 grades right-to-be-forgotten for
     // the dedup archive; this grades it for sim6's IVF artifact. A
     // deterministic fifth of the corpus (vec_id % 5 = 2) is forgotten:
-    // O(deleted) tombstones land in only the affected list directories,
-    // the query tier answers from the LIVING view (anti-join), and the
+    // O(deleted) id tombstones (ext.Forget), the query tier answers from the LIVING view (anti-join), and the
     // amortized compact + a second idempotent forget both execute inside
     // the graded lifecycle (the result must be invariant under both —
     // tombstone-set idempotence and compact view-equality are the

@@ -51,8 +51,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the floor ([[asOfFloor]]) by the segments it absorbed, written into the
   * staged root so it publishes atomically with the fold. Pins of folded
   * versions, and of versions not yet written, fail loudly (the retention
-  * contract). A rebuild that keeps the root clears segments and floor
-  * together ([[dropSegments]]), restarting history at version 0.
+  * contract). A rebuild swaps in a whole new root
+  * ([[graft.ext.Forget.rebuild]]), restarting history at version 0; the
+  * tombstone store a tier keeps beside its segments is
+  * [[graft.ext.Forget]]'s.
   *
   * Object-store caveat: HDFS/local renames are atomic; S3-style stores
   * rename by copy+delete — deployments there back artifact dirs with a
@@ -309,15 +311,6 @@ object Artifacts {
       write(tmp)
       setAsOfFloor(spark, tmp, floor)
     }
-  }
-
-  /** Clear every segment and the floor of the store at `dir` — a rebuild
-    * that overwrites the base in place restarts history at version 0. */
-  def dropSegments(spark: SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(segmentsDir(dir)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/asof_floor"), false)
   }
 
   private def segmentsDir(dir: String): String = s"$dir/segments"

@@ -1381,47 +1381,37 @@ object Dedup {
       contaminationIndexLiving(corpus.sparkSession, dir, asOf), idCol,
       textCol, n, minJaccard)
 
-  /** The living eval postings: base + committed segments minus retired
-    * eval_ids — a missing tombstone store adds zero cost (the
-    * pqCodesLiving shape on the decon tier). `asOf = Some(v)` reads
-    * version `v` (build = 0, each appended wave adds one; folded or
-    * unwritten pins fail loudly) with CURRENT tombstones still applied —
-    * a retired eval task stops flagging even under a pin, the knn4 rule:
-    * takedown outranks reproducibility. */
+  /** The living eval postings ([[Forget.living]]): base + committed
+    * segments minus retired eval_ids. `asOf = Some(v)` reads version `v`
+    * (build = 0, each appended wave adds one) with CURRENT tombstones
+    * still applied — a retired eval task stops flagging even under a
+    * pin. */
   def contaminationIndexLiving(spark: org.apache.spark.sql.SparkSession,
                                dir: String,
                                asOf: Option[Long] = None): DataFrame =
-    Forget.applyTombstones(
-      graft.core.Artifacts.readSegmented(spark, dir, "postings", asOf),
-      "eval_id", s"$dir/tombstones")
+    Forget.living(spark, dir, "postings", "eval_id", asOf)
 
   /** RETIRE eval documents from the stored suite — benchmarks rotate
     * (deprecated tasks, superseded versions, licensing takedowns), and a
     * retired task must stop flagging corpus docs without a suite
-    * rebuild. O(retired) eval_id tombstones ([[graft.ext.Forget]]'s
-    * set-idempotent store); probes anti-join through
-    * [[contaminationIndexLiving]]; [[compactContaminationIndex]] is the
-    * amortized physical rewrite. The shared re-add caveat applies:
-    * re-appending a retired eval_id needs a compact first (the append's
-    * anti-join probes the FULL stored suite so a landed re-add would sit
-    * invisible under the stale tombstone — the appendToPqIndex rule). */
+    * rebuild ([[Forget.forgetFrom]]; the tombstone rules are
+    * [[Forget]]'s). Probes anti-join through [[contaminationIndexLiving]];
+    * [[compactContaminationIndex]] is the amortized physical rewrite. */
   def forgetFromContaminationIndex(ids: DataFrame, idCol: String,
                                    dir: String): Unit =
-    Forget.forget(ids, idCol, s"$dir/tombstones")
+    Forget.forgetFrom(ids, idCol, dir)
 
   /** Amortized physical rewrite of a tombstoned/segmented eval suite
-    * ([[graft.core.Artifacts.foldSegments]]): postings = the LIVING
-    * relation; tombstones do not exist in the new root. */
+    * ([[Forget.compactStore]]): postings = the LIVING relation. */
   def compactContaminationIndex(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): Unit = {
-    val living = contaminationIndexLiving(spark, dir)
-    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
+                                dir: String): Unit =
+    Forget.compactStore(spark, dir, "postings", "eval_id",
+        "compactContaminationIndex") { (living, tmp) =>
       // eval suites are benchmark-sized: one file, the windowed-store
       // convention — a 32-task spray of tiny files costs every future
       // probe a 32-file listing for kilobytes of postings
       living.coalesce(1).write.parquet(s"$tmp/postings")
     }
-  }
 
   /** Per-document N-GRAM CONTAINMENT against an eval set — the GPT-3-
     * lineage decontamination METRIC next to [[contaminationPairs]]'s pair

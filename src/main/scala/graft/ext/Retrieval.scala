@@ -98,38 +98,38 @@ object Retrieval {
     * dictionary and corpus totals derive from the WRITTEN postings
     * (columnar read-back — no second tokenize, no build-time cache of a
     * corpus-sized frame). Every document has ≥ 1 posting (the tokenizer
-    * emits [""] for empty text), so n_docs/n_toks reconstruct exactly. */
+    * emits [""] for empty text), so n_docs/n_toks reconstruct exactly.
+    * The trio publishes as one new root ([[Forget.rebuild]]). */
   def writePostingsIndex(docs: DataFrame, idCol: String, textCol: String,
                          dir: String, buckets: Int = 64): Unit = {
     require(buckets >= 1)
     val spark = docs.sparkSession
-    // a full (re)build supersedes any previously appended segments — clear
-    // them or the read-side union would double-count their documents
-    graft.core.Artifacts.dropSegments(spark, dir)
     val toks = graft.core.Par.fanOut(docs.select(
       col(idCol).cast("long").as("doc_id"),
       TextAnalysis.tokens(col(textCol)).as("toks")))
-    toks.select(col("doc_id"), size(col("toks")).as("len_d"),
-        explode_outer(col("toks")).as("term"))
-      .where(col("term").isNotNull)
-      .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
-      .withColumn("pb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .write.mode("overwrite").partitionBy("pb").parquet(s"$dir/postings")
-    // terms + meta derive from ONE read-back scan (r17, guide §2.4
-    // remove passes): the projection is the union of what both
-    // aggregates need (len_d stays columnar-pruned away), the terms
-    // write materializes the persist and the meta aggregate reads it —
-    // previously each aggregate paid its own base-postings scan.
-    val post = spark.read.parquet(s"$dir/postings")
-      .select(col("pb"), col("term"), col("doc_id"), col("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      post.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$dir/terms")
-      post.agg(count_distinct(col("doc_id")).as("n_docs"),
-          sum(col("tf")).as("n_toks"), lit(buckets).as("buckets"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    } finally post.unpersist(blocking = false)
+    Forget.rebuild(spark, dir) { tmp =>
+      toks.select(col("doc_id"), size(col("toks")).as("len_d"),
+          explode_outer(col("toks")).as("term"))
+        .where(col("term").isNotNull)
+        .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
+        .withColumn("pb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
+        .write.partitionBy("pb").parquet(s"$tmp/postings")
+      // terms + meta derive from ONE read-back scan (r17, guide §2.4
+      // remove passes): the projection is the union of what both
+      // aggregates need (len_d stays columnar-pruned away), the terms
+      // write materializes the persist and the meta aggregate reads it —
+      // previously each aggregate paid its own base-postings scan.
+      val post = spark.read.parquet(s"$tmp/postings")
+        .select(col("pb"), col("term"), col("doc_id"), col("tf"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        post.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
+          .write.partitionBy("pb").parquet(s"$tmp/terms")
+        post.agg(count_distinct(col("doc_id")).as("n_docs"),
+            sum(col("tf")).as("n_toks"), lit(buckets).as("buckets"))
+          .coalesce(1).write.parquet(s"$tmp/meta")
+      } finally post.unpersist(blocking = false)
+    }
   }
 
   /** The HEAD term dictionary (pb, term, dft): the immutable base
@@ -273,13 +273,10 @@ object Retrieval {
       org.apache.spark.sql.types.IntegerType)))
 
   /** FORGET documents from the stored postings index — right-to-be-
-    * forgotten for the lexical tier, completing the forget verb across
-    * every artifact family (dedup archive `del1`, IVF `sim9`, THIS).
-    * O(deleted) tombstone appends ([[graft.ext.Forget.forget]] — the
-    * tombstones are a set, so overlapping/retried requests are
-    * idempotent); queries answer from [[postingsLiving]] (one doc-id
-    * anti-join), and [[compactPostingsIndex]] is the amortized physical
-    * rewrite.
+    * forgotten for the lexical tier ([[Forget.forgetFrom]]; the forget,
+    * living-view, compact and re-add rules are [[Forget]]'s). Queries
+    * answer from [[postingsLiving]], and [[compactPostingsIndex]] is the
+    * amortized physical rewrite.
     *
     * SEMANTICS BEFORE COMPACT (deliberately Lucene's): a tombstoned
     * document disappears from RESULTS immediately, but document
@@ -287,71 +284,39 @@ object Retrieval {
     * exactly Lucene's docFreq-includes-deletions behavior until a
     * segment merge; [[compactPostingsIndex]] is that merge, after which
     * scores equal a from-scratch index over the survivors (what ret7
-    * grades). Caveat shared with the IVF tier: re-appending a forgotten
-    * doc_id requires a compact first, or the stale tombstone hides the
-    * new postings — [[appendToPostingsIndex]]'s anti-join therefore
-    * probes the FULL stored ids, not the living view. */
+    * grades). */
   def forgetFromPostingsIndex(ids: DataFrame, idCol: String,
                               dir: String): Unit =
-    Forget.forget(ids, idCol, s"$dir/tombstones")
+    Forget.forgetFrom(ids, idCol, dir)
 
-  /** The LIVING postings view: base + committed segments minus
-    * tombstones — what every query path scans once deletes exist.
-    * `asOf = Some(v)` reads version `v` instead (the build is version
-    * `floor` — 0 until a compact — and each committed append adds one),
-    * with current tombstones STILL applied — right-to-be-forgotten
-    * outranks reproducibility, so a forgotten document never resurfaces
-    * through time travel (and pre-/post-compact reads of the same pin
-    * therefore agree). Folded or unwritten pins fail loudly
-    * ([[graft.core.Artifacts.segments]]). */
+  /** The LIVING postings view ([[Forget.living]]) — what every query path
+    * scans once deletes exist. `asOf = Some(v)` reads version `v` (the
+    * build is version `floor` — 0 until a compact — and each committed
+    * append adds one) with current tombstones still applied, so pre- and
+    * post-compact reads of the same pin agree. */
   def postingsLiving(spark: org.apache.spark.sql.SparkSession,
                      dir: String,
                      asOf: Option[Long] = None): DataFrame =
-    Forget.applyTombstones(
-      graft.core.Artifacts.readSegmented(spark, dir, "postings", asOf),
-      "doc_id", s"$dir/tombstones")
+    Forget.living(spark, dir, "postings", "doc_id", asOf)
 
   /** Amortized physical rewrite of a tombstoned postings index
-    * ([[graft.core.Artifacts.foldSegments]]): postings/terms/meta derived
-    * from the LIVING relation; tombstones do not exist in the new root.
-    * After the compact, df and corpus totals reflect the survivors —
-    * scores equal a from-scratch build. */
+    * ([[Forget.compactStore]]): postings/terms/meta derived from the
+    * LIVING relation. After the compact, df and corpus totals reflect the
+    * survivors — scores equal a from-scratch build. */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Unit = {
-    val living = postingsLiving(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // A fully-forgotten store has NO valid compacted form: sum(tf) over
-      // the empty living relation is NULL (a later stored read would NPE
-      // on meta), and the postings/terms dirs would hold zero part files
-      // (schema inference fails). Refuse loudly — the caller's move is to
-      // drop the index directory, not compact it. The emptiness probe and
-      // the 1-row meta read ride ONE job (r16, the knnBatchStats device —
-      // previously two actions; the full count also fully materializes
-      // the persist the three rewrite jobs below reuse, which a limit(1)
-      // probe did not).
-      val pr = living.agg(count(lit(1)).as("n_live"))
+                           dir: String): Unit =
+    Forget.compactStore(spark, dir, "postings", "doc_id",
+        "compactPostingsIndex") { (living, tmp) =>
+      living.write.partitionBy("pb").parquet(s"$tmp/postings")
+      living.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
+        .write.partitionBy("pb").parquet(s"$tmp/terms")
+      // the staged terms/meta ARE the new base summaries (r17); the
+      // stored bucket count rides the meta job as a 1-row cross join
+      living.agg(count_distinct(col("doc_id")).as("n_docs"),
+          coalesce(sum(col("tf")), lit(0L)).as("n_toks"))
         .crossJoin(spark.read.parquet(s"$dir/meta").select("buckets"))
-        .head()
-      require(pr.getAs[Long]("n_live") > 0,
-        s"compactPostingsIndex: every document in $dir has been " +
-          "forgotten — an empty postings store has no compacted form; " +
-          "drop the index directory instead")
-      val buckets = pr.getAs[Int]("buckets")
-      graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
-        living.write.partitionBy("pb").parquet(s"$tmp/postings")
-        living.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
-          .write.partitionBy("pb").parquet(s"$tmp/terms")
-        living.agg(count_distinct(col("doc_id")).as("n_docs"),
-            coalesce(sum(col("tf")), lit(0L)).as("n_toks"),
-            lit(buckets).as("buckets"))
-          .coalesce(1).write.parquet(s"$tmp/meta")
-        // the staged terms/meta ARE the new base summaries (r17 — the
-        // read-side fold derives head state from them + any future
-        // segments; no separate snapshot exists)
-      }
-    } finally living.unpersist()
-  }
+        .coalesce(1).write.parquet(s"$tmp/meta")
+    }
 
   /** [[bm25TopK]] answered from the STORED index: the query vocabulary
     * hashes to its buckets under the artifact's OWN stored bucket count,
@@ -453,12 +418,9 @@ object Retrieval {
     // the additivity shortcut (the pinned relation excludes them and the
     // summaries do not), so any tombstone store falls back to the exact
     // full aggregate — value-identical either way.
-    val conf = spark.sparkContext.hadoopConfiguration
-    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = hp(dir).getFileSystem(conf)
     val meta = spark.read.parquet(s"$dir/meta")
     val (nDocs, nToks, buckets) =
-      if (!fs.exists(hp(s"$dir/tombstones"))) {
+      if (Forget.tombstones(spark, dir, "doc_id").isEmpty) {
         segmentPostings(spark,
             graft.core.Artifacts.segments(spark, dir, Some(asOf))) match {
           case None =>

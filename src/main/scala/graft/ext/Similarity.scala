@@ -257,28 +257,21 @@ object Similarity {
     * neighbor_id, cos UNROUNDED — parquet doubles round-trip exactly,
     * and the merge order must survive storage), kind='v' the (id, v)
     * primary copy appends and forget-repairs score against, kind='m'
-    * the 1-row (k, blocks) meta; `tombstones/` — forgotten ids
-    * ([[forgetFromKnnGraph]]). The build commits version 0 all-or-nothing
-    * ([[graft.core.Artifacts.stageCommit]]); a REBUILD resets version
-    * history to 0 (the writeIvfIndex contract) but keeps tombstones
-    * (re-adding a forgotten id still needs [[compactKnnGraph]] first —
-    * the shared caveat). Single writer per artifact root, like every
-    * versioned/segmented tier. */
+    * the 1-row (k, blocks) meta; forgotten ids live in [[Forget]]'s
+    * tombstone store ([[forgetFromKnnGraph]]). A build or REBUILD
+    * publishes a new root holding only version 0 ([[Forget.rebuild]]:
+    * one swap, version history reset, tombstones carried). Single writer
+    * per artifact root, like every versioned/segmented tier. */
   def writeKnnGraph(corpus: DataFrame, idCol: String, vecCol: String,
-                    dir: String, k: Int, blocks: Int = 8): Unit = {
-    val spark = corpus.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/versions"), true)
-    graft.core.Artifacts.stageCommit(spark, f"$dir/versions/v_${0L}%06d") { tmp =>
-      writeKnnVersionData(tmp,
+                    dir: String, k: Int, blocks: Int = 8): Unit =
+    Forget.rebuild(corpus.sparkSession, dir) { tmp =>
+      writeKnnVersionData(knnVersionDir(tmp, 0L),
         knnGraphRaw(corpus, idCol, vecCol, k, blocks)
           .select(col("query_id"), col("neighbor_id"), col("cos")),
         corpus.select(col(idCol).cast("long").as("id"),
           toDouble(col(vecCol)).as("v")),
         k, blocks)
     }
-  }
 
   /** Stage one version's combined `data/` relation in ONE write action
     * (the r17 consolidation — see the [[writeKnnGraph]] layout note).
@@ -337,10 +330,15 @@ object Similarity {
 
   /** Committed version directories of a kNN-graph artifact, oldest
     * first (zero-padded names sort numerically; in-flight `__tmp` stages
-    * are invisible — the stageCommit read-side contract). */
+    * are invisible — the stageCommit read-side contract), root healed. */
   private def knnVersionDirs(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Seq[String] =
+                             dir: String): Seq[String] = {
+    graft.core.Artifacts.heal(spark, dir)
     graft.core.Artifacts.committedChildren(spark, s"$dir/versions")
+  }
+
+  private def knnVersionDir(dir: String, v: Long): String =
+    f"$dir/versions/v_$v%06d"
 
   private def knnHeadDir(spark: org.apache.spark.sql.SparkSession,
                          dir: String): String = {
@@ -352,17 +350,6 @@ object Similarity {
   private def knnVersionNum(versionDir: String): Long =
     new org.apache.hadoop.fs.Path(versionDir).getName
       .stripPrefix("v_").toLong
-
-  /** The tombstoned-id set (one column `id`), or None when nothing was
-    * ever forgotten. Cardinality is bounded by total deletions — AQE
-    * broadcasts it while it fits, never a hint (repo policy). */
-  private def knnTombstones(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(spark.read.parquet(s"$dir/tombstones")
-      .select(col("doc_id").as("id")).distinct())
-  }
 
   /** Tiled pair scores between a query-node set and a corpus side (both
     * (id, v) in double space) — [[knnGraphRaw]]'s 2-D block decomposition
@@ -425,14 +412,13 @@ object Similarity {
     * rare deletions the rescoring is |affected|·|survivors| tile work,
     * a small fraction of the N² rebuild this verb replaces. */
   def forgetFromKnnGraph(ids: DataFrame, idCol: String, dir: String): Unit = {
-    val spark = ids.sparkSession
-    Forget.forget(ids, idCol, s"$dir/tombstones")
-    repairKnnGraph(spark, dir)
+    Forget.forgetFrom(ids, idCol, dir)
+    repairKnnGraph(ids.sparkSession, dir)
   }
 
   private def repairKnnGraph(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Unit = {
-    val tomb = knnTombstones(spark, dir).getOrElse(return)
+    val tomb = Forget.tombstones(spark, dir, "id").getOrElse(return)
     val head = knnHeadDir(spark, dir)
     val vectors = readKnnVectors(spark, head)
     // ONE labeled-union job answers every pre-repair probe (r16, the
@@ -476,7 +462,7 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"), col("cos"))
       try {
         graft.core.Artifacts.stageCommit(spark,
-            f"$dir/versions/v_${knnVersionNum(head) + 1}%06d") { tmp =>
+            knnVersionDir(dir, knnVersionNum(head) + 1)) { tmp =>
           // graph + vector copy + re-emitted immutable meta: ONE action
           writeKnnVersionData(tmp, kept.union(recomputed), survivors,
             k, blocks)
@@ -486,34 +472,30 @@ object Similarity {
   }
 
   /** Fold version history and clear tombstones — the kNN tier's compact:
-    * every version except the head deletes (as-of reads of folded
-    * versions then fail loudly — the mv3 retention contract) and the
-    * tombstone store clears, which is what re-enables appending a
-    * previously forgotten id. Refuses when the head does not yet
+    * a new root holding only the head version swaps in without the
+    * tombstone store ([[Forget.clearInto]]; the head copies as driver
+    * bytes), so as-of reads of folded versions fail loudly (the mv3
+    * retention contract) and appending a previously forgotten id is
+    * re-enabled, in one commit. Refuses when the head does not yet
     * reflect every tombstone (a crashed forget) — clearing them then
-    * would resurrect forgotten rows; retry the forget first. Each step
-    * is individually safe under a crash: old-version deletion never
-    * changes the head view, and the head contains no tombstoned rows by
-    * the guard, so the tombstone clear is a view no-op. */
+    * would resurrect forgotten rows; retry the forget first. */
   def compactKnnGraph(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Unit = {
     val head = knnHeadDir(spark, dir)
-    knnTombstones(spark, dir).foreach { t =>
+    val tomb = Forget.tombstones(spark, dir, "id")
+    if (tomb.isEmpty && knnVersionDirs(spark, dir).size == 1)
+      return // nothing to fold
+    tomb.foreach { t =>
       require(readKnnVectors(spark, head)
           .join(t, Seq("id"), "left_semi").isEmpty,
         s"compactKnnGraph: $dir has tombstoned ids still present in the " +
           "head version (a forget did not complete) — re-run " +
           "forgetFromKnnGraph first")
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    knnVersionDirs(spark, dir).filter(_ != head).foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(v)
-      if (!fs.delete(p, true))
-        throw new java.io.IOException(
-          s"compactKnnGraph: could not remove superseded $v")
+    Forget.clearInto(spark, dir) { tmp =>
+      graft.core.Artifacts.copyDir(spark, head,
+        knnVersionDir(tmp, knnVersionNum(head)))
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
   }
 
   /** INCREMENTAL kNN-graph maintenance under vector APPENDS, provably ≡
@@ -590,7 +572,7 @@ object Similarity {
       lit(1L).as("b"), lit(0).as("h"), lit(0).as("t"))
     val hh = readKnnVectors(spark, head).select(col("id"),
       lit(0L).as("b"), lit(1).as("h"), lit(0).as("t"))
-    val labeled = knnTombstones(spark, dir)
+    val labeled = Forget.tombstones(spark, dir, "id")
       .map(_.select(col("id"), lit(0L).as("b"), lit(0).as("h"),
         lit(1).as("t")))
       .foldLeft(bb.unionByName(hh))(_ unionByName _)
@@ -680,7 +662,7 @@ object Similarity {
           col("query_id").as("neighbor_id"), col("cos"))
       val updated = topK(readKnnGraphRows(spark, head).union(mirror))
       graft.core.Artifacts.stageCommit(spark,
-          f"$dir/versions/v_${knnVersionNum(head) + 1}%06d") { tmp =>
+          knnVersionDir(dir, knnVersionNum(head) + 1)) { tmp =>
         // graph + vector copy + re-emitted immutable meta: ONE action
         writeKnnVersionData(tmp, updated.union(newRows),
           allN.select(col("id"), col("v")), k, blocks)
@@ -755,7 +737,8 @@ object Similarity {
                         dir: String,
                         asOf: Option[Long] = None): DataFrame = {
     val vd = asOf.fold(knnHeadDir(spark, dir)) { v =>
-      val vd = f"$dir/versions/v_$v%06d"
+      graft.core.Artifacts.heal(spark, dir)
+      val vd = knnVersionDir(dir, v)
       val p = new org.apache.hadoop.fs.Path(vd)
       require(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(p),
@@ -772,7 +755,7 @@ object Similarity {
                              versionDir: String, dir: String): DataFrame = {
     val k = readKnnMeta(spark, versionDir).head().getAs[Int]("k")
     val g0 = readKnnGraphRows(spark, versionDir)
-    val g = knnTombstones(spark, dir).fold(g0) { t =>
+    val g = Forget.tombstones(spark, dir, "id").fold(g0) { t =>
       g0.join(t.select(col("id").as("query_id")), Seq("query_id"), "left_anti")
         .join(t.select(col("id").as("neighbor_id")),
           Seq("neighbor_id"), "left_anti")
@@ -998,33 +981,25 @@ object Similarity {
     * archive-then-batch split of the reference's lambda shape,
     * `BatchJobImpl.scala:17-27` re-reading what streaming wrote): build
     * scans the corpus once, steady-state queries never touch it except
-    * for the bounded-row exact re-rank fetch against the primary store. */
+    * for the bounded-row exact re-rank fetch against the primary store.
+    * A (re)build publishes one new root ([[Forget.rebuild]]: previously
+    * appended segments superseded, tombstones carried). */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    listCol: String, dir: String): Unit = {
-    // a full (re)build supersedes any previously appended segments — clear
-    // them or the read-side union would double-count. Tombstones stay (the
-    // shared caveat: re-adding a forgotten id needs a compact).
-    graft.core.Artifacts.dropSegments(corpus.sparkSession, dir)
-    listCentroids(corpus, listCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    quantizeInt8(corpus, idCol, vecCol, carry = Seq(listCol))
-      .withColumnRenamed(listCol, "list")
-      .write.mode("overwrite").partitionBy("list").parquet(s"$dir/qindex")
-  }
+                    listCol: String, dir: String): Unit =
+    Forget.rebuild(corpus.sparkSession, dir) { tmp =>
+      listCentroids(corpus, listCol, vecCol).write.parquet(s"$tmp/centroids")
+      quantizeInt8(corpus, idCol, vecCol, carry = Seq(listCol))
+        .withColumnRenamed(listCol, "list")
+        .write.partitionBy("list").parquet(s"$tmp/qindex")
+    }
 
   /** The full stored IVF index relation at head (segmented store, base
     * `qindex`). Every root is a list-partitioned parquet dir, so a
     * `list IN (…)` probe filter partition-prunes each root identically
     * to the single-dir layout. */
   def ivfIndexRelation(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): DataFrame = ivfRoots(spark, dir, None)
-
-  private def ivfRoots(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, asOf: Option[Long]): DataFrame = {
-    graft.core.Artifacts.heal(spark, dir)
-    graft.core.Artifacts.heal(spark, s"$dir/qindex")
-    graft.core.Artifacts.readSegmented(spark, dir, "qindex", asOf)
-  }
+                       dir: String): DataFrame =
+    graft.core.Artifacts.readSegmented(spark, dir, "qindex")
 
   /** APPEND new vectors to a STORED IVF index ([[writeIvfIndex]]) without
     * a rebuild — the third job of the production index lifecycle (build,
@@ -1048,11 +1023,11 @@ object Similarity {
     *
     * Idempotence under at-least-once retry (sim11s): the batch
     * anti-joins the stored index's vec_ids first (an id-column-only
-    * columnar probe of the FULL stored relation, not the living view — a
-    * stale tombstone must keep hiding a re-appended id until compact,
-    * the shared caveat) and commits through
-    * [[graft.core.Artifacts.appendSegment]]. Segments are list-partitioned like the base, so probe-time
-    * partition pruning applies to every root, and each committed
+    * columnar probe of the FULL stored relation, not the living view —
+    * [[Forget]]'s re-add rule) and commits through
+    * [[graft.core.Artifacts.appendSegment]]. Segments are
+    * list-partitioned like the base, so probe-time partition pruning
+    * applies to every root, and each committed
     * segment is one immutable index VERSION
     * ([[ivfLivingIndex]] `asOf`). Single writer per index root. */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
@@ -1088,97 +1063,44 @@ object Similarity {
   /** FORGET vectors from a STORED IVF index — right-to-be-forgotten for
     * the vector tier, the one artifact verb the lifecycle was missing
     * (build [[writeIvfIndex]] / append [[appendToIvfIndex]] / retrain
-    * [[retrainIvfIndex]] / THIS). [[graft.ext.Forget]]'s exact
-    * discipline applied to the sim6 artifact:
-    *  - the request resolves each id's list with ONE column-pruned
-    *    (vec_id, list) probe of the index, then APPENDS (vec_id, list)
-    *    tombstones partitioned by list — O(deleted) rows written, and
-    *    only the AFFECTED list directories gain tombstone files;
-    *  - readers take the living view through [[ivfLivingIndex]] (one
-    *    anti-join; tombstones are a SET, so repeated/overlapping forget
-    *    requests are idempotent);
-    *  - [[compactIvfIndex]] is the amortized physical rewrite.
-    * Centroids are NOT retouched: the quantizer is trained state, not
-    * subject data — deletions shift list means exactly like appends do,
-    * and the existing drift metric ([[indexCentroidDrift]]) pages the
-    * retrain when it matters.
-    *
-    * Caveat (same as the dedup-archive tombstones): re-appending a
-    * previously forgotten vec_id requires a [[compactIvfIndex]] first,
-    * or the stale tombstone hides the new row. */
-  def forgetFromIvfIndex(ids: DataFrame, idCol: String, dir: String): Unit = {
-    val spark = ids.sparkSession
-    ivfIndexRelation(spark, dir).select(col("vec_id"), col("list"))
-      .join(ids.select(col(idCol).cast("long").as("vec_id")).distinct(),
-        Seq("vec_id"), "left_semi")
-      .write.mode("append").partitionBy("list").parquet(s"$dir/tombstones")
-  }
+    * [[retrainIvfIndex]] / THIS): [[Forget.forgetFrom]], whose tombstone
+    * rules the tier follows. Readers take the living view through
+    * [[ivfLivingIndex]]; [[compactIvfIndex]] is the amortized physical
+    * rewrite. Centroids are NOT retouched: the quantizer is trained
+    * state, not subject data — deletions shift list means exactly like
+    * appends do, and the existing drift metric ([[indexCentroidDrift]])
+    * pages the retrain when it matters. */
+  def forgetFromIvfIndex(ids: DataFrame, idCol: String, dir: String): Unit =
+    Forget.forgetFrom(ids, idCol, dir)
 
-  /** The LIVING index view: base + committed segments minus tombstones —
-    * what every query job should scan after deletes exist. Joining on
-    * (vec_id, list) keeps the probed-list partition filter meaningful on
-    * both relations; a missing tombstone store means nothing was
-    * forgotten. `asOf = Some(v)` reads version `v` (the build is version
-    * `floor`, each committed append segment adds one; folded or unwritten
-    * pins fail loudly), with CURRENT tombstones still applied
-    * (right-to-be-forgotten outranks reproducibility). Centroids need no
-    * pinning: they are FROZEN from build to rebuild (appends never touch
-    * them — the FAISS contract sim7 grades) and a rebuild swaps them
-    * together with a reset version history. */
+  /** The LIVING index view ([[Forget.living]]) — what every query job
+    * should scan after deletes exist; a `list IN (…)` probe filter still
+    * prunes every root. `asOf = Some(v)` reads version `v` (the build is
+    * version `floor`, each committed append segment adds one) with
+    * CURRENT tombstones still applied. Centroids need no pinning: they
+    * are FROZEN from build to rebuild (appends never touch them — the
+    * FAISS contract sim7 grades) and a rebuild swaps them together with
+    * a reset version history. */
   def ivfLivingIndex(spark: org.apache.spark.sql.SparkSession,
                      dir: String,
                      asOf: Option[Long] = None): DataFrame =
-    minusIvfTombstones(ivfRoots(spark, dir, asOf), spark, dir)
-
-  private def minusIvfTombstones(q: DataFrame,
-                                 spark: org.apache.spark.sql.SparkSession,
-                                 dir: String): DataFrame = {
-    val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb)) q
-    else q.join(spark.read.parquet(s"$dir/tombstones")
-        .select(col("vec_id"), col("list")).distinct(),
-      Seq("vec_id", "list"), "left_anti")
-      // using-column joins front-load the keys — restore the raw schema
-      // order so the view is stable whether or not tombstones exist
-      .select(q.columns.map(col).toIndexedSeq: _*)
-  }
+    Forget.living(spark, dir, "qindex", "vec_id", asOf)
 
   /** Amortized physical rewrite of a tombstoned/segmented IVF index
-    * ([[graft.core.Artifacts.foldSegments]]): centroids + qindex with
-    * qindex = the LIVING relation; tombstones do not exist in the new
-    * root (stale tombstones re-planted over removed rows are a no-op
-    * view — Round11Spec pins it). Centroids copy through unchanged —
-    * compaction folds DATA, never trained state. Offline maintenance,
-    * like [[retrainIvfIndex]]. */
+    * ([[Forget.compactStore]]): centroids + qindex with qindex = the
+    * LIVING relation. Centroids copy through unchanged — compaction folds
+    * DATA, never trained state. Offline maintenance, like
+    * [[retrainIvfIndex]]. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit = {
-    graft.core.Artifacts.heal(spark, dir)
-    val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb) && graft.core.Artifacts.segments(spark, dir).isEmpty)
-      return // nothing to fold
-    val living = ivfLivingIndex(spark, dir)
-    // Same edge as compactPostingsIndex: compacting a FULLY-forgotten
-    // index would swap in a qindex dir with zero part files, and the
-    // next read dies on schema inference instead of a meaningful
-    // message. limit(1) early-exits, so the view is deliberately NOT
-    // persisted for it: unlike the PQ compact (whose living view is an
-    // anti-join over base+segments worth caching for its two consumers),
-    // this guard touches one row and the write pass re-reads the view
-    // once — the persist was measured at ~+0.8 s on sim9's lifecycle.
-    require(living.limit(1).count() > 0,
-      s"compactIvfIndex: every vector in $dir has been forgotten — an " +
-        "empty index has no compacted form; drop the index directory " +
-        "instead")
-    graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
+                      dir: String): Unit =
+    Forget.compactStore(spark, dir, "qindex", "vec_id",
+        "compactIvfIndex") { (living, tmp) =>
       // centroids are FROZEN trained state — pass through as a driver
       // byte copy, not a Spark job (r17, Artifacts.copyDir)
       graft.core.Artifacts.copyDir(spark, s"$dir/centroids",
         s"$tmp/centroids")
       living.write.partitionBy("list").parquet(s"$tmp/qindex")
     }
-  }
 
   /** QUANTIZER-DRIFT metric over a STORED IVF index ([[writeIvfIndex]]) —
     * the decision input [[appendToIvfIndex]]'s contract defers to:
@@ -1531,10 +1453,10 @@ object Similarity {
     * build (pq2's oracle is pq1's verbatim).
     *
     * Commit discipline (round-10 ADVICE): the whole artifact publishes
-    * through [[graft.core.Artifacts.swapInto]] — a crashed build can never
+    * as one new root ([[Forget.rebuild]]) — a crashed build can never
     * leave a torn codebooks/meta/codes trio readers mistake for a
-    * committed index, and a REBUILD atomically supersedes any previously
-    * appended segments (they live inside the swapped dir). */
+    * committed index, a REBUILD atomically supersedes any previously
+    * appended segments, and the tombstone store carries forward. */
   def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                    dir: String, dims: Int, m: Int = 4, ksub: Int = 4,
                    iters: Int = 2, scale: Long = 1000000L): Unit = {
@@ -1547,7 +1469,7 @@ object Similarity {
     val books: Seq[Seq[Array[Long]]] =
       Clustering.kmeansFitSubspaces(corpus, idCol, vecCol, m, sub, ksub,
         iters, scale)
-    graft.core.Artifacts.swapInto(spark, dir) { tmp =>
+    Forget.rebuild(spark, dir) { tmp =>
       books.zipWithIndex.flatMap { case (b, j) =>
           b.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) } }
         .toDF("subspace", "cluster", "centroid")
@@ -1607,74 +1529,37 @@ object Similarity {
   /** FORGET vectors from a STORED PQ index — right-to-be-forgotten for
     * the codebook tier, completing the artifact verb matrix (dedup has
     * del1, postings ret7, IVF sim9; PQ had build/append/rebuild only —
-    * round-11 verdict #1). [[graft.ext.Forget]]'s exact discipline over
-    * the [[writePqIndex]] artifact:
-    *  - the request APPENDS vec_id tombstones — O(deleted) rows written,
-    *    never a codes-relation rewrite (codes are flat, not
-    *    list-partitioned, so a plain id tombstone store suffices —
-    *    unlike the IVF tier there is no per-list directory to localize
-    *    into);
-    *  - readers take the living view through [[pqCodesLiving]] (one
-    *    anti-join; tombstones are a SET, so repeated/overlapping forget
-    *    requests are idempotent);
-    *  - [[compactPqIndex]] is the amortized physical rewrite.
-    * Codebooks are NOT retouched: the quantizer is trained state, not
-    * subject data — the sim9 centroid rationale verbatim.
-    *
-    * Caveat (shared by every tombstoned tier): re-appending a forgotten
-    * vec_id requires a [[compactPqIndex]] first, or the stale tombstone
-    * hides the new row — [[appendToPqIndex]]'s anti-join therefore
-    * probes the FULL stored codes, not the living view. */
+    * round-11 verdict #1): [[Forget.forgetFrom]], whose tombstone rules
+    * the tier follows. Readers take the living view through
+    * [[pqCodesLiving]]; [[compactPqIndex]] is the amortized physical
+    * rewrite. Codebooks are NOT retouched: the quantizer is trained
+    * state, not subject data — the sim9 centroid rationale verbatim. */
   def forgetFromPqIndex(ids: DataFrame, idCol: String, dir: String): Unit =
-    Forget.forget(ids, idCol, s"$dir/tombstones")
+    Forget.forgetFrom(ids, idCol, dir)
 
-  /** The LIVING codes view: base + committed segments minus tombstones —
-    * what every query path scans once deletes exist (a missing tombstone
-    * store means nothing was forgotten — zero added cost). `asOf =
-    * Some(v)` reads version `v` (the build is version `floor`, each
-    * committed append segment adds one; folded or unwritten pins fail
-    * loudly), with current tombstones STILL applied
-    * (right-to-be-forgotten outranks reproducibility). */
+  /** The LIVING codes view ([[Forget.living]]) — what every query path
+    * scans once deletes exist. `asOf = Some(v)` reads version `v` (the
+    * build is version `floor`, each committed append segment adds one)
+    * with current tombstones STILL applied. */
   def pqCodesLiving(spark: org.apache.spark.sql.SparkSession,
                     dir: String, asOf: Option[Long] = None): DataFrame =
-    Forget.applyTombstones(
-      graft.core.Artifacts.readSegmented(spark, dir, "codes", asOf),
-      "vec_id", s"$dir/tombstones")
+    Forget.living(spark, dir, "codes", "vec_id", asOf)
 
   /** Amortized physical rewrite of a tombstoned/segmented PQ index
-    * ([[graft.core.Artifacts.foldSegments]]): codebooks/meta/codes with
-    * codes = the LIVING relation; tombstones do not exist in the new
-    * root. Codebooks and meta copy through unchanged — compaction folds
-    * DATA, never trained state. */
+    * ([[Forget.compactStore]]): codebooks/meta/codes with codes = the
+    * LIVING relation. Codebooks and meta copy through unchanged —
+    * compaction folds DATA, never trained state. */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): Unit = {
-    graft.core.Artifacts.heal(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(dir).getFileSystem(conf)
-    val hasTombs = fs.exists(p(s"$dir/tombstones"))
-    if (!hasTombs && graft.core.Artifacts.segments(spark, dir).isEmpty)
-      return // nothing to fold
-    val living = pqCodesLiving(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Same edge as compactPostingsIndex: a fully-forgotten store has no
-      // valid compacted form (a codes dir with zero part files dies on
-      // schema inference at the next read). Refuse loudly.
-      require(living.limit(1).count() > 0,
-        s"compactPqIndex: every vector in $dir has been forgotten — an " +
-          "empty index has no compacted form; drop the index directory " +
-          "instead")
-      graft.core.Artifacts.foldSegments(spark, dir) { tmp =>
-        // codebooks/meta are FROZEN trained state — pass through as
-        // driver byte copies, not Spark jobs (r17, Artifacts.copyDir)
-        graft.core.Artifacts.copyDir(spark, s"$dir/codebooks",
-          s"$tmp/codebooks")
-        graft.core.Artifacts.copyDir(spark, s"$dir/meta", s"$tmp/meta")
-        living.write.parquet(s"$tmp/codes")
-      }
-    } finally living.unpersist()
-  }
+                     dir: String): Unit =
+    Forget.compactStore(spark, dir, "codes", "vec_id",
+        "compactPqIndex") { (living, tmp) =>
+      // codebooks/meta are FROZEN trained state — pass through as
+      // driver byte copies, not Spark jobs (r17, Artifacts.copyDir)
+      graft.core.Artifacts.copyDir(spark, s"$dir/codebooks",
+        s"$tmp/codebooks")
+      graft.core.Artifacts.copyDir(spark, s"$dir/meta", s"$tmp/meta")
+      living.write.parquet(s"$tmp/codes")
+    }
 
   /** [[pqTopK]] answered from the STORED index ([[writePqIndex]]) — the
     * steady-state query job: the quantizer loads as bounded driver state

@@ -220,8 +220,9 @@ object Behavior {
 
   /** The [[rfmScores]] pipeline BEFORE materialization — the lazy scored
     * frame plus the internal-cache release handle. Package-private so
-    * plan evidence (DumpR17Plans) can explain the REAL distributed shape
-    * (a localCheckpoint scan hides it); production callers use
+    * plan evidence (`DumpPlans <tag> rfm1_internal`) can explain the
+    * REAL distributed shape (a localCheckpoint scan hides it); production
+    * callers use
     * [[rfmScores]], which materializes and releases. */
   private[graft] def rfmScoresLazy(orders: DataFrame, custCol: Column,
                                    tsCol: Column, amountCol: Column,

@@ -249,4 +249,14 @@ class CoreSpec extends SparkSpec {
       "a pinned read is the head verb's `asOf: Option[Long] = None`, not " +
         "a second verb:\n" + hits.mkString("\n"))
   }
+
+  test("the tier tombstone store is named only in ext.Forget (source scan)") {
+    val hits = sourceHits(Seq("/tombstones\\b".r),
+        exempt = Seq("ext/Forget.scala")) ++
+      sourceHits(Seq("\\bdropSegments\\b".r), exempt = Nil)
+    assert(hits.isEmpty,
+      "a tier names `<dir>/tombstones` or clears segments in place — " +
+        "forget, read living, compact and rebuild through ext.Forget:\n" +
+        hits.mkString("\n"))
+  }
 }

@@ -7,6 +7,15 @@ import org.apache.spark.sql.SparkSession
   * queries, as reviewable evidence of pushdown/broadcast/top-k plan shapes.
   * Run: sbt "Test/runMain graft.DumpPlans"
   *
+  * With arguments, `DumpPlans <tag> <q1,q2,...>` is the before/after
+  * evidence tool of an optimization instead: for each named query it
+  * writes `plans/<tag>/<query>.txt` (relative to the working directory)
+  * holding BOTH the formatted explain (initial adaptive plan — where
+  * PushedFilters/ReadSchema are legible) and the FINALIZED executed plan.
+  * The pseudo-name `rfm1_internal` dumps rfm1's lazy pre-checkpoint
+  * pipeline (its graded entry localCheckpoints, so the graded plan is
+  * just a checkpoint scan).
+  *
   * Every query is EXECUTED first and both the formatted sections and the
   * inventory read the FINALIZED adaptive plan (isFinalPlan=true): initial
   * plans never show ReusedExchange, so they overstate scan/shuffle counts —
@@ -16,12 +25,20 @@ import org.apache.spark.sql.SparkSession
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
+    require(args.isEmpty || args.length == 2,
+      "usage: DumpPlans [<tag> <q1,q2,...>]")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
+    if (args.nonEmpty) {
+      dumpTagged(spark, sf, args(0),
+        args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      spark.stop()
+      return
+    }
     val picks = Seq(
       "s2_hour_slice", "q1_pricing_summary", "a5_email_1h", "q3_top_orders",
       "w1_top_order_per_customer", "q4_priority_semijoin", "d2_ngram_jaccard",
@@ -142,5 +159,32 @@ object DumpPlans {
     Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
     println("WROTE /root/repo/PLANS.md")
     spark.stop()
+  }
+
+  private def dumpTagged(spark: SparkSession, sf: String, tag: String,
+                         names: Seq[String]): Unit = {
+    val out = Paths.get("plans", tag)
+    Files.createDirectories(out)
+    names.foreach { name =>
+      val df = if (name == "rfm1_internal") {
+        import org.apache.spark.sql.functions.col
+        graft.queries.Behavior.rfmScoresLazy(
+          graft.core.Tables.orders(spark, sf), col("o_custkey"),
+          col("o_orderdate"), col("o_totalprice"), 5)._1.orderBy("cust")
+      } else SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query $name"))(spark, sf)
+      val formatted = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      df.collect() // finalize the adaptive plan (count() derives a different plan)
+      val finalized = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      Files.writeString(out.resolve(s"$name.txt"),
+        s"# $name ($tag, sf0.001)\n\n== explain(\"formatted\") ==\n\n" +
+          formatted +
+          "\n\n== finalized adaptive plan (executed; isFinalPlan=true) ==\n\n" +
+          finalized)
+      println(s"WROTE $out/$name.txt")
+      spark.catalog.clearCache()
+    }
   }
 }

@@ -255,7 +255,7 @@ class Round11Spec extends SparkSpec {
     val view2 = ext.Similarity.ivfLivingIndex(spark, dir)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(view2 == view1, "repeated forget must not change the view")
-    // tombstones land ONLY in affected list directories
+    // the request lands in the tier's tombstone store
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")))
@@ -290,11 +290,10 @@ class Round11Spec extends SparkSpec {
     val v7 = ext.Similarity.ivfLivingIndex(spark, dir)
       .orderBy("vec_id").collect().map(_.toSeq).toSeq
     ext.Similarity.compactIvfIndex(spark, dir)
-    // re-plant the already-applied tombstone BY HAND to simulate the
-    // crash window (forgetFromIvfIndex itself would write nothing — the
-    // id is no longer in the index, which is also part of the contract)
-    Seq((7L, "L1")).toDF("vec_id", "list")
-      .write.mode("append").partitionBy("list").parquet(s"$dir/tombstones")
+    // re-plant the already-applied tombstone to simulate the crash
+    // window (the forget does not probe the index, so it lands although
+    // the id is no longer stored)
+    ext.Similarity.forgetFromIvfIndex(Seq(7L).toDF("vec_id"), "vec_id", dir)
     assert(ext.Similarity.ivfLivingIndex(spark, dir)
       .orderBy("vec_id").collect().map(_.toSeq).toSeq == v7,
       "stale tombstones over already-removed rows are a no-op")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *    until compact then visible — the sim9/ret7 lifecycle contract
   *    applied to the last stored artifact missing its delete verb.
   *  - Fully-forgotten stores refuse to compact LOUDLY (PQ, postings,
-  *    IVF) instead of publishing an artifact whose next read dies on
+  *    IVF, the eval suite) instead of publishing an artifact whose next read dies on
   *    NULL meta or empty-dir schema inference (ADVICE r12).
   *  - crossCorr accumulates its products in DECIMAL(38,0), not LongType
   *    — the ts4 oracle widens to HUGEINT, so a 100× corpus must widen,
@@ -148,6 +148,15 @@ class Round12Spec extends SparkSpec {
       ext.Similarity.compactIvfIndex(spark, ivfDir)
     }
     assert(e3.getMessage.contains("forgotten"))
+
+    val evalDir = tmpDir("eval-empty-spec") + "/idx"
+    ext.Dedup.writeContaminationIndex(docs, "doc_id", "text", evalDir)
+    ext.Dedup.forgetFromContaminationIndex(
+      docs.select("doc_id"), "doc_id", evalDir)
+    val e4 = intercept[IllegalArgumentException] {
+      ext.Dedup.compactContaminationIndex(spark, evalDir)
+    }
+    assert(e4.getMessage.contains("forgotten"))
   }
 
   // ---------------------------------------------- postings as-of (ret8)
