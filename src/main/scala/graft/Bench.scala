@@ -9,22 +9,24 @@ import org.apache.spark.sql.SparkSession
   * runs TWICE and reports the min, and queries run in sorted-name order so
   * run-to-run comparisons line up. */
 object Bench {
+  /** The timing session: `local[cpus]`, as many shuffle partitions, UTC.
+    * ~300 executions run in one JVM; the status store retains plan
+    * graphs + metrics per execution (default 1000) and this suite's
+    * plans are large — retention is capped so the heap measures queries,
+    * not monitoring history. */
+  def session(cpus: String): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.ui.retainedExecutions", "16")
+    .config("spark.ui.retainedJobs", "100")
+    .config("spark.ui.retainedStages", "100")
+    .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ~300 executions run in this one JVM; the status store retains
-      // plan graphs + metrics per execution (default 1000) and this
-      // suite's plans are large — cap retention so the 8g heap measures
-      // queries, not monitoring history
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .getOrCreate()
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect() // JVM/codegen warmup
     // warm-touch every table (footers + OS page cache)
@@ -55,8 +57,8 @@ object Bench {
       }
       math.min(math.min(once(), once()), once())
     }
-    // The canary's own curve was MEASURED on an idle JVM (ProfileCanary,
-    // round 14 — the round-13 verdict's reproduce-on-idle-box test):
+    // The canary's own curve was MEASURED on an idle JVM (round 14 — the
+    // round-13 verdict's reproduce-on-idle-box test):
     // min-of-3 falls 0.235 → 0.162 → 0.141 → a ~0.11–0.13 plateau over
     // the first ~80 s / ~15 executions with NOTHING else running. The
     // box warms UP within a session — deep JIT of the whole Spark stack,

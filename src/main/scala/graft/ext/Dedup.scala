@@ -1333,11 +1333,13 @@ object Dedup {
     * benchmark tasks arriving later); appends anti-join stored eval_ids
     * so a redelivered wave is a no-op and writes no segment. Probes broadcast the full stored
     * relation — eval suites are benchmarks, bounded by definition, the
-    * cc1 broadcast contract unchanged. */
+    * cc1 broadcast contract unchanged. A (re)build replaces the suite as
+    * one new root ([[Forget.rebuild]]): version history restarts at 0
+    * and forgotten eval ids stay forgotten. */
   def writeContaminationIndex(evalSet: DataFrame, idCol: String,
                               textCol: String, dir: String,
                               n: Int = 3): Unit =
-    graft.core.Artifacts.stageCommit(evalSet.sparkSession, dir) { tmp =>
+    Forget.rebuild(evalSet.sparkSession, dir) { tmp =>
       evalPostings(evalSet, idCol, textCol, n).write.parquet(s"$tmp/postings")
     }
 

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression}
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType}
 import org.apache.spark.sql.{Column, Encoder, functions}
 
 /** Mergeable Bloom filter over 64-bit keys — the membership sketch that
@@ -112,17 +113,45 @@ object Bloom {
       org.apache.spark.sql.graft.Bridge.expression(bloom),
       org.apache.spark.sql.graft.Bridge.expression(key), numHashes))
 
-  /** Probe against a QUERY-CONSTANT filter: the bytes ride as a Literal —
-    * codegen references the one constant array (no per-row copy, no join
-    * to carry the bytes), exactly how Spark's own injected runtime bloom
-    * filters reach their probe side. The build aggregate's 1-row result
-    * is driver-collected by the caller — a bounded, fixed-size sketch
-    * (numBits/8 bytes however large the build side), the same budget
-    * class as a broadcast dimension. */
+  /** Probe against a QUERY-CONSTANT filter: the bytes ride as one
+    * [[BloomBits]] constant — codegen references the one array (no
+    * per-row copy, no join to carry the bytes), exactly how Spark's own
+    * injected runtime bloom filters reach their probe side. The build
+    * aggregate's 1-row result is driver-collected by the caller — a
+    * bounded, fixed-size sketch (numBits/8 bytes however large the build
+    * side), the same budget class as a broadcast dimension. */
   def bloomMightContain(bloom: Array[Byte], key: Column, numHashes: Int): Column =
     org.apache.spark.sql.graft.Bridge.column(BloomMightContainExpr(
-      org.apache.spark.sql.catalyst.expressions.Literal(bloom),
-      org.apache.spark.sql.graft.Bridge.expression(key), numHashes))
+      BloomBits(bloom), org.apache.spark.sql.graft.Bridge.expression(key),
+      numHashes))
+}
+
+/** A query-constant filter's bytes as a leaf. Codegen references the one
+  * array through `ctx.addReferenceObj`, as a binary `Literal` does, but
+  * the plan prints `bloom(<numBits> bits, <digest>)`: a `Literal` prints
+  * every byte in hex, 2 MiB per plan rendering at the default 2^23 bits.
+  * Not foldable, or ConstantFolding turns it back into a `Literal`.
+  * Equal bytes are equal constants, as for a `Literal`. */
+case class BloomBits(bits: Array[Byte]) extends LeafExpression {
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+
+  override def eval(input: InternalRow): Any = bits
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    ExprCode.forNonNullValue(JavaCode.global(
+      ctx.addReferenceObj("bloomBits", bits, "byte[]"), BinaryType))
+
+  private lazy val digest = java.util.Arrays.hashCode(bits)
+  override def hashCode: Int = digest
+  override def equals(o: Any): Boolean = o match {
+    case b: BloomBits => java.util.Arrays.equals(bits, b.bits)
+    case _ => false
+  }
+
+  override def toString: String = f"bloom(${bits.length * 8L}%d bits, $digest%08x)"
+  override def sql: String = toString
 }
 
 /** `mightContain(bloomBytes, key)` as a native expression — stays inside

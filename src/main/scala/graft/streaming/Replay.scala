@@ -166,6 +166,46 @@ object Replay {
     }
   }
 
+  /** The `(ts, id, value)` rows the windowed replays stream. */
+  private val TsIdValue = Seq("ts" -> "timestamp", "id" -> "string",
+    "value" -> "double")
+
+  /** The sentinel replay every watermark-gated helper below shares:
+    * normalize each tranche to `schema` (column → type, in order; `ts`
+    * is the event time, the first other column the key), append the
+    * sentinel to the last tranche, and stream the tranches through `f`,
+    * one run each, into one checkpointed sink. The sentinel row's key is
+    * `sentinel`, its ts the last tranche's max(ts) + `gap` from a 1-row
+    * scalar aggregate (the data itself never leaves the executors), every
+    * other column 0. Returns the last run's sink minus the sentinel's rows
+    * (`outKey`). The streaming engine only watermarks TIMESTAMP (not
+    * TIMESTAMP_NTZ): ts is cast in and the output's `outTs` cast back to
+    * NTZ — an identity round-trip under the fixed session timezone,
+    * keeping the output on the NTZ oracle contract. */
+  private def sentinelReplay(spark: SparkSession, tag: String,
+                             tranches: Seq[DataFrame],
+                             schema: Seq[(String, String)], sentinel: Any,
+                             gap: Duration, outKey: String, outTs: String)
+                            (f: DataFrame => DataFrame): DataFrame = {
+    val rows = tranches.map(_.toDF(schema.map(_._1): _*)
+      .select(schema.map { case (c, t) => col(c).cast(t).as(c) }: _*))
+    val key = schema.map(_._1).find(_ != "ts").get
+    val flush = rows.last
+      .agg((max(col("ts")) + expr(s"INTERVAL ${gap.getSeconds} SECONDS")).as("ts"))
+      .select(schema.map {
+        case ("ts", _) => col("ts")
+        case (c, t) => lit(if (c == key) sentinel else 0).cast(t).as(c)
+      }: _*)
+    val dir = scratch(tag)
+    val ddl = schema.map { case (c, t) => s"$c $t" }.mkString(", ")
+    (rows.init :+ rows.last.unionByName(flush)).map { r =>
+      r.write.mode("append").parquet(s"$dir/in")
+      runToSink(spark, f(spark.readStream.schema(ddl).parquet(s"$dir/in")), dir)
+    }.last
+      .where(col(outKey) =!= sentinel)
+      .withColumn(outTs, col(outTs).cast("timestamp_ntz"))
+  }
+
   /** CHECKPOINT-RECOVERY replay: run the watermarked windowed aggregate
     * over the FIRST tranche of rows to completion, let the query terminate
     * (a planned stop — same checkpoint state as a crash after commit),
@@ -192,34 +232,18 @@ object Replay {
   def restartReplay(spark: SparkSession, first: DataFrame, second: DataFrame,
                     windowDur: String, watermark: String, typeTag: String,
                     sentinelGap: Duration = Duration.ofMinutes(10)): DataFrame = {
-    def norm(df: DataFrame) = df.toDF("ts", "id", "value")
-      .select(col("ts").cast("timestamp").as("ts"),
-        col("id").cast("string").as("id"),
-        col("value").cast("double").as("value"))
-    val dir = scratch("restart-")
-    val (f, sec) = (norm(first), norm(second))
-    val sentinel = sec
-      .agg((max(col("ts")) + expr(s"INTERVAL ${sentinelGap.getSeconds} SECONDS")).as("ts"))
-      .select(col("ts"), lit(SentinelId).as("id"), lit(0.0).as("value"))
-    def run(): DataFrame = {
-      val src = spark.readStream
-        .schema("ts TIMESTAMP, id STRING, value DOUBLE")
-        .parquet(s"$dir/in")
-      runToSink(spark, Speed.windowedSum(src, col("id"), "ts", windowDur,
-        watermark, col("value"), typeTag), dir)
-    }
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey, "org.apache.spark.sql.execution.streaming" +
       ".state.RocksDBStateStoreProvider")
-    try {
-      f.write.mode("append").parquet(s"$dir/in")
-      run() // run 1: first tranche, terminates, checkpoint survives
-      sec.unionByName(sentinel).write.mode("append").parquet(s"$dir/in")
-      run() // run 2: SAME checkpoint — restore state, process only new files
-        .where(col("id") =!= SentinelId)
-        .withColumn("timestamp", col("timestamp").cast("timestamp_ntz"))
-    } finally prevProvider match {
+    // run 1 streams the first tranche and terminates, its checkpoint
+    // survives; run 2 restores from the SAME checkpoint and processes only
+    // the second tranche's new files
+    try sentinelReplay(spark, "restart-", Seq(first, second), TsIdValue,
+        SentinelId, sentinelGap, "id", "timestamp")(
+      Speed.windowedSum(_, col("id"), "ts", windowDur, watermark,
+        col("value"), typeTag))
+    finally prevProvider match {
       case Some(v) => spark.conf.set(providerKey, v)
       case None => spark.conf.unset(providerKey)
     }
@@ -231,31 +255,11 @@ object Replay {
     * Output schema matches the batch shape: (timestamp, id, value, type). */
   def windowedSumReplay(spark: SparkSession, input: DataFrame,
                         windowDur: String, watermark: String, typeTag: String,
-                        sentinelGap: Duration = Duration.ofMinutes(10)): DataFrame = {
-    // the streaming engine only watermarks TIMESTAMP (not TIMESTAMP_NTZ);
-    // cast in, and cast the window start back to NTZ on readback — an
-    // identity round-trip under the fixed session timezone, keeping the
-    // output schema on the repo's NTZ oracle contract
-    val rows = input.toDF("ts", "id", "value")
-      .select(col("ts").cast("timestamp").as("ts"),
-        col("id").cast("string").as("id"),
-        col("value").cast("double").as("value"))
-    // sentinel ts = max(ts) + gap, derived by a 1-row scalar aggregate —
-    // the data itself never leaves the executors
-    val sentinel = rows
-      .agg((max(col("ts")) + expr(s"INTERVAL ${sentinelGap.getSeconds} SECONDS")).as("ts"))
-      .select(col("ts"), lit(SentinelId).as("id"), lit(0.0).as("value"))
-    val dir = scratch("wsum-")
-    rows.unionByName(sentinel).write.parquet(s"$dir/in")
-    val src = spark.readStream
-      .schema("ts TIMESTAMP, id STRING, value DOUBLE")
-      .parquet(s"$dir/in")
-    val agg = Speed.windowedSum(src, col("id"), "ts", windowDur, watermark,
-      col("value"), typeTag)
-    runToSink(spark, agg, dir)
-      .where(col("id") =!= SentinelId)
-      .withColumn("timestamp", col("timestamp").cast("timestamp_ntz"))
-  }
+                        sentinelGap: Duration = Duration.ofMinutes(10)): DataFrame =
+    sentinelReplay(spark, "wsum-", Seq(input), TsIdValue, SentinelId,
+        sentinelGap, "id", "timestamp")(
+      Speed.windowedSum(_, col("id"), "ts", windowDur, watermark,
+        col("value"), typeTag))
 
   /** Replay `(ts, id, value)` rows through [[Speed.sessionWindowSum]] (the
     * watermarked streaming SESSION-window aggregate — gap-merged session
@@ -268,25 +272,11 @@ object Replay {
     * id, value, type). */
   def sessionWindowSumReplay(spark: SparkSession, input: DataFrame,
                              gap: String, watermark: String, typeTag: String,
-                             sentinelGap: Duration): DataFrame = {
-    val rows = input.toDF("ts", "id", "value")
-      .select(col("ts").cast("timestamp").as("ts"),
-        col("id").cast("string").as("id"),
-        col("value").cast("double").as("value"))
-    val sentinel = rows
-      .agg((max(col("ts")) + expr(s"INTERVAL ${sentinelGap.getSeconds} SECONDS")).as("ts"))
-      .select(col("ts"), lit(SentinelId).as("id"), lit(0.0).as("value"))
-    val dir = scratch("sess-")
-    rows.unionByName(sentinel).write.parquet(s"$dir/in")
-    val src = spark.readStream
-      .schema("ts TIMESTAMP, id STRING, value DOUBLE")
-      .parquet(s"$dir/in")
-    val agg = Speed.sessionWindowSum(src, col("id"), "ts", gap, watermark,
-      col("value"), typeTag)
-    runToSink(spark, agg, dir)
-      .where(col("id") =!= SentinelId)
-      .withColumn("timestamp", col("timestamp").cast("timestamp_ntz"))
-  }
+                             sentinelGap: Duration): DataFrame =
+    sentinelReplay(spark, "sess-", Seq(input), TsIdValue, SentinelId,
+        sentinelGap, "id", "timestamp")(
+      Speed.sessionWindowSum(_, col("id"), "ts", gap, watermark,
+        col("value"), typeTag))
 
   /** Replay `(id, ts, seq, v)` rows through [[QuotaAlert.idleSessions]]
     * (flatMapGroupsWithState with EVENT-TIME TIMEOUT — the state-expiry
@@ -298,25 +288,11 @@ object Replay {
     * size `sentinelGap` ≫ gap + watermark delay. */
   def idleSessionReplay(spark: SparkSession, input: DataFrame,
                         gap: Duration, watermark: String,
-                        sentinelGap: Duration): DataFrame = {
-    val rows = input.toDF("id", "ts", "seq", "v")
-      .select(col("id").cast("long").as("id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("seq").cast("long").as("seq"),
-        col("v").cast("long").as("v"))
-    val sentinel = rows
-      .agg((max(col("ts")) + expr(s"INTERVAL ${sentinelGap.getSeconds} SECONDS")).as("ts"))
-      .select(lit(-1L).as("id"), col("ts"), lit(0L).as("seq"), lit(0L).as("v"))
-    val dir = scratch("idle-")
-    rows.unionByName(sentinel).write.parquet(s"$dir/in")
-    val src = spark.readStream
-      .schema("id BIGINT, ts TIMESTAMP, seq BIGINT, v BIGINT")
-      .parquet(s"$dir/in")
-    val out = QuotaAlert.idleSessions(src, gap, watermark).toDF()
-    runToSink(spark, out, dir)
-      .where(col("user_id") =!= -1L)
-      .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
-  }
+                        sentinelGap: Duration): DataFrame =
+    sentinelReplay(spark, "idle-", Seq(input),
+        Seq("id" -> "bigint", "ts" -> "timestamp", "seq" -> "bigint",
+          "v" -> "bigint"), -1L, sentinelGap, "user_id", "session_start")(
+      QuotaAlert.idleSessions(_, gap, watermark).toDF())
 
   /** Replay two keyed `(event_id, ts, user_id)` frames through
     * [[Speed.joinWithin]] (the watermark-bounded stream-stream INNER join)

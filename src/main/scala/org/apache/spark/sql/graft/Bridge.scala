@@ -58,4 +58,11 @@ object Bridge {
     * exactly this call; `private[sql]`, hence bridged here. */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+
+  /** Block until the listener bus has delivered every event posted so
+    * far, so a listener's counts are complete when this returns (a job's
+    * task, stage and job events are posted before its action returns).
+    * `listenerBus` is `private[spark]`, hence bridged. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

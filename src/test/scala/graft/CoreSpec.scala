@@ -193,20 +193,22 @@ class CoreSpec extends SparkSpec {
   }
 
   /** `file:line: code` for every code line (comments skipped) of a
-    * `src/main` Scala file, other than those ending in `exempt`, that
+    * `src/<tree>` Scala file, other than those ending in `exempt`, that
     * matches one of `patterns`. */
   private def sourceHits(patterns: Seq[scala.util.matching.Regex],
-                         exempt: Seq[String]): Seq[String] = {
+                         exempt: Seq[String],
+                         tree: String = "main"): Seq[String] = {
     val src = Iterator.iterate(new java.io.File(".").getCanonicalFile)(_.getParentFile)
-      .takeWhile(_ != null).map(new java.io.File(_, "src/main/scala"))
+      .takeWhile(_ != null).map(new java.io.File(_, s"src/$tree/scala"))
       .find(_.isDirectory)
-      .getOrElse(fail("no src/main/scala above the working directory"))
+      .getOrElse(fail(s"no src/$tree/scala above the working directory"))
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val files = scalaFiles(src)
-    assert(files.exists(_.getPath.endsWith("ext/Retrieval.scala")),
-      s"scan root $src holds no tier sources")
+    val anchor = if (tree == "main") "ext/Retrieval.scala" else "graft/CoreSpec.scala"
+    assert(files.exists(_.getPath.endsWith(anchor)),
+      s"scan root $src holds no $anchor")
     for {
       f <- files if !exempt.exists(f.getPath.endsWith)
       (line, n) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
@@ -258,5 +260,17 @@ class CoreSpec extends SparkSpec {
       "a tier names `<dir>/tombstones` or clears segments in place — " +
         "forget, read living, compact and rebuild through ext.Forget:\n" +
         hits.mkString("\n"))
+  }
+
+  test("measurements go through Trace, and ProfileQ is the one profile harness (source scan)") {
+    val listeners = sourceHits(
+      Seq("(new|extends|with)\\s+[\\w.]*\\b(SparkListener|QueryExecutionListener)\\b".r),
+      exempt = Seq("graft/Trace.scala"), tree = "test")
+    val harnesses = sourceHits(Seq("\\bobject Profile(?!Q\\b)\\w+".r),
+      exempt = Nil, tree = "test")
+    assert(listeners.isEmpty && harnesses.isEmpty,
+      "a hand-rolled listener or profile harness in src/test — count " +
+        "actions with Trace.measure, profile a query with ProfileQ:\n" +
+        (listeners ++ harnesses).mkString("\n"))
   }
 }

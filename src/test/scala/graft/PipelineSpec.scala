@@ -15,7 +15,9 @@ import graft.streaming.Pipeline.Tier
   *    uncrashed twin on every tier and on the fps set; committing fps
   *    FIRST instead loses the batch from every index tier.
   *  - resources: an ingest leaves no persisted RDD behind, fresh or
-  *    redelivered, and the bloom screen reads its batch once.
+  *    redelivered, its actions stay within budget ([[Trace]]), and the
+  *    bloom screen reads its batch once and prints its filter as a
+  *    digest.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -145,41 +147,16 @@ class PipelineSpec extends SparkSpec {
 
   test("ingest action budget: fresh batch and full redelivery") {
     val st = mk("pipe-actions")
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = actions.incrementAndGet()
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = actions.incrementAndGet()
-    }
-    // listener delivery is async — poll until the count is quiet
-    def drained(): Int = {
-      var last = actions.get(); var lastChange = System.currentTimeMillis
-      while (System.currentTimeMillis - lastChange < 800) {
-        Thread.sleep(100)
-        val cur = actions.get()
-        if (cur != last) { last = cur; lastChange = System.currentTimeMillis }
-      }
-      last
-    }
-    spark.listenerManager.register(listener)
-    try {
-      drained(); actions.set(0)
-      st.p.ingest(b0)
-      val fresh = drained(); actions.set(0)
-      st.p.ingest(b0)
-      val redelivered = drained()
-      // fresh: the screen's filter read, the one freezing count, the
-      // four tier appends (7 together), then the bloom ingest's filter
-      // read, aggregate, filter write and fps segment write. Redelivered:
-      // the filter read, the count, the bloom ingest's read and its
-      // no-op aggregate — no append, no write.
-      assert(fresh <= 13, s"a fresh ingest ran $fresh actions")
-      assert(redelivered <= 4,
-        s"a redelivered ingest ran $redelivered actions")
-    } finally spark.listenerManager.unregister(listener)
+    val fresh = Trace.measure(spark)(st.p.ingest(b0))
+    val redelivered = Trace.measure(spark)(st.p.ingest(b0))
+    // fresh: the screen's filter read, the one freezing count, the
+    // four tier appends (7 together), then the bloom ingest's filter
+    // read, aggregate, filter write and fps segment write. Redelivered:
+    // the filter read, the count, the bloom ingest's read and its
+    // no-op aggregate — no append, no write.
+    assert(fresh.actions.size <= 13, "\n" + fresh.render("fresh ingest"))
+    assert(redelivered.actions.size <= 4,
+      "\n" + redelivered.render("redelivered ingest"))
   }
 
   private def flatten(n: SparkPlan): Seq[SparkPlan] = n match {
@@ -203,5 +180,18 @@ class PipelineSpec extends SparkSpec {
       case _ => false
     }
     assert(scans == 1, s"the batch was scanned $scans times")
+  }
+
+  test("a default-size bloom screen prints its filter as a digest") {
+    val bloom = tmpDir("pipe-bloom-default") + "/bloom"
+    ext.Dedup.writeBloomIndex(rec.where($"doc_id" < 10), "text", bloom)
+    val fresh = ext.Dedup.dedupIncrementalBloomFromIndex(rec, "doc_id",
+      "text", bloom)
+    assert(fresh.collect().map(_.getAs[Long]("doc_id")).toSet ==
+      (10L until 16L).toSet, "the screen must admit exactly the new docs")
+    // a binary Literal would print the 1 MiB filter as 2 MiB of hex
+    val plan = fresh.queryExecution.toString
+    assert(plan.length < 64 * 1024, s"the plan renders in ${plan.length} chars")
+    assert(plan.contains("bloom(8388608 bits, "))
   }
 }

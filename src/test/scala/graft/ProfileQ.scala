@@ -1,32 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Ad-hoc per-query timing: sbt "Test/runMain graft.ProfileQ <name>[,<name>…] [sfDir]"
-  * — same session config as Bench, min-of-two like the bench, so numbers
-  * are comparable without running the whole suite. */
+/** Per-query profile: sbt "Test/runMain graft.ProfileQ <name>[,<name>…] [sfDir]",
+  * a name being a query's full name or its id before the first `_`
+  * (`pipe1s`, `d2`). Bench's session ([[Bench.session]]); each query
+  * runs twice through the noop sink, like the bench, and the faster
+  * run's [[Trace]] report is printed — wall split into payload and fixed
+  * cost, then one line per action naming the engine line that ran it —
+  * followed by its five slowest actions. */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(',').toSeq)
       .getOrElse(sys.error("usage: ProfileQ <query>[,<query>…] [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+      val fn = SparkEntry.queries.collectFirst {
+        case (q, f) if q == name || q.startsWith(name + "_") => f
+      }.getOrElse(sys.error(s"ProfileQ: no query named $name"))
+      def once(): Trace.Report = {
+        val r = Trace.measure(spark)(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        spark.catalog.clearCache()
+        r
       }
-      println(f"PROFQ $name%-28s ${math.min(once(), once())}%7.2f s (min of 2)")
+      val best = Seq(once(), once()).minBy(_.wallMs)
+      println(best.render(s"PROFQ $name (faster of 2)"))
+      println(s"PROFQ $name five slowest actions:")
+      Trace.rows(best.actions.sortBy(-_.wallMs).take(5), best.cores)
+        .foreach(println)
     }
     spark.stop()
   }

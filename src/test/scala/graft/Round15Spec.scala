@@ -137,50 +137,25 @@ class Round15Spec extends SparkSpec {
     val dir = tmpDir("knn-jobs") + "/g"
     ext.Similarity.writeKnnGraph(vecs.where($"vec_id" < 20),
       "vec_id", "embedding", dir, k = 3)
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = actions.incrementAndGet()
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    // listener delivery is async — poll until the count is quiet
-    def drained(): Int = {
-      val deadline = System.currentTimeMillis + 20000
-      var last = actions.get(); var lastChange = System.currentTimeMillis
-      while (System.currentTimeMillis < deadline &&
-             System.currentTimeMillis - lastChange < 800) {
-        Thread.sleep(100)
-        val cur = actions.get()
-        if (cur != last) { last = cur; lastChange = System.currentTimeMillis }
-      }
-      last
-    }
-    spark.listenerManager.register(listener)
-    try {
-      ext.Similarity.ingestKnnBatch(vecs.where($"vec_id" >= 20),
-        "vec_id", "embedding", dir)
-      val freshActions = drained()
-      assert(freshActions <= 2,
-        s"fresh kNN ingest ran $freshActions actions — the budget is the " +
-          "stats job plus ONE combined version write (r17: graph + " +
-          "vector copy + meta ride one kind-partitioned data relation)")
-      val versionsAfter = new java.io.File(s"$dir/versions").listFiles()
-        .count(f => !f.getName.endsWith("__tmp"))
-      actions.set(0)
-      // full redelivery: exactly the stats probe, no new version
-      ext.Similarity.ingestKnnBatch(vecs.where($"vec_id" >= 20),
-        "vec_id", "embedding", dir)
-      val redelActions = drained()
-      assert(redelActions <= 1,
-        s"redelivered kNN ingest ran $redelActions actions — it must " +
-          "no-op off the single stats probe")
-      assert(new java.io.File(s"$dir/versions").listFiles()
-        .count(f => !f.getName.endsWith("__tmp")) == versionsAfter,
-        "a redelivered batch must not write a version")
-    } finally spark.listenerManager.unregister(listener)
+    val fresh = Trace.measure(spark)(ext.Similarity.ingestKnnBatch(
+      vecs.where($"vec_id" >= 20), "vec_id", "embedding", dir))
+    assert(fresh.actions.size <= 2,
+      s"fresh kNN ingest ran ${fresh.actions.size} actions — the budget is " +
+        "the stats job plus ONE combined version write (r17: graph + " +
+        "vector copy + meta ride one kind-partitioned data relation)\n" +
+        fresh.render("fresh kNN ingest"))
+    val versionsAfter = new java.io.File(s"$dir/versions").listFiles()
+      .count(f => !f.getName.endsWith("__tmp"))
+    // full redelivery: exactly the stats probe, no new version
+    val redelivered = Trace.measure(spark)(ext.Similarity.ingestKnnBatch(
+      vecs.where($"vec_id" >= 20), "vec_id", "embedding", dir))
+    assert(redelivered.actions.size <= 1,
+      s"redelivered kNN ingest ran ${redelivered.actions.size} actions — " +
+        "it must no-op off the single stats probe\n" +
+        redelivered.render("redelivered kNN ingest"))
+    assert(new java.io.File(s"$dir/versions").listFiles()
+      .count(f => !f.getName.endsWith("__tmp")) == versionsAfter,
+      "a redelivered batch must not write a version")
     // and the consolidated path answers identically to from-scratch
     val got = ext.Similarity.knnGraphFromIndex(spark, dir)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq

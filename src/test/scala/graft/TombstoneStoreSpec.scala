@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * answer them identically.
   *  - forget / compact: the four segmented tiers (postings, eval suite,
   *    IVF, PQ);
-  *  - rebuild: the four rebuildable tiers (postings, IVF, PQ, kNN) — a
+  *  - rebuild: all five tiers (postings, eval suite, IVF, PQ, kNN) — a
   *    rebuild keeps forgotten ids forgotten, and a crash inside its swap
   *    leaves a store that reads, appends and forgets like one that never
   *    rebuilt.
@@ -140,7 +140,7 @@ class TombstoneStoreSpec extends SparkSpec {
       assert(ids(t, dir).contains(20L), "after compact the id re-appends")
     }
 
-  for (t <- Seq(postings, ivf, pq, knn))
+  for (t <- Seq(postings, evalSuite, ivf, pq, knn))
     test(s"${t.name}: a rebuild keeps forgotten ids forgotten") {
       val dir = tmpDir(s"tomb-rebuild-${slug(t)}") + "/store"
       t.build(range(t, 0, 12), dir)
@@ -150,7 +150,7 @@ class TombstoneStoreSpec extends SparkSpec {
         "the head read after the rebuild excludes the forgotten id")
     }
 
-  for (t <- Seq(postings, ivf, pq, knn))
+  for (t <- Seq(postings, evalSuite, ivf, pq, knn))
     test(s"${t.name}: a rebuild crashed inside its swap heals on head, as-of, append and forget") {
       val ctl = tmpDir(s"tomb-ctl-${slug(t)}") + "/store"
       val dir = tmpDir(s"tomb-crash-${slug(t)}") + "/store"
