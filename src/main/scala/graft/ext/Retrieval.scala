@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Num
@@ -34,45 +34,90 @@ object Retrieval {
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: Seq[(Int, Seq[String])], k: Int = 5,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val toks = graft.core.Par.fanOut(docs.select(col(idCol).cast("long").as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("toks")))
+    val toks = tokenized(docs, idCol, textCol)
     // corpus totals: one bounded scalar row
     val n = toks.agg(count(lit(1)).as("n_docs"),
       sum(size(col("toks"))).as("n_toks"))
-    val tf = toks.select(col("doc_id"), size(col("toks")).as("len_d"),
-        explode_outer(col("toks")).as("term"))
-      .where(col("term").isNotNull) // see TextAnalysis.termStats
-      .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
     // the query VOCABULARY (distinct terms) semi-filters the postings
     // before anything wide happens; both relations are bounded → explicit
     // broadcast is safe (the repo's bounded-relation rule)
-    val qvocab = queries.flatMap(_._2).distinct.toDF("term")
-    val qmap = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-      .toDF("query_id", "term")
-    val cand = tf.join(broadcast(qvocab), "term")
+    val (qvocab, qmap) = queryTerms(docs.sparkSession, queries)
+    val cand = postingsOf(toks).join(broadcast(qvocab), "term")
     // document frequency per (query) term over the candidate slice — the
     // slice holds EVERY posting of each query term, so this IS the corpus
     // df; window over the term-keyed slice, no self-join
     val withDf = cand.withColumn("dft",
       count(lit(1)).over(Window.partitionBy("term")))
-    // idf quantized at its libm boundary; everything after is pinned-order
-    // IEEE arithmetic mirrored verbatim by the oracle
-    val idf = round(log(((col("n_docs") - col("dft")).cast("double") + lit(0.5)) /
+    bm25Rank(withDf.crossJoin(broadcast(n)), qmap, col("n_docs"),
+      col("n_toks"), k, k1, b)
+  }
+
+  /** The (doc_id, toks) frame of a corpus — ids as long, text through the
+    * corpus tokenizer — behind the tokenize fan-out. */
+  private def tokenized(docs: DataFrame, idCol: String,
+                        textCol: String): DataFrame =
+    graft.core.Par.fanOut(docs.select(col(idCol).cast("long").as("doc_id"),
+      TextAnalysis.tokens(col(textCol)).as("toks")))
+
+  /** The (doc_id, len_d, term, tf) postings of a [[tokenized]] frame —
+    * the one derivation the inline scorer, the build and the append
+    * share. */
+  private def postingsOf(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), size(col("toks")).as("len_d"),
+        explode_outer(col("toks")).as("term"))
+      .where(col("term").isNotNull) // see TextAnalysis.termStats
+      .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
+
+  /** A bounded query set's vocabulary (term) — distinct terms, the
+    * semi-filter of every candidate slice — and its (query_id, term)
+    * map. */
+  private def queryTerms(spark: org.apache.spark.sql.SparkSession,
+                         queries: Seq[(Int, Seq[String])])
+      : (DataFrame, DataFrame) = {
+    import spark.implicits._
+    (queries.flatMap(_._2).distinct.toDF("term"),
+      queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
+        .toDF("query_id", "term"))
+  }
+
+  /** The stored-index probe of a query vocabulary: its bucket ids under
+    * the artifact's STORED bucket count — bounded by |vocabulary|, one
+    * tiny local job — become the returned filter's partition IN-literal,
+    * followed by the vocabulary semi-filter. Every posting of a query
+    * term lives in that term's bucket, so the pruned slice holds each
+    * term's full list. */
+  private def probe(qvocab: DataFrame, buckets: Int)
+      : DataFrame => DataFrame = {
+    val pbs = qvocab
+      .select(pmod(xxhash64(col("term")), lit(buckets.toLong)).as("pb"))
+      .distinct().collect().map(_.getLong(0)).toSeq
+    _.where(col("pb").isin(pbs: _*)).join(broadcast(qvocab), "term")
+  }
+
+  /** BM25 scoring + per-query rank over candidate rows (term, doc_id,
+    * len_d, tf, dft) — the one definition every query path answers
+    * through, so the inline and stored arithmetic cannot drift. Corpus
+    * totals are Columns: the inline scorer passes its broadcast totals
+    * row's columns, the stored paths literals. idf is quantized at its
+    * libm boundary; everything after is pinned-order IEEE arithmetic
+    * mirrored verbatim by the oracle. */
+  private def bm25Rank(cand: DataFrame, qmap: DataFrame, nDocs: Column,
+                       nToks: Column, k: Int, k1: Double,
+                       b: Double): DataFrame = {
+    val idf = round(log(((nDocs - col("dft")).cast("double") + lit(0.5)) /
       (col("dft").cast("double") + lit(0.5)) + lit(1.0)), 6)
     val tfd = col("tf").cast("double")
     val denom = tfd + lit(k1) * (lit(1.0 - b) +
-      lit(b) * ((col("len_d") * col("n_docs")) / col("n_toks")))
+      lit(b) * ((col("len_d") * nDocs) / nToks))
     val termScore = idf * (tfd * lit(k1 + 1.0)) / denom
-    val scored = withDf.crossJoin(broadcast(n))
-      .join(broadcast(qmap), "term")
+    val scored = cand.join(broadcast(qmap), "term")
       .groupBy("query_id", "doc_id")
       .agg(Num.dsum(termScore).as("score"))
     val rk = rank().over(Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("doc_id")))
     scored.withColumn("rk", rk).where(col("rk") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rk").cast("long").as("rk"))
+      .select(col("query_id"), col("doc_id"), col("score"),
+        col("rk").cast("long").as("rk"))
   }
 
   /** BUILD the stored POSTINGS index for [[bm25TopK]] — the lexical
@@ -86,50 +131,49 @@ object Retrieval {
     * frequency PRECOMPUTED at build; `meta` — one row (n_docs, n_toks,
     * buckets) of BASE corpus totals, the bucket count stored WITH the
     * artifact so the query side can never hash with mismatched
-    * parameters (the bf2 discipline). Since r17 `terms`/`meta` describe
-    * the BASE alone and are IMMUTABLE between build and compact —
-    * appends never rewrite them; the HEAD dictionary/totals derive at
-    * READ time by folding the committed segments onto them
-    * ([[headTermDict]]/[[headTotals]], Lucene's open-a-reader-over-a-
-    * segment-set design — per-append write amplification of the
-    * vocabulary-sized dictionary drops to zero).
+    * parameters (the bf2 discipline). `terms`/`meta` describe the BASE
+    * alone and are IMMUTABLE between build and compact — appends never
+    * rewrite them; the HEAD dictionary/totals derive at READ time by
+    * folding the committed segments onto them ([[headTermDict]]/
+    * [[foldedTotals]], Lucene's open-a-reader-over-a-segment-set design:
+    * no per-append write of the vocabulary-sized dictionary).
     *
     * Build shape: ONE corpus tokenize pass writes the postings; the term
-    * dictionary and corpus totals derive from the WRITTEN postings
-    * (columnar read-back — no second tokenize, no build-time cache of a
-    * corpus-sized frame). Every document has ≥ 1 posting (the tokenizer
-    * emits [""] for empty text), so n_docs/n_toks reconstruct exactly.
-    * The trio publishes as one new root ([[Forget.rebuild]]). */
+    * dictionary and corpus totals derive from ONE persisted read-back of
+    * the WRITTEN postings ([[writeSummaries]] — no second tokenize, no
+    * build-time cache of a corpus-sized frame). Every document has ≥ 1
+    * posting (the tokenizer emits [""] for empty text), so n_docs/n_toks
+    * reconstruct exactly. The trio publishes as one new root
+    * ([[Forget.rebuild]]). */
   def writePostingsIndex(docs: DataFrame, idCol: String, textCol: String,
                          dir: String, buckets: Int = 64): Unit = {
     require(buckets >= 1)
     val spark = docs.sparkSession
-    val toks = graft.core.Par.fanOut(docs.select(
-      col(idCol).cast("long").as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("toks")))
+    val toks = tokenized(docs, idCol, textCol)
     Forget.rebuild(spark, dir) { tmp =>
-      toks.select(col("doc_id"), size(col("toks")).as("len_d"),
-          explode_outer(col("toks")).as("term"))
-        .where(col("term").isNotNull)
-        .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
+      postingsOf(toks)
         .withColumn("pb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .write.partitionBy("pb").parquet(s"$tmp/postings")
-      // terms + meta derive from ONE read-back scan (r17, guide §2.4
-      // remove passes): the projection is the union of what both
-      // aggregates need (len_d stays columnar-pruned away), the terms
-      // write materializes the persist and the meta aggregate reads it —
-      // previously each aggregate paid its own base-postings scan.
+      // the projection is the union of what both summaries need (len_d
+      // stays columnar-pruned away); the terms write materializes the
+      // persist and the meta aggregate reads it
       val post = spark.read.parquet(s"$tmp/postings")
         .select(col("pb"), col("term"), col("doc_id"), col("tf"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        post.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
-          .write.partitionBy("pb").parquet(s"$tmp/terms")
-        post.agg(count_distinct(col("doc_id")).as("n_docs"),
-            sum(col("tf")).as("n_toks"), lit(buckets).as("buckets"))
-          .coalesce(1).write.parquet(s"$tmp/meta")
-      } finally post.unpersist(blocking = false)
+      try writeSummaries(post, tmp)(_.withColumn("buckets", lit(buckets)))
+      finally post.unpersist(blocking = false)
     }
+  }
+
+  /** Stage the BASE summaries of a (pb, term, doc_id, tf) postings
+    * relation under `tmp` — `terms/pb=…` (term, dft) and the 1-row `meta`
+    * (n_docs, n_toks, buckets) — shared by the build and the compact;
+    * `withBuckets` attaches the bucket count to the totals row. */
+  private def writeSummaries(post: DataFrame, tmp: String)
+                            (withBuckets: DataFrame => DataFrame): Unit = {
+    post.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
+      .write.partitionBy("pb").parquet(s"$tmp/terms")
+    withBuckets(postingsTotals(post)).coalesce(1).write.parquet(s"$tmp/meta")
   }
 
   /** The HEAD term dictionary (pb, term, dft): the immutable base
@@ -152,24 +196,24 @@ object Retrieval {
     }
   }
 
-  /** The HEAD corpus totals (n_docs, n_toks, buckets) in ONE bounded
-    * action: base meta + the committed segments' additive totals
-    * ([[segmentTotals]]). Like the stored meta it replaces, this is HEAD
-    * state INCLUSIVE of tombstoned documents until compact — Lucene's
-    * docFreq-includes-deletions semantics (the ret7 two-phase grade). */
-  private[graft] def headTotals(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): (Long, Long, Int) = {
+  /** The corpus totals (n_docs, n_toks, buckets) at head or `asOf`, in
+    * ONE bounded action: the base meta + the additive totals of the
+    * committed (or pinned-prefix) segments. Additive because the doc-id
+    * anti-join keeps segments doc-disjoint. Like the stored meta it
+    * extends, this INCLUDES tombstoned documents until compact —
+    * Lucene's docFreq-includes-deletions semantics (the ret7 two-phase
+    * grade). */
+  private[graft] def foldedTotals(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String,
+                                  asOf: Option[Long] = None): (Long, Long, Int) = {
     val meta = spark.read.parquet(s"$dir/meta")
-    segmentPostings(spark, graft.core.Artifacts.segments(spark, dir)) match {
-      case None =>
-        val m = meta.head(); (m.getLong(0), m.getLong(1), m.getInt(2))
-      case Some(sp) =>
-        val r = meta.crossJoin(segmentTotals(sp))
-          .select((col("n_docs") + col("seg_docs")).as("n_docs"),
-            (col("n_toks") + col("seg_toks")).as("n_toks"), col("buckets"))
-          .head()
-        (r.getLong(0), r.getLong(1), r.getInt(2))
-    }
+    val r = segmentPostings(spark,
+        graft.core.Artifacts.segments(spark, dir, asOf)).fold(meta) { sp =>
+      meta.crossJoin(postingsTotals(sp).toDF("seg_docs", "seg_toks"))
+        .select((col("n_docs") + col("seg_docs")).as("n_docs"),
+          (col("n_toks") + col("seg_toks")).as("n_toks"), col("buckets"))
+    }.head()
+    (r.getLong(0), r.getLong(1), r.getInt(2))
   }
 
   /** The full stored postings relation at head (segmented store, base
@@ -182,23 +226,20 @@ object Retrieval {
   /** MAINTAIN the stored postings index per ingest batch — the sim7
     * counterpart for the lexical index: new documents tokenize ONCE and
     * their postings land as a NEW pb-partitioned SEGMENT under the
-    * artifact's STORED bucket count. Nothing else writes (r17): the HEAD
+    * artifact's STORED bucket count. Nothing else writes: the HEAD
     * dictionary and corpus totals derive at READ time by folding the
     * committed segments onto the immutable base summaries
-    * ([[headTermDict]]/[[headTotals]] — dft, n_docs and n_toks are all
+    * ([[headTermDict]]/[[foldedTotals]] — dft, n_docs and n_toks are all
     * ADDITIVE across the base/segment partition because the doc-id
     * anti-join keeps segments doc-disjoint, so the derivation is
-    * value-identical to a full-store rebuild, Round16Spec pins it).
-    * Until r16 each append re-derived and swapped the whole stored
-    * dictionary (O(vocabulary) write amplification per batch); r16 made
-    * the derivation O(segments); r17 moves it to the read side — the
-    * Lucene design exactly (a reader opens a named segment set and
-    * merges dictionaries on the fly; appends only add segments). A
-    * periodic [[compactPostingsIndex]] folds segments into a new base,
-    * which is what keeps the read-side segment fold bounded. That is
-    * NOT `meta += batch` arithmetic, which remains forbidden: every
-    * read re-derives from what actually COMMITTED, so no crash can ever
-    * leave a stale head state anywhere — there is no stored head state.
+    * value-identical to a full-store rebuild, Round16Spec pins it) — the
+    * Lucene design (a reader opens a named segment set and merges
+    * dictionaries on the fly; appends only add segments). A periodic
+    * [[compactPostingsIndex]] folds segments into a new base, which is
+    * what keeps the read-side segment fold bounded. That is NOT
+    * `meta += batch` arithmetic, which remains forbidden: every read
+    * re-derives from what actually COMMITTED, so no crash can ever leave
+    * a stale head state anywhere — there is no stored head state.
     *
     * Idempotence under at-least-once retry: the batch anti-joins the
     * stored postings' doc ids first (an id-column-only columnar probe —
@@ -215,17 +256,12 @@ object Retrieval {
       .join(postingsRelation(spark, dir).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
     // the stored bucket count rides the segment-write job as a broadcast
-    // 1-row scalar (r16 — previously a separate meta.head() action per
-    // append; explicit broadcast is the 1-row-scalar case the repo's
-    // broadcast policy allows).
+    // 1-row scalar, not a separate meta.head() action per append
+    // (explicit broadcast is the 1-row-scalar case the repo's broadcast
+    // policy allows)
     val bucketsCol = broadcast(
       spark.read.parquet(s"$dir/meta").select(col("buckets")))
-    val posted = graft.core.Par.fanOut(fresh.select(col("doc_id"),
-        TextAnalysis.tokens(col("__text")).as("toks")))
-      .select(col("doc_id"), size(col("toks")).as("len_d"),
-        explode_outer(col("toks")).as("term"))
-      .where(col("term").isNotNull)
-      .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
+    val posted = postingsOf(tokenized(fresh, "doc_id", "__text"))
       .crossJoin(bucketsCol)
       .withColumn("pb", pmod(xxhash64(col("term")), col("buckets").cast("long")))
       .drop("buckets")
@@ -236,9 +272,9 @@ object Retrieval {
   /** The union of a committed-segment path list under the pinned
     * [[segmentSchema]] (None when no segments committed) — the ONE
     * definition of "postings rows of these segments" shared by the
-    * read-time head summaries ([[headTermDict]], [[headTotals]]) and the
-    * as-of totals fast path (the pinned [[bm25TopKFromIndex]]), so the
-    * segment layout can never drift between its additivity consumers. */
+    * read-time head dictionary ([[headTermDict]]) and the head or pinned
+    * totals fold ([[foldedTotals]]), so the segment layout can never
+    * drift between its additivity consumers. */
   private def segmentPostings(spark: org.apache.spark.sql.SparkSession,
                               segPaths: Seq[String]): Option[DataFrame] =
     segPaths.map(sp =>
@@ -246,12 +282,12 @@ object Retrieval {
           .select(col("pb"), col("term"), col("doc_id"), col("tf")))
       .reduceOption(_ unionByName _)
 
-  /** The additive corpus totals of a postings-row frame — 1 row
-    * (seg_docs, seg_toks); `coalesce` keeps the empty frame a 0, not a
-    * NULL that would poison the fold. */
-  private def segmentTotals(post: DataFrame): DataFrame =
-    post.agg(count_distinct(col("doc_id")).as("seg_docs"),
-      coalesce(sum(col("tf")), lit(0L)).as("seg_toks"))
+  /** The corpus totals of a postings-row frame — 1 row (n_docs, n_toks);
+    * `coalesce` keeps the empty frame a 0, not a NULL that would poison
+    * a fold. */
+  private def postingsTotals(post: DataFrame): DataFrame =
+    post.agg(count_distinct(col("doc_id")).as("n_docs"),
+      coalesce(sum(col("tf")), lit(0L)).as("n_toks"))
 
   /** The postings row schema as read back from any committed root —
     * pinned so EMPTY segments (a fully-landed batch's retry commits one)
@@ -308,14 +344,10 @@ object Retrieval {
     Forget.compactStore(spark, dir, "postings", "doc_id",
         "compactPostingsIndex") { (living, tmp) =>
       living.write.partitionBy("pb").parquet(s"$tmp/postings")
-      living.groupBy("pb", "term").agg(count(lit(1)).as("dft"))
-        .write.partitionBy("pb").parquet(s"$tmp/terms")
-      // the staged terms/meta ARE the new base summaries (r17); the
-      // stored bucket count rides the meta job as a 1-row cross join
-      living.agg(count_distinct(col("doc_id")).as("n_docs"),
-          coalesce(sum(col("tf")), lit(0L)).as("n_toks"))
-        .crossJoin(spark.read.parquet(s"$dir/meta").select("buckets"))
-        .coalesce(1).write.parquet(s"$tmp/meta")
+      // the staged terms/meta ARE the new base summaries; the stored
+      // bucket count rides the meta job as a 1-row cross join
+      writeSummaries(living, tmp)(_.crossJoin(
+        spark.read.parquet(s"$dir/meta").select("buckets")))
     }
 
   /** [[bm25TopK]] answered from the STORED index: the query vocabulary
@@ -327,9 +359,9 @@ object Retrieval {
     * dictionary ([[headTermDict]] — the base dictionary + the committed
     * segments folded at read time, never a window over the candidate
     * slice) and corpus totals ride as literals from ONE bounded
-    * [[headTotals]] action. Identical results to the inline [[bm25TopK]]
-    * for any corpus and query set: same postings, same df values, same
-    * pinned-order scoring arithmetic.
+    * [[foldedTotals]] action. Identical results to the inline
+    * [[bm25TopK]] for any corpus and query set: same postings, same df
+    * values, same scoring arithmetic ([[bm25Rank]]).
     *
     * `asOf = Some(v)` answers AS OF pinned index version `v` — the
     * reproducibility verb a training pipeline needs ("re-run yesterday's
@@ -339,12 +371,10 @@ object Retrieval {
     * pinned read that used them would mix today's df into yesterday's
     * candidates and drift every score; deriving from the pinned postings
     * is Lucene's "open a reader over a named segment set"). The df
-    * derivation adds no extra scan: every posting of a query term lives
-    * in that term's hash bucket, so the pb-pruned candidate slice already
-    * holds the term's FULL posting list and dft is one count over it;
-    * only the 2-value corpus-totals aggregate reads the unpruned pinned
-    * relation (one columnar pass, collected as 1 driver row). Current
-    * tombstones apply to pins ([[postingsLiving]]). */
+    * derivation adds no extra scan: the pb-pruned candidate slice already
+    * holds each query term's FULL posting list ([[probe]]), so dft is one
+    * count over it. Current tombstones apply to pins
+    * ([[postingsLiving]]). */
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
                         queries: Seq[(Int, Seq[String])], dir: String,
                         k: Int = 5, k1: Double = 1.2, b: Double = 0.75,
@@ -355,100 +385,47 @@ object Retrieval {
   private def bm25Head(spark: org.apache.spark.sql.SparkSession,
                        queries: Seq[(Int, Seq[String])], dir: String,
                        k: Int, k1: Double, b: Double): DataFrame = {
-    import spark.implicits._
     graft.core.Artifacts.heal(spark, dir)
-    val (nDocs, nToks, buckets) = headTotals(spark, dir)
-    val qvocab = queries.flatMap(_._2).distinct.toDF("term")
-    val qmap = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-      .toDF("query_id", "term")
-    // bounded: ≤ |query vocabulary| bucket ids, hashed under the STORED
-    // bucket count — one tiny local job, inlined as the IN-filter literal
-    val pbs = qvocab
-      .select(pmod(xxhash64(col("term")), lit(buckets.toLong)).as("pb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val (nDocs, nToks, buckets) = foldedTotals(spark, dir)
+    val (qvocab, qmap) = queryTerms(spark, queries)
+    val inBuckets = probe(qvocab, buckets)
     // LIVING view: tombstoned documents leave the candidate set at once;
     // df/meta stay head-state until compact (the Lucene pre-merge
     // semantics — forgetFromPostingsIndex scaladoc, Round11Spec pins
     // both phases). The pb filter pushes below the head-dict fold into
     // every root's partition pruning.
-    val post = postingsLiving(spark, dir)
-      .where(col("pb").isin(pbs: _*)).join(broadcast(qvocab), "term")
-    val dict = headTermDict(spark, dir)
-      .where(col("pb").isin(pbs: _*)).join(broadcast(qvocab), "term")
+    val post = inBuckets(postingsLiving(spark, dir))
+    val dict = inBuckets(headTermDict(spark, dir))
       .select(col("term"), col("dft"))
-    bm25RankStored(post, dict, qmap, nDocs, nToks, k, k1, b)
-  }
-
-  /** The pinned-order BM25 scoring + rank block shared by every
-    * stored-index query path (the head and the pinned
-    * [[bm25TopKFromIndex]] answer through this ONE definition, so
-    * their arithmetic cannot drift — the pqAnswer device). */
-  private def bm25RankStored(post: DataFrame, dict: DataFrame,
-                             qmap: DataFrame, nDocs: Long, nToks: Long,
-                             k: Int, k1: Double, b: Double): DataFrame = {
-    val idf = round(log(((lit(nDocs) - col("dft")).cast("double") + lit(0.5)) /
-      (col("dft").cast("double") + lit(0.5)) + lit(1.0)), 6)
-    val tfd = col("tf").cast("double")
-    val denom = tfd + lit(k1) * (lit(1.0 - b) +
-      lit(b) * ((col("len_d") * lit(nDocs)) / lit(nToks)))
-    val termScore = idf * (tfd * lit(k1 + 1.0)) / denom
-    val scored = post.join(dict, "term")
-      .join(broadcast(qmap), "term")
-      .groupBy("query_id", "doc_id")
-      .agg(Num.dsum(termScore).as("score"))
-    val rk = rank().over(Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id")))
-    scored.withColumn("rk", rk).where(col("rk") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"),
-        col("rk").cast("long").as("rk"))
+    bm25Rank(post.join(dict, "term"), qmap, lit(nDocs), lit(nToks),
+      k, k1, b)
   }
 
   private def bm25Pinned(spark: org.apache.spark.sql.SparkSession,
                          queries: Seq[(Int, Seq[String])], dir: String,
                          asOf: Long, k: Int, k1: Double,
                          b: Double): DataFrame = {
-    import spark.implicits._
     val pinned = postingsLiving(spark, dir, Some(asOf))
-    // Pinned corpus totals. Fast path (r16): when nothing was ever
-    // forgotten, totals are additive across the doc-disjoint base +
-    // pinned-segment-prefix partition — the 1-row base meta + an
-    // aggregate of the (batch-sized) pinned segments replaces the full
-    // pinned-relation columnar pass, and buckets ride the SAME bounded
-    // action (r17 — previously a separate meta.head()). Tombstones break
-    // the additivity shortcut (the pinned relation excludes them and the
-    // summaries do not), so any tombstone store falls back to the exact
-    // full aggregate — value-identical either way.
-    val meta = spark.read.parquet(s"$dir/meta")
+    // Pinned corpus totals. When nothing was ever forgotten they are
+    // additive across the doc-disjoint base + pinned-segment-prefix
+    // partition ([[foldedTotals]]: the 1-row base meta + an aggregate of
+    // the batch-sized pinned segments, not a full pinned-relation pass).
+    // Tombstones break the additivity shortcut (the pinned relation
+    // excludes them and the summaries do not), so any tombstone store
+    // takes the exact full aggregate — value-identical either way.
     val (nDocs, nToks, buckets) =
-      if (Forget.tombstones(spark, dir, "doc_id").isEmpty) {
-        segmentPostings(spark,
-            graft.core.Artifacts.segments(spark, dir, Some(asOf))) match {
-          case None =>
-            val m = meta.head(); (m.getLong(0), m.getLong(1), m.getInt(2))
-          case Some(sp) =>
-            val r = meta.crossJoin(segmentTotals(sp))
-              .select((col("n_docs") + col("seg_docs")).as("n_docs"),
-                (col("n_toks") + col("seg_toks")).as("n_toks"),
-                col("buckets"))
-              .head()
-            (r.getLong(0), r.getLong(1), r.getInt(2))
-        }
-      } else {
-        val totals = pinned.agg(count_distinct(col("doc_id")),
-            coalesce(sum(col("tf")), lit(0L)))
-          .crossJoin(meta.select(col("buckets"))).head()
-        (totals.getLong(0), totals.getLong(1), totals.getInt(2))
+      if (Forget.tombstones(spark, dir, "doc_id").isEmpty)
+        foldedTotals(spark, dir, Some(asOf))
+      else {
+        val t = postingsTotals(pinned).crossJoin(
+          spark.read.parquet(s"$dir/meta").select(col("buckets"))).head()
+        (t.getLong(0), t.getLong(1), t.getInt(2))
       }
-    val qvocab = queries.flatMap(_._2).distinct.toDF("term")
-    val qmap = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-      .toDF("query_id", "term")
-    val pbs = qvocab
-      .select(pmod(xxhash64(col("term")), lit(buckets.toLong)).as("pb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val post = pinned
-      .where(col("pb").isin(pbs: _*)).join(broadcast(qvocab), "term")
+    val (qvocab, qmap) = queryTerms(spark, queries)
+    val post = probe(qvocab, buckets)(pinned)
     val dict = post.groupBy("term").agg(count(lit(1)).as("dft"))
-    bm25RankStored(post, dict, qmap, nDocs, nToks, k, k1, b)
+    bm25Rank(post.join(dict, "term"), qmap, lit(nDocs), lit(nToks),
+      k, k1, b)
   }
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR'09) of N retrieval
@@ -509,9 +486,7 @@ object Retrieval {
     // term would silently match every empty document's sentinel token
     require(pterms.forall(_._3.nonEmpty), "phrases must be non-blank")
     val vocab = pterms.map(_._3).distinct
-    val pos0 = graft.core.Par.fanOut(docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("toks")))
+    val pos0 = tokenized(docs, idCol, textCol)
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("p0", "term")))
       .where(col("term").isin(vocab: _*))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("term"))
@@ -569,9 +544,7 @@ object Retrieval {
     val spark = docs.sparkSession
     import spark.implicits._
     val vocab = pairs.flatMap(p => Seq(p._2, p._3)).distinct
-    val pos = graft.core.Par.fanOut(docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("toks")))
+    val pos = tokenized(docs, idCol, textCol)
       .select(col("doc_id"), posexplode(col("toks")).as(Seq("p0", "term")))
       .where(col("term").isin(vocab: _*))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("term"))

@@ -219,24 +219,12 @@ object Similarity {
     * happens once, in the graded read projection. */
   private def knnGraphRaw(corpus: DataFrame, idCol: String, vecCol: String,
                           k: Int, blocks: Int): DataFrame = {
-    val b = blocks.toLong
     // norms compute BELOW the fan-out exchange so it materializes
     // (id, v, nrm) and BOTH tile sides read a ReusedExchange (the d2/d3
     // single-pass discipline) — one norm pass regardless of consumers
     val v = graft.core.Par.fanOut(corpus.select(col(idCol).as("id"),
       toDouble(col(vecCol)).as("v"), l2norm(col(vecCol)).as("nrm")))
-    val tiles = sequence(lit(0L), lit(b - 1L))
-    val q = v.select(col("id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), pmod(xxhash64(col("id")), lit(b)).as("qb"),
-        explode(tiles).as("nb"))
-    val n = v.select(col("id").as("neighbor_id"), col("v").as("nv"),
-        col("nrm").as("nn"), pmod(xxhash64(col("id")), lit(b)).as("nb"),
-        explode(tiles).as("qb"))
-    val scored = q.join(n, Seq("qb", "nb"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-    knnTopK(scored, k)
+    knnTopK(tiledPairScores(v, v, blocks), k)
   }
 
   /** BUILD the stored kNN GRAPH — the graph tier's sim6/pq2: semantic
@@ -306,6 +294,18 @@ object Similarity {
       .write.mode("overwrite").partitionBy("kind").parquet(s"$tmp/data")
   }
 
+  /** Commit version head + 1 of the artifact at `dir` — the append's and
+    * the forget-repair's one version write: graph + vector copy +
+    * re-emitted immutable meta in ONE action ([[writeKnnVersionData]]),
+    * staged through [[graft.core.Artifacts.stageCommit]] so a crash
+    * leaves the previous version as the head, never a torn trio. */
+  private def commitNextKnnVersion(dir: String, head: String,
+                                   graph: DataFrame, vectors: DataFrame,
+                                   k: Int, blocks: Int): Unit =
+    graft.core.Artifacts.stageCommit(vectors.sparkSession,
+        knnVersionDir(dir, knnVersionNum(head) + 1))(
+      writeKnnVersionData(_, graph, vectors, k, blocks))
+
   private def readKnnData(spark: org.apache.spark.sql.SparkSession,
                           versionDir: String): DataFrame =
     spark.read.parquet(s"$versionDir/data")
@@ -351,26 +351,31 @@ object Similarity {
     new org.apache.hadoop.fs.Path(versionDir).getName
       .stripPrefix("v_").toLong
 
-  /** Tiled pair scores between a query-node set and a corpus side (both
-    * (id, v) in double space) — [[knnGraphRaw]]'s 2-D block decomposition
-    * with the two sides independent relations (the forget-repair shape:
-    * affected nodes × survivors). No cartesian, no forced broadcast; when
-    * the query side is small AQE converts the tile equi-join to a runtime
-    * broadcast on its own. */
-  private def tiledPairScores(qn: DataFrame, nn: DataFrame,
-                              blocks: Int): DataFrame = {
+  /** The kNN tier's one pair scorer — the build, the append and the
+    * forget-repair all score through it. Both sides are (id, v, nrm)
+    * frames in double space; the pair space tiles with
+    * [[knnGraphExact]]'s 2-D block decomposition (each side keys on
+    * hash(id) mod `blocks` and replicates across the other axis's
+    * tiles, so every pair meets in exactly one tile of a plain
+    * equi-join). No cartesian, no forced broadcast; when one side is
+    * small AQE converts the tile equi-join to a runtime broadcast on its
+    * own. `carry` are neighbour-side columns kept in the output.
+    * Out: (query_id, neighbor_id, carry…, cos). */
+  private def tiledPairScores(q: DataFrame, n: DataFrame, blocks: Int,
+                              carry: Column*): DataFrame = {
     val b = blocks.toLong
     val tiles = sequence(lit(0L), lit(b - 1L))
-    val q = qn.select(col("id").as("query_id"), col("v").as("qv"),
-      l2norm(col("v")).as("qnrm"),
-      pmod(xxhash64(col("id")), lit(b)).as("qb"), explode(tiles).as("nb"))
-    val n = nn.select(col("id").as("neighbor_id"), col("v").as("nv"),
-      l2norm(col("v")).as("nnrm"),
-      pmod(xxhash64(col("id")), lit(b)).as("nb"), explode(tiles).as("qb"))
-    q.join(n, Seq("qb", "nb"))
+    val tile = explode(tiles)
+    val bucket = pmod(xxhash64(col("id")), lit(b))
+    val qs = q.select(col("id").as("query_id"), col("v").as("qv"),
+      col("nrm").as("qn"), bucket.as("qb"), tile.as("nb"))
+    val ns = n.select(Seq(col("id").as("neighbor_id"), col("v").as("nv"),
+      col("nrm").as("nn")) ++ carry ++ Seq(bucket.as("nb"), tile.as("qb")): _*)
+    val kept = n.select(carry: _*).columns.toSeq.map(col)
+    qs.join(ns, Seq("qb", "nb"))
       .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("nv")) / (col("qnrm") * col("nnrm"))).as("cos"))
+      .select(Seq(col("query_id"), col("neighbor_id")) ++ kept :+
+        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"): _*)
   }
 
   /** The kNN tier's one neighbour ranking: per query, `row_number` over
@@ -421,27 +426,15 @@ object Similarity {
     val tomb = Forget.tombstones(spark, dir, "id").getOrElse(return)
     val head = knnHeadDir(spark, dir)
     val vectors = readKnnVectors(spark, head)
-    // ONE labeled-union job answers every pre-repair probe (r16, the
-    // knnBatchStats device on the repair path — previously the pending
-    // semi-join isEmpty, the 1-row meta head() and the survivors
-    // limit(1).count() each paid their own ~fixed-overhead job per
-    // repair): pending count, survivor count and (k, blocks) in one
-    // bounded aggregate.
-    val pr = vectors.select(col("id"), lit(1).as("h"), lit(0).as("t"))
-      .unionByName(tomb.select(col("id"), lit(0).as("h"), lit(1).as("t")))
-      .groupBy("id").agg(max("h").as("ih"), max("t").as("it"))
-      .agg(count(when(col("ih") === 1 && col("it") === 1, 1)).as("n_pending"),
-        count(when(col("ih") === 1 && col("it") === 0, 1)).as("n_surv"))
-      .crossJoin(readKnnMeta(spark, head))
-      .head()
-    if (pr.getAs[Long]("n_pending") == 0L) return
-    val (k, blocks) = (pr.getAs[Int]("k"), pr.getAs[Int]("blocks"))
+    val st = knnBatchStats(head, vectors, None, Some(tomb))
+    if (st.nPending == 0L) return
+    require(st.nSurv > 0,
+      s"forgetFromKnnGraph: every node in $dir has been forgotten — an " +
+        "empty graph has no repaired form; drop the artifact instead")
     val survivors = vectors.join(tomb, Seq("id"), "left_anti")
+      .select(col("id"), col("v"), l2norm(col("v")).as("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      require(pr.getAs[Long]("n_surv") > 0,
-        s"forgetFromKnnGraph: every node in $dir has been forgotten — an " +
-          "empty graph has no repaired form; drop the artifact instead")
       val graph = readKnnGraphRows(spark, head)
       val tq = tomb.select(col("id").as("query_id"))
       // affected survivors: stored top-k contains a tombstoned neighbor —
@@ -458,16 +451,11 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"), col("cos"))
       val av = survivors.join(
         affected.select(col("query_id").as("id")), Seq("id"), "left_semi")
-      val recomputed = knnTopK(tiledPairScores(av, survivors, blocks), k)
+      val recomputed = knnTopK(tiledPairScores(av, survivors, st.blocks), st.k)
         .select(col("query_id"), col("neighbor_id"), col("cos"))
-      try {
-        graft.core.Artifacts.stageCommit(spark,
-            knnVersionDir(dir, knnVersionNum(head) + 1)) { tmp =>
-          // graph + vector copy + re-emitted immutable meta: ONE action
-          writeKnnVersionData(tmp, kept.union(recomputed), survivors,
-            k, blocks)
-        }
-      } finally affected.unpersist(blocking = false)
+      try commitNextKnnVersion(dir, head, kept.union(recomputed), survivors,
+        st.k, st.blocks)
+      finally affected.unpersist(blocking = false)
     } finally survivors.unpersist(blocking = false)
   }
 
@@ -527,8 +515,9 @@ object Similarity {
                        dir: String): Unit = {
     val spark = batch.sparkSession
     val head = knnHeadDir(spark, dir)
-    val st = knnBatchStats(spark,
-      batch.select(col(idCol).cast("long").as("id")), head, dir)
+    val st = knnBatchStats(head, readKnnVectors(spark, head),
+      Some(batch.select(col(idCol).cast("long").as("id"))),
+      Forget.tombstones(spark, dir, "id"))
     requireKnnGuards(st, dir)
     // fail LOUDLY on id collision instead of silently producing a graph
     // with duplicate nodes (the boruvka-claiming lesson: an undocumented
@@ -541,15 +530,15 @@ object Similarity {
     knnAppendImpl(batch, idCol, vecCol, dir, head, st.k, st.blocks)
   }
 
-  /** Every per-batch guard question of the kNN ingest/append path,
-    * answered by ONE bounded job (round-14 verdict #3 — the old path
-    * asked them as ~5 separate tiny jobs, each paying ~1 s fixed job
-    * overhead per micro-batch: the isEmpty probe, two tombstone-guard
-    * semi-joins, the duplicate-id count and the 1-row meta head() read).
-    * A labeled id union (batch ∪ head-vectors ∪ tombstones) groups by id
-    * once, a global aggregate counts each guard class, and a crossJoin
-    * with the 1-row meta returns (k, blocks) in the same collect. Costs
-    * exactly the id scans the old guards each paid separately — once.
+  /** Every guard question of the kNN append, ingest and forget-repair
+    * paths, answered by ONE bounded job: a labelled id union (batch ∪
+    * the `head` version's `vectors` ∪ tombstones; either end may be
+    * absent) groups by id once, a global aggregate counts each guard
+    * class — fresh, repeated and colliding batch ids, tombstones still
+    * in the head, batch ids under a tombstone, surviving head ids — and
+    * a crossJoin with the 1-row meta returns (k, blocks) in the same
+    * collect. Each guard is a scan of ids the verb reads anyway, and the
+    * fixed cost of a job is paid once per call, not once per question.
     *
     * Measured dead end (round 16), do NOT revisit: replacing this
     * labeled-union groupBy with broadcast-probe left joins over the head
@@ -563,33 +552,33 @@ object Similarity {
     * aggregate. The head-id shuffle stays bounded by the node-sized
     * artifact contract. */
   private case class KnnBatchStats(nFresh: Long, dupFresh: Long,
-    nCollide: Long, nPending: Long, nBatchTomb: Long, k: Int, blocks: Int)
+    nCollide: Long, nPending: Long, nBatchTomb: Long, nSurv: Long, k: Int,
+    blocks: Int)
 
-  private def knnBatchStats(spark: org.apache.spark.sql.SparkSession,
-                            batchIds: DataFrame, head: String,
-                            dir: String): KnnBatchStats = {
-    val bb = batchIds.select(col("id"),
-      lit(1L).as("b"), lit(0).as("h"), lit(0).as("t"))
-    val hh = readKnnVectors(spark, head).select(col("id"),
-      lit(0L).as("b"), lit(1).as("h"), lit(0).as("t"))
-    val labeled = Forget.tombstones(spark, dir, "id")
-      .map(_.select(col("id"), lit(0L).as("b"), lit(0).as("h"),
-        lit(1).as("t")))
-      .foldLeft(bb.unionByName(hh))(_ unionByName _)
-    val r = labeled.groupBy("id")
+  private def knnBatchStats(head: String, vectors: DataFrame,
+                            batchIds: Option[DataFrame],
+                            tomb: Option[DataFrame]): KnnBatchStats = {
+    def labelled(ids: DataFrame, b: Long, h: Int, t: Int): DataFrame =
+      ids.select(col("id"), lit(b).as("b"), lit(h).as("h"), lit(t).as("t"))
+    val r = (batchIds.map(labelled(_, 1L, 0, 0)).toSeq ++
+        Seq(labelled(vectors, 0L, 1, 0)) ++
+        tomb.map(labelled(_, 0L, 0, 1)))
+      .reduce(_ unionByName _)
+      .groupBy("id")
       .agg(sum("b").as("nb"), max("h").as("ih"), max("t").as("it"))
       .agg(
         count(when(col("nb") > 0 && col("ih") === 0, 1)).as("n_fresh"),
         count(when(col("nb") > 1 && col("ih") === 0, 1)).as("dup_fresh"),
         count(when(col("nb") > 0 && col("ih") === 1, 1)).as("n_collide"),
         count(when(col("it") === 1 && col("ih") === 1, 1)).as("n_pending"),
-        count(when(col("it") === 1 && col("nb") > 0, 1)).as("n_batch_tomb"))
-      .crossJoin(readKnnMeta(spark, head))
+        count(when(col("it") === 1 && col("nb") > 0, 1)).as("n_batch_tomb"),
+        count(when(col("it") === 0 && col("ih") === 1, 1)).as("n_surv"))
+      .crossJoin(readKnnMeta(vectors.sparkSession, head))
       .head()
     KnnBatchStats(r.getAs[Long]("n_fresh"), r.getAs[Long]("dup_fresh"),
       r.getAs[Long]("n_collide"), r.getAs[Long]("n_pending"),
-      r.getAs[Long]("n_batch_tomb"), r.getAs[Int]("k"),
-      r.getAs[Int]("blocks"))
+      r.getAs[Long]("n_batch_tomb"), r.getAs[Long]("n_surv"),
+      r.getAs[Int]("k"), r.getAs[Int]("blocks"))
   }
 
   /** The two tombstone guards both entries share (messages pinned by
@@ -608,15 +597,12 @@ object Similarity {
   /** The scoring + version-commit body shared by [[appendToKnnGraph]]
     * and [[ingestKnnBatch]] — callers have already run the guard stats
     * job; from here the only job is the ONE combined version write
-    * (graph + vector copy + re-emitted meta ride one `data/` relation
-    * since r17, [[writeKnnVersionData]] — it also materializes both
-    * persists). */
+    * ([[commitNextKnnVersion]] — it also materializes both persists). */
   private def knnAppendImpl(batch: DataFrame, idCol: String, vecCol: String,
                             dir: String, head: String, k: Int,
                             blocks: Int): Unit = {
     import org.apache.spark.storage.StorageLevel
     val spark = batch.sparkSession
-    val b = blocks.toLong
     val oldV = readKnnVectors(spark, head)
       .select(col("id"), col("v"), lit(false).as("is_new"))
     val newV = batch.select(col(idCol).cast("long").as("id"),
@@ -624,21 +610,9 @@ object Similarity {
     val allN = graft.core.Par.fanOut(oldV.union(newV)
         .select(col("id"), col("v"), col("is_new"), l2norm(col("v")).as("nrm")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = {
-      val tiles = sequence(lit(0L), lit(b - 1L))
-      val q = allN.where(col("is_new"))
-        .select(col("id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"), pmod(xxhash64(col("id")), lit(b)).as("qb"),
-          explode(tiles).as("nb"))
-      val n = allN.select(col("id").as("neighbor_id"), col("v").as("nv"),
-        col("nrm").as("nn"), col("is_new").as("n_new"),
-        pmod(xxhash64(col("id")), lit(b)).as("nb"), explode(tiles).as("qb"))
-      q.join(n, Seq("qb", "nb"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), col("n_new"),
-          (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-        .persist(StorageLevel.MEMORY_AND_DISK) // two consumers below
-    }
+    val pairs = tiledPairScores(allN.where(col("is_new")), allN, blocks,
+        col("is_new").as("n_new"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // two consumers below
     try {
       def topK(df: DataFrame) = knnTopK(df, k)
         .select(col("query_id"), col("neighbor_id"), col("cos"))
@@ -661,12 +635,8 @@ object Similarity {
         .select(col("neighbor_id").as("query_id"),
           col("query_id").as("neighbor_id"), col("cos"))
       val updated = topK(readKnnGraphRows(spark, head).union(mirror))
-      graft.core.Artifacts.stageCommit(spark,
-          knnVersionDir(dir, knnVersionNum(head) + 1)) { tmp =>
-        // graph + vector copy + re-emitted immutable meta: ONE action
-        writeKnnVersionData(tmp, updated.union(newRows),
-          allN.select(col("id"), col("v")), k, blocks)
-      }
+      commitNextKnnVersion(dir, head, updated.union(newRows),
+        allN.select(col("id"), col("v")), k, blocks)
     } finally {
       pairs.unpersist(blocking = false)
       allN.unpersist(blocking = false)
@@ -685,28 +655,26 @@ object Similarity {
     * appends through [[knnAppendImpl]]; every guard (pending tombstones,
     * re-added forgotten ids, intra-batch duplicate ids) plus the
     * emptiness probe and the meta read ride ONE shared stats job
-    * ([[knnBatchStats]] — round-14 verdict #3: the old path paid ~7
-    * tiny jobs × ~1 s fixed overhead per micro-batch; now it is the
-    * stats job plus ONE combined version write, ≤ 2 jobs per batch
-    * ([[writeKnnVersionData]], r17). */
+    * ([[knnBatchStats]]), so a batch costs the stats job plus ONE
+    * combined version write ([[commitNextKnnVersion]]). */
   def ingestKnnBatch(batch: DataFrame, idCol: String, vecCol: String,
                      dir: String): Unit = {
     val spark = batch.sparkSession
     val head = knnHeadDir(spark, dir)
-    val st = knnBatchStats(spark,
-      batch.select(col(idCol).cast("long").as("id")), head, dir)
-    // a fully-redelivered batch no-ops BEFORE the guards — the old
-    // two-step path never guard-checked an emptied remainder, and a
-    // redelivery landing inside a forget's crash window must stay a
-    // harmless no-op, not a new failure mode
+    val vectors = readKnnVectors(spark, head)
+    val st = knnBatchStats(head, vectors,
+      Some(batch.select(col(idCol).cast("long").as("id"))),
+      Forget.tombstones(spark, dir, "id"))
+    // a fully-redelivered batch no-ops BEFORE the guards: a redelivery
+    // landing inside a forget's crash window must stay a harmless no-op,
+    // not a new failure mode
     if (st.nFresh == 0L) return
     requireKnnGuards(st, dir)
     require(st.dupFresh == 0L,
       s"appendToKnnGraph: ${st.dupFresh} batch id(s) repeat within the " +
         "batch — an id re-insert is an update, not an append; rebuild")
     val fresh = batch.join(
-      readKnnVectors(spark, head)
-        .select(col("id").cast("long").as("graft_seen")),
+      vectors.select(col("id").cast("long").as("graft_seen")),
       batch(idCol).cast("long") === col("graft_seen"), "left_anti")
     knnAppendImpl(fresh, idCol, vecCol, dir, head, st.k, st.blocks)
   }

@@ -262,6 +262,23 @@ class CoreSpec extends SparkSpec {
         hits.mkString("\n"))
   }
 
+  test("the postings and kNN tiers derive each relation once (source scan)") {
+    // the tile replication of the pair scorer, the postings of a token
+    // frame, and the base-meta + segment-totals fold
+    val once = Seq(
+      "ext/Similarity.scala" -> "explode\\(tiles\\)",
+      "ext/Retrieval.scala" -> "explode_outer\\(col\\(\"toks\"\\)\\)",
+      "ext/Retrieval.scala" -> "crossJoin\\(\\w*Totals\\(")
+    val copies = once.flatMap { case (file, pattern) =>
+      val hits = sourceHits(Seq(pattern.r), exempt = Nil)
+        .filter(_.startsWith(s"graft/$file:"))
+      if (hits.size == 1) Nil else s"$pattern: ${hits.size} hits" +: hits
+    }
+    assert(copies.isEmpty,
+      "a relation derived in more than one place (or none) — call the " +
+        "shared scorer, postingsOf or foldedTotals:\n" + copies.mkString("\n"))
+  }
+
   test("measurements go through Trace, and ProfileQ is the one profile harness (source scan)") {
     val listeners = sourceHits(
       Seq("(new|extends|with)\\s+[\\w.]*\\b(SparkListener|QueryExecutionListener)\\b".r),

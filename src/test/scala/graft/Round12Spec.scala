@@ -232,6 +232,41 @@ class Round12Spec extends SparkSpec {
     assert(v2 == Set(1L, 2L, 3L, 6L))
   }
 
+  test("postings as-of: pinned scores equal the inline scorer over the pinned population") {
+    val docs = Seq(
+      (0L, "spark join table spark"), (1L, "hash merge sort join"),
+      (2L, "stream window batch"), (3L, "spark stream stream"),
+      (4L, ""), (5L, "sort batch table spark")).toDF("doc_id", "text")
+    val dir = tmpDir("asof-scores") + "/idx"
+    ext.Retrieval.writePostingsIndex(
+      docs.where($"doc_id" <= 2), "doc_id", "text", dir, buckets = 4)
+    ext.Retrieval.appendToPostingsIndex(
+      docs.where($"doc_id".between(3, 4)), "doc_id", "text", dir)
+    ext.Retrieval.appendToPostingsIndex(
+      docs.where($"doc_id" === 5), "doc_id", "text", dir)
+    val qs = Seq(0 -> Seq("spark", "table"), 1 -> Seq("stream", "sort"),
+      2 -> Seq("join", "batch", "absent"))
+    def pinned() = ext.Retrieval.bm25TopKFromIndex(spark, qs, dir, k = 10,
+        asOf = Some(1L))
+      .orderBy("query_id", "rk", "doc_id").collect().map(_.toSeq).toSeq
+    def inline(population: org.apache.spark.sql.DataFrame) =
+      ext.Retrieval.bm25TopK(population, "doc_id", "text", qs, k = 10)
+        .orderBy("query_id", "rk", "doc_id").collect().map(_.toSeq).toSeq
+    // no tombstones: totals fold the base meta with the pinned segment
+    val v1 = inline(docs.where($"doc_id" <= 4))
+    assert(v1.nonEmpty)
+    assert(pinned() == v1,
+      "pinned (query_id, doc_id, score, rk) rows must equal the inline scorer")
+    // one forgotten doc: totals take the exact aggregate of the pinned
+    // living relation, so scores equal the inline scorer over survivors
+    ext.Retrieval.forgetFromPostingsIndex(
+      Seq(0L).toDF("doc_id"), "doc_id", dir)
+    val survivors = inline(docs.where($"doc_id" <= 4 && $"doc_id" =!= 0L))
+    assert(survivors != v1)
+    assert(pinned() == survivors,
+      "pinned rows after a forget must equal the inline scorer over the survivors")
+  }
+
   test("pq as-of: pinned versions immutable, compact folds loudly") {
     val df = pqCorpus()
     val dir = tmpDir("pq-asof-spec") + "/idx"

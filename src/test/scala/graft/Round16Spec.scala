@@ -195,7 +195,7 @@ class Round16Spec extends SparkSpec {
       "derived head dictionary must equal the full-store derivation")
     val wantMeta = living.agg(count_distinct(col("doc_id")),
       sum(col("tf"))).head()
-    val gotMeta = ext.Retrieval.headTotals(spark, dir)
+    val gotMeta = ext.Retrieval.foldedTotals(spark, dir)
     assert(gotMeta._1 == wantMeta.getLong(0) &&
       gotMeta._2 == wantMeta.getLong(1) && gotMeta._3 == 4,
       "derived head totals must equal the full-store totals")

@@ -341,7 +341,7 @@ class Round9bSpec extends SparkSpec {
     // docs while the derived head totals see all 6
     assert(spark.read.parquet(s"$dir/meta").head().getLong(0) == 3L,
       "base meta must stay immutable under appends")
-    assert(ext.Retrieval.headTotals(spark, dir)._1 == 6L,
+    assert(ext.Retrieval.foldedTotals(spark, dir)._1 == 6L,
       "head totals must fold the committed segments onto the base")
   }
 

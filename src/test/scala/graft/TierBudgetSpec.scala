@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 /** Action budgets of the stored-tier verbs `corpus_ingest` drives, on
   * PipelineSpec's fixture shape: a bloom screen, an eval gate, and the
   * postings, IVF, PQ and kNN tiers. One scenario walks the verbs in the
-  * ingest's order — every build, every append, the two screens (their
-  * frames collected), a forget of one base and one appended id from
-  * every tombstoned tier, every compact — and [[Trace]] measures each
-  * verb. One row per verb asserts its action count against the count the
-  * verb ran when the table was written (the most over three runs).
-  * Actions are asserted because AQE does not move them; the job count is
-  * reported beside it and does move with AQE. */
+  * ingest's order — every build, every append, the two screens and the
+  * postings and kNN reads (their frames collected), a forget of one base
+  * and one appended id from every tombstoned tier, every compact — and
+  * [[Trace]] measures each verb. One row per verb asserts its action
+  * count against the count the verb ran when its row was written (the
+  * most over three runs). Actions are asserted because AQE does not move
+  * them; the job count is reported beside it and does move with AQE. */
 class TierBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,6 +43,9 @@ class TierBudgetSpec extends SparkSpec {
     "ingestKnnBatch" -> 2,
     "dedupIncrementalBloomFromIndex" -> 2,
     "contaminationPairsFromIndex" -> 1,
+    "bm25TopKFromIndex" -> 3,
+    "bm25TopKFromIndex(asOf = 1)" -> 3,
+    "knnGraphFromIndex" -> 2,
     "forgetFromContaminationIndex" -> 1,
     "forgetFromPostingsIndex" -> 1,
     "forgetFromIvfIndex" -> 1,
@@ -102,6 +105,13 @@ class TierBudgetSpec extends SparkSpec {
       .dedupIncrementalBloomFromIndex(rec, "doc_id", "text", bloom).collect())
     step("contaminationPairsFromIndex")(ext.Dedup
       .contaminationPairsFromIndex(rec, "doc_id", "text", eval).collect())
+    val queries = Seq(0 -> Seq("unique", "tail"), 1 -> Seq("number3", "body"))
+    step("bm25TopKFromIndex")(
+      ext.Retrieval.bm25TopKFromIndex(spark, queries, post).collect())
+    step("bm25TopKFromIndex(asOf = 1)")(ext.Retrieval.bm25TopKFromIndex(
+      spark, queries, post, asOf = Some(1L)).collect())
+    step("knnGraphFromIndex")(
+      ext.Similarity.knnGraphFromIndex(spark, knn).collect())
 
     step("forgetFromContaminationIndex")(ext.Dedup.forgetFromContaminationIndex(
       Seq(1003L).toDF("eval_id"), "eval_id", eval))
