@@ -5553,14 +5553,9 @@ object SparkEntry {
         .withColumnRenamed("list", "label")
       val scored = e.join(broadcast(cent), "label")
         .select(col("label"), col("vec_id"),
-          (Similarity.dot(col("v"), col("centroid")) /
-            (Similarity.l2norm(col("v")) *
-              Similarity.l2norm(col("centroid")))).as("cos"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("label")
-        .orderBy(col("cos").asc, col("vec_id").asc)
-      scored.withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 5)
-        .select(col("label"), col("rk").cast("long").as("rk"),
+          Similarity.cosine(col("v"), col("centroid")).as("cos"))
+      Similarity.topN(scored, "label", 5)(col("cos").asc, col("vec_id").asc)
+        .select(col("label"), col("rank").cast("long").as("rk"),
           col("vec_id"), round(col("cos"), 4).as("cos"))
         .orderBy("label", "rk")
     }),
@@ -5589,13 +5584,10 @@ object SparkEntry {
       val pos = q.join(c, col("query_id") =!= col("neighbor_id")
           && col("qlab") === col("nlab"))
         .select(col("query_id"), col("neighbor_id"),
-          (Similarity.dot(col("qv"), col("cv")) /
-            (col("qn") * col("cn"))).as("cos"))
-      val wp = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      val p1 = pos.withColumn("rk", row_number().over(wp))
-        .where(col("rk") === 1)
+          Similarity.cosine(col("qv"), col("cv"), col("qn"), col("cn"))
+            .as("cos"))
+      val p1 = Similarity.topN(pos, "query_id", 1)(
+          col("cos").desc, col("neighbor_id").asc)
         .select(col("query_id"), col("neighbor_id").as("pos_id"),
           round(col("cos"), 4).as("pos_cos"))
       val n1 = Similarity.hardNegativesTopK(emb, qs, "vec_id", "embedding",

@@ -1632,7 +1632,8 @@ object Dedup {
         Similarity.l2norm(col("v0")).as("nrm"))
     v.as("x").join(v.as("y"), col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        (Similarity.dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
+        Similarity.cosine(col("x.v"), col("y.v"), col("x.nrm"), col("y.nrm"))
+          .as("cos"))
       .where(col("cos") >= minCos)
   }
 
@@ -1679,7 +1680,7 @@ object Dedup {
       .join(lk.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
       .join(lk.select(col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
+        Similarity.cosine(col("va"), col("vb"), col("na"), col("nb")).as("cos"))
       .where(col("cos") >= minCos)
   }
 

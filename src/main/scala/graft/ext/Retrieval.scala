@@ -1,8 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import graft.core.Num
 
 /** Sparse-retrieval scoring — BM25 top-k over the corpus for a BOUNDED
@@ -41,7 +43,7 @@ object Retrieval {
     // the query VOCABULARY (distinct terms) semi-filters the postings
     // before anything wide happens; both relations are bounded → explicit
     // broadcast is safe (the repo's bounded-relation rule)
-    val (qvocab, qmap) = queryTerms(docs.sparkSession, queries)
+    val (_, qvocab, qmap) = queryTerms(docs.sparkSession, queries)
     val cand = postingsOf(toks).join(broadcast(qvocab), "term")
     // document frequency per (query) term over the candidate slice — the
     // slice holds EVERY posting of each query term, so this IS the corpus
@@ -68,29 +70,39 @@ object Retrieval {
       .where(col("term").isNotNull) // see TextAnalysis.termStats
       .groupBy("doc_id", "len_d", "term").agg(count(lit(1)).as("tf"))
 
-  /** A bounded query set's vocabulary (term) — distinct terms, the
-    * semi-filter of every candidate slice — and its (query_id, term)
-    * map. */
+  /** A bounded query set's vocabulary — its distinct terms, also as the
+    * (term) semi-filter of every candidate slice — and its
+    * (query_id, term) map. */
   private def queryTerms(spark: org.apache.spark.sql.SparkSession,
                          queries: Seq[(Int, Seq[String])])
-      : (DataFrame, DataFrame) = {
+      : (Seq[String], DataFrame, DataFrame) = {
     import spark.implicits._
-    (queries.flatMap(_._2).distinct.toDF("term"),
+    val terms = queries.flatMap(_._2).distinct
+    (terms, terms.toDF("term"),
       queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
         .toDF("query_id", "term"))
   }
 
+  /** The postings bucket of a term, `pmod(xxhash64(term), buckets)` —
+    * the one expression the build, the append and the probe hash with.
+    * Built from Catalyst nodes so [[probe]] can evaluate it over literal
+    * terms on the driver. */
+  private def bucketOf(term: Column, buckets: Column): Column =
+    Bridge.column(Pmod(new XxHash64(Seq(Bridge.expression(term))),
+      Bridge.expression(buckets)))
+
   /** The stored-index probe of a query vocabulary: its bucket ids under
-    * the artifact's STORED bucket count — bounded by |vocabulary|, one
-    * tiny local job — become the returned filter's partition IN-literal,
-    * followed by the vocabulary semi-filter. Every posting of a query
-    * term lives in that term's bucket, so the pruned slice holds each
-    * term's full list. */
-  private def probe(qvocab: DataFrame, buckets: Int)
+    * the artifact's STORED bucket count, evaluated on the driver (no
+    * job), become the returned filter's partition IN-literal, followed
+    * by the vocabulary semi-filter. Every posting of a query term lives
+    * in that term's bucket, so the pruned slice holds each term's full
+    * list. */
+  private def probe(terms: Seq[String], qvocab: DataFrame, buckets: Int)
       : DataFrame => DataFrame = {
-    val pbs = qvocab
-      .select(pmod(xxhash64(col("term")), lit(buckets.toLong)).as("pb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val pbs = terms.map(t => Bridge.expression(bucketOf(
+        Bridge.column(Literal(t)), Bridge.column(Literal(buckets.toLong))))
+        .eval().asInstanceOf[Long])
+      .distinct.sorted
     _.where(col("pb").isin(pbs: _*)).join(broadcast(qvocab), "term")
   }
 
@@ -152,7 +164,7 @@ object Retrieval {
     val toks = tokenized(docs, idCol, textCol)
     Forget.rebuild(spark, dir) { tmp =>
       postingsOf(toks)
-        .withColumn("pb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
+        .withColumn("pb", bucketOf(col("term"), lit(buckets.toLong)))
         .write.partitionBy("pb").parquet(s"$tmp/postings")
       // the projection is the union of what both summaries need (len_d
       // stays columnar-pruned away); the terms write materializes the
@@ -263,7 +275,7 @@ object Retrieval {
       spark.read.parquet(s"$dir/meta").select(col("buckets")))
     val posted = postingsOf(tokenized(fresh, "doc_id", "__text"))
       .crossJoin(bucketsCol)
-      .withColumn("pb", pmod(xxhash64(col("term")), col("buckets").cast("long")))
+      .withColumn("pb", bucketOf(col("term"), col("buckets").cast("long")))
       .drop("buckets")
     graft.core.Artifacts.appendSegment(spark, dir)(
       posted.write.partitionBy("pb").parquet(_))
@@ -387,8 +399,8 @@ object Retrieval {
                        k: Int, k1: Double, b: Double): DataFrame = {
     graft.core.Artifacts.heal(spark, dir)
     val (nDocs, nToks, buckets) = foldedTotals(spark, dir)
-    val (qvocab, qmap) = queryTerms(spark, queries)
-    val inBuckets = probe(qvocab, buckets)
+    val (terms, qvocab, qmap) = queryTerms(spark, queries)
+    val inBuckets = probe(terms, qvocab, buckets)
     // LIVING view: tombstoned documents leave the candidate set at once;
     // df/meta stay head-state until compact (the Lucene pre-merge
     // semantics — forgetFromPostingsIndex scaladoc, Round11Spec pins
@@ -421,8 +433,8 @@ object Retrieval {
           spark.read.parquet(s"$dir/meta").select(col("buckets"))).head()
         (t.getLong(0), t.getLong(1), t.getInt(2))
       }
-    val (qvocab, qmap) = queryTerms(spark, queries)
-    val post = probe(qvocab, buckets)(pinned)
+    val (terms, qvocab, qmap) = queryTerms(spark, queries)
+    val post = probe(terms, qvocab, buckets)(pinned)
     val dict = post.groupBy("term").agg(count(lit(1)).as("dft"))
     bm25Rank(post.join(dict, "term"), qmap, lit(nDocs), lit(nToks),
       k, k1, b)

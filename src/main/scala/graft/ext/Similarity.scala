@@ -39,7 +39,69 @@ object Similarity {
 
   /** Cosine similarity in double space. */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2norm(a) * l2norm(b))
+    cosine(a, b, l2norm(a), l2norm(b))
+
+  /** The family's one cosine, over norms the caller computed once per
+    * vector (a per-pair norm would triple the FLOPs). */
+  private[graft] def cosine(a: Column, b: Column, na: Column,
+                            nb: Column): Column =
+    dot(a, b) / (na * nb)
+
+  /** The family's one per-key ranking: `row_number` over `key` ordered by
+    * `order` (which ends in a unique tie-break), kept to rank ≤ n — a
+    * filter Catalyst's WindowGroupLimit turns into a partial group limit
+    * BEFORE the window's exchange. Adds `rank`. */
+  private[graft] def topN(df: DataFrame, key: String, n: Int)
+                         (order: Column*): DataFrame =
+    df.withColumn("rank",
+        row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+      .where(col("rank") <= n)
+
+  /** Per query, the `n` nearest neighbours under (cos DESC,
+    * neighbor_id ASC) — every operator's final rank and the kNN tiers'
+    * stored lists. */
+  private def nearest(scored: DataFrame, n: Int): DataFrame =
+    topN(scored, "query_id", n)(col("cos").desc, col("neighbor_id").asc)
+
+  /** The graded (query_id, rank, neighbor_id, cos) projection: the one
+    * place an emitted cosine rounds to 4 decimals. */
+  private def graded(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("rank"), col("neighbor_id"),
+      round(col("cos"), 4).as("cos"))
+
+  /** Joined (query_id, qv, qn) × (neighbor_id, cv, cn) pairs scored by
+    * the shared cosine, ranked per query and graded — the answer of
+    * every operator that scores full-precision pairs. */
+  private def rankPairs(pairs: DataFrame, k: Int): DataFrame =
+    graded(nearest(pairs.select(col("query_id"), col("neighbor_id"),
+      cosine(col("qv"), col("cv"), col("qn"), col("cn")).as("cos")), k))
+
+  /** The IVF tier's one list assignment: each row of `vecs` (keyed by
+    * `key`) scored by cosine against every centroid of the broadcast
+    * (list, centroid) relation, its `n` nearest lists kept under
+    * (csim DESC, list ASC). Query probes (n = nprobe) and the append's
+    * assignment (n = 1) both rank here. */
+  private def nearestLists(vecs: DataFrame, key: String, v: Column,
+                           norm: Column, cent: DataFrame, n: Int): DataFrame =
+    topN(vecs.crossJoin(broadcast(cent)).withColumn("csim",
+        cosine(v, col("centroid"), norm, l2norm(col("centroid")))),
+      key, n)(col("csim").desc, col("list").asc)
+
+  /** The one exact re-rank of a (query_id, neighbor_id) shortlist: the
+    * shortlist joins the full-precision queries and broadcasts
+    * (|queries| × shortlist rows), `fetch` = (vec_id, v) supplies the
+    * shortlisted neighbours' vectors, so the primary store never
+    * shuffles for the fetch. The approximation decides membership only,
+    * never the final order. */
+  private def exactRerank(short: DataFrame, queries: DataFrame,
+                          idCol: String, vecCol: String, fetch: DataFrame,
+                          k: Int): DataFrame = {
+    val qf = queries.select(col(idCol).as("query_id"),
+      toDouble(col(vecCol)).as("qv"), l2norm(col(vecCol)).as("qn"))
+    val cf = fetch.select(col("vec_id").as("neighbor_id"),
+      toDouble(col("v")).as("cv"), l2norm(col("v")).as("cn"))
+    rankPairs(broadcast(short.join(qf, "query_id")).join(cf, "neighbor_id"), k)
+  }
 
   /** Exact brute-force cosine top-k: for each query vector, the k nearest
     * corpus vectors (self excluded). Norms are computed ONCE per vector in
@@ -54,15 +116,7 @@ object Similarity {
         col(vecCol).as("cv0")))
       .select(col("neighbor_id"), toDouble(col("cv0")).as("cv"),
         l2norm(col("cv0")).as("cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    rankPairs(q.join(c, col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** HARD-NEGATIVE MINING — for every query vector, the k most similar
@@ -87,16 +141,8 @@ object Similarity {
         col(labelCol).as("nlab"), col(vecCol).as("cv0")))
       .select(col("neighbor_id"), col("nlab"),
         toDouble(col("cv0")).as("cv"), l2norm(col("cv0")).as("cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id")
-        && col("qlab") =!= col("nlab"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    rankPairs(q.join(c, col("query_id") =!= col("neighbor_id")
+      && col("qlab") =!= col("nlab")), k)
   }
 
   /** MAXIMAL-MARGINAL-RELEVANCE diverse top-k (Carbonell & Goldstein,
@@ -141,8 +187,7 @@ object Similarity {
       .select(col("id"), toDouble(col("cv0")).as("v"))
       .join(q, col("query_id") =!= col("id"))
       .select(col("query_id"), col("id"), col("v"),
-        (dot(col("v"), col("qv")) / (l2norm(col("v")) * l2norm(col("qv"))))
-          .as("rel"))
+        cosine(col("v"), col("qv")).as("rel"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // (query_id, rank, neighbor_id, vec, score)
@@ -164,8 +209,7 @@ object Similarity {
               .join(selDf, Seq("query_id"))
               .groupBy(col("query_id"), col("id"))
               .agg(first(col("v")).as("v"), first(col("rel")).as("rel"),
-                max(dot(col("v"), col("sv"))
-                  / (l2norm(col("v")) * l2norm(col("sv")))).as("maxsim"))
+                max(cosine(col("v"), col("sv"))).as("maxsim"))
               .select(col("query_id"), col("id"), col("v"),
                 (lit(0.5) * col("rel") - lit(0.5) * col("maxsim")).as("score"))
           }
@@ -208,9 +252,7 @@ object Similarity {
     * unchanged. */
   def knnGraphExact(corpus: DataFrame, idCol: String, vecCol: String,
                     k: Int, blocks: Int = 8): DataFrame =
-    knnGraphRaw(corpus, idCol, vecCol, k, blocks)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    graded(knnGraphRaw(corpus, idCol, vecCol, k, blocks))
 
   /** [[knnGraphExact]] with the cosine UNROUNDED — what the stored-graph
     * tier persists: incremental maintenance merges stored rows with
@@ -224,7 +266,7 @@ object Similarity {
     // single-pass discipline) — one norm pass regardless of consumers
     val v = graft.core.Par.fanOut(corpus.select(col(idCol).as("id"),
       toDouble(col(vecCol)).as("v"), l2norm(col(vecCol)).as("nrm")))
-    knnTopK(tiledPairScores(v, v, blocks), k)
+    nearest(tiledPairScores(v, v, blocks), k)
   }
 
   /** BUILD the stored kNN GRAPH — the graph tier's sim6/pq2: semantic
@@ -375,17 +417,7 @@ object Similarity {
     qs.join(ns, Seq("qb", "nb"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(Seq(col("query_id"), col("neighbor_id")) ++ kept :+
-        (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"): _*)
-  }
-
-  /** The kNN tier's one neighbour ranking: per query, `row_number` over
-    * (cos DESC, neighbor_id ASC), kept to rank ≤ k (a WindowGroupLimit).
-    * Out: (query_id, rank, neighbor_id, cos). */
-  private def knnTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        cosine(col("qv"), col("nv"), col("qn"), col("nn")).as("cos"): _*)
   }
 
   /** FORGET nodes from the stored kNN graph — right-to-be-forgotten for
@@ -451,7 +483,7 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"), col("cos"))
       val av = survivors.join(
         affected.select(col("query_id").as("id")), Seq("id"), "left_semi")
-      val recomputed = knnTopK(tiledPairScores(av, survivors, st.blocks), st.k)
+      val recomputed = nearest(tiledPairScores(av, survivors, st.blocks), st.k)
         .select(col("query_id"), col("neighbor_id"), col("cos"))
       try commitNextKnnVersion(dir, head, kept.union(recomputed), survivors,
         st.k, st.blocks)
@@ -614,7 +646,7 @@ object Similarity {
         col("is_new").as("n_new"))
       .persist(StorageLevel.MEMORY_AND_DISK) // two consumers below
     try {
-      def topK(df: DataFrame) = knnTopK(df, k)
+      def topK(df: DataFrame) = nearest(df, k)
         .select(col("query_id"), col("neighbor_id"), col("cos"))
       val newRows = topK(pairs.select("query_id", "neighbor_id", "cos"))
       // Measured non-win (round 16), re-measure before revisiting:
@@ -728,8 +760,7 @@ object Similarity {
         .join(t.select(col("id").as("neighbor_id")),
           Seq("neighbor_id"), "left_anti")
     }
-    knnTopK(g, k).select(col("query_id"), col("rank"), col("neighbor_id"),
-      round(col("cos"), 4).as("cos"))
+    graded(nearest(g, k))
   }
 
   /** `bits`-bit random-hyperplane signature of a vector: bit i is the sign
@@ -760,33 +791,18 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, listCol: String,
               k: Int, nprobe: Int = 3): DataFrame = {
-    val cent = broadcast(listCentroids(corpus, listCol, vecCol))
-    // probe assignment: nprobe nearest centroids per query
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("list").asc)
-    val probes = broadcast(q.crossJoin(cent)
-      .withColumn("csim", dot(col("qv"), col("centroid")) /
-        (col("qn") * l2norm(col("centroid"))))
-      .withColumn("pr", row_number().over(probeW))
-      .where(col("pr") <= nprobe)
+    val probes = broadcast(nearestLists(queries.select(
+        col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"),
+        l2norm(col(vecCol)).as("qn")), "query_id", col("qv"), col("qn"),
+        listCentroids(corpus, listCol, vecCol), nprobe)
       .select(col("query_id"), col("qv"), col("qn"), col("list")))
     // scan only the probed lists
     val c = graft.core.Par.fanOut(corpus.select(col(idCol).as("neighbor_id"),
         col(listCol).as("clist"), col(vecCol).as("cv0")))
       .select(col("neighbor_id"), col("clist"), toDouble(col("cv0")).as("cv"),
         l2norm(col("cv0")).as("cn"))
-    val scored = probes.join(c, col("list") === col("clist") &&
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    rankPairs(probes.join(c, col("list") === col("clist") &&
+      col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Approximate top-k: score only candidates in the query's hyperplane
@@ -817,20 +833,12 @@ object Similarity {
         array(col("qb")),
         transform(sequence(lit(0), lit(bits - 1)),
           b => col("qb").bitwiseXOR(call_function("shiftleft", lit(1L), b))))).as("probe")))
-    val scored = q.join(c, col("probe") === col("cb") &&
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
     // no dedup needed: the 13 probe values are pairwise distinct and each
     // corpus vector lives in exactly one bucket, so a (query, neighbor)
     // pair can match at most one probe — a distinct() here would only add
     // a full shuffle of the scored candidates
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    rankPairs(q.join(c, col("probe") === col("cb") &&
+      col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** IVF top-k over a TRAINED coarse quantizer — the full
@@ -854,18 +862,14 @@ object Similarity {
                      clusters: Int, iters: Int, nprobe: Int = 2,
                      scale: Long = 1000000L): DataFrame = {
     val cents = Clustering.kmeansFit(corpus, idCol, vecCol, clusters, iters, scale)
-    // probe selection: nprobe nearest trained centroids by integer L2²,
-    // ties toward the lower list id; the query set is bounded → broadcast
     val dists = Clustering.centroidDists(
       Clustering.quantize(col(vecCol), scale), cents)
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("list").asc)
-    val probes = broadcast(queries
-      .select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"),
-        l2norm(col(vecCol)).as("qn"),
-        posexplode(array(dists: _*)).as(Seq("list", "dist")))
-      .withColumn("pr", row_number().over(probeW))
-      .where(col("pr") <= nprobe)
+    // the query set is bounded → broadcast
+    val probes = broadcast(topN(queries
+        .select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"),
+          l2norm(col(vecCol)).as("qn"),
+          posexplode(array(dists: _*)).as(Seq("list", "dist"))),
+        "query_id", nprobe)(col("dist").asc, col("list").asc)
       .select(col("query_id"), col("qv"), col("qn"), col("list")))
     // the labeled corpus: one projection, list id from the same literals
     val c = graft.core.Par.fanOut(corpus.select(col(idCol).as("neighbor_id"),
@@ -873,16 +877,8 @@ object Similarity {
       .select(col("neighbor_id"), toDouble(col("cv0")).as("cv"),
         l2norm(col("cv0")).as("cn"),
         Clustering.assignColumn(col("cv0"), cents, scale).as("clist"))
-    val scored = probes.join(c, col("list") === col("clist") &&
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    rankPairs(probes.join(c, col("list") === col("clist") &&
+      col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Per-vector symmetric int8 quantization — the compression step before
@@ -972,10 +968,10 @@ object Similarity {
   /** APPEND new vectors to a STORED IVF index ([[writeIvfIndex]]) without
     * a rebuild — the third job of the production index lifecycle (build,
     * append, query): each new vector is assigned to the nearest stored
-    * centroid by cosine (row_number over (csim DESC, list ASC) — the
-    * identical metric, expression shape and tie-break the query tier's
-    * probe selection uses, so an appended vector lands exactly in the
-    * lists a query for it would probe first), int8-quantized
+    * centroid through [[nearestLists]], the assignment the query tier's
+    * probes rank with (so the metric and the csim DESC, list ASC
+    * tie-break are the probes' by construction, and an appended vector
+    * lands in the list a query for it would probe first), int8-quantized
     * ([[quantizeInt8]]), and published as a list-partitioned COMMITTED
     * SEGMENT — the base `qindex` never rewrites; centroids
     * are IMMUTABLE after build (the FAISS IVF contract: assignment drift
@@ -1013,14 +1009,8 @@ object Similarity {
           col("vec_id").cast("string"),
           lit(" — cosine assignment is undefined; screen zero vectors" +
             " upstream"))).cast("double")))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("list").asc)
-    val assigned = v
-      .crossJoin(broadcast(cent))
-      .withColumn("csim", dot(toDouble(col("v0")), col("centroid")) /
-        (col("vnorm") * l2norm(col("centroid"))))
-      .withColumn("pr", row_number().over(w))
-      .where(col("pr") === 1)
+    val assigned = nearestLists(v, "vec_id", toDouble(col("v0")),
+        col("vnorm"), cent, 1)
       .select(col("vec_id"), col("v0"), col("list"))
     graft.core.Artifacts.appendSegment(spark, dir) { tmp =>
       quantizeInt8(assigned, "vec_id", "v0", carry = Seq("list"))
@@ -1106,8 +1096,7 @@ object Similarity {
           s => s.getField("x")).as("cur"))
     cur.join(broadcast(cent), "list")
       .select(col("list"), col("n"),
-        (dot(col("cur"), col("centroid")) /
-          (l2norm(col("cur")) * l2norm(col("centroid")))).as("ccos"))
+        cosine(col("cur"), col("centroid")).as("ccos"))
   }
 
   /** RE-TRAIN-ON-DRIFT — closes the stored-index lifecycle
@@ -1160,17 +1149,10 @@ object Similarity {
                                 idCol: String, vecCol: String,
                                 k: Int, nprobe: Int = 3, shortlist: Int = 30,
                                 pruneLists: Boolean = true): DataFrame = {
-    val cent = broadcast(centroids)
-    // probe assignment: identical to ivfTopK (bounded query set)
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"),
-      l2norm(col(vecCol)).as("qn"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("list").asc)
-    val probes = broadcast(q.crossJoin(cent)
-      .withColumn("csim", dot(col("qv"), col("centroid")) /
-        (col("qn") * l2norm(col("centroid"))))
-      .withColumn("pr", row_number().over(probeW))
-      .where(col("pr") <= nprobe)
+    val probes = broadcast(nearestLists(queries.select(
+        col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"),
+        l2norm(col(vecCol)).as("qn")), "query_id", col("qv"), col("qn"),
+        centroids, nprobe)
       .select(col("query_id"), col("list")))
     // the quantized resident index: (neighbor_id, list, int8 q) — scored
     // in integer space; norms precomputed once per vector
@@ -1188,30 +1170,13 @@ object Similarity {
       quantizeInt8(queries, idCol, vecCol)
         .select(col("vec_id").as("query_id"), toDouble(col("q")).as("qq"))
         .withColumn("qqn", l2norm(col("qq"))), "query_id"))
-    val sw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    val short = qq.join(qidx, col("list") === col("clist") &&
+    val short = topN(qq.join(qidx, col("list") === col("clist") &&
         col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qq"), col("cq")) / (col("qqn") * col("cqn"))).as("qcos"))
-      .withColumn("srank", row_number().over(sw))
-      .where(col("srank") <= shortlist)
+        cosine(col("qq"), col("cq"), col("qqn"), col("cqn")).as("qcos")),
+      "query_id", shortlist)(col("qcos").desc, col("neighbor_id").asc)
       .select(col("query_id"), col("neighbor_id"))
-    // exact re-rank: full-precision vectors fetched ONLY for the shortlist
-    // (bounded: |queries| × shortlist rows → broadcast per repo policy, so
-    // the primary store never shuffles for the fetch)
-    val c = fetch.select(col("vec_id").as("neighbor_id"), toDouble(col("v")).as("cv"),
-      l2norm(col("v")).as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    broadcast(short.join(q, "query_id"))
-      .join(c, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    exactRerank(short, queries, idCol, vecCol, fetch, k)
   }
 
   /** Per-dimension corpus statistics (count / mean / sample variance) over
@@ -1280,28 +1245,13 @@ object Similarity {
         col(vecCol).as("cv0")))
       .select(col("neighbor_id"), randomProjectNative(col("cv0"), dims).as("cp"))
       .withColumn("cpn", l2norm(col("cp")))
-    val sw = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id").asc)
-    val short = q.join(c, col("query_id") =!= col("neighbor_id"))
+    val short = topN(q.join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qp"), col("cp")) / (col("qpn") * col("cpn"))).as("pcos"))
-      .withColumn("srank", row_number().over(sw))
-      .where(col("srank") <= shortlist)
+        cosine(col("qp"), col("cp"), col("qpn"), col("cpn")).as("pcos")),
+      "query_id", shortlist)(col("pcos").desc, col("neighbor_id").asc)
       .select(col("query_id"), col("neighbor_id"))
-    val qf = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"), l2norm(col(vecCol)).as("qn"))
-    val cf = corpus.select(col(idCol).as("neighbor_id"),
-      toDouble(col(vecCol)).as("cv"), l2norm(col(vecCol)).as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    broadcast(short.join(qf, "query_id"))
-      .join(cf, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    exactRerank(short, queries, idCol, vecCol,
+      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v")), k)
   }
 
   /** PRODUCT-QUANTIZATION ANN (Jégou et al. 2011) — the CODEBOOK
@@ -1383,28 +1333,12 @@ object Similarity {
     val adc = (0 until m)
       .map(j => element_at(col(s"qd$j"), (col(s"code$j") + 1).cast("int")))
       .reduce(_ + _)
-    val sw = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val short = q.join(coded.withColumnRenamed("vec_id", "neighbor_id"),
+    val short = topN(q.join(coded.withColumnRenamed("vec_id", "neighbor_id"),
         col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), adc.as("adc"))
-      .withColumn("srank", row_number().over(sw))
-      .where(col("srank") <= shortlist)
+      .select(col("query_id"), col("neighbor_id"), adc.as("adc")),
+      "query_id", shortlist)(col("adc").asc, col("neighbor_id").asc)
       .select(col("query_id"), col("neighbor_id"))
-    val qf = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"), l2norm(col(vecCol)).as("qn"))
-    val cf = fetch.select(col("vec_id").as("neighbor_id"),
-      toDouble(col("v")).as("cv"), l2norm(col("v")).as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    broadcast(short.join(qf, "query_id"))
-      .join(cf, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    exactRerank(short, queries, idCol, vecCol, fetch, k)
   }
 
   /** Write the STORED PQ index ([[pqTopK]]'s artifacts) — the codebook

@@ -279,6 +279,24 @@ class CoreSpec extends SparkSpec {
         "shared scorer, postingsOf or foldedTotals:\n" + copies.mkString("\n"))
   }
 
+  test("the vector-search family derives each relation once (source scan)") {
+    // the per-key ranking and the graded rounding live once in Similarity;
+    // a dot product appears only in dot, l2norm and the shared cosine
+    // (Clustering's private dot is an integer-grid L2 distance, not a cosine)
+    val once = Seq("row_number\\(\\)\\.over", "round\\(col\\(\"cos\"\\), 4\\)")
+      .flatMap { pattern =>
+        val hits = sourceHits(Seq(pattern.r), exempt = Nil)
+          .filter(_.startsWith("graft/ext/Similarity.scala:"))
+        if (hits.size == 1) Nil else s"$pattern: ${hits.size} hits" +: hits
+      }
+    val dots = sourceHits(Seq("\\bdot\\(".r), exempt = Seq("ext/Clustering.scala"))
+    val dotCopies = if (dots.size == 3) Nil else s"dot(: ${dots.size} hits" +: dots
+    assert(once.isEmpty && dotCopies.isEmpty,
+      "a vector-search relation written out in place — compose " +
+        "Similarity's cosine, topN, graded projection, list assignment " +
+        "and exact re-rank:\n" + (once ++ dotCopies).mkString("\n"))
+  }
+
   test("measurements go through Trace, and ProfileQ is the one profile harness (source scan)") {
     val listeners = sourceHits(
       Seq("(new|extends|with)\\s+[\\w.]*\\b(SparkListener|QueryExecutionListener)\\b".r),

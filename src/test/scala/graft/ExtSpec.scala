@@ -133,6 +133,46 @@ class ExtSpec extends SparkSpec {
     assert(quant == brute && quant.size == 15, s"quant=$quant brute=$brute")
   }
 
+  test("vector operators at exhaustive settings ≡ bruteForceTopK, planted cosine ties included") {
+    // 10 base vectors, each planted 3× (ids b, b+10, b+20) under three
+    // different labels: every neighbour list holds exact cosine ties, so
+    // the neighbor_id ASC tie-break decides ranks. With every list probed
+    // and every shortlist ≥ the corpus, each operator must equal brute
+    // force row for row.
+    val vecs = (0 until 30).map { i =>
+      (i.toLong, i % 3, Array.tabulate(8)(d => math.sin((i % 10) * 8 + d).toFloat))
+    }.toDF("vec_id", "label", "embedding")
+    val qs = vecs.where(col("vec_id") < 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "cos")
+        .orderBy("query_id", "rank").as[(Long, Int, Long, Double)].collect().toSeq
+    val brute = rows(Similarity.bruteForceTopK(vecs, qs, "vec_id", "embedding", 5))
+    assert(brute.sliding(2).count(p => p(0)._1 == p(1)._1 && p(0)._4 == p(1)._4) >= 4,
+      s"the fixture must plant ties: $brute")
+    val exhaustive = Seq(
+      "ivfTopK" -> (() => Similarity.ivfTopK(vecs, qs, "vec_id", "embedding",
+        "label", k = 5, nprobe = 3)),
+      "trainedIvfTopK" -> (() => Similarity.trainedIvfTopK(vecs, qs, "vec_id",
+        "embedding", k = 5, clusters = 3, iters = 2, nprobe = 3)),
+      "ivfQuantizedTopK" -> (() => Similarity.ivfQuantizedTopK(vecs, qs,
+        "vec_id", "embedding", "label", k = 5, nprobe = 3, shortlist = 30)),
+      "jlTopK" -> (() => Similarity.jlTopK(vecs, qs, "vec_id", "embedding",
+        k = 5, dims = 4, shortlist = 30)),
+      "pqTopK" -> (() => Similarity.pqTopK(vecs, qs, "vec_id", "embedding",
+        k = 5, dims = 8, m = 2, ksub = 2, shortlist = 30)),
+      "knnGraphExact" -> (() => Similarity.knnGraphExact(vecs, "vec_id",
+        "embedding", k = 5).where(col("query_id") < 4)))
+    for ((op, run) <- exhaustive)
+      assert(rows(run()) == brute, s"$op differs from bruteForceTopK")
+    val otherLabel = (0 until 3).map(l => Similarity.bruteForceTopK(
+        vecs.where(col("label") =!= l), qs.where(col("label") === l),
+        "vec_id", "embedding", 5))
+      .reduce(_ union _)
+    assert(rows(Similarity.hardNegativesTopK(vecs, qs, "vec_id", "embedding",
+        "label", 5)) == rows(otherLabel),
+      "hardNegativesTopK differs from bruteForceTopK over the other labels")
+  }
+
   test("cross-modal: blob histograms feed the LSH near-dup path end-to-end") {
     // payloads with orthogonal byte-nibble profiles ('a'→bin 6, '0'→bin 3,
     // 'P'→bin 5) plus one DOUBLED copy of each: doubling a payload scales

@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
   * PipelineSpec's fixture shape: a bloom screen, an eval gate, and the
   * postings, IVF, PQ and kNN tiers. One scenario walks the verbs in the
   * ingest's order — every build, every append, the two screens and the
-  * postings and kNN reads (their frames collected), a forget of one base
-  * and one appended id from every tombstoned tier, every compact — and
-  * [[Trace]] measures each verb. One row per verb asserts its action
-  * count against the count the verb ran when its row was written (the
-  * most over three runs). Actions are asserted because AQE does not move
-  * them; the job count is reported beside it and does move with AQE. */
+  * postings, IVF, PQ and kNN reads (their frames collected), a forget of
+  * one base and one appended id from every tombstoned tier, every
+  * compact — and [[Trace]] measures each verb. One row per verb asserts
+  * its action count against the count the verb ran when its row was
+  * written (the most over three runs). Actions are asserted because AQE
+  * does not move them; the job count is reported beside it and does
+  * move with AQE. */
 class TierBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,9 +44,11 @@ class TierBudgetSpec extends SparkSpec {
     "ingestKnnBatch" -> 2,
     "dedupIncrementalBloomFromIndex" -> 2,
     "contaminationPairsFromIndex" -> 1,
-    "bm25TopKFromIndex" -> 3,
-    "bm25TopKFromIndex(asOf = 1)" -> 3,
+    "bm25TopKFromIndex" -> 2,
+    "bm25TopKFromIndex(asOf = 1)" -> 2,
     "knnGraphFromIndex" -> 2,
+    "ivfQuantizedTopKFromIndex" -> 2,
+    "pqTopKFromIndex" -> 3,
     "forgetFromContaminationIndex" -> 1,
     "forgetFromPostingsIndex" -> 1,
     "forgetFromIvfIndex" -> 1,
@@ -112,6 +115,13 @@ class TierBudgetSpec extends SparkSpec {
       spark, queries, post, asOf = Some(1L)).collect())
     step("knnGraphFromIndex")(
       ext.Similarity.knnGraphFromIndex(spark, knn).collect())
+    val fetch = rec.select($"doc_id".as("vec_id"), $"embedding".as("v"))
+    val vq = rec.where($"doc_id" < 2)
+    step("ivfQuantizedTopKFromIndex")(ext.Similarity.ivfQuantizedTopKFromIndex(
+      spark.read.parquet(s"$ivf/centroids"), ext.Similarity.ivfLivingIndex(spark, ivf),
+      fetch, vq, "doc_id", "embedding", k = 3).collect())
+    step("pqTopKFromIndex")(ext.Similarity.pqTopKFromIndex(spark, pq, fetch, vq,
+      "doc_id", "embedding", k = 3).collect())
 
     step("forgetFromContaminationIndex")(ext.Dedup.forgetFromContaminationIndex(
       Seq(1003L).toDF("eval_id"), "eval_id", eval))
