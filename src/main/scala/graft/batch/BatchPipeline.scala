@@ -2,7 +2,7 @@ package graft.batch
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
-import graft.core.{Agg, Enrich, QuotaCheck}
+import graft.core.{Agg, Enrich, Par, QuotaCheck}
 
 /** The reference's batch-layer composition (survey §3.2/§3.4): read one
   * archive slice, enrich with the user dimension, write four hourly
@@ -19,9 +19,20 @@ import graft.core.{Agg, Enrich, QuotaCheck}
   * filling a cache of the enriched rows is the largest single cost of the
   * reference's shape, and each of its sinks then rescans that cache and
   * shuffles again; here each sink is one small job over the persisted
-  * result. The sums stay exact-decimal, so every output is bit-identical
-  * to the standalone [[Agg.windowedSum]] / [[QuotaCheck.quotaViolations]]
-  * call over the same enriched frame.
+  * result. Every output is bit-identical to the standalone
+  * [[Agg.windowedSum]] / [[QuotaCheck.quotaViolations]] call over the
+  * same enriched frame (for an integral value column, while each
+  * |sum| < 2^53; see [[Agg.windowedSumSets]]).
+  *
+  * The four sinks run CONCURRENTLY on a pool of their own
+  * ([[Par.concurrently]]), with no action before them: the first to
+  * reach the persisted result builds it while each of the others waits
+  * on it in one cheap cache-stage job, so each sink's planning, task
+  * launch and commit overlaps the aggregate job and the other sinks'.
+  * Each sink must therefore write its own output and read nothing
+  * another sink writes. If a sink throws, the others still run to
+  * completion, the cache is released, and the first failure in the order
+  * antenna, email, app, quota is rethrown.
   */
 trait BatchPipeline {
 
@@ -48,7 +59,8 @@ trait BatchPipeline {
   def writeQuotaReport(df: DataFrame): Unit
 
   /** Template method: the reference's four outputs (BatchJob.scala:28-47)
-    * from one grouping-sets pass over the enriched slice. */
+    * from one grouping-sets pass over the enriched slice, written by the
+    * four sinks concurrently ([[Par.concurrently]]). */
   def run(): Unit = {
     val enriched = Enrich.enrich(readSlice(), readDimension(), factKey, dimKey)
     val sums = Agg.windowedSumSets(enriched,
@@ -57,12 +69,13 @@ trait BatchPipeline {
       Seq(Seq("antenna"), Seq("email"), Seq("app"), Seq("email", "quota")),
       tsCol, windowDur, valueCol).persist()
     def set(i: Int): DataFrame = sums.where(col("set") === i)
-    try {
-      Seq("antenna" -> "antenna_bytes_total", "email" -> "email_bytes_total",
-        "app" -> "app_bytes_total").zipWithIndex.foreach { case ((key, tag), i) =>
+    val aggregates = Seq("antenna" -> "antenna_bytes_total",
+      "email" -> "email_bytes_total", "app" -> "app_bytes_total").zipWithIndex
+      .map { case ((key, tag), i) => () =>
         writeAggregate(Agg.toUnified(set(i).withColumnRenamed(key, "id"), tag), tag)
       }
-      writeQuotaReport(QuotaCheck.report(set(3).withColumnRenamed("value", "usage")))
-    } finally sums.unpersist()
+    try Par.concurrently(aggregates :+ (() =>
+      writeQuotaReport(QuotaCheck.report(set(3).withColumnRenamed("value", "usage")))): _*)
+    finally sums.unpersist()
   }
 }

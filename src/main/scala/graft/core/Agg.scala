@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** The reference's whole aggregation surface (survey §2.5 A1-A7): tumbling
   * event-time window + one grouping dimension + sum, projected onto the
@@ -55,11 +56,18 @@ object Agg {
     * `keys` names every grouping column; each of `sets` lists the key names
     * it groups by, and the window `w` joins every set. The result has one
     * column per key (null where the row's set does not group by it), `w`,
-    * `value` — the same exact-decimal sum as [[windowedSum]], so each set's
-    * sums are bit-identical to its standalone call — and `set`, the index of
-    * the row's grouping in `sets`. `set` is read off `grouping_id()`, not
-    * off which keys are null, so a null key value stays a group of its own,
-    * and two keys may bind the same column. */
+    * `value` — a double sum bit-identical to the standalone [[windowedSum]]
+    * of each set — and `set`, the index of the row's grouping in `sets`.
+    * `set` is read off `grouping_id()`, not off which keys are null, so a
+    * null key value stays a group of its own, and two keys may bind the
+    * same column.
+    *
+    * The sum follows the value column's type. An integral column (`Byte`,
+    * `Short`, `Integer`, `Long`) sums as LONG and casts to double once, as
+    * [[windowedSumLong]] does: exact, and it spares every `Expand` row the
+    * DECIMAL(30,6) cast and decimal add. The result equals [[Num.dsum]]'s
+    * bit for bit while |sum| < 2^53, where both are the exact integer. A
+    * fractional column keeps [[Num.dsum]]. */
   def windowedSumSets(df: DataFrame, keys: Seq[(String, Column)],
                       sets: Seq[Seq[String]], ts: Column, dur: String,
                       value: Column): DataFrame = {
@@ -71,10 +79,14 @@ object Agg {
     def gid(set: Seq[String]): Long = names.indices
       .collect { case i if !set.contains(names(i)) => 1L << (names.size - 1 - i) }.sum
     val setOfGid = sets.zipWithIndex.map { case (s, i) => gid(s :+ "w") -> i }.toMap
-    df.select(keys.map { case (n, c) => c.as(n) } :+ window(ts, dur).as("w") :+
-        value.as("value"): _*)
-      .groupingSets(sets.map(s => (s :+ "w").map(col)), names.map(col): _*)
-      .agg(Num.dsum(col("value")).as("value"), grouping_id().as("gid"))
+    val rows = df.select(keys.map { case (n, c) => c.as(n) } :+
+      window(ts, dur).as("w") :+ value.as("value"): _*)
+    val total = rows.schema("value").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => sum(col("value")).cast("double")
+      case _ => Num.dsum(col("value"))
+    }
+    rows.groupingSets(sets.map(s => (s :+ "w").map(col)), names.map(col): _*)
+      .agg(total.as("value"), grouping_id().as("gid"))
       .select(names.map(col) :+ col("value") :+
         element_at(typedLit(setOfGid), col("gid")).as("set"): _*)
   }

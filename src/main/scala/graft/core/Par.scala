@@ -35,11 +35,14 @@ object Par {
     * appends cost ~max instead of ~sum.
     *
     * Caller contract: the actions must be truly independent — disjoint
-    * output paths, no read of a path another action writes, and any
-    * SHARED cached frame already materialized (a cache race is safe —
-    * block-level locking — but re-computes defeat the point). Every action
-    * runs to completion; then the first failure, in submission order,
-    * rethrows its cause. */
+    * output paths and no read of a path another action writes. They may
+    * share a persisted frame, materialized or not: one not yet
+    * materialized is built once, by the first action to reach it, while
+    * each of the others waits on it and runs one cheap cache-stage job
+    * besides its own — so no materializing action is needed before the
+    * call (`BatchPipeline.run` fans out over one that way).
+    * Every action runs to completion; then the first failure, in
+    * submission order, rethrows its cause. */
   def concurrently(actions: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       actions.size)

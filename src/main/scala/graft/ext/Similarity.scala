@@ -1179,20 +1179,6 @@ object Similarity {
     exactRerank(short, queries, idCol, vecCol, fetch, k)
   }
 
-  /** Per-dimension corpus statistics (count / mean / sample variance) over
-    * an embedding column — the embedding-QC pass every vector pipeline
-    * runs before indexing (dead dimensions, un-normalized batches, scale
-    * drift between embedding-model versions all show up here).
-    *
-    * Scale: posexplode + one hash aggregate whose group count is the
-    * vector DIMENSION (64, 768, …), never the corpus size — map-side
-    * partial aggregation reduces each partition to `dim` rows before the
-    * shuffle, so the exchange is O(dim · partitions) at any corpus scale.
-    * Sums run through exact DECIMAL ([[graft.core.Num.dsum]]) so mean and
-    * variance are bit-identical under any partitioning / summation order
-    * (the oracle mirrors the same mean/variance arithmetic from the same
-    * two exact sums — variance formulas differing in operation ORDER would
-    * diverge in the last ulp and flake a hash compare). */
   /** Embedding DRIFT monitor between two corpus snapshots — the production
     * check that catches a silently-swapped embedding-model version, an
     * un-normalized ingest batch, or a pipeline bug shifting a dimension
@@ -1394,11 +1380,13 @@ object Similarity {
   private def readPqBooks(spark: org.apache.spark.sql.SparkSession,
                           dir: String): (Seq[Seq[Array[Long]]], Int, Long) = {
     graft.core.Artifacts.heal(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (dims, m, ksub, scale) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getLong(3))
+    // one action: every codebook row carries the 1-row meta beside it
     val rows = spark.read.parquet(s"$dir/codebooks")
+      .crossJoin(spark.read.parquet(s"$dir/meta"))
       .orderBy("subspace", "cluster").collect()
+    require(rows.nonEmpty, "PQ index artifact corrupt: no codebook or meta rows")
+    val (dims, m, ksub, scale) = (rows(0).getAs[Int]("dims"),
+      rows(0).getAs[Int]("m"), rows(0).getAs[Int]("ksub"), rows(0).getAs[Long]("scale"))
     require(rows.length == m * ksub,
       s"PQ codebooks artifact corrupt: ${rows.length} rows, want ${m * ksub}")
     val books = (0 until m).map(j =>
@@ -1553,6 +1541,20 @@ object Similarity {
           col("graft_v"), ms, sds).as("z_micro_csv"))
   }
 
+  /** Per-dimension corpus statistics (count / mean / sample variance) over
+    * an embedding column — the embedding-QC pass every vector pipeline
+    * runs before indexing (dead dimensions, un-normalized batches, scale
+    * drift between embedding-model versions all show up here).
+    *
+    * Scale: posexplode + one hash aggregate whose group count is the
+    * vector DIMENSION (64, 768, …), never the corpus size — map-side
+    * partial aggregation reduces each partition to `dim` rows before the
+    * shuffle, so the exchange is O(dim · partitions) at any corpus scale.
+    * Sums run through exact DECIMAL ([[graft.core.Num.dsum]]) so mean and
+    * variance are bit-identical under any partitioning / summation order
+    * (the oracle mirrors the same mean/variance arithmetic from the same
+    * two exact sums — variance formulas differing in operation ORDER would
+    * diverge in the last ulp and flake a hash compare). */
   def dimStats(df: DataFrame, vecCol: String): DataFrame = {
     val exploded = df
       .select(posexplode(toDouble(col(vecCol))).as(Seq("dim", "x")))

@@ -1,13 +1,16 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.types.{DataType, DecimalType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.batch.BatchPipeline
@@ -15,7 +18,8 @@ import graft.core.{Agg, Enrich, QuotaCheck}
 
 /** Runs the reference's full batch composition (read → enrich → one
   * grouping-sets aggregate → 3 hourly sums + quota report) against
-  * in-memory fixtures with collecting sinks. */
+  * in-memory fixtures with collecting sinks. The sinks run concurrently,
+  * so whatever they collect into is thread-safe. */
 class BatchPipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,7 +50,7 @@ class BatchPipelineSpec extends SparkSpec {
     .toDF("id", "email", "quota")
 
   test("template method computes all four outputs from one grouping-sets pass") {
-    val aggs = mutable.Map[String, Seq[(Timestamp, String, Double, String)]]()
+    val aggs = TrieMap[String, Seq[(Timestamp, String, Double, String)]]()
     var quota: Seq[(String, Double, Double, Timestamp)] = Nil
     pipeline(fixedMsgs, fixedDim)(
       (df, tag) => aggs(tag) = df.as[(Timestamp, String, Double, String)].collect().toSeq,
@@ -86,6 +90,16 @@ class BatchPipelineSpec extends SparkSpec {
     quotas <- Gen.listOfN(4, Gen.oneOf(0.0, 500.0, 2000.0, 1e9))
   } yield (msgs ++ uqMsgs, quotas :+ uqMsgs.map(_._4).sum)
 
+  /** Each output of `run()` as its standalone call over the enriched frame. */
+  private def standalone(msgs: DataFrame, dim: DataFrame, app: Column): Map[String, DataFrame] = {
+    val enriched = Enrich.enrich(msgs, dim, "user_id", "id")
+    Seq("antenna_bytes_total" -> col("antenna_id"), "email_bytes_total" -> col("email"),
+      "app_bytes_total" -> app).map { case (tag, key) =>
+      tag -> Agg.windowedSum(enriched, key, col("timestamp"), "1 hour", col("value"), tag)
+    }.toMap + ("quota" -> QuotaCheck.quotaViolations(enriched, col("email"),
+      col("quota"), col("timestamp"), col("value"), "1 hour"))
+  }
+
   private def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
   private def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
 
@@ -97,17 +111,11 @@ class BatchPipelineSpec extends SparkSpec {
         .toDF("id", "email", "quota")
       // the second binding makes the antenna and app groupings the same column
       for (app <- Seq(col("app"), col("antenna_id"))) {
-        val got = mutable.Map[String, (Seq[(String, DataType)], Seq[Row])]()
+        val got = TrieMap[String, (Seq[(String, DataType)], Seq[Row])]()
         def keep(out: String, df: DataFrame): Unit = got(out) = (shape(df), sorted(df))
         pipeline(msgs, dim, app)((df, tag) => keep(tag, df), keep("quota", _)).run()
 
-        val enriched = Enrich.enrich(msgs, dim, "user_id", "id")
-        val want = Seq("antenna_bytes_total" -> col("antenna_id"),
-          "email_bytes_total" -> col("email"), "app_bytes_total" -> app).map { case (tag, dim) =>
-          tag -> Agg.windowedSum(enriched, dim, col("timestamp"), "1 hour", col("value"), tag)
-        }.toMap + ("quota" -> QuotaCheck.quotaViolations(enriched, col("email"),
-          col("quota"), col("timestamp"), col("value"), "1 hour"))
-        for ((out, w) <- want) assert(got(out) == ((shape(w), sorted(w))), out)
+        for ((out, w) <- standalone(msgs, dim, app)) assert(got(out) == ((shape(w), sorted(w))), out)
         assert(!got("quota")._2.exists(_.getString(0) == "uq@x.io"),
           "a user exactly at quota was reported")
         assert(got("antenna_bytes_total")._2.exists(_.isNullAt(1)),
@@ -130,7 +138,9 @@ class BatchPipelineSpec extends SparkSpec {
     def persisted = spark.sparkContext.getPersistentRDDs.size
     val before = persisted
     val plans = mutable.Buffer[SparkPlan]()
-    def keep(df: DataFrame): Unit = { df.collect(); plans += df.queryExecution.executedPlan }
+    def keep(df: DataFrame): Unit = {
+      df.collect(); plans.synchronized(plans += df.queryExecution.executedPlan)
+    }
     pipeline(spark.read.parquet(slice), fixedDim)((df, _) => keep(df), keep).run()
     assert(persisted == before)
 
@@ -157,5 +167,101 @@ class BatchPipelineSpec extends SparkSpec {
         else df.collect(), _.collect()).run()
     }
     assert(persisted == before)
+  }
+
+  test("integral value column: LONG sums, bit-identical to the decimal-exact calls") {
+    val big = 1L << 40
+    val msgs = Seq(
+      ("2022-02-26 00:10:00", "u1", "ant1", big - 3L, "FB"),
+      ("2022-02-26 00:20:00", "u2", "ant1", big + 5L, "IG"),
+      ("2022-02-26 00:30:00", "u1", "ant2", -big, "FB"),
+      ("2022-02-26 00:40:00", "u2", "ant2", -7L, "FB"),
+      ("2022-02-26 01:10:00", "u1", "ant1", 3L * big + 1L, "IG"),
+      ("2022-02-26 01:50:00", "u2", "ant1", 11L, "IG"),
+    ).map { case (t, u, a, v, app) => (Timestamp.valueOf(t), u, a, v, app) }
+      .toDF("timestamp", "user_id", "antenna_id", "value", "app")
+    val dim = Seq(("u1", "alice@x.io", 1000L), ("u2", "bob@x.io", 2L * big))
+      .toDF("id", "email", "quota")
+
+    /** Runs the pipeline over `m` and returns each output (schema, sorted
+      * rows) and whether the cached aggregate casts to DECIMAL(30,6). */
+    def outputs(m: DataFrame) = {
+      val got = TrieMap[String, (Seq[(String, DataType)], Seq[Row])]()
+      val cached = TrieMap[String, SparkPlan]()
+      def keep(out: String, df: DataFrame): Unit = {
+        got(out) = (shape(df), sorted(df))
+        flatten(df.queryExecution.executedPlan).foreach {
+          case s: InMemoryTableScanExec => cached(out) = s.relation.cachedPlan
+          case _ =>
+        }
+      }
+      pipeline(m, dim)((df, tag) => keep(tag, df), keep("quota", _)).run()
+      val decimalSum = cached.values.toSeq.flatMap(flatten).exists(_.expressions.exists(
+        _.exists { case c: Cast => c.dataType == DecimalType(30, 6); case _ => false }))
+      (got.toMap, decimalSum)
+    }
+
+    val (got, decimalSum) = outputs(msgs)
+    for ((out, w) <- standalone(msgs, dim, col("app")))
+      assert(got(out) == ((shape(w), sorted(w))), out)
+    assert(got("quota")._2.map(_.getString(0)) == Seq("alice@x.io"))
+    assert(!decimalSum, "a LongType value column still sums through DECIMAL(30,6)")
+    assert(outputs(msgs.withColumn("value", col("value").cast("double")))._2,
+      "a DoubleType value column no longer sums through DECIMAL(30,6)")
+  }
+
+  test("the four sinks run concurrently") {
+    val arrived = new CountDownLatch(4)
+    def meet(): Unit = {
+      arrived.countDown()
+      assert(arrived.await(30, TimeUnit.SECONDS), "a sink ran alone")
+    }
+    val wrote = TrieMap[String, Long]()
+    pipeline(fixedMsgs, fixedDim)((df, tag) => { meet(); wrote(tag) = df.count() },
+      df => { meet(); wrote("quota") = df.count() }).run()
+    assert(wrote.keySet == Set("antenna_bytes_total", "email_bytes_total",
+      "app_bytes_total", "quota"))
+  }
+
+  test("a throwing sink: the others still write, the first failure is rethrown") {
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    val wrote = TrieMap[String, Long]()
+    val e = intercept[IllegalStateException] {
+      pipeline(fixedMsgs, fixedDim)((df, tag) =>
+        if (tag == "email_bytes_total") throw new IllegalStateException("email down")
+        else wrote(tag) = df.count(), df => wrote("quota") = df.count()).run()
+    }
+    assert(e.getMessage == "email down")
+    assert(wrote.keySet == Set("antenna_bytes_total", "app_bytes_total", "quota"))
+    assert(persisted == before)
+
+    // the quota sink fails first in time; the email sink, submitted first, wins
+    val quotaFailed = new CountDownLatch(1)
+    val first = intercept[IllegalStateException] {
+      pipeline(fixedMsgs, fixedDim)((df, tag) =>
+        if (tag == "email_bytes_total") {
+          quotaFailed.await(30, TimeUnit.SECONDS)
+          throw new IllegalStateException("email down")
+        } else df.count(),
+        _ => { quotaFailed.countDown(); throw new IllegalStateException("quota down") }).run()
+    }
+    assert(first.getMessage == "email down")
+    assert(persisted == before)
+  }
+
+  test("concurrent sinks: one scan of the slice, counted with Trace") {
+    val slice = tmpDir("bp-scan")
+    val rows = 2000
+    (0 until rows).map(i => (new Timestamp(t0 + i * 7000L), s"u${1 + i % 2}",
+        s"ant${i % 3}", (i % 97).toDouble, if (i % 2 == 0) "FB" else "IG"))
+      .toDF("timestamp", "user_id", "antenna_id", "value", "app")
+      .write.mode("overwrite").parquet(slice)
+    val r = Trace.measure(spark)(pipeline(spark.read.parquet(slice), fixedDim)(
+      (df, _) => df.collect(), _.collect()).run())
+    // a second scan would read every row again; the cached blocks the
+    // sinks read back add one record each, far fewer than the slice
+    assert(r.inputRecords >= rows && r.inputRecords < 2 * rows,
+      "\n" + r.render("BatchPipeline.run"))
   }
 }

@@ -39,7 +39,7 @@ class TierBudgetSpec extends SparkSpec {
     "ingestBloomBatch" -> 4,
     "appendToPostingsIndex" -> 1,
     "appendToIvfIndex" -> 1,
-    "appendToPqIndex" -> 3,
+    "appendToPqIndex" -> 2,
     "appendToKnnGraph" -> 2,
     "ingestKnnBatch" -> 2,
     "dedupIncrementalBloomFromIndex" -> 2,
@@ -48,7 +48,7 @@ class TierBudgetSpec extends SparkSpec {
     "bm25TopKFromIndex(asOf = 1)" -> 2,
     "knnGraphFromIndex" -> 2,
     "ivfQuantizedTopKFromIndex" -> 2,
-    "pqTopKFromIndex" -> 3,
+    "pqTopKFromIndex" -> 2,
     "forgetFromContaminationIndex" -> 1,
     "forgetFromPostingsIndex" -> 1,
     "forgetFromIvfIndex" -> 1,

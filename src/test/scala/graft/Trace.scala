@@ -26,26 +26,31 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   * parquet schema inference) count in the totals only. Actions do not
   * move with AQE; jobs and stages do.
   *
+  * `inputRecords` is the tasks' input-metrics row count: rows read from
+  * files, plus one per cached block read by a job that did not build it.
+  *
   * `fixedMs` is the Chukonu split of an action: its wall time minus its
   * payload, the executor run time spread over the session's cores. */
 object Trace {
 
   final case class Action(description: String, nested: Boolean,
                           wallMs: Long, jobs: Int, stages: Int, tasks: Int,
-                          runMs: Long, shuffleWriteBytes: Long,
-                          spillBytes: Long) {
+                          runMs: Long, inputRecords: Long,
+                          shuffleWriteBytes: Long, spillBytes: Long) {
     def fixedMs(cores: Int): Long = math.max(0L, wallMs - runMs / cores)
   }
 
   final case class Report(wallMs: Long, cores: Int, actions: Seq[Action],
                           jobs: Int, stages: Int, tasks: Int, runMs: Long,
-                          shuffleWriteBytes: Long, spillBytes: Long) {
+                          inputRecords: Long, shuffleWriteBytes: Long,
+                          spillBytes: Long) {
     def fixedMs: Long = math.max(0L, wallMs - runMs / cores)
 
     def render(label: String): String = {
       val head = f"$label%s: wall $wallMs%d ms = payload ${wallMs - fixedMs}%d + " +
         f"fixed $fixedMs%d | ${actions.size}%d actions, $jobs%d jobs, " +
         f"$stages%d stages, $tasks%d tasks | exec run $runMs%d ms | " +
+        f"read $inputRecords%d records | " +
         f"shuffle write ${mib(shuffleWriteBytes)}%s | spill ${mib(spillBytes)}%s"
       (head +: Trace.rows(actions, cores)).mkString("\n")
     }
@@ -81,7 +86,7 @@ object Trace {
 
   private final class Counts {
     var jobs, stages, tasks = 0
-    var runMs, shuffleWriteBytes, spillBytes = 0L
+    var runMs, inputRecords, shuffleWriteBytes, spillBytes = 0L
   }
 
   /** Collects the tagged events. The bus delivers on one thread; the
@@ -129,6 +134,7 @@ object Trace {
         c.tasks += 1
         Option(e.taskMetrics).foreach { m =>
           c.runMs += m.executorRunTime
+          c.inputRecords += m.inputMetrics.recordsRead
           c.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
           c.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
         }
@@ -139,11 +145,11 @@ object Trace {
       val actions = execs.values.toSeq.map { x =>
         val c = x.counts
         Action(x.description, x.nested, x.end - x.start, c.jobs, c.stages,
-          c.tasks, c.runMs, c.shuffleWriteBytes, c.spillBytes)
+          c.tasks, c.runMs, c.inputRecords, c.shuffleWriteBytes, c.spillBytes)
       }
       val all = execs.values.map(_.counts).toSeq :+ outside
       Report(wallMs, cores, actions, all.map(_.jobs).sum, all.map(_.stages).sum,
-        all.map(_.tasks).sum, all.map(_.runMs).sum,
+        all.map(_.tasks).sum, all.map(_.runMs).sum, all.map(_.inputRecords).sum,
         all.map(_.shuffleWriteBytes).sum, all.map(_.spillBytes).sum)
     }
   }
